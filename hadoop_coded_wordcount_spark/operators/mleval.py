@@ -746,11 +746,12 @@ def logistic_gd(orders: DataFrame, iters: int = 4) -> DataFrame:
     optimizer; a smooth exp() sigmoid would pin the result to libm).
 
     Scale shape: the feature frame is a single projection of orders,
-    persisted once; each of the ``iters`` rounds is one partial-agg
-    shuffle down to 3 gradient scalars + n, and the weight state is a
-    1-row broadcast frame — no driver collect, state size O(features),
-    rounds fixed. 100x the orders is 100x the same map-side-combined
-    scan, nothing else grows.
+    persisted once. Each of the ``iters`` rounds is ONE map-side-combined
+    aggregate over it that also applies the update, and one 1-row fetch
+    of the 3 new BIGINT weights to the driver, which feed the next round
+    as typed literals. No round's plan embeds an earlier round's, so a
+    fit runs 4 + 2·iters jobs and the driver state stays O(features) at
+    any data size; 100x the orders is 100x the same scans.
     """
     feat = orders.select(
         F.when(F.col("o_orderstatus") == "F", 1000000)
@@ -763,18 +764,23 @@ def logistic_gd(orders: DataFrame, iters: int = 4) -> DataFrame:
             F.substring("o_orderpriority", 1, 1).cast("bigint") * 200000
         ).alias("x2u"),
     ).persist()
-    w = feat.sparkSession.range(1).select(
-        F.lit(0).cast("bigint").alias("w0"),
-        F.lit(0).cast("bigint").alias("w1"),
-        F.lit(0).cast("bigint").alias("w2"),
-    )
+    # the weights enter each round as BIGINT literals, not as a 1-row
+    # frame: a frame read by both the scoring and the update would nest
+    # the previous round's plan twice, doubling the jobs every round
+    w = (0, 0, 0)
+
+    def weights(w):
+        return [
+            F.lit(v).cast("bigint").alias(f"w{i}") for i, v in enumerate(w)
+        ]
+
     su = (
         "LEAST(CAST(1000000 AS BIGINT), GREATEST(CAST(0 AS BIGINT), "
         "CAST(ROUND((w0*x0u + w1*x1u + w2*x2u) / 4000000.0 + 500000.0) "
         "AS BIGINT)))"
     )
     for _ in range(iters):
-        scored = feat.crossJoin(F.broadcast(w)).select(
+        scored = feat.select("*", *weights(w)).select(
             "yu", "x0u", "x1u", "x2u", F.expr(su).alias("su")
         )
         # per-row cross products are ~2.5e12 micro²-units, so a BIGINT
@@ -799,18 +805,19 @@ def logistic_gd(orders: DataFrame, iters: int = 4) -> DataFrame:
             ).alias("g2"),
             F.count(F.lit(1)).cast("bigint").alias("n"),
         )
-        w = w.crossJoin(F.broadcast(g)).select(
-            F.expr(
-                "CAST(w0 - ROUND(g0 / (n * 1000000.0)) AS BIGINT)"
-            ).alias("w0"),
-            F.expr(
-                "CAST(w1 - ROUND(g1 / (n * 1000000.0)) AS BIGINT)"
-            ).alias("w1"),
-            F.expr(
-                "CAST(w2 - ROUND(g2 / (n * 1000000.0)) AS BIGINT)"
-            ).alias("w2"),
+        w = tuple(
+            g.select("*", *weights(w))
+            .select(
+                *(
+                    F.expr(
+                        f"CAST(w{i} - ROUND(g{i} / (n * 1000000.0)) AS BIGINT)"
+                    ).alias(f"w{i}")
+                    for i in range(3)
+                )
+            )
+            .first()
         )
-    fit = feat.crossJoin(F.broadcast(w)).select(
+    fit = feat.select("*", *weights(w)).select(
         "yu",
         "w0",
         "w1",
@@ -1870,8 +1877,10 @@ def huber_irls(lineitem: DataFrame, rounds: int = 3) -> DataFrame:
 
     Scale: the (x, y) projection persists once; each iteration is ONE
     map-side-combinable aggregate over it (no window, no join on the
-    fact side — parameters ride a 1-row broadcast). Row count never
-    re-shuffles; state is O(1) per round, the logistic_gd shape.
+    fact side — parameters ride a 1-row broadcast, eagerly checkpointed
+    each round so no round's plan embeds the previous one's). Row count
+    never re-shuffles; state is O(1) per round and jobs grow linearly
+    with ``rounds``.
     """
     from ..sources.catalog import ensure_parallelism
 

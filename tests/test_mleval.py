@@ -6,7 +6,13 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
+from conftest import SF001
+from oracle_harness import compare
+
 from hadoop_coded_wordcount_spark.operators import mleval as ml
+from hadoop_coded_wordcount_spark.operators import similarity as sim
+from hadoop_coded_wordcount_spark.sources.catalog import load_table
 
 D = datetime.datetime
 
@@ -256,6 +262,71 @@ def test_logistic_gd_zero_iterations_predicts_negative(spark):
     r = ml.logistic_gd(orders, iters=0).collect()[0]
     assert r.train_accuracy == 0.75
     assert (r.w_intercept, r.w_price, r.w_priority) == (0.0, 0.0, 0.0)
+
+
+def test_logistic_gd_matches_oracle(spark):
+    res = compare("logistic_gd", spark, SF001, verbose=True)
+    assert res["rows"] and res["schema"] and res["exact"], res
+
+
+def test_logistic_gd_empty_orders_gives_no_rows(spark, tmp_path):
+    """Zero orders: every round's gradient is NULL, so the weights the
+    driver carries between rounds are None — the fit still runs and
+    returns no rows."""
+    load_table(spark, SF001, "orders").limit(0).write.parquet(
+        str(tmp_path / "orders.parquet")
+    )
+    orders = load_table(spark, str(tmp_path), "orders")
+    assert ml.logistic_gd(orders).collect() == []
+
+
+def _sf001(spark, table):
+    return load_table(spark, SF001, table)
+
+
+# iterative operators by name, each called with (spark, rounds) on sf0.01
+ROUND_LOOPS = {
+    "logistic_gd": lambda s, r: ml.logistic_gd(
+        _sf001(s, "orders"), iters=r
+    ),
+    "huber_irls": lambda s, r: ml.huber_irls(_sf001(s, "lineitem"), r),
+    "fellegi_sunter_em": lambda s, r: ml.fellegi_sunter_em(
+        _sf001(s, "customer"), r
+    ),
+    "bradley_terry_sources": lambda s, r: ml.bradley_terry_sources(
+        _sf001(s, "documents"), r
+    ),
+    "ipf_raking": lambda s, r: ml.ipf_raking(_sf001(s, "customer"), r),
+    "als_rank1": lambda s, r: ml.als_rank1(
+        _sf001(s, "orders"),
+        _sf001(s, "lineitem"),
+        _sf001(s, "part"),
+        rounds=r,
+    ),
+    "pca_power_iteration": lambda s, r: sim.pca_power_iteration(
+        _sf001(s, "embeddings"), n_iter=r
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(ROUND_LOOPS))
+def test_iterative_jobs_grow_linearly_with_rounds(spark, name):
+    """A round that reads its state twice without a checkpoint nests the
+    previous round's plan twice, and the job count doubles per round.
+    Count the jobs of build + collect at 2, 3 and 4 rounds; the step
+    from 3 to 4 may exceed the step from 2 to 3 only by a little."""
+    sc = spark.sparkContext
+    jobs = []
+    for rounds in (2, 3, 4):
+        group = f"rounds-{name}-{rounds}"
+        sc.setJobGroup(group, group)
+        try:
+            ROUND_LOOPS[name](spark, rounds).collect()
+        finally:
+            sc._jsc.clearJobGroup()
+            spark.catalog.clearCache()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[2] - jobs[1] <= jobs[1] - jobs[0] + 2, (name, jobs)
 
 
 def test_ols_normal_equations_recovers_exact_plane(spark):
