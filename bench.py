@@ -44,7 +44,7 @@ import sys
 import time
 
 from hadoop_coded_wordcount_spark.registry import QUERIES
-from hadoop_coded_wordcount_spark.session import get_spark
+from hadoop_coded_wordcount_spark.session import get_spark, warm_up
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -180,85 +180,7 @@ def materialize(df) -> None:
 
 def main() -> int:
     spark = get_spark(app_name="hcw-spark-bench")
-    # JVM/codegen warmup so the first measured query doesn't pay session
-    # startup; touches a tiny table only.
-    warm = spark.read.parquet(os.path.join(SF_DIR, "region.parquet"))
-    warm.count()
-    # Python-worker-pool + Arrow warmup: the first pandas-UDF query would
-    # otherwise be charged ~5 s of interpreter fork/IPC setup that is
-    # session overhead, not plan cost.
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _noop_udf(s):
-        return s
-
-    warm.select(_noop_udf(F.col("r_regionkey"))).count()
-    # Each Python eval mode runs through its OWN worker module — warming
-    # the scalar-pandas pool leaves mapInPandas/applyInPandas/grouped-agg/
-    # Arrow-UDTF daemons cold, and the r4 driver bench charged the first
-    # UDTF query 32.5 s (43×) of exactly that spin-up. Warm all four over
-    # a many-partition range so one worker forks per core, not just one.
-    rng = spark.range(0, 256, 1, 2 * spark.sparkContext.defaultParallelism)
-    rng.mapInPandas(lambda it: it, schema="id long").count()
-    rng.groupBy((F.col("id") % 8).alias("g")).applyInPandas(
-        lambda pdf: pdf[["id"]], schema="id long"
-    ).count()
-
-    # explicit eval type: `from __future__ import annotations` stringifies
-    # type hints module-wide, so Series→scalar inference can't see them
-    from pyspark.sql.functions import PandasUDFType
-
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def _warm_agg(s):
-        return float(s.sum())
-
-    rng.groupBy((F.col("id") % 8)).agg(_warm_agg(F.col("id"))).count()
-
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="v bigint")
-    class _WarmUdtf:
-        def eval(self, v):
-            yield (v,)
-
-    spark.udtf.register("hcw_bench_warm_udtf", _WarmUdtf)
-    rng.createOrReplaceTempView("hcw_bench_warm_src")
-    spark.sql(
-        "SELECT u.v FROM hcw_bench_warm_src, "
-        "LATERAL hcw_bench_warm_udtf(id) u"
-    ).count()
-    # Exercise the join/agg/window machinery once on the tiny dims: the
-    # first multi-stage query of a session otherwise pays codegen +
-    # broadcast + exchange warmup that is session overhead, not plan cost
-    # (measured ~6 s charged to whichever query runs first).
-    from pyspark.sql.window import Window
-
-    nat = spark.read.parquet(os.path.join(SF_DIR, "nation.parquet"))
-    (
-        nat.join(F.broadcast(warm), F.col("n_regionkey") == F.col("r_regionkey"))
-        .groupBy("r_name")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .select("r_name", F.row_number().over(Window.orderBy("c")).alias("rn"))
-        .count()
-    )
-    # Unrolled-dot-kernel codegen warmup (VERDICT r9 item 4): the ANN
-    # family's 64-dim `dot_unrolled` expressions compile into ~64 KB
-    # whole-stage-codegen methods, and the FIRST such compile in a session
-    # costs ~3.3 s of Janino + compiler-JIT warmup that is session
-    # overhead, not data work (stage near-flat sf0.1→sf1; SURVEY §14).
-    # Compiling one same-shaped kernel over 2 rows here moves that
-    # constant out of whichever ANN query the sweep times first.
-    from hadoop_coded_wordcount_spark.operators.similarity import dot_unrolled
-
-    two = spark.range(0, 2, 1, 1).select(
-        F.array(*[(F.col("id") + F.lit(float(i))) for i in range(64)]).alias("a"),
-        F.array(*[(F.col("id") * F.lit(float(i))) for i in range(64)]).alias("b"),
-    )
-    two.join(F.broadcast(two.selectExpr("a as qa"))).select(
-        dot_unrolled(F.col("qa"), F.col("b"), 64).alias("d")
-    ).groupBy().min("d").collect()
+    warm_up(spark, SF_DIR)
 
     # SPARK_GRAFT_BENCH_REPEAT > 1 records min-of-N per query — local
     # noise control on a shared box; the driver default (1) is untouched

@@ -39,7 +39,6 @@ __all__ = [
     "minhash_signatures",
     "minhash_lsh_pairs",
     "lsh_tuning_curve",
-    "connected_components",
     "connected_components_star",
     "dedup_clusters",
     "simhash64",
@@ -440,88 +439,6 @@ def minhash_lsh_pairs(
     )
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 20
-) -> DataFrame:
-    """Connected components by min-label propagation — the step that turns
-    near-dup *pairs* into dedup *clusters* (keep one doc per component).
-
-    Iterative by nature (no closed SQL form in Spark): each round, every
-    node takes the min of its own label and its neighbors' labels; the
-    loop stops when a full round changes nothing. Convergence needs
-    O(diameter) rounds — near-dup components are tiny clusters, so 2–3
-    rounds in practice.
-
-    Scale discipline for iterative DataFrame algorithms:
-
-    * ``localCheckpoint(eager)`` every round — otherwise the lineage (and
-      the physical plan) doubles per iteration and the job dies on plan
-      explosion long before data size matters. On a cluster, prefer
-      ``checkpoint()`` to survive executor loss.
-    * the convergence probe is ``limit(1).count()`` on the changed set —
-      a driver-side *scalar*, not a collect of data;
-    * each round is one self-contained shuffle (edge⋈label + groupBy
-      min) — the classic label-propagation round; for graphs with huge
-      skewed components, switch to the large-star/small-star variant
-      (alternating contractions bound the per-round blowup).
-
-    Input: (doc_a, doc_b) pairs. Output: (doc_id, cluster_id) for every
-    node that appears in an edge, cluster_id = min doc_id in the
-    component.
-    """
-    # Checkpoint the edge list BEFORE iterating: every round joins against
-    # it, and without materialization the whole upstream pipeline (here,
-    # the LSH candidate generation + verify) would re-execute per round —
-    # measured ~2× on the full clustering query.
-    sym = (
-        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(
-            edges.select(
-                F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        nbr = sym.join(
-            labels, sym["src"] == labels["node"]
-        ).select(F.col("dst").alias("node"), "label")
-        new_labels = (
-            labels.union(nbr)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # Falling through with changes pending means some component's
-        # diameter exceeds max_iter and its labels are NOT converged —
-        # returning them silently would split one component into several.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds; "
-            "a component's diameter exceeds max_iter — raise max_iter "
-            "(min-label propagation needs O(diameter) rounds)"
-        )
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
-
-
 def dedup_clusters(
     documents: DataFrame, n: int = 3, threshold: float = 0.5
 ) -> DataFrame:
@@ -529,13 +446,14 @@ def dedup_clusters(
 
     The end-to-end fuzzy-dedup pipeline a training-data run executes:
     generate verified near-dup pairs at scale (banded LSH, exact-Jaccard
-    verify), then union them into clusters so exactly one canonical doc
-    (the min id) survives per group.
+    verify), then union them into clusters with
+    :func:`connected_components_star` so exactly one canonical doc (the
+    min id) survives per group.
     """
     edges = minhash_lsh_pairs(documents, n=n, threshold=threshold).select(
         "doc_a", "doc_b"
     )
-    return connected_components(edges)
+    return connected_components_star(edges)
 
 
 # ---------------------------------------------------------------------------
@@ -719,9 +637,9 @@ def connected_components_star(
     edges: DataFrame, max_iter: int = 15
 ) -> DataFrame:
     """Connected components by large-star/small-star contraction — the
-    O(log n)-round alternative to :func:`connected_components`' min-label
-    propagation (which needs O(diameter) rounds and so degrades on long
-    chains). Algorithm: Kiveris et al., "Connected Components in
+    step that turns near-dup *pairs* into dedup *clusters*, in O(log n)
+    rounds where min-label propagation needs O(diameter) and so degrades
+    on long chains. Algorithm: Kiveris et al., "Connected Components in
     MapReduce and Beyond" (SoCC 2014).
 
     State is a directed edge list L with every edge (big, small),

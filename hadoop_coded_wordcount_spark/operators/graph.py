@@ -2,14 +2,14 @@
 customer–supplier trade graph.
 
 The engine's second iterative operator family (after
-``dedup.connected_components``): rank = teleport + damping · Σ incoming
+``dedup.connected_components_star``): rank = teleport + damping · Σ incoming
 rank/degree, iterated to a fixed round count. The Spark shape is the
 canonical message-passing round — join ranks to the edge list on ``src``,
 aggregate messages by ``dst`` — executed as DataFrame joins so Catalyst
 handles partial aggregation and AQE handles the (skewed, at real scale)
 message shuffle.
 
-Scale discipline (same as connected_components):
+Scale discipline (same as connected_components_star):
 
 * the edge list and degree table are invariant loop inputs —
   ``localCheckpoint(eager)`` ONCE before iterating, so the orders⋈lineitem

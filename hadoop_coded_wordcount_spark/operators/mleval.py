@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from .similarity_helpers import as_double_unit, dot_unrolled, sqdist_unrolled
+
 __all__ = [
     "user_engagement_labels",
     "auc_roc",
@@ -668,8 +670,6 @@ def triplet_margin(
     equi-joins its salt — no cartesian node; pair volume is
     |anchors| x |corpus|, bounded by construction.
     """
-    from .similarity_helpers import as_double_unit, dot_unrolled_cols
-
     v = as_double_unit(embeddings)
     anchors = v.where(F.col("vec_id") % anchor_mod == 0).select(
         F.col("vec_id").alias("a"),
@@ -686,7 +686,7 @@ def triplet_margin(
     pairs = corpus.join(F.broadcast(anchors), "salt").where(
         F.col("a") != F.col("c")
     )
-    cos = dot_unrolled_cols("na", "nc", dim)
+    cos = dot_unrolled("na", "nc", dim)
     terms = pairs.select(
         "a",
         "la",
@@ -986,30 +986,6 @@ def _label_centroids(embeddings: DataFrame, dim: int):
     return base, centl
 
 
-def _unrolled_sqdist(a, b, dim: int):
-    """Left-to-right unrolled Σ(aᵢ−bᵢ)² from a 0.0 seed — the
-    dot_unrolled fold shape, bit-equal to the oracle's list_reduce.
-    String operands take the one-round-trip ``F.expr`` path (identical
-    analyzed tree — the similarity.dot_unrolled r12 discipline)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            "0.0D + "
-            + " + ".join(
-                f"({a}[{d}] - {b}[{d}]) * ({a}[{d}] - {b}[{d}])"
-                for d in range(dim)
-            )
-        )
-    if isinstance(a, str) or isinstance(b, str):  # mixed call (ADVICE r12)
-        a, b = F.col(a) if isinstance(a, str) else a, (
-            F.col(b) if isinstance(b, str) else b
-        )
-    sq = F.lit(0.0)
-    for d in range(dim):
-        diff = a[d] - b[d]
-        sq = sq + diff * diff
-    return sq
-
-
 def silhouette_by_label(embeddings: DataFrame, dim: int = 64) -> DataFrame:
     """Simplified (centroid-based) silhouette per label: for each vector,
     a = euclidean distance to its own label centroid, b = distance to
@@ -1033,7 +1009,7 @@ def silhouette_by_label(embeddings: DataFrame, dim: int = 64) -> DataFrame:
         "vec_id",
         F.col("label").alias("vlabel"),
         "clabel",
-        F.sqrt(_unrolled_sqdist("emb", "cl", dim)).alias(
+        F.sqrt(sqdist_unrolled("emb", "cl", dim, "0.0D")).alias(
             "dist"
         ),
     )
@@ -1085,7 +1061,7 @@ def davies_bouldin(embeddings: DataFrame, dim: int = 64) -> DataFrame:
     ).select(
         "label",
         F.round(
-            F.sqrt(_unrolled_sqdist("emb", "cl", dim)), 6
+            F.sqrt(sqdist_unrolled("emb", "cl", dim, "0.0D")), 6
         )
         .cast("decimal(18,6)")
         .alias("d"),
@@ -1119,7 +1095,7 @@ def davies_bouldin(embeddings: DataFrame, dim: int = 64) -> DataFrame:
             "s_i",
             F.round(
                 (F.col("s_i") + F.col("s_j"))
-                / F.sqrt(_unrolled_sqdist("ci", "cj", dim)),
+                / F.sqrt(sqdist_unrolled("ci", "cj", dim, "0.0D")),
                 6,
             ).alias("r"),
         )

@@ -2144,7 +2144,7 @@ def hierarchy_rollup(spark: SparkSession, customer: DataFrame) -> DataFrame:
     Physically Spark executes the recursion as a UnionLoop: each step is
     a distributed self-join of the previous frontier, so the walk
     parallelizes like any join and needs O(log maxkey) rounds here —
-    the declarative twin of ``dedup.connected_components``'s hand-rolled
+    the declarative twin of ``dedup.connected_components_star``'s hand-rolled
     iteration (which predates this syntax and keeps checkpoint control).
     The rollup output is |depths| rows regardless of input size.
     """
@@ -9554,6 +9554,8 @@ def matrix_profile_hourly(events: DataFrame, w: int = 24) -> DataFrame:
     differences (bit-equal to the oracle's list_reduce); winners are
     picked with fully-ordered row_numbers so ties cannot flip.
     """
+    from .similarity_helpers import sqdist_unrolled
+
     # densified grid: hours with zero events are REAL zeros in the
     # series, not gaps — otherwise a "24-hour" subsequence silently
     # spans calendar holes on sparse event types and motif/discord
@@ -9596,18 +9598,11 @@ def matrix_profile_hourly(events: DataFrame, w: int = 24) -> DataFrame:
         F.col("i").alias("bi"),
         F.col("arr").alias("ba"),
     )
-    # unrolled codegen fold (optimization r12): the nested HOF
-    # (aggregate over zip_with) evaluates INTERPRETED once per candidate
-    # pair — the exact hot-path shape similarity.dot_unrolled exists to
-    # avoid (measured ~50× there). Same left-to-right fold from the 0.0
-    # seed, so every distance is bit-identical to the HOF form and to
-    # the oracle's list_reduce.
-    d2 = F.expr(
-        "0.0D + "
-        + " + ".join(
-            f"(aa[{i}] - ba[{i}]) * (aa[{i}] - ba[{i}])" for i in range(w)
-        )
-    )
+    # unrolled codegen fold: the nested HOF (aggregate over zip_with)
+    # evaluates INTERPRETED once per candidate pair (measured ~50× slower).
+    # Same left-to-right fold from the 0.0 seed, so every distance is
+    # bit-identical to the HOF form and to the oracle's list_reduce.
+    d2 = sqdist_unrolled("aa", "ba", w, "0.0D")
     pairs = (
         a.join(
             b,

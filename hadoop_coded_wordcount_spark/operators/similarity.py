@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from .similarity_helpers import dot_unrolled, sqdist_unrolled
+
 __all__ = [
     "cosine",
     "cosine_topk",
@@ -123,49 +125,6 @@ def _as_double(col) -> Column:
 
 def _fold_sum(arr: Column) -> Column:
     return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def dot_unrolled(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Pairwise dot product as an unrolled sum of literal-index products.
-
-    ``aggregate(zip_with(...))`` is a *nested* higher-order function, which
-    Catalyst evaluates interpreted — no codegen, measured ~50× slower than
-    plain arithmetic — and it sits on the pair-join hot path where it runs
-    once per CANDIDATE PAIR, not per row. ``GetArrayItem`` with a literal
-    ordinal does participate in whole-stage codegen, so for a fixed,
-    known dimension the dot unrolls into a flat expression tree the JVM
-    JITs like hand-written code.
-
-    FP parity: the sum associates left-to-right from a 0.0 seed —
-    ``((0.0+p0)+p1)+...`` — exactly the ``_fold_sum`` order, so results
-    are bit-identical to the HOF form and to the DuckDB oracle's list
-    fold. Exactness is load-bearing: near-dup thresholds compare these
-    values against an exact-SQL oracle with no tolerance.
-
-    Driver-latency form (optimization r12, guide §5/§7.3): when both
-    operands are plain SQL column references passed as *strings*, the
-    whole unrolled chain is built as ONE ``F.expr`` string parsed
-    JVM-side — the Column-object loop costs ~3·dim py4j round-trips
-    (~0.5 s at dim=64 per call site, paid at every plan construction),
-    while the string parse is one round-trip. The analyzed expression
-    tree is identical either way (pinned in tests), so results cannot
-    differ.
-    """
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            "0.0D + " + " + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(dim))
-        )
-    if isinstance(a, str) or isinstance(b, str):
-        # A mixed (str, Column) call would fall into the Column loop where
-        # `a[i]` is PYTHON STRING INDEXING and `lit(char) * col` silently
-        # nulls via string→double cast (ADVICE r12). Normalize instead.
-        a, b = F.col(a) if isinstance(a, str) else a, (
-            F.col(b) if isinstance(b, str) else b
-        )
-    out = F.lit(0.0)
-    for i in range(dim):
-        out = out + a[i] * b[i]
-    return out
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -759,7 +718,7 @@ def _neardup_cells(
         .where(F.col("cell_id") <= cells)
         .select("blk", "cell_id", F.col("p").alias("cp"))
     )
-    pd2 = _pq_sqdist("p", "cp", proj_dim)
+    pd2 = sqdist_unrolled("p", "cp", proj_dim, None)
     for _ in range(cell_iters):
         asg = (
             pvecs.join(F.broadcast(cents), "blk")
@@ -851,7 +810,7 @@ def kmeans_centroids(
     via ``array_sort(collect_list(struct(dim, v)))``; collect_list order
     is nondeterministic, the sort restores determinism).
 
-    Iterative-algorithm discipline (same as dedup.connected_components):
+    Iterative-algorithm discipline (same as dedup.connected_components_star):
     the invariant input (normalized vectors) is checkpointed ONCE before
     the loop, each round's centroids are checkpointed so the plan stays
     O(1) deep, and the round count is fixed (k-means converges fast and a
@@ -1225,30 +1184,6 @@ def _pq_subvecs(
     return out.localCheckpoint(eager=True) if checkpoint else out
 
 
-def _pq_sqdist(a: Column | str, b: Column | str, sub: int) -> Column:
-    """Unrolled integer L2² over a sub-dim pair of micro-unit arrays —
-    exact BIGINT, so comparisons and sums are order-free. String operands
-    take the one-round-trip ``F.expr`` path (same tree — see
-    :func:`dot_unrolled`)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            " + ".join(
-                f"({a}[{i}] - {b}[{i}]) * ({a}[{i}] - {b}[{i}])"
-                for i in range(sub)
-            )
-        )
-    if isinstance(a, str) or isinstance(b, str):  # mixed call (ADVICE r12)
-        a, b = F.col(a) if isinstance(a, str) else a, (
-            F.col(b) if isinstance(b, str) else b
-        )
-    out = None
-    for i in range(sub):
-        diff = a[i] - b[i]
-        term = diff * diff
-        out = term if out is None else out + term
-    return out
-
-
 def _pq_train_sample(svecs: DataFrame, train_sample: int) -> DataFrame:
     """The bounded training set: all subvectors of the ``train_sample``
     vector owners that sort first by md5(vec_id) — the :func:`audit_qids`
@@ -1320,7 +1255,7 @@ def _pq_train_codebook(
     train = svecs
     if train_sample is not None and train_iters > 0:
         train = _pq_train_sample(svecs, train_sample)
-    d = _pq_sqdist("sv", "cv", sub)
+    d = sqdist_unrolled("sv", "cv", sub, None)
     for _ in range(train_iters):
         asg = (
             train.join(F.broadcast(cb), "j")
@@ -1413,7 +1348,7 @@ def pq_topk(
         max_codes=max_codes,
         train_sample=train_sample,
     )
-    d = _pq_sqdist("sv", "cv", sub)
+    d = sqdist_unrolled("sv", "cv", sub, None)
     enc = (
         svecs.join(F.broadcast(cb), "j")
         .groupBy("vec_id", "j")
@@ -1423,7 +1358,7 @@ def pq_topk(
     qsv = svecs.where(F.col("vec_id") % query_mod == 0).select(
         F.col("vec_id").alias("query_id"), "j", F.col("sv").alias("qv")
     )
-    qd = _pq_sqdist("qv", "cv", sub)
+    qd = sqdist_unrolled("qv", "cv", sub, None)
     dtab = qsv.join(F.broadcast(cb), "j").select(
         "query_id", "j", "code_id", qd.alias("d")
     )
@@ -1447,7 +1382,7 @@ def pq_topk(
     if rerank_mult is None:
         ranked = shortlist
     else:
-        dx = _pq_sqdist("qv", "sv", sub)
+        dx = sqdist_unrolled("qv", "sv", sub, None)
         wr = Window.partitionBy("query_id").orderBy(
             F.asc("d2"), F.asc("neighbor_id")
         )
@@ -1663,8 +1598,8 @@ def ivf_pq_topk(
     qsv = qsv.select(
         F.col("vec_id").alias("query_id"), "j", F.col("sv").alias("qv")
     )
-    d = _pq_sqdist("sv", "cv", sub)
-    qd = _pq_sqdist("qv", "cv", sub)
+    d = sqdist_unrolled("sv", "cv", sub, None)
+    qd = sqdist_unrolled("qv", "cv", sub, None)
     if residual:
         csv = (
             sa.groupBy("cell_id", "j")
@@ -2712,7 +2647,7 @@ def l2_topk_exact(
     ranking the PQ family approximates (PQ's ADC is L2², not cosine, so
     :func:`cosine_topk` is the wrong yardstick for it). Distances are
     exact BIGINT sums of the per-subspace integer L2² (the same
-    ``_pq_sqdist`` both PQ stages use), so ranking and ties are
+    ``sqdist_unrolled`` both PQ stages use), so ranking and ties are
     bit-identical in any engine and at any parallelism.
 
     Scale: queries broadcast against the corpus; per-candidate work is
@@ -2735,7 +2670,7 @@ def l2_topk_exact(
     q = q.select(
         F.col("vec_id").alias("query_id"), "j", F.col("sv").alias("qv")
     )
-    d = _pq_sqdist("qv", "sv", sub)
+    d = sqdist_unrolled("qv", "sv", sub, None)
     w = Window.partitionBy("query_id").orderBy(
         F.asc("d2"), F.asc("neighbor_id")
     )

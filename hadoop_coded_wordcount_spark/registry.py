@@ -1631,14 +1631,13 @@ def q_lsh_tuning_curve(spark, sf_dir):
     return dd.lsh_tuning_curve(load_table(spark, sf_dir, "documents"))
 
 
-@register(
-    "dedup_clusters",
-    # Oracle: transitive closure by recursive CTE over the *exact* Jaccard
-    # pair set (== the LSH pair set at this data's similarity margins, as
-    # established by the minhash_lsh_pairs oracle). Each node's reachable
-    # set is accumulated and min-reduced — fine at oracle SF, while the
-    # Spark side runs the scale path (label propagation).
-    f"""
+# Oracle for both near-dup cluster queries: transitive closure by
+# recursive CTE over the *exact* Jaccard pair set (== the LSH pair set at
+# this data's similarity margins, as established by the minhash_lsh_pairs
+# oracle). Each node's reachable set is accumulated and min-reduced — fine
+# at oracle SF, while the Spark side runs large-star/small-star
+# contraction (dedup.connected_components_star).
+_DEDUP_CLUSTERS_ORACLE = f"""
     WITH RECURSIVE
     g AS ({_DUCK_SHINGLES}),
     e AS (
@@ -1661,47 +1660,15 @@ def q_lsh_tuning_curve(spark, sf_dir):
       SELECT s.src, w.label FROM sym s JOIN walk w ON s.dst = w.node
     )
     SELECT node AS doc_id, MIN(label) AS cluster_id FROM walk GROUP BY node
-    """,
-)
+"""
+
+
+# One query under two names: the bench keys and correctness files still
+# use the star-contraction variant's name.
+@register("dedup_clusters_star", _DEDUP_CLUSTERS_ORACLE)
+@register("dedup_clusters", _DEDUP_CLUSTERS_ORACLE)
 def q_dedup_clusters(spark, sf_dir):
     return dd.dedup_clusters(load_table(spark, sf_dir, "documents"))
-
-
-@register(
-    "dedup_clusters_star",
-    # Same oracle as dedup_clusters (the component partition is
-    # algorithm-independent); the Spark side runs large-star/small-star
-    # contraction — O(log n) rounds vs label propagation's O(diameter).
-    f"""
-    WITH RECURSIVE
-    g AS ({_DUCK_SHINGLES}),
-    e AS (
-      SELECT doc_a, doc_b FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-                 / (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams)))
-                 AS jaccard
-        FROM g a JOIN g b ON a.doc_id < b.doc_id
-      ) WHERE jaccard >= 0.5
-    ),
-    sym AS (
-      SELECT doc_a AS src, doc_b AS dst FROM e
-      UNION ALL
-      SELECT doc_b, doc_a FROM e
-    ),
-    walk(node, label) AS (
-      SELECT DISTINCT src, src FROM sym
-      UNION
-      SELECT s.src, w.label FROM sym s JOIN walk w ON s.dst = w.node
-    )
-    SELECT node AS doc_id, MIN(label) AS cluster_id FROM walk GROUP BY node
-    """,
-)
-def q_dedup_clusters_star(spark, sf_dir):
-    edges = dd.minhash_lsh_pairs(
-        load_table(spark, sf_dir, "documents")
-    ).select("doc_a", "doc_b")
-    return dd.connected_components_star(edges)
 
 
 # End-to-end near-dup resolution: LSH pairs → star CC → keep the single
@@ -4101,7 +4068,8 @@ def q_rolling_anomaly(spark, sf_dir):
 def _pagerank_round(prev: str, out: str) -> str:
     """One unrolled integer-PageRank round (oracle side of the exact
     recurrence in operators/graph.py — same floor-div, same 85/100
-    damping; DuckDB's window-free GROUP BY join round)."""
+    damping; DuckDB's window-free GROUP BY join round). The TextRank
+    oracle unrolls the same round over its string-keyed word graph."""
     return f"""
     {out} AS (
       SELECT e.dst AS node,
@@ -6971,21 +6939,6 @@ def q_holt_forecast(spark, sf_dir):
     return rel.holt_forecast(load_table(spark, sf_dir, "events"))
 
 
-def _textrank_round(prev: str, out: str) -> str:
-    """One unrolled integer-TextRank round over the word graph — same
-    floor-div recurrence as _pagerank_round, string node keys."""
-    return f"""
-    {out} AS (
-      SELECT e.dst AS node,
-             150000000000 // (SELECT nn FROM n)
-             + 85 * CAST(SUM(r.rank // d.d) AS BIGINT) // 100 AS rank
-      FROM edges e
-      JOIN {prev} r ON e.src = r.node
-      JOIN deg d ON e.src = d.node
-      GROUP BY e.dst
-    )"""
-
-
 @register(
     "textrank_keywords",
     f"""
@@ -7012,7 +6965,7 @@ def _textrank_round(prev: str, out: str) -> str:
     n AS (SELECT COUNT(*) AS nn FROM deg),
     r0 AS (
       SELECT node, 1000000000000 // (SELECT nn FROM n) AS rank FROM deg
-    ),{_textrank_round("r0", "r1")},{_textrank_round("r1", "r2")},{_textrank_round("r2", "r3")}
+    ),{_pagerank_round("r0", "r1")},{_pagerank_round("r1", "r2")},{_pagerank_round("r2", "r3")}
     SELECT node AS word, rank AS rank_scaled,
            CAST(ROW_NUMBER() OVER (ORDER BY rank DESC, node) AS INT)
              AS rank_pos
@@ -16919,21 +16872,8 @@ def q_ams_join_size_orders_customer(spark, sf_dir):
 # window even though the gate has already seen them — use it only for a
 # query that failed (or was fixed after) a prior external window, and
 # CLEAR the entry as soon as the re-check lands green (otherwise it
-# permanently occupies window slots: embedding_covariance and
-# seasonal_decompose passed in r8 and were removed here).
-#
-# r12: the four r11 re-checks (kmv_distinct_custkeys, embedding_lsh_pairs,
-# similarity_topk_pandas, similarity_ivf_topk) all landed green in
-# CORRECTNESS_r11 and are cleared.  The one rightful next occupant is
-# dbscan_embeddings: its plan AND oracle were both rebased in r11
-# (density routing + `approx` column + representative stitching), and the
-# external gate's last green row for that name predates the rewrite —
-# only the new dbscan_density_probe ran in the r11 window (VERDICT r11,
-# "What's missing" #1).  Clear it at r13 once CORRECTNESS_r12 shows it
-# exact.
-_RECHECK_FIRST: list = [
-    "dbscan_embeddings",
-]
+# permanently occupies window slots).
+_RECHECK_FIRST: list = []
 
 
 def _gate_checked_rounds() -> dict:

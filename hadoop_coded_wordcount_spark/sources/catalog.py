@@ -164,10 +164,6 @@ def finish_cached(out: DataFrame, *cached: DataFrame) -> DataFrame:
     return out
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so ``spark.sql`` queries work."""
     for name in TABLES:

@@ -28,7 +28,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hadoop_coded_wordcount_spark.registry import QUERIES
-from hadoop_coded_wordcount_spark.session import get_spark
+from hadoop_coded_wordcount_spark.session import get_spark, warm_up
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -38,43 +38,9 @@ def main() -> int:
     spark = get_spark(app_name="hcw-profile")
     sc = spark.sparkContext
 
-    # --- same warmups as bench.py so cold numbers mean codegen-of-this-
-    # query, not session spin-up -------------------------------------
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    warm = spark.read.parquet(os.path.join(SF_DIR, "region.parquet"))
-    warm.count()
-
-    @pandas_udf("long")
-    def _noop_udf(s):
-        return s
-
-    warm.select(_noop_udf(F.col("r_regionkey"))).count()
-    rng = spark.range(0, 256, 1, 2 * sc.defaultParallelism)
-    rng.mapInPandas(lambda it: it, schema="id long").count()
-    rng.groupBy((F.col("id") % 8).alias("g")).applyInPandas(
-        lambda pdf: pdf[["id"]], schema="id long"
-    ).count()
-    from pyspark.sql.window import Window
-
-    nat = spark.read.parquet(os.path.join(SF_DIR, "nation.parquet"))
-    (
-        nat.join(F.broadcast(warm), F.col("n_regionkey") == F.col("r_regionkey"))
-        .groupBy("r_name")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .select("r_name", F.row_number().over(Window.orderBy("c")).alias("rn"))
-        .count()
-    )
-    from hadoop_coded_wordcount_spark.operators.similarity import dot_unrolled
-
-    two = spark.range(0, 2, 1, 1).select(
-        F.array(*[(F.col("id") + F.lit(float(i))) for i in range(64)]).alias("a"),
-        F.array(*[(F.col("id") * F.lit(float(i))) for i in range(64)]).alias("b"),
-    )
-    two.join(F.broadcast(two.selectExpr("a as qa"))).select(
-        dot_unrolled(F.col("qa"), F.col("b"), 64).alias("d")
-    ).groupBy().min("d").collect()
+    # the bench's warm-up, so cold numbers mean codegen-of-this-query,
+    # not session spin-up
+    warm_up(spark, SF_DIR)
 
     if names_arg == "ALL":
         names = list(QUERIES)

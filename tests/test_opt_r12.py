@@ -5,12 +5,9 @@ results cannot differ if the trees are equal."""
 
 from pyspark.sql import functions as F
 
-from hadoop_coded_wordcount_spark.operators.similarity import (
-    _pq_sqdist,
-    dot_unrolled,
-)
 from hadoop_coded_wordcount_spark.operators.similarity_helpers import (
-    dot_unrolled_cols,
+    dot_unrolled,
+    sqdist_unrolled,
 )
 
 
@@ -33,20 +30,37 @@ def _pair_frame(spark):
     return a.crossJoin(b)
 
 
+def _loop_fold(a, b, dim, term, seed):
+    """Reference: the Column-object loop the string builders replaced —
+    one py4j call per node, left-to-right from ``seed`` (or from the
+    first term when ``seed`` is None)."""
+    out = seed
+    for i in range(dim):
+        t = term(a[i], b[i])
+        out = t if out is None else out + t
+    return out
+
+
+def _same_tree(j, x, y):
+    assert _analyzed(j.select(x.alias("v"))) == _analyzed(
+        j.select(y.alias("v"))
+    )
+
+
 def test_dot_unrolled_string_path_same_tree(spark):
     j = _pair_frame(spark)
-    loop = dot_unrolled(F.col("a.ne"), F.col("b.nb"), 4)
-    sql = dot_unrolled("a.ne", "b.nb", 4)
-    assert _analyzed(j.select(loop.alias("v"))) == _analyzed(
-        j.select(sql.alias("v"))
+    loop = _loop_fold(
+        F.col("a.ne"), F.col("b.nb"), 4, lambda x, y: x * y, F.lit(0.0)
     )
-    helper = dot_unrolled_cols("a.ne", "b.nb", 4)
-    assert _analyzed(j.select(helper.alias("v"))) == _analyzed(
-        j.select(sql.alias("v"))
-    )
+    _same_tree(j, loop, dot_unrolled("a.ne", "b.nb", 4))
+
+
+def _sq(x, y):
+    return (x - y) * (x - y)
 
 
 def test_pq_sqdist_string_path_same_tree(spark):
+    # the PQ family's exact-BIGINT distance: no seed, fold from term 0
     j = (
         _pair_frame(spark)
         .selectExpr(
@@ -54,11 +68,14 @@ def test_pq_sqdist_string_path_same_tree(spark):
             "transform(nb, x -> cast(round(x * 1e6) as long)) as qv",
         )
     )
-    loop = _pq_sqdist(F.col("qv"), F.col("sv"), 4)
-    sql = _pq_sqdist("qv", "sv", 4)
-    assert _analyzed(j.select(loop.alias("v"))) == _analyzed(
-        j.select(sql.alias("v"))
-    )
+    loop = _loop_fold(F.col("qv"), F.col("sv"), 4, _sq, None)
+    _same_tree(j, loop, sqdist_unrolled("qv", "sv", 4, None))
+
+
+def test_sqdist_unrolled_seeded_same_tree(spark):
+    j = _pair_frame(spark)
+    loop = _loop_fold(F.col("a.ne"), F.col("b.nb"), 4, _sq, F.lit(0.0))
+    _same_tree(j, loop, sqdist_unrolled("a.ne", "b.nb", 4, "0.0D"))
 
 
 def test_dot_unrolled_signed_zero_seed(spark):

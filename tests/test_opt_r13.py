@@ -414,27 +414,31 @@ def test_ams_registers_rejects_unsafe_identifier(spark):
         ams_registers(df, "bad name")
 
 
-# --------------------------------------------- mixed-operand normalization
+# ------------------------------------------------ Column operands rejected
 
 
-def test_dot_unrolled_mixed_operands_value_equal(spark):
-    # ADVICE r12: a (str, Column) call used to fall into the Column loop
-    # where a[i] was python string indexing -> silent nulls. Now both
-    # mixed forms must equal the all-string and all-Column forms.
-    from hadoop_coded_wordcount_spark.operators.similarity import (
+def test_dot_unrolled_column_operand_raises(spark):
+    # ADVICE r12: a Column operand once fell into a loop where a[i] was
+    # python string indexing -> silent nulls. The kernels take SQL column
+    # names only, so any Column operand must raise, never build a tree.
+    import pytest
+
+    from hadoop_coded_wordcount_spark.operators.similarity_helpers import (
         dot_unrolled,
+        sqdist_unrolled,
     )
 
     df = spark.createDataFrame(
         [([1.0, 2.0, 3.0], [4.0, 5.0, 6.0])],
         "a array<double>, b array<double>",
     )
-    want = 1.0 * 4 + 2 * 5 + 3 * 6
+    assert df.select(dot_unrolled("a", "b", 3).alias("v")).first().v == 32.0
     for x, y in [
-        ("a", "b"),
         (F.col("a"), F.col("b")),
         ("a", F.col("b")),
         (F.col("a"), "b"),
     ]:
-        got = df.select(dot_unrolled(x, y, 3).alias("v")).first().v
-        assert got == want, (x, y, got)
+        with pytest.raises(TypeError):
+            dot_unrolled(x, y, 3)
+        with pytest.raises(TypeError):
+            sqdist_unrolled(x, y, 3, "0.0D")

@@ -101,45 +101,6 @@ def test_minhash_estimate_tracks_exact_jaccard(spark):
     assert errs and sum(errs) / len(errs) < 0.15
 
 
-_EDGES = st.lists(
-    st.tuples(st.integers(0, 30), st.integers(0, 30)).filter(
-        lambda e: e[0] != e[1]
-    ),
-    min_size=1,
-    max_size=40,
-)
-
-
-@given(edges=_EDGES)
-@_SETTINGS
-def test_connected_components_matches_union_find(spark, edges):
-    """Label propagation on Spark must agree with a pure-Python
-    union-find on arbitrary graphs (cycles, self-merges, chains)."""
-    # independent model: union-find with path compression
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in parent}
-
-    canon = [(min(a, b), max(a, b)) for a, b in edges]
-    sdf = spark.createDataFrame(canon, ["doc_a", "doc_b"])
-    got = {
-        r.doc_id: r.cluster_id
-        for r in dd.connected_components(sdf).collect()
-    }
-    assert got == want
-
-
 def test_weighted_sample_deterministic_and_biased(spark):
     """Sequential-Poisson weighted sampling: partition-layout-invariant,
     exactly k rows, and weight-biased (sampled orders are pricier than the
@@ -247,7 +208,7 @@ _STAR_EDGES = st.lists(
 @_SETTINGS
 def test_star_cc_matches_union_find(spark, edges):
     """Large-star/small-star contraction must agree with union-find on
-    arbitrary graphs — same model check label propagation passes."""
+    arbitrary graphs (cycles, self-merges, chains)."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:

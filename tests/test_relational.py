@@ -71,7 +71,7 @@ def test_recursive_cte_sql_frontend(spark):
     produces every prefix path. (Deduplicating UNION inside the recursion
     is not supported yet — UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE — which
     is why cyclic transitive closure lives in
-    dedup.connected_components rather than the SQL front-end.)"""
+    dedup.connected_components_star rather than the SQL front-end.)"""
     spark.createDataFrame(
         [(i, i + 1) for i in range(10)], ["src", "dst"]
     ).createOrReplaceTempView("chain_edges")
