@@ -9,25 +9,9 @@ aggregate messages by ``dst`` — executed as DataFrame joins so Catalyst
 handles partial aggregation and AQE handles the (skewed, at real scale)
 message shuffle.
 
-Scale discipline (same as connected_components_star):
-
-* the edge list and degree table are invariant loop inputs —
-  ``localCheckpoint(eager)`` ONCE before iterating, so the orders⋈lineitem
-  edge derivation doesn't re-execute per round (on a cluster prefer
-  ``checkpoint()``);
-* each round re-checkpoints the rank frame: without it the physical plan
-  doubles per iteration and dies on plan explosion long before data size
-  matters;
-* per-round cost is one join shuffle on ``src`` + one aggregate shuffle on
-  ``dst`` — both on the edge list, the only O(E) structure; rank/degree
-  frames are O(V).
-
-Determinism discipline (what makes an *iterative float algorithm*
-oracle-exact): all rank mass is integer-scaled (total mass = 10^12),
-per-edge contributions use integer floor-division, and the damping step is
-``85·Σ // 100`` — no float ever enters the loop, so message-order and
-engine differences cannot produce drift, and DuckDB reproduces the exact
-ranks by unrolling the same integer recurrence.
+The recurrence, its checkpoint cadence and its exactness argument live
+once, in :func:`_pagerank_ranks`; :func:`pagerank`,
+:func:`personalized_pagerank` and ``textstats.textrank_keywords`` call it.
 
 Reference parity: the reference engine has no graph operator; this extends
 the engine surface for the training-data side (graph-based doc/author
@@ -85,22 +69,52 @@ def trade_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     return fwd.union(rev)
 
 
-def pagerank(
-    orders: DataFrame,
-    lineitem: DataFrame,
-    n_iter: int = 3,
-    damping_pct: int = 85,
-) -> DataFrame:
-    """Fixed-round PageRank on :func:`trade_edges`, exact-integer
-    arithmetic (see module docstring). Returns one row per node:
-    (node, node_type, entity_key, rank_scaled) where rank_scaled sums to
-    ~PR_SCALE over the graph (minus floor-division crumbs).
+def _trade_node_cols() -> list:
+    """``node_type`` and ``entity_key`` decoded from a :func:`trade_edges`
+    node id (customer → 2k, supplier → 2k+1)."""
+    return [
+        F.when(F.col("node") % 2 == 0, F.lit("customer"))
+        .otherwise(F.lit("supplier"))
+        .alias("node_type"),
+        F.expr("node div 2").alias("entity_key"),
+    ]
 
-    The symmetric edge construction guarantees every node has both out-
-    and in-degree ≥ 1, so there is no dangling-mass term and the rank
-    frame keeps full node coverage every round.
+
+def _pagerank_ranks(
+    edges: DataFrame,
+    n_iter: int,
+    damping_pct: int,
+    seed_node=None,
+) -> DataFrame | None:
+    """The integer PageRank recurrence over a directed edge list
+    (src, dst): ``n_iter`` rounds of rank = teleport + damping · Σ
+    incoming rank/out-degree. Returns (node, rank), or None on an empty
+    graph. With ``seed_node`` set, all start and teleport mass sits on
+    that node (personalized PageRank); otherwise both are uniform.
+
+    Scale discipline:
+
+    * the edge list and degree table are invariant loop inputs —
+      ``localCheckpoint(eager)`` ONCE before iterating, so the edge
+      derivation doesn't re-execute per round (on a cluster prefer
+      ``checkpoint()``);
+    * each round LAZILY checkpoints the rank frame: it truncates the
+      analyzed plan (no per-round plan explosion) without paying an
+      eager job per round — the final action materializes each round's
+      state in sequence (measured: 3.9 s stable vs 4.8 s eager at sf0.1);
+    * per-round cost is one join shuffle on ``src`` + one aggregate
+      shuffle on ``dst`` — both on the edge list, the only O(E)
+      structure; rank/degree frames are O(V).
+
+    Determinism discipline (what makes an *iterative float algorithm*
+    oracle-exact): all rank mass is integer-scaled (total mass =
+    PR_SCALE), per-edge contributions use integer floor-division, and
+    the damping step is ``damping·Σ // 100`` — no float ever enters the
+    loop, so message-order and engine differences cannot produce drift,
+    and DuckDB reproduces the exact ranks by unrolling the same integer
+    recurrence.
     """
-    edges = trade_edges(orders, lineitem).localCheckpoint(eager=True)
+    edges = edges.localCheckpoint(eager=True)
     deg = (
         edges.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).alias("d"))
@@ -108,20 +122,24 @@ def pagerank(
     )
     n_nodes = deg.count()  # driver-side scalar, not a data collect
     if n_nodes == 0:
-        # Empty graph: return a typed empty frame rather than dividing
-        # by zero below (registry-wide empty-input invariant).
-        spark = orders.sparkSession
-        return spark.createDataFrame(
-            [], "node bigint, node_type string, entity_key bigint, rank_scaled bigint"
+        return None
+    teleport = PR_SCALE * (100 - damping_pct) // 100
+    if seed_node is None:
+        ranks = deg.select("node", F.lit(PR_SCALE // n_nodes).alias("rank"))
+        teleport_col = F.lit(teleport // n_nodes)
+    else:
+        at_seed = F.col("node") == seed_node
+        ranks = deg.select(
+            "node",
+            F.when(at_seed, F.lit(PR_SCALE))
+            .otherwise(F.lit(0))
+            .cast("long")
+            .alias("rank"),
         )
-    init = PR_SCALE // n_nodes
-    teleport = (PR_SCALE * (100 - damping_pct) // 100) // n_nodes
-
-    ranks = deg.select("node", F.lit(init).alias("rank"))
+        teleport_col = F.when(at_seed, F.lit(teleport)).otherwise(F.lit(0))
     for _ in range(n_iter):
-        contrib = (
-            ranks.join(deg, "node")
-            .select("node", F.expr("rank div d").alias("contrib"))
+        contrib = ranks.join(deg, "node").select(
+            "node", F.expr("rank div d").alias("contrib")
         )
         ranks = (
             edges.join(contrib, edges["src"] == contrib["node"])
@@ -129,24 +147,40 @@ def pagerank(
             .agg(F.sum("contrib").alias("s"))
             .select(
                 "node",
-                (
-                    F.lit(teleport)
-                    + F.expr(f"{damping_pct} * s div 100")
-                ).alias("rank"),
+                (teleport_col + F.expr(f"{damping_pct} * s div 100")).alias(
+                    "rank"
+                ),
             )
-            # LAZY checkpoint: truncates the analyzed plan (no per-round
-            # plan explosion) without paying an eager job per round — the
-            # final action materializes each round's state in sequence.
-            # Measured: 3.9 s stable vs 4.8 s eager at sf0.1.
             .localCheckpoint(eager=False)
         )
+    return ranks
+
+
+def pagerank(
+    orders: DataFrame,
+    lineitem: DataFrame,
+    n_iter: int = 3,
+    damping_pct: int = 85,
+) -> DataFrame:
+    """Fixed-round PageRank on :func:`trade_edges`, exact-integer
+    arithmetic (the :func:`_pagerank_ranks` recurrence). Returns one row
+    per node: (node, node_type, entity_key, rank_scaled) where
+    rank_scaled sums to ~PR_SCALE over the graph (minus floor-division
+    crumbs).
+
+    The symmetric edge construction guarantees every node has both out-
+    and in-degree ≥ 1, so there is no dangling-mass term and the rank
+    frame keeps full node coverage every round.
+    """
+    ranks = _pagerank_ranks(trade_edges(orders, lineitem), n_iter, damping_pct)
+    if ranks is None:
+        # Empty graph: a typed empty frame, not a division by zero
+        # (registry-wide empty-input invariant).
+        return orders.sparkSession.createDataFrame(
+            [], "node bigint, node_type string, entity_key bigint, rank_scaled bigint"
+        )
     return ranks.select(
-        "node",
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("supplier"))
-        .alias("node_type"),
-        F.expr("node div 2").alias("entity_key"),
-        F.col("rank").alias("rank_scaled"),
+        "node", *_trade_node_cols(), F.col("rank").alias("rank_scaled")
     )
 
 
@@ -204,14 +238,7 @@ def bfs_depths(
         # (O(V·hops) writes) for no recompute benefit.
         visited = visited.union(nxt)
         frontier = nxt
-    return visited.select(
-        "node",
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("supplier"))
-        .alias("node_type"),
-        F.expr("node div 2").alias("entity_key"),
-        "dist",
-    )
+    return visited.select("node", *_trade_node_cols(), "dist")
 
 
 def degree_distribution(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
@@ -228,12 +255,7 @@ def degree_distribution(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
         F.col("src").alias("node")
     ).agg(F.count(F.lit(1)).alias("degree"))
     return (
-        deg.select(
-            F.when(F.col("node") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier"))
-            .alias("node_type"),
-            "degree",
-        )
+        deg.select(_trade_node_cols()[0], "degree")
         .groupBy("node_type", "degree")
         .agg(F.count(F.lit(1)).alias("n_nodes"))
     )
@@ -344,31 +366,18 @@ def supplier_knn_graph(lineitem: DataFrame, k: int = 3) -> DataFrame:
     ).distinct()
 
 
-def triangle_count(edges: DataFrame, eager: bool = True) -> DataFrame:
-    """Exact triangle count by degree orientation — the shape that keeps
-    triangle counting feasible on skewed graphs at 100 TB.
+def _oriented_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Degree orientation of an undirected edge list (src < dst): every
+    edge points from its (degree, id)-smaller endpoint ``lo`` to the
+    larger ``hi``, carrying ``dhi`` = d(hi). Returns (deg(v, d),
+    oriented(lo, hi, dhi)); the caller persists ``oriented``.
 
-    Naive wedge enumeration joins adjacency on the hub node and dies on
-    the highest-degree vertex (a d-degree node contributes d2 wedges).
-    Orienting every undirected edge from the (degree, id)-smaller
-    endpoint to the larger one caps each node's OUT-degree at O(sqrt(E))
-    regardless of its true degree, so wedge volume is bounded by E^1.5
-    total — the classic Suri-Vassilvitskii MapReduce bound, expressed as
-    two DataFrame equi-joins Catalyst can shuffle-plan (the degree table
-    is NODE-sized, so it carries no broadcast hint — AQE picks a
-    broadcast at runtime while it fits the threshold and degrades to a
-    shuffle join at unbounded node counts; wedge pairs keep the same
-    (degree, id) order so the closing edge, if present, is oriented
-    exactly b -> c and ONE equi-join finds it).
-
-    Input contract: undirected edges, one row per edge, src < dst.
-    Output: one row (n_nodes, n_edges, n_wedges, n_triangles), eagerly
-    materialized by default so the persisted oriented-edge cache
-    releases before return (``eager=False`` keeps the plan lazy — the
-    plan-shape test inspects the degree join through it).
+    explode-not-union (r12): a union of two projections evaluates the
+    UNPERSISTED edge subtree twice (the kNN-graph build is a full
+    lineitem shuffle); exploding a 2-element array emits the identical
+    rows from ONE evaluation. The degree table is NODE-sized, so it
+    carries no broadcast hint — AQE decides.
     """
-    # explode-not-union (r12): one evaluation of the edge subtree for
-    # the degree table instead of two (see local_clustering_coefficient)
     deg = (
         edges.select(
             F.explode(F.array(F.col("src"), F.col("dst"))).alias("v")
@@ -390,9 +399,16 @@ def triangle_count(edges: DataFrame, eager: bool = True) -> DataFrame:
         F.when(lo_first, F.col("src")).otherwise(F.col("dst")).alias("lo"),
         F.when(lo_first, F.col("dst")).otherwise(F.col("src")).alias("hi"),
         F.when(lo_first, F.col("dd")).otherwise(F.col("ds")).alias("dhi"),
-    ).persist()
+    )
+    return deg, oriented
+
+
+def _wedges(oriented: DataFrame) -> DataFrame:
+    """Wedges (a, b, c) of an :func:`_oriented_edges` list: a → b and
+    a → c with b before c in (degree, id) order, so the closing edge, if
+    present, is oriented exactly b → c and ONE equi-join finds it."""
     w1, w2 = oriented.alias("w1"), oriented.alias("w2")
-    wedges = (
+    return (
         w1.join(w2, F.col("w1.lo") == F.col("w2.lo"))
         .where(
             (F.col("w1.dhi") < F.col("w2.dhi"))
@@ -401,12 +417,41 @@ def triangle_count(edges: DataFrame, eager: bool = True) -> DataFrame:
                 & (F.col("w1.hi") < F.col("w2.hi"))
             )
         )
-        .select(F.col("w1.hi").alias("b"), F.col("w2.hi").alias("c"))
+        .select(
+            F.col("w1.lo").alias("a"),
+            F.col("w1.hi").alias("b"),
+            F.col("w2.hi").alias("c"),
+        )
     )
+
+
+def triangle_count(edges: DataFrame, eager: bool = True) -> DataFrame:
+    """Exact triangle count by degree orientation — the shape that keeps
+    triangle counting feasible on skewed graphs at 100 TB.
+
+    Naive wedge enumeration joins adjacency on the hub node and dies on
+    the highest-degree vertex (a d-degree node contributes d2 wedges).
+    Orienting every undirected edge from the (degree, id)-smaller
+    endpoint to the larger one caps each node's OUT-degree at O(sqrt(E))
+    regardless of its true degree, so wedge volume is bounded by E^1.5
+    total — the classic Suri-Vassilvitskii MapReduce bound, expressed as
+    two DataFrame equi-joins Catalyst can shuffle-plan
+    (:func:`_oriented_edges`, :func:`_wedges`; AQE broadcasts the
+    node-sized degree table while it fits the threshold and degrades to
+    a shuffle join at unbounded node counts).
+
+    Input contract: undirected edges, one row per edge, src < dst.
+    Output: one row (n_nodes, n_edges, n_wedges, n_triangles), eagerly
+    materialized by default so the persisted oriented-edge cache
+    releases before return (``eager=False`` keeps the plan lazy — the
+    plan-shape test inspects the degree join through it).
+    """
+    deg, oriented = _oriented_edges(edges)
+    oriented = oriented.persist()
     closing = oriented.select(
         F.col("lo").alias("b"), F.col("hi").alias("c"), F.lit(1).alias("closed")
     )
-    tri = wedges.join(closing, ["b", "c"], "left").agg(
+    tri = _wedges(oriented).join(closing, ["b", "c"], "left").agg(
         F.count(F.lit(1)).alias("n_wedges"),
         # empty wedge set sums to NULL — a triangle-free graph must
         # report 0, not null (and so must the SQL oracle)
@@ -427,24 +472,24 @@ def triangle_count(edges: DataFrame, eager: bool = True) -> DataFrame:
     return finish_cached(out, oriented)
 
 
-def k_core(edges: DataFrame, k: int = 2, max_rounds: int = 40) -> DataFrame:
-    """k-core decomposition by iterative peeling: repeatedly drop nodes
-    with degree < k (and their edges) until the graph stabilizes; returns
-    each surviving node with its degree INSIDE the core subgraph. The
-    standard subgraph-density primitive (spam rings, community nuclei,
-    robustness) and — unlike per-round node ordering algorithms — the
-    peel is confluent: the fixpoint is order-independent, so the result
-    is deterministic under any execution.
+def _peel(
+    edges: DataFrame, step, max_rounds: int, name: str
+) -> tuple[DataFrame, int]:
+    """Peel an edge list (src, dst) to its fixpoint: apply ``step`` (the
+    current edges → the edges that survive one peel round) until the
+    edge count stops changing. Returns (fixpoint edges, edge count).
 
-    Scale shape: each round is one degree aggregation (map-side combined)
-    plus two semi-joins of the edge list against the alive-node set;
-    AQE picks broadcast vs shuffle for the alive side as it shrinks.
-    ``localCheckpoint`` per round pins the lineage (the same cadence
-    star-contraction CC uses — on a cluster, ``checkpoint()``).
-    Convergence is detected by edge count (1 driver scalar per round, a
-    bounded control-plane read); rounds are worst-case O(peel depth) —
-    pathological chains peel one layer per round, so a ``max_rounds``
-    guard RAISES rather than silently returning a non-fixpoint.
+    Checkpoint discipline: the input is checkpointed eagerly once; each
+    round's result is a LAZY checkpoint fused with the convergence
+    ``count()`` (optimization r13) — the full count materializes the
+    checkpoint in the same job the eager flag used to spend separately,
+    one barrier per round instead of two (a ``limit(1)`` probe would pin
+    one partition and leave lineage uncut). Convergence costs one scalar
+    count per round. A peel is confluent (the fixpoint is
+    order-independent), so the result is deterministic under any
+    execution; rounds are worst-case O(peel depth) — a chain peels one
+    layer per round — so hitting ``max_rounds`` RAISES rather than
+    returning a non-fixpoint.
     """
     cur = edges.select("src", "dst").localCheckpoint(eager=True)
     prev_edges = cur.count()
@@ -452,38 +497,61 @@ def k_core(edges: DataFrame, k: int = 2, max_rounds: int = 40) -> DataFrame:
     for _ in range(max_rounds):
         if converged:
             break
-        deg = (
-            cur.select(F.col("src").alias("v"))
-            .unionAll(cur.select(F.col("dst").alias("v")))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        alive = deg.where(F.col("d") >= k)
-        # LAZY checkpoint fused with the convergence count (optimization
-        # r13): count() fully materializes the checkpoint in the SAME
-        # job the eager flag used to spend separately — one barrier per
-        # peel round instead of two.
-        nxt = (
-            cur.join(
-                alive.select(F.col("v").alias("src")), "src", "left_semi"
-            )
-            .join(alive.select(F.col("v").alias("dst")), "dst", "left_semi")
-            .localCheckpoint(eager=False)
-        )
+        nxt = step(cur).localCheckpoint(eager=False)
         n = nxt.count()
         converged = n == prev_edges
         cur, prev_edges = nxt, n
     if not converged:
         raise RuntimeError(
-            f"k_core: not converged after {max_rounds} rounds "
+            f"{name}: not converged after {max_rounds} rounds "
             f"({prev_edges} edges remain)"
         )
+    return cur, prev_edges
+
+
+def _common_neighbors(sym: DataFrame) -> DataFrame:
+    """Common-neighbour counts over a symmetrized edge list (a, b): ONE
+    wedge join of two edge copies on the shared neighbour — never
+    all-pairs — giving (u, v, cn) for every pair u < v at distance ≤ 2."""
+    w1 = sym.select(F.col("b").alias("n"), F.col("a").alias("u"))
+    w2 = sym.select(F.col("b").alias("n2"), F.col("a").alias("v"))
     return (
-        cur.select(F.col("src").alias("v"))
-        .unionAll(cur.select(F.col("dst").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
+        w1.join(w2, (F.col("n") == F.col("n2")) & (F.col("u") < F.col("v")))
+        .groupBy("u", "v")
+        .agg(F.count(F.lit(1)).alias("cn"))
     )
+
+
+def k_core(edges: DataFrame, k: int = 2, max_rounds: int = 40) -> DataFrame:
+    """k-core decomposition by iterative peeling: repeatedly drop nodes
+    with degree < k (and their edges) until the graph stabilizes; returns
+    each surviving node with its degree INSIDE the core subgraph. The
+    standard subgraph-density primitive (spam rings, community nuclei,
+    robustness).
+
+    Scale shape: each :func:`_peel` round is one degree aggregation
+    (map-side combined) plus two semi-joins of the edge list against
+    the alive-node set; AQE picks broadcast vs shuffle for the alive
+    side as it shrinks. Checkpoints, convergence and the ``max_rounds``
+    raise are the helper's.
+    """
+
+    def degrees(cur: DataFrame, name: str) -> DataFrame:
+        return (
+            cur.select(F.col("src").alias("v"))
+            .unionAll(cur.select(F.col("dst").alias("v")))
+            .groupBy("v")
+            .agg(F.count(F.lit(1)).alias(name))
+        )
+
+    def step(cur: DataFrame) -> DataFrame:
+        alive = degrees(cur, "d").where(F.col("d") >= k)
+        return cur.join(
+            alive.select(F.col("v").alias("src")), "src", "left_semi"
+        ).join(alive.select(F.col("v").alias("dst")), "dst", "left_semi")
+
+    cur, _ = _peel(edges, step, max_rounds, "k_core")
+    return degrees(cur, "core_degree")
 
 
 def link_prediction_jaccard(
@@ -494,10 +562,10 @@ def link_prediction_jaccard(
     top-N predicted links. The classic collaborative-filtering /
     recommend-an-edge primitive.
 
-    Scale shape: candidate pairs come from a WEDGE JOIN (two edge copies
-    joined on the shared neighbor) — never all-pairs; the common-
-    neighbor count aggregates the wedges, degrees ride a broadcast, and
-    adjacency is excluded with one anti-join against the edge list.
+    Scale shape: candidates and their common-neighbor counts come from
+    the :func:`_common_neighbors` wedge join — never all-pairs; degrees
+    ride a broadcast, and adjacency is excluded with one anti-join
+    against the edge list.
     On skewed graphs the wedge fanout concentrates on hubs — the same
     degree-orientation bound as triangle_count applies if needed; here
     candidates are already only distance-2 pairs. Scores divide exact
@@ -515,15 +583,7 @@ def link_prediction_jaccard(
         ).alias("e")
     ).select("e.a", "e.b")
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
-    # wedges: u -(n)- v with u < v
-    w1 = sym.select(F.col("b").alias("n"), F.col("a").alias("u"))
-    w2 = sym.select(F.col("b").alias("n2"), F.col("a").alias("v"))
-    common = (
-        w1.join(w2, (F.col("n") == F.col("n2")) & (F.col("u") < F.col("v")))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("cn"))
-    )
-    non_adjacent = common.join(
+    non_adjacent = _common_neighbors(sym).join(
         edges,
         (F.col("u") == F.col("src")) & (F.col("v") == F.col("dst")),
         "left_anti",
@@ -556,64 +616,25 @@ def personalized_pagerank(
     n_iter: int = 3,
     damping_pct: int = 85,
 ) -> DataFrame:
-    """Personalized PageRank from one seed customer: identical integer
-    recurrence to :func:`pagerank` except ALL teleport mass returns to
-    the seed node — the rank then measures proximity-weighted influence
-    of the seed, the standard recommendation/expansion primitive.
-
-    Same scale discipline as pagerank (checkpointed invariant inputs,
-    per-round lazy checkpoint, one join + one agg shuffle per round) and
-    the same determinism argument: every quantity is integer-scaled with
-    floor division, so message order cannot drift a single unit and the
-    oracle replays the rounds exactly.
+    """Personalized PageRank from one seed customer: the
+    :func:`_pagerank_ranks` integer recurrence with ALL start and
+    teleport mass on the seed node — the rank then measures
+    proximity-weighted influence of the seed, the standard
+    recommendation/expansion primitive. Scale and determinism
+    discipline are the helper's, so the oracle replays the rounds
+    exactly.
     """
-    edges = trade_edges(orders, lineitem).localCheckpoint(eager=True)
-    deg = (
-        edges.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=True)
+    ranks = _pagerank_ranks(
+        trade_edges(orders, lineitem), n_iter, damping_pct,
+        seed_node=2 * seed_custkey,
     )
-    if deg.count() == 0:
-        spark = orders.sparkSession
-        return spark.createDataFrame(
+    if ranks is None:
+        return orders.sparkSession.createDataFrame(
             [],
             "node bigint, node_type string, entity_key bigint, rank_scaled bigint",
         )
-    seed_node = 2 * seed_custkey
-    teleport_total = PR_SCALE * (100 - damping_pct) // 100
-    ranks = deg.select(
-        "node",
-        F.when(F.col("node") == seed_node, F.lit(PR_SCALE))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("rank"),
-    )
-    for _ in range(n_iter):
-        contrib = ranks.join(deg, "node").select(
-            "node", F.expr("rank div d").alias("contrib")
-        )
-        ranks = (
-            edges.join(contrib, edges["src"] == contrib["node"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("contrib").alias("s"))
-            .select(
-                "node",
-                (
-                    F.when(
-                        F.col("node") == seed_node, F.lit(teleport_total)
-                    ).otherwise(F.lit(0))
-                    + F.expr(f"{damping_pct} * s div 100")
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
     return ranks.select(
-        "node",
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("supplier"))
-        .alias("node_type"),
-        F.expr("node div 2").alias("entity_key"),
-        F.col("rank").alias("rank_scaled"),
+        "node", *_trade_node_cols(), F.col("rank").alias("rank_scaled")
     )
 
 
@@ -682,14 +703,7 @@ def sssp_weighted(
         if new_sig == sig:
             break  # monotone state unchanged ⇒ fixpoint reached
         sig = new_sig
-    return dist.select(
-        "node",
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("supplier"))
-        .alias("node_type"),
-        F.expr("node div 2").alias("entity_key"),
-        "dist",
-    )
+    return dist.select("node", *_trade_node_cols(), "dist")
 
 
 def degree_assortativity(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
@@ -933,8 +947,9 @@ def local_clustering_coefficient(edges: DataFrame) -> DataFrame:
     star (cc → 0) is a pure broker.
 
     Triangles are enumerated ONCE via the same degree-orientation wedge
-    join as :func:`triangle_count` (O(E^1.5) bound on skewed graphs; see
-    that docstring), keeping all three corners, then exploded to one row
+    join as :func:`triangle_count` (:func:`_oriented_edges`,
+    :func:`_wedges`; O(E^1.5) bound on skewed graphs), keeping all three
+    corners, then exploded to one row
     per (triangle, corner) and counted per node — integer-exact. Degrees
     ride a broadcast; the only division is the final cc projection.
     Nodes with d < 2 emit cc = 0 (no possible triangle), so the output
@@ -943,52 +958,12 @@ def local_clustering_coefficient(edges: DataFrame) -> DataFrame:
     Input contract: undirected edges, one row per edge, src < dst.
     Output: (node, degree, triangles, cc), node-sized.
     """
-    # explode-not-union symmetrization (optimization r12): a union of
-    # two projections evaluates the UNPERSISTED edge subtree twice (the
-    # kNN-graph build here is a full lineitem shuffle); exploding a
-    # 2-element array emits the identical rows from ONE evaluation.
-    deg = (
-        edges.select(
-            F.explode(F.array(F.col("src"), F.col("dst"))).alias("v")
-        )
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    with_deg = edges.join(
-        deg.select(F.col("v").alias("src"), F.col("d").alias("ds")),
-        "src",
-    ).join(
-        deg.select(F.col("v").alias("dst"), F.col("d").alias("dd")),
-        "dst",
-    )
-    lo_first = (F.col("ds") < F.col("dd")) | (
-        (F.col("ds") == F.col("dd")) & (F.col("src") < F.col("dst"))
-    )
-    oriented = with_deg.select(
-        F.when(lo_first, F.col("src")).otherwise(F.col("dst")).alias("lo"),
-        F.when(lo_first, F.col("dst")).otherwise(F.col("src")).alias("hi"),
-        F.when(lo_first, F.col("dd")).otherwise(F.col("ds")).alias("dhi"),
-    ).persist()
-    w1, w2 = oriented.alias("w1"), oriented.alias("w2")
-    wedges = (
-        w1.join(w2, F.col("w1.lo") == F.col("w2.lo"))
-        .where(
-            (F.col("w1.dhi") < F.col("w2.dhi"))
-            | (
-                (F.col("w1.dhi") == F.col("w2.dhi"))
-                & (F.col("w1.hi") < F.col("w2.hi"))
-            )
-        )
-        .select(
-            F.col("w1.lo").alias("a"),
-            F.col("w1.hi").alias("b"),
-            F.col("w2.hi").alias("c"),
-        )
-    )
+    deg, oriented = _oriented_edges(edges)
+    oriented = oriented.persist()
     closing = oriented.select(
         F.col("lo").alias("b"), F.col("hi").alias("c")
     )
-    triangles = wedges.join(closing, ["b", "c"], "left_semi")
+    triangles = _wedges(oriented).join(closing, ["b", "c"], "left_semi")
     # one triangle enumeration, not three: the former 3-way unionAll of
     # per-corner projections re-ran the WEDGE JOIN per corner (r12)
     per_node = (
@@ -1090,82 +1065,41 @@ def k_truss(edges: DataFrame, k: int = 3, max_rounds: int = 8) -> DataFrame:
     than k−2 triangles until stable — the EDGE-centric cohesion filter
     that survives the hub-dominated cores :func:`k_core` keeps (a star
     center has huge degree but zero triangles: cores keep it, trusses
-    don't). Returns the surviving edges with their in-truss support.
+    don't). Returns the surviving edges with their in-truss support;
+    at k ≤ 2 every edge survives, triangle-free ones with support 0.
 
-    Each round recomputes common-neighbor counts with ONE wedge join on
-    the symmetrized edge list (the same join shape as
-    :func:`link_prediction_jaccard`'s candidate generation, bounded by
-    the kNN graph's degree cap), filters, and lazily checkpoints — the
-    k_core cadence. The peel is confluent (the fixpoint is unique), so
-    execution order cannot change the result; convergence is detected
-    by edge count (1 driver scalar per round) and a ``max_rounds``
-    guard RAISES rather than returning a non-fixpoint.
+    Each :func:`_peel` round recomputes support with ONE wedge join on
+    the symmetrized edge list (:func:`_common_neighbors`, bounded by the
+    kNN graph's degree cap) and filters; one more support pass over the
+    fixpoint edge set gives the output. Checkpoints, convergence and
+    the ``max_rounds`` raise are the helper's.
     """
-    cur = edges.select("src", "dst").localCheckpoint(eager=True)
-    prev_edges = cur.count()
-    converged = prev_edges == 0
-    support = None
-    for _ in range(max_rounds):
-        if converged:
-            break
+
+    def support(cur: DataFrame) -> DataFrame:
         sym = cur.select(
             F.col("src").alias("a"), F.col("dst").alias("b")
         ).unionAll(
             cur.select(F.col("dst").alias("a"), F.col("src").alias("b"))
         )
-        w1 = sym.select(F.col("b").alias("n"), F.col("a").alias("u"))
-        w2 = sym.select(F.col("b").alias("n2"), F.col("a").alias("v"))
-        cn = (
-            w1.join(
-                w2, (F.col("n") == F.col("n2")) & (F.col("u") < F.col("v"))
-            )
-            .groupBy("u", "v")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("cn"))
-        )
-        support = (
-            cur.join(
-                cn,
-                (F.col("src") == F.col("u")) & (F.col("dst") == F.col("v")),
-                "left",
-            )
-            .select(
-                "src", "dst", F.coalesce("cn", F.lit(0)).alias("support")
-            )
-        )
-        # LAZY checkpoint fused with the convergence count (r13, see
-        # k_core): one barrier per truss round instead of two.
-        nxt = (
-            support.where(F.col("support") >= k - 2)
-            .select("src", "dst")
-            .localCheckpoint(eager=False)
-        )
-        n = nxt.count()
-        converged = n == prev_edges
-        cur, prev_edges = nxt, n
-    if not converged:
-        raise RuntimeError(
-            f"k_truss: not converged after {max_rounds} rounds "
-            f"({prev_edges} edges remain)"
-        )
-    if prev_edges == 0:
-        spark = edges.sparkSession
-        return spark.createDataFrame(
+        return cur.join(
+            _common_neighbors(sym),
+            (F.col("src") == F.col("u")) & (F.col("dst") == F.col("v")),
+            "left",
+        ).select("src", "dst", F.coalesce("cn", F.lit(0)).alias("support"))
+
+    cur, n_edges = _peel(
+        edges,
+        lambda cur: support(cur)
+        .where(F.col("support") >= k - 2)
+        .select("src", "dst"),
+        max_rounds,
+        "k_truss",
+    )
+    if n_edges == 0:
+        return edges.sparkSession.createDataFrame(
             [], "src bigint, dst bigint, support bigint"
         )
-    # one more support pass over the FIXPOINT edge set for the output
-    sym = cur.select(
-        F.col("src").alias("a"), F.col("dst").alias("b")
-    ).unionAll(cur.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-    w1 = sym.select(F.col("b").alias("n"), F.col("a").alias("u"))
-    w2 = sym.select(F.col("b").alias("n2"), F.col("a").alias("v"))
-    cn = (
-        w1.join(w2, (F.col("n") == F.col("n2")) & (F.col("u") < F.col("v")))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cn"))
-    )
-    return cur.join(
-        cn, (F.col("src") == F.col("u")) & (F.col("dst") == F.col("v"))
-    ).select("src", "dst", F.col("cn").alias("support"))
+    return support(cur)
 
 
 def landmark_bfs(
@@ -1277,10 +1211,7 @@ def landmark_bfs(
         harm = term if harm is None else harm + term
     return pivoted.select(
         "node",
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("supplier"))
-        .alias("node_type"),
-        F.expr("node div 2").alias("entity_key"),
+        *_trade_node_cols(),
         *[F.col(f"d{l}") for l in range(n_landmarks)],
         F.round(harm, 6).alias("harmonic"),
     )

@@ -1410,6 +1410,37 @@ def pq_topk(
     )
 
 
+def _recall_mrr(approx: DataFrame, truth: DataFrame, k: int) -> DataFrame:
+    """Per-query ranking-quality scoreboard of an approximate top-k
+    (query_id, neighbor_id, rank) against the exact top-k (query_id,
+    neighbor_id): hit count, recall@k and MRR (reciprocal rank of the
+    first true neighbour in the approximate list; 0 when it misses
+    entirely). One left join + one aggregate — the oracle replays the
+    same left-join/aggregate."""
+    truth = truth.select("query_id", "neighbor_id", F.lit(1).alias("is_true"))
+    per_q = (
+        approx.select("query_id", "neighbor_id", "rank")
+        .join(truth, ["query_id", "neighbor_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            F.sum(F.coalesce("is_true", F.lit(0)))
+            .cast("bigint")
+            .alias("n_hits"),
+            F.min(
+                F.when(F.col("is_true").isNotNull(), F.col("rank"))
+            ).alias("first_hit"),
+        )
+    )
+    return per_q.select(
+        "query_id",
+        "n_hits",
+        F.round(F.col("n_hits").cast("double") / k, 6).alias("recall_at_k"),
+        F.round(
+            F.coalesce(F.lit(1.0) / F.col("first_hit"), F.lit(0.0)), 6
+        ).alias("mrr"),
+    )
+
+
 def ann_recall_metrics(
     embeddings: DataFrame,
     k: int = 10,
@@ -1429,32 +1460,9 @@ def ann_recall_metrics(
     so the query set caps at the fixed md5-ordered ``AUDIT_MAX_QUERIES``
     budget (:func:`audit_qids`); per-query values are unchanged.
     """
-    exact = cosine_topk(embeddings, k=k, max_queries=max_queries).select(
-        "query_id", "neighbor_id", F.lit(1).alias("is_true")
-    )
-    approx = cosine_ivf_topk(
-        embeddings, k=k, max_queries=max_queries
-    ).select("query_id", "neighbor_id", "rank")
-    per_q = (
-        approx.join(exact, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce("is_true", F.lit(0)))
-            .cast("bigint")
-            .alias("n_hits"),
-            F.min(
-                F.when(F.col("is_true").isNotNull(), F.col("rank"))
-            ).alias("first_hit"),
-        )
-    )
-    return per_q.select(
-        "query_id",
-        "n_hits",
-        F.round(F.col("n_hits").cast("double") / k, 6).alias("recall_at_k"),
-        F.round(
-            F.coalesce(F.lit(1.0) / F.col("first_hit"), F.lit(0.0)), 6
-        ).alias("mrr"),
-    )
+    exact = cosine_topk(embeddings, k=k, max_queries=max_queries)
+    approx = cosine_ivf_topk(embeddings, k=k, max_queries=max_queries)
+    return _recall_mrr(approx, exact, k)
 
 
 def ivf_pq_topk(
@@ -2729,30 +2737,11 @@ def ivf_pq_recall(
     )
     truth = l2_topk_exact(
         embeddings, k=k, svecs=svecs, max_queries=max_queries, qids=qids
-    ).select("query_id", "neighbor_id", F.lit(1).alias("is_true"))
+    )
     approx = ivf_pq_topk(
         embeddings, k=k, svecs=svecs, max_queries=max_queries, qids=qids
-    ).select("query_id", "neighbor_id", "rank")
-    per_q = (
-        approx.join(truth, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce("is_true", F.lit(0)))
-            .cast("bigint")
-            .alias("n_hits"),
-            F.min(
-                F.when(F.col("is_true").isNotNull(), F.col("rank"))
-            ).alias("first_hit"),
-        )
     )
-    return per_q.select(
-        "query_id",
-        "n_hits",
-        F.round(F.col("n_hits").cast("double") / k, 6).alias("recall_at_k"),
-        F.round(
-            F.coalesce(F.lit(1.0) / F.col("first_hit"), F.lit(0.0)), 6
-        ).alias("mrr"),
-    )
+    return _recall_mrr(approx, truth, k)
 
 
 def matryoshka_recall(

@@ -933,20 +933,20 @@ def textrank_keywords(
     """TextRank keyword extraction (Mihalcea & Tarau 2004): PageRank
     over the corpus word co-occurrence graph — nodes are tokens, edges
     link ADJACENT tokens (distinct, symmetric), and the stationary mass
-    ranks corpus keywords. The same exact-integer rank recurrence as
-    ``graph.pagerank`` (floor-div contributions over PR_SCALE mass), so
+    ranks corpus keywords. The same recurrence as ``graph.pagerank``:
+    both run ``graph._pagerank_ranks`` (exact-integer, floor-div
+    contributions over PR_SCALE mass, lazy checkpoint per round), so
     the iteration is deterministic under any partitioning and the
-    oracle replays it by unrolling rounds — an iterative-float
-    algorithm made externally verifiable.
+    oracle replays it by unrolling rounds.
 
     Shapes: bigram edges come from the O(tokens) arrays_zip slice
     (bigram_lm's measured fix, never element_at re-evaluation); the
     graph is vocabulary-sized, orders smaller than the corpus, so the
-    per-round join+groupBy shuffles stay tiny; lazy checkpoint per
-    round keeps the plan flat. Top-k is a row_number over the
-    aggregated vocabulary frame with a total (rank DESC, word) order.
+    per-round join+groupBy shuffles stay tiny. Top-k is a row_number
+    over the aggregated vocabulary frame with a total (rank DESC, word)
+    order.
     """
-    from .graph import PR_SCALE
+    from .graph import _pagerank_ranks
 
     toked = documents.select(tokens_col().alias("toks"))
     t = F.col("toks")
@@ -967,38 +967,11 @@ def textrank_keywords(
         pairs.select(F.col("w1").alias("src"), F.col("w2").alias("dst"))
         .union(pairs.select(F.col("w2").alias("src"), F.col("w1").alias("dst")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    deg = (
-        edges.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=True)
-    )
-    n_nodes = deg.count()
-    if n_nodes == 0:
-        spark = documents.sparkSession
-        return spark.createDataFrame(
+    ranks = _pagerank_ranks(edges, n_iter, damping_pct)
+    if ranks is None:
+        return documents.sparkSession.createDataFrame(
             [], "word string, rank_scaled bigint, rank_pos int"
-        )
-    init = PR_SCALE // n_nodes
-    teleport = (PR_SCALE * (100 - damping_pct) // 100) // n_nodes
-    ranks = deg.select("node", F.lit(init).alias("rank"))
-    for _ in range(n_iter):
-        contrib = ranks.join(deg, "node").select(
-            "node", F.expr("rank div d").alias("contrib")
-        )
-        ranks = (
-            edges.join(contrib, edges["src"] == contrib["node"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("contrib").alias("s"))
-            .select(
-                "node",
-                (
-                    F.lit(teleport)
-                    + F.expr(f"{damping_pct} * s div 100")
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
         )
     # orderBy+limit compiles to TakeOrderedAndProject (per-partition k-row
     # heaps, driver merges k·P rows — no global sort); the row_number
@@ -1426,51 +1399,34 @@ def langid_confusion(documents: DataFrame) -> DataFrame:
     )
 
 
-def bm25_topk(documents: DataFrame, n_query_terms: int = 5, k: int = 20) -> DataFrame:
-    """BM25 ranked retrieval (k1 = 1.2, b = 0.75) for a deterministic
-    query — the top-``n_query_terms`` corpus terms by (df desc, term) —
-    returning the ``k`` best documents. The length-normalized,
-    saturating upgrade of ``tfidf_topk``: tf gains flatten past k1 and
-    long documents stop winning on bulk, which is why BM25 is the
-    lexical baseline every hybrid retrieval stack (see
-    ``hybrid_rrf_topk``) still includes.
+def _bm25_tf(documents: DataFrame) -> DataFrame:
+    """Per-(doc_id, term) term frequencies from one tokenize pass; the
+    caller persists them (every BM25 statistic reads this table)."""
+    return (
+        documents.select("doc_id", F.explode(tokens_col()).alias("term"))
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
+    )
+
+
+def _bm25_scorer(documents: DataFrame, tf: DataFrame):
+    """BM25 (k1 = 1.2, b = 0.75) over a :func:`_bm25_tf` table. Returns
+    (df, score): ``df`` is the (term, df) document-frequency table and
+    ``score(qterms)`` maps a (term, df) query table to per-document
+    (doc_id, n_matched, score_dec).
 
     Exactness: idf uses the Lucene form ln(1 + (N−df+½)/(df+½)),
     rounded to 6 dp and carried as DECIMAL; the length factor is written
     as the SAME expression tree on both engines — 0.25 + (0.75·dl·N)/S
     with the integer product dl·N exact in double — so each per-term
-    score rounds identically before the order-exact decimal sum.
-
-    Shape: tf and dl come from ONE tokenize pass (dl = Σtf per doc);
-    the query-term table (n_query_terms rows) and the corpus stats
-    (1 row) broadcast; ranking is TakeOrdered on (score desc, doc_id).
+    score rounds identically before the order-exact decimal sum. The
+    query table and the 1-row corpus stats broadcast.
     """
-    from .dedup import tokens_col
-
-    tf = (
-        documents.select("doc_id", F.explode(tokens_col()).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .persist()
-    )
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     stats = documents.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
     ).crossJoin(dl.agg(F.sum("dl").alias("s_tok")))
-    qterms = (
-        df_.orderBy(F.desc("df"), F.asc("term"))
-        .limit(n_query_terms)
-        .select(
-            "term",
-            "df",
-        )
-    )
-    scored = (
-        tf.join(F.broadcast(qterms), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-    )
     idf = F.round(
         F.log(
             F.lit(1.0)
@@ -1482,23 +1438,55 @@ def bm25_topk(documents: DataFrame, n_query_terms: int = 5, k: int = 20) -> Data
     norm = F.lit(0.25) + (
         F.lit(0.75) * (F.col("dl") * F.col("n_docs")).cast("double")
     ) / F.col("s_tok").cast("double")
-    factor = (F.col("tf") * F.lit(2.2)) / (
-        F.col("tf") + F.lit(1.2) * norm
-    )
-    per_term = scored.select(
-        "doc_id",
-        F.round(idf.cast("double") * factor, 6)
-        .cast("decimal(18,6)")
-        .alias("ts"),
-    )
+    factor = (F.col("tf") * F.lit(2.2)) / (F.col("tf") + F.lit(1.2) * norm)
+
+    def score(qterms: DataFrame) -> DataFrame:
+        return (
+            tf.join(F.broadcast(qterms), "term")
+            .join(dl, "doc_id")
+            .crossJoin(F.broadcast(stats))
+            .select(
+                "doc_id",
+                F.round(idf.cast("double") * factor, 6)
+                .cast("decimal(18,6)")
+                .alias("ts"),
+            )
+            .groupBy("doc_id")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_matched"),
+                F.sum("ts").alias("score_dec"),
+            )
+        )
+
+    return df_, score
+
+
+def bm25_topk(documents: DataFrame, n_query_terms: int = 5, k: int = 20) -> DataFrame:
+    """BM25 ranked retrieval (k1 = 1.2, b = 0.75) for a deterministic
+    query — the top-``n_query_terms`` corpus terms by (df desc, term) —
+    returning the ``k`` best documents. The length-normalized,
+    saturating upgrade of ``tfidf_topk``: tf gains flatten past k1 and
+    long documents stop winning on bulk, which is why BM25 is the
+    lexical baseline every hybrid retrieval stack (see
+    ``hybrid_rrf_topk``) still includes. The exact-decimal scoring is
+    :func:`_bm25_scorer`'s.
+
+    Shape: tf and dl come from ONE tokenize pass (dl = Σtf per doc);
+    the query-term table (n_query_terms rows) and the corpus stats
+    (1 row) broadcast (:func:`_bm25_scorer`); ranking is TakeOrdered on
+    (score desc, doc_id).
+    """
     from ..sources.catalog import finish_cached
 
+    tf = _bm25_tf(documents).persist()
+    df_, score = _bm25_scorer(documents, tf)
+    qterms = (
+        df_.orderBy(F.desc("df"), F.asc("term"))
+        .limit(n_query_terms)
+        .select("term", "df")
+    )
     return finish_cached(
-        per_term.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_matched"),
-            F.sum("ts").alias("score_dec"),
-        )
+        score(qterms)
         .select(
             "doc_id",
             "n_matched",
@@ -2606,65 +2594,15 @@ def bm25_prf_topk(
     global-df idf, originals excluded, ties by term), and rescore —
     the classic two-pass lexical retrieval upgrade.
 
-    Scoring expressions are IDENTICAL to bm25_topk's (same idf round,
-    same length-norm tree, same decimal sum), applied to both passes
-    via one shared closure over the persisted tf table — the corpus
-    tokenizes once, each pass is a broadcast-query-table join. The
-    k-row result is materialized eagerly so the tf cache releases
-    before return (finish_cached).
+    Both passes score with :func:`bm25_topk`'s :func:`_bm25_scorer`
+    over one persisted tf table — the corpus tokenizes once, each pass
+    is a broadcast-query-table join. The k-row result is materialized
+    eagerly so the tf cache releases before return (finish_cached).
     """
     from ..sources.catalog import finish_cached
-    from .dedup import tokens_col
 
-    tf = (
-        documents.select("doc_id", F.explode(tokens_col()).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .persist()
-    )
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    df_ = tf.groupBy("term").agg(
-        F.count(F.lit(1)).cast("bigint").alias("df")
-    )
-    stats = documents.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs")
-    ).crossJoin(dl.agg(F.sum("dl").alias("s_tok")))
-
-    def score(qterms: DataFrame) -> DataFrame:
-        scored = (
-            tf.join(F.broadcast(qterms), "term")
-            .join(dl, "doc_id")
-            .crossJoin(F.broadcast(stats))
-        )
-        idf = F.round(
-            F.log(
-                F.lit(1.0)
-                + (
-                    F.col("n_docs").cast("double")
-                    - F.col("df")
-                    + F.lit(0.5)
-                )
-                / (F.col("df") + F.lit(0.5))
-            ),
-            6,
-        ).cast("decimal(18,6)")
-        norm = F.lit(0.25) + (
-            F.lit(0.75) * (F.col("dl") * F.col("n_docs")).cast("double")
-        ) / F.col("s_tok").cast("double")
-        factor = (F.col("tf") * F.lit(2.2)) / (
-            F.col("tf") + F.lit(1.2) * norm
-        )
-        per_term = scored.select(
-            "doc_id",
-            F.round(idf.cast("double") * factor, 6)
-            .cast("decimal(18,6)")
-            .alias("ts"),
-        )
-        return per_term.groupBy("doc_id").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_matched"),
-            F.sum("ts").alias("score_dec"),
-        )
-
+    tf = _bm25_tf(documents).persist()
+    df_, score = _bm25_scorer(documents, tf)
     q0 = (
         df_.orderBy(F.desc("df"), F.asc("term"))
         .limit(n_query_terms)

@@ -1663,8 +1663,10 @@ _DEDUP_CLUSTERS_ORACLE = f"""
 """
 
 
-# One query under two names: the bench keys and correctness files still
-# use the star-contraction variant's name.
+# One query under two names. The second cannot be dropped:
+# CORRECTNESS_r04.json records "dedup_clusters_star" as an externally
+# checked query, and tests/test_gate_rotation.py requires every such
+# name to stay registered.
 @register("dedup_clusters_star", _DEDUP_CLUSTERS_ORACLE)
 @register("dedup_clusters", _DEDUP_CLUSTERS_ORACLE)
 def q_dedup_clusters(spark, sf_dir):

@@ -427,6 +427,30 @@ def test_k_truss_bridge_between_triangles_peels(spark):
     assert len(got) == 6 and all(v == 1 for v in got.values())
 
 
+def test_k_truss_k2_keeps_triangle_free_edges(spark):
+    """A 2-truss keeps every edge: the pendant (3,4) lies in no
+    triangle, so it is kept with support 0, not dropped."""
+    e = _edges(spark, [(1, 2), (1, 3), (2, 3), (3, 4)])
+    got = {(r.src, r.dst): r.support for r in gr.k_truss(e, k=2).collect()}
+    assert got == {(1, 2): 1, (1, 3): 1, (2, 3): 1, (3, 4): 0}
+
+
+def test_k_truss_raises_past_max_rounds(spark):
+    """Triangles (1,2,3) and (1,2,5) share the edge (1,2): at k=4 the
+    four outer edges peel in round 1, which leaves (1,2) with support 0
+    to peel in round 2, and round 3 confirms the empty fixpoint. With
+    max_rounds too small the operator must RAISE, never return a
+    non-fixpoint."""
+    import pytest
+
+    e = _edges(spark, [(1, 2), (1, 3), (2, 3), (1, 5), (2, 5)])
+    with pytest.raises(RuntimeError, match="not converged"):
+        gr.k_truss(e, k=4, max_rounds=1)
+    with pytest.raises(RuntimeError, match="not converged"):
+        gr.k_truss(e, k=4, max_rounds=2)
+    assert gr.k_truss(e, k=4, max_rounds=3).collect() == []
+
+
 def test_landmark_bfs_path_graph_distances(spark):
     """Path graph c1—s1—c2—s2—c3 (via shared orders): landmark
     customers 1 and 2 must see exact hop distances along the path, and

@@ -7,6 +7,8 @@ layer the JVM-backed GroupState can't host outside a running query.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 
 from hadoop_coded_wordcount_spark.sources.catalog import load_table
@@ -259,9 +261,13 @@ def test_bucket_cap_honesty_across_batches(spark, tmp_path):
     )
     try:
         q.processAllAvailable()
-        spark.createDataFrame(rows[6:], _DOC_SCHEMA).write.parquet(
-            src + "/b2"
-        )
+        # Publish the second batch with one rename: the stream lists
+        # src/* on every trigger, and a directory whose part files land
+        # one by one can split into two micro-batches, so that doc 12 is
+        # processed before doc 11 and reads one overflow fewer.
+        staged = str(tmp_path / "staged")
+        spark.createDataFrame(rows[6:], _DOC_SCHEMA).write.parquet(staged)
+        os.rename(staged, src + "/b2")
         q.processAllAvailable()
     finally:
         q.stop()
