@@ -4,7 +4,8 @@
 Run: ``python bench.py``. Env knobs:
 
 * ``SPARK_GRAFT_SF_DIR`` — parquet dir (default ``/root/testdata/sf0.1``)
-* ``SPARK_GRAFT_CPUS``   — local[] core count (default 32)
+* ``SPARK_GRAFT_CPUS``   — local[] core count (default: the cores this
+  process may run on, as ``nproc`` prints)
 * ``SPARK_GRAFT_BENCH_METRICS=1`` — also record each query's executed-plan
   communication profile (shuffle records/bytes — the reference's
   PACKETS_SENT counter surface) into ``bench_detail.json``. Materializes

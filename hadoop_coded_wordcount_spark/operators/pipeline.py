@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from .textstats import quality_col, tokens_col
+from .textstats import bigram_pairs, quality_col, tokens_col
 
 __all__ = [
     "deterministic_split",
@@ -932,7 +932,6 @@ def dsir_selection(
     cache releases before return (finish_cached).
     """
     from ..sources.catalog import ensure_parallelism, finish_cached
-    from .dedup import tokens_col
 
     toked = ensure_parallelism(
         documents.select("doc_id", "source", "lang", "text")
@@ -943,10 +942,7 @@ def dsir_selection(
         tokens_col().alias("toks"),
     )
     t = F.col("toks")
-    pairs = F.arrays_zip(
-        F.slice(t, 1, F.size(t) - 1).alias("w1"),
-        F.slice(t, 2, F.size(t) - 1).alias("w2"),
-    )
+    pairs = bigram_pairs(t)
     bucket = (
         F.conv(
             F.substring(

@@ -26,7 +26,7 @@ legally differ in the last ulp.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 DEC = "decimal(18,2)"
@@ -1886,25 +1886,19 @@ def incremental_agg_update(orders: DataFrame, cutoff: str = "1997-01-01") -> Dat
     )
 
 
-def gap_fill_locf(events: DataFrame) -> DataFrame:
-    """Time-series regularization: project an irregular event stream onto
-    a dense hourly grid per user and carry the last observation forward
-    (LOCF) across the gaps — the timeseries-store "continuous view"
-    primitive (locf/interpolate) a feature pipeline needs before joining
-    event data against anything sampled on a clock.
-
-    Semantics: per (user, hour) the observed value is the LATEST event's
-    value in that hour (``max_by(value, event_id)`` — deterministic,
-    event_id is unique); grid bounds are the global [min, max] hour;
-    hours before a user's first observation stay NULL (LOCF has nothing
-    to carry).
+def _user_hour_values(events: DataFrame, value: Column) -> DataFrame:
+    """The per-user hourly grid with each hour's observed value:
+    ``(user_id, hr, v)``, one row per user per hour between the GLOBAL
+    first and last event hour, ``v`` = ``max_by(value, event_id)`` over
+    the user's events in that hour (the latest event's value —
+    deterministic, event_id is unique) and NULL where the user has none.
 
     Scale: the grid is |users| × |hours| rows built from an exploded
     ``sequence`` against a broadcast 1-row bounds aggregate — no data
     shuffle creates it. The per-hour pre-aggregate shrinks the event
-    stream BEFORE the grid join (events never meet the grid row-for-row),
-    and the LOCF window sorts each user's grid slice — bounded by grid
-    width, not event volume.
+    stream BEFORE the grid join (events never meet the grid
+    row-for-row), so a per-user window over the result sorts a slice
+    bounded by grid width, not event volume.
     """
     ts = F.col("ts").cast("timestamp")
     hourly = (
@@ -1912,7 +1906,7 @@ def gap_fill_locf(events: DataFrame) -> DataFrame:
             "user_id", F.date_trunc("hour", ts).alias("hr"), "event_id", "value"
         )
         .groupBy("user_id", "hr")
-        .agg(F.max_by("value", "event_id").alias("v"))
+        .agg(F.max_by(value, "event_id").alias("v"))
     )
     bounds = events.agg(
         F.date_trunc("hour", F.min(ts)).alias("lo"),
@@ -1929,13 +1923,27 @@ def gap_fill_locf(events: DataFrame) -> DataFrame:
             ).alias("hr"),
         )
     )
+    return grid.join(hourly, ["user_id", "hr"], "left")
+
+
+def gap_fill_locf(events: DataFrame) -> DataFrame:
+    """Time-series regularization: project an irregular event stream onto
+    a dense hourly grid per user and carry the last observation forward
+    (LOCF) across the gaps — the timeseries-store "continuous view"
+    primitive (locf/interpolate) a feature pipeline needs before joining
+    event data against anything sampled on a clock.
+
+    Semantics: the grid and each hour's observed value come from
+    :func:`_user_hour_values`; hours before a user's first observation
+    stay NULL (LOCF has nothing to carry).
+    """
     w = (
         Window.partitionBy("user_id")
         .orderBy("hr")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     return (
-        grid.join(hourly, ["user_id", "hr"], "left")
+        _user_hour_values(events, F.col("value"))
         .select(
             "user_id",
             F.date_format("hr", "yyyy-MM-dd HH:mm:ss").alias("hour_ts"),
@@ -5422,7 +5430,7 @@ def overdispersion_index(events: DataFrame) -> DataFrame:
     Caveat: the statistic is over OBSERVED hours — an hour with zero
     events contributes no grid row, so a stream that alternates
     bursts with total silence needs the dense grid first
-    (``gap_fill_locf``'s grid shape) for the zeros to count.
+    (:func:`_hourly_type_counts`) for the zeros to count.
     """
     g = events.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hr")
@@ -5838,11 +5846,11 @@ def gap_fill_interp(events: DataFrame) -> DataFrame:
     answers "what was the state?", interpolation answers "what was the
     trend passing through?"; a feature store needs both).
 
-    Semantics: per (user, hour) the anchor value is the latest event's
-    value in that hour (max_by(value, event_id)); missing grid hours
-    between two anchors get prev + (next−prev)·Δ/gap with Δ, gap in
-    exact integer hours; hours before the first / after the last anchor
-    stay NULL and are tagged ``edge``.
+    Semantics: the grid and each hour's anchor value come from
+    :func:`_user_hour_values`; missing grid hours between two anchors get
+    prev + (next−prev)·Δ/gap with Δ, gap in exact integer hours; hours
+    before the first / after the last anchor stay NULL and are tagged
+    ``edge``.
 
     Exactness: a naive ``round(interp, 6)`` lands on .5·10⁻⁶ ties
     whenever the hour ratio is a small fraction, and Spark
@@ -5854,40 +5862,10 @@ def gap_fill_interp(events: DataFrame) -> DataFrame:
     and the fill is the exact integer form
     round((pvµ·(gap−Δ) + nvµ·Δ) / gap) / 10⁶ — one correctly-rounded
     IEEE division each, bit-identical cross-engine by construction.
-
-    Scale shape: identical to locf — the event stream pre-aggregates to
-    (user, hour) BEFORE meeting the |users|×|hours| grid, the
-    prev/next windows run per user-slice bounded by grid width, and the
-    grid itself explodes from a broadcast 1-row bounds aggregate.
     """
-    ts = F.col("ts").cast("timestamp")
-    hourly = (
-        events.select(
-            "user_id", F.date_trunc("hour", ts).alias("hr"), "event_id", "value"
-        )
-        .groupBy("user_id", "hr")
-        .agg(
-            F.max_by(
-                F.col("value").cast("decimal(18,6)"), "event_id"
-            ).alias("v")
-        )
+    joined = _user_hour_values(
+        events, F.col("value").cast("decimal(18,6)")
     )
-    bounds = events.agg(
-        F.date_trunc("hour", F.min(ts)).alias("lo"),
-        F.date_trunc("hour", F.max(ts)).alias("hi"),
-    )
-    grid = (
-        events.select("user_id")
-        .distinct()
-        .join(F.broadcast(bounds))
-        .select(
-            "user_id",
-            F.explode(
-                F.sequence("lo", "hi", F.expr("interval 1 hour"))
-            ).alias("hr"),
-        )
-    )
-    joined = grid.join(hourly, ["user_id", "hr"], "left")
     wp = (
         Window.partitionBy("user_id")
         .orderBy("hr")
@@ -9535,6 +9513,41 @@ def croston_intermittent(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     )
 
 
+def _hourly_type_counts(events: DataFrame) -> DataFrame:
+    """Each event type's hourly event count on a dense grid:
+    ``(event_type, hour, h, x)``, one row per hour from the type's first
+    active hour to its last, ``h`` = hours since that first hour and
+    ``x`` the BIGINT count. Hours with no events are REAL zeros in the
+    series, not gaps, and each type spans only its own hours (no global
+    span), so every per-type statistic over ``x`` sees the calendar.
+
+    Scale: one (type, hour) partial aggregate reduces any event volume
+    to grid rows before anything else runs; the ``sequence`` between a
+    type's min and max hour is calendar-bounded, so the grid stays
+    tiny and nothing downstream grows with event volume.
+    """
+    counted = events.groupBy(
+        "event_type", F.date_trunc("hour", "ts").alias("hour")
+    ).agg(F.count(F.lit(1)).cast("bigint").alias("x"))
+    grid = (
+        counted.groupBy("event_type")
+        .agg(F.min("hour").alias("h0"), F.max("hour").alias("h1"))
+        .select(
+            "event_type",
+            "h0",
+            F.explode(
+                F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
+            ).alias("hour"),
+        )
+    )
+    return grid.join(counted, ["event_type", "hour"], "left").select(
+        "event_type",
+        "hour",
+        F.expr("timestampdiff(HOUR, h0, hour)").cast("bigint").alias("h"),
+        F.coalesce("x", F.lit(0)).cast("bigint").alias("x"),
+    )
+
+
 def matrix_profile_hourly(events: DataFrame, w: int = 24) -> DataFrame:
     """Matrix-profile motif & discord discovery per event type: slide a
     ``w``-hour window over the hourly count series, compute every
@@ -9546,34 +9559,22 @@ def matrix_profile_hourly(events: DataFrame, w: int = 24) -> DataFrame:
     matrix-profile primitive behind time-series anomaly mining, as two
     joins instead of the sequential STAMP scan.
 
-    Scale shape: the series collapses to the bounded hourly grid first
-    (one partial-agg shuffle; the window count is calendar-bound, not
-    event-bound), subsequences materialize once via a 24-row window
-    collect, and the pair matrix is grid² — independent of event
-    volume. Distances are left-to-right folds of exact-count
-    differences (bit-equal to the oracle's list_reduce); winners are
-    picked with fully-ordered row_numbers so ties cannot flip.
+    Scale shape: on the :func:`_hourly_type_counts` grid the window
+    count is calendar-bound, not event-bound; subsequences materialize
+    once via a 24-row window collect, and the pair matrix is grid² —
+    independent of event volume. Distances are left-to-right folds of
+    exact-count differences (bit-equal to the oracle's list_reduce);
+    winners are picked with fully-ordered row_numbers so ties cannot
+    flip.
     """
     from .similarity_helpers import sqdist_unrolled
 
     # densified grid: hours with zero events are REAL zeros in the
     # series, not gaps — otherwise a "24-hour" subsequence silently
     # spans calendar holes on sparse event types and motif/discord
-    # semantics skew (ADVICE r5). sequence() between each type's min
-    # and max hour is calendar-bounded, so the grid stays tiny.
-    counted = events.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("hour")
-    ).agg(F.count(F.lit(1)).cast("double").alias("x"))
-    grid = counted.groupBy("event_type").agg(
-        F.min("hour").alias("h0"), F.max("hour").alias("h1")
-    ).select(
-        "event_type",
-        F.explode(
-            F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
-        ).alias("hour"),
-    )
-    hourly = grid.join(counted, ["event_type", "hour"], "left").select(
-        "event_type", "hour", F.coalesce("x", F.lit(0.0)).alias("x")
+    # semantics skew (ADVICE r5).
+    hourly = _hourly_type_counts(events).select(
+        "event_type", "hour", F.col("x").cast("double").alias("x")
     )
     frame = (
         Window.partitionBy("event_type")
@@ -10144,10 +10145,9 @@ def nelson_aalen_churn(
 
 def yule_walker_ar2(events: DataFrame) -> DataFrame:
     """AR(2) fit per event type via the Yule–Walker equations on the
-    ZERO-FILLED hourly count series (dense grid between each type's
-    first and last hour, the matrix_profile_hourly grid) — the classic
-    "how persistent is this metric?" autoregression behind capacity
-    forecasts and anomaly baselines.
+    zero-filled hourly count series (:func:`_hourly_type_counts`) — the
+    classic "how persistent is this metric?" autoregression behind
+    capacity forecasts and anomaly baselines.
 
     Exact integer lattice: with S = Σx, the scaled autocovariance
     L_k = N²·Σ x_t·x_{t+k} − N·S·(A_k + B_k) + (N−k)·S²  (A_k/B_k the
@@ -10158,26 +10158,9 @@ def yule_walker_ar2(events: DataFrame) -> DataFrame:
     exact decimals, rounded to 6dp. σ² recomputes from the same raw
     double ratios with an identically-parenthesized tree in the oracle.
 
-    Scale: the dense grid is time-range-bounded (not event-bounded);
-    one (type, hour) partial aggregate reduces any event volume to grid
-    rows, then per-type windows and a grid-sized final aggregate.
+    Scale: per-type windows and a grid-sized final aggregate.
     """
-    counted = events.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("hour")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    grid = (
-        counted.groupBy("event_type")
-        .agg(F.min("hour").alias("h0"), F.max("hour").alias("h1"))
-        .select(
-            "event_type",
-            F.explode(
-                F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
-            ).alias("hour"),
-        )
-    )
-    hourly = grid.join(counted, ["event_type", "hour"], "left").select(
-        "event_type", "hour", F.coalesce("x", F.lit(0)).alias("x")
-    )
+    hourly = _hourly_type_counts(events).select("event_type", "hour", "x")
     w = Window.partitionBy("event_type").orderBy("hour")
     wd = Window.partitionBy("event_type").orderBy(F.desc("hour"))
     lagged = hourly.select(
@@ -10496,7 +10479,7 @@ def pacf_hourly(events: DataFrame, max_lag: int = 6) -> DataFrame:
 
 def negbin_fit(events: DataFrame) -> DataFrame:
     """Negative-binomial method-of-moments fit of the hourly count
-    distribution per event type (dense zero-filled grid): mean, sample
+    distribution per event type (:func:`_hourly_type_counts`): mean, sample
     variance, dispersion ratio, and the NB parameters r̂ = m²/(v−m),
     p̂ = m/v — the "is Poisson enough?" answer behind
     overdispersion_index, upgraded to an actual fitted model (and the
@@ -10506,24 +10489,8 @@ def negbin_fit(events: DataFrame) -> DataFrame:
 
     All moments are exact integer lattices (Σx, Σx² as DECIMAL) with
     identical double trees at the final divisions, rounded 6dp.
-    Scale: grid-bounded, one (type, hour) partial aggregate.
     """
-    counted = events.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("hour")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    grid = (
-        counted.groupBy("event_type")
-        .agg(F.min("hour").alias("h0"), F.max("hour").alias("h1"))
-        .select(
-            "event_type",
-            F.explode(
-                F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
-            ).alias("hour"),
-        )
-    )
-    hourly = grid.join(counted, ["event_type", "hour"], "left").select(
-        "event_type", F.coalesce("x", F.lit(0)).alias("x")
-    )
+    hourly = _hourly_type_counts(events).select("event_type", "x")
     d19 = lambda c: c.cast("decimal(19,0)")  # noqa: E731
     agg = hourly.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -10824,13 +10791,13 @@ def periodogram_trig_table() -> list:
 
 def periodogram_hourly(events: DataFrame) -> DataFrame:
     """Periodogram probe: per event type, the DFT power of the
-    ZERO-FILLED hourly count series at the candidate cycle lengths a
-    metrics platform actually cares about (24 h daily, 12/8/6 h
-    harmonics) — "which rhythm dominates this event stream?" without a
-    full FFT. The spectral companion of :func:`acf_hourly` /
-    :func:`seasonal_hourly`: those measure self-similarity at a lag,
-    this measures energy at a frequency, mean-removed so the DC bulk
-    can't drown the cycle.
+    zero-filled hourly count series (:func:`_hourly_type_counts`) at
+    the candidate cycle lengths a metrics platform actually cares about
+    (24 h daily, 12/8/6 h harmonics) — "which rhythm dominates this
+    event stream?" without a full FFT. The spectral companion of
+    :func:`acf_hourly` / :func:`seasonal_hourly`: those measure
+    self-similarity at a lag, this measures energy at a frequency,
+    mean-removed so the DC bulk can't drown the cycle.
 
     Exactness: the dense grid and counts are integers; cos/sin come
     from the shared literal table (:func:`periodogram_trig_table` — no
@@ -10839,31 +10806,11 @@ def periodogram_hourly(events: DataFrame) -> DataFrame:
     power (C'² + S'²)/n are single identically-parenthesized IEEE
     expressions over those decimal sums.
 
-    Scale: one (type, hour) partial aggregate bounds everything at the
-    calendar grid; the explode is grid × 4 periods; the trig join is a
-    |periods·max_period|-row broadcast. Nothing grows with event
-    volume.
+    Scale: the explode is grid × 4 periods; the trig join is a
+    |periods·max_period|-row broadcast.
     """
-    counted = events.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("hour")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    grid = (
-        counted.groupBy("event_type")
-        .agg(F.min("hour").alias("h0"), F.max("hour").alias("h1"))
-        .select(
-            "event_type",
-            "h0",
-            F.explode(
-                F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
-            ).alias("hour"),
-        )
-    )
-    hourly = grid.join(counted, ["event_type", "hour"], "left").select(
-        "event_type",
-        F.expr("timestampdiff(HOUR, h0, hour)")
-        .cast("bigint")
-        .alias("h_idx"),
-        F.coalesce("x", F.lit(0)).cast("bigint").alias("x"),
+    hourly = _hourly_type_counts(events).select(
+        "event_type", F.col("h").alias("h_idx"), "x"
     )
     spark = events.sparkSession
     trig = F.broadcast(
@@ -11289,40 +11236,20 @@ SAX_BREAKPOINTS = (-0.6744897501960817, 0.0, 0.6744897501960817)
 
 def sax_hourly(events: DataFrame, seg_hours: int = 4) -> DataFrame:
     """SAX symbolic representation of each event type's hourly count
-    series: z-normalize on the dense grid, average into
-    ``seg_hours``-hour PAA segments, quantize against the N(0,1)
-    quartile breakpoints into the 4-letter alphabet a<b<c<d, and emit
-    the per-type symbol string — the discretization behind symbolic
-    motif mining, and a 6-hours-to-1-char sketch a human can read in a
-    dashboard ("aaaddd" = quiet night, busy day).
+    series: z-normalize on the :func:`_hourly_type_counts` grid,
+    average into ``seg_hours``-hour PAA segments, quantize against the
+    N(0,1) quartile breakpoints into the 4-letter alphabet a<b<c<d, and
+    emit the per-type symbol string — the discretization behind
+    symbolic motif mining, and a 6-hours-to-1-char sketch a human can
+    read in a dashboard ("aaaddd" = quiet night, busy day).
 
     Exactness: grid counts are integers; mean/std come from exact
     decimal sums (rounded 6dp); each PAA mean divides an exact integer
     sum by the true segment length; the z-quantization compares a
     rounded double against literal breakpoints; the string is an
     ordered aggregation with a full ORDER BY. All replayed in SQL.
-
-    Scale: calendar-bounded after one (type, hour) partial aggregate.
     """
-    counted = events.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("hour")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    grid = (
-        counted.groupBy("event_type")
-        .agg(F.min("hour").alias("h0"), F.max("hour").alias("h1"))
-        .select(
-            "event_type",
-            "h0",
-            F.explode(
-                F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
-            ).alias("hour"),
-        )
-    )
-    hourly = grid.join(counted, ["event_type", "hour"], "left").select(
-        "event_type",
-        F.expr("timestampdiff(HOUR, h0, hour)").cast("bigint").alias("h"),
-        F.coalesce("x", F.lit(0)).cast("bigint").alias("x"),
-    )
+    hourly = _hourly_type_counts(events).select("event_type", "h", "x")
     stats = hourly.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("sx"),
@@ -11380,8 +11307,8 @@ def sax_hourly(events: DataFrame, seg_hours: int = 4) -> DataFrame:
 
 def hurst_hourly(events: DataFrame) -> DataFrame:
     """Hurst exponent per event type by the aggregated-variance method:
-    block-average the dense hourly count series at sizes m ∈ {1,2,4,8,
-    16}, regress ln Var(m) on ln m (Var(m) ~ m^(2H−2) for a
+    block-average the :func:`_hourly_type_counts` series at sizes
+    m ∈ {1,2,4,8,16}, regress ln Var(m) on ln m (Var(m) ~ m^(2H−2) for a
     self-similar process) and report H = 1 + slope/2 — the long-range-
     dependence readout that says whether a load series is bursty at
     EVERY horizon (H→1, capacity planning pain) or averages out like
@@ -11393,28 +11320,10 @@ def hurst_hourly(events: DataFrame) -> DataFrame:
     single rounded slope division. Types with any non-positive Var(m)
     (degenerate) drop, in both engines.
 
-    Scale: calendar-bounded — one (type, hour) partial aggregate, then
-    5 block aggregations of the grid and a 5-row regression per type.
+    Scale: 5 block aggregations of the grid and a 5-row regression per
+    type.
     """
-    counted = events.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("hour")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    grid = (
-        counted.groupBy("event_type")
-        .agg(F.min("hour").alias("h0"), F.max("hour").alias("h1"))
-        .select(
-            "event_type",
-            "h0",
-            F.explode(
-                F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
-            ).alias("hour"),
-        )
-    )
-    hourly = grid.join(counted, ["event_type", "hour"], "left").select(
-        "event_type",
-        F.expr("timestampdiff(HOUR, h0, hour)").cast("bigint").alias("h"),
-        F.coalesce("x", F.lit(0)).cast("bigint").alias("x"),
-    )
+    hourly = _hourly_type_counts(events).select("event_type", "h", "x")
     sizes = F.broadcast(
         events.sparkSession.createDataFrame(
             [(1,), (2,), (4,), (8,), (16,)], "m int"
@@ -11878,13 +11787,13 @@ def price_index_fisher(lineitem: DataFrame) -> DataFrame:
 
 def seasonal_strength(events: DataFrame) -> DataFrame:
     """Hyndman's seasonal-strength statistic per event type:
-    F_s = max(0, 1 − Var(remainder)/Var(detrended)) on the dense hourly
-    grid, with a centered 24-hour rolling-mean trend and an
-    hour-of-day seasonal component — the single number that says
-    whether the daily cycle is signal or noise (F_s → 1: rhythm
-    dominates; → 0: the "seasonality" is residual variance). The
-    decision input for windowing/forecast choices that acf/periodogram
-    describe but don't summarize.
+    F_s = max(0, 1 − Var(remainder)/Var(detrended)) on the
+    :func:`_hourly_type_counts` grid, with a centered 24-hour
+    rolling-mean trend and an hour-of-day seasonal component — the
+    single number that says whether the daily cycle is signal or noise
+    (F_s → 1: rhythm dominates; → 0: the "seasonality" is residual
+    variance). The decision input for windowing/forecast choices that
+    acf/periodogram describe but don't summarize.
 
     Exactness: grid counts are integers; the trend is one rounded
     division of frame sums; detrended/seasonal/remainder values round
@@ -11892,27 +11801,9 @@ def seasonal_strength(events: DataFrame) -> DataFrame:
     rounded squares with identical final expressions. Types with zero
     detrended variance emit NULL.
 
-    Scale: calendar-bounded after the (type, hour) partial aggregate;
-    three windows and two tiny aggregates per type.
+    Scale: three windows and two tiny aggregates per type.
     """
-    counted = events.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("hour")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    grid = (
-        counted.groupBy("event_type")
-        .agg(F.min("hour").alias("h0"), F.max("hour").alias("h1"))
-        .select(
-            "event_type",
-            F.explode(
-                F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
-            ).alias("hour"),
-        )
-    )
-    hourly = grid.join(counted, ["event_type", "hour"], "left").select(
-        "event_type",
-        "hour",
-        F.coalesce("x", F.lit(0)).cast("bigint").alias("x"),
-    )
+    hourly = _hourly_type_counts(events).select("event_type", "hour", "x")
     wtr = (
         Window.partitionBy("event_type")
         .orderBy("hour")

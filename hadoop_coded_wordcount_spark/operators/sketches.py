@@ -331,34 +331,15 @@ def _estimate_from_registers(
 HLL_ALPHA = {16: 0.673, 32: 0.697, 64: 0.709}
 
 
-def hll_estimate_manual(
-    events: DataFrame, key: str = "user_id", group: str = "event_type", b: int = 6
-) -> DataFrame:
-    """HyperLogLog from first principles on an md5 basis — every register
-    and the final estimate value-checkable by an external SQL engine
-    (unlike the DataSketches surface of :func:`hll_sketch_distinct`,
-    whose binary encoding is engine-specific).
-
-    Flajolet et al.'s estimator over ``m = 2^b`` registers: a 52-bit md5
-    prefix splits into a ``b``-bit register index and a ``w = 52-b`` bit
-    suffix; the register keeps ``M_j = max(rho)`` where ``rho`` is the
-    1-based position of the suffix's leftmost 1-bit (``w+1`` for an
-    all-zero suffix). Estimate ``alpha_m·m²/Z`` with ``Z = Σ 2^-M_j``
-    (absent registers contribute 2⁰ = 1), and the linear-counting
-    small-range correction ``m·ln(m/V)`` when ``E ≤ 2.5m`` and ``V > 0``
-    registers are empty.
-
-    Determinism across engines is engineered, not hoped for: every
-    ``2^-M_j`` is a dyadic rational ≥ 2^-(w+1) and the register count is
-    ≤ m, so Z is an exact multiple of 2^-(w+1) below 2^53·2^-(w+1) —
-    EVERY partial-aggregation order produces the identical double, and
-    the one division/log afterwards is single-rooted IEEE. ``rho`` uses
-    ``length(bin(x))`` as an integer bit-length (both engines print
-    binary without leading zeros), never float log2.
-
-    Scale: groupBy(group, idx) partial-aggregates max(rho) map-side, so
-    the shuffle carries ≤ m rows per group per partition regardless of
-    input rows — the classic mergeable-sketch shape.
+def _hll_registers(key: str, b: int) -> tuple[Column, Column, int, float]:
+    """The md5 register split of ``key`` over ``m = 2^b`` registers:
+    ``(idx, rho, m, alpha)``. A 52-bit md5 prefix splits into the
+    ``b``-bit register index ``idx`` and a ``w = 52-b`` bit suffix;
+    ``rho`` is the 1-based position of the suffix's leftmost 1-bit
+    (``w+1`` for an all-zero suffix), taken from ``length(bin(x))`` as
+    an integer bit-length (both engines print binary without leading
+    zeros), never float log2. Raises ``ValueError`` unless ``alpha_m``
+    is tabulated for ``m``.
     """
     if b not in (4, 5, 6):
         raise ValueError("b must be 4..6 so alpha_m is tabulated")
@@ -374,6 +355,35 @@ def hll_estimate_manual(
         .otherwise(F.lit(w + 1) - F.length(F.bin(rest)))
         .cast("int")
     )
+    return idx, rho, m, alpha
+
+
+def hll_estimate_manual(
+    events: DataFrame, key: str = "user_id", group: str = "event_type", b: int = 6
+) -> DataFrame:
+    """HyperLogLog from first principles on an md5 basis — every register
+    and the final estimate value-checkable by an external SQL engine
+    (unlike the DataSketches surface of :func:`hll_sketch_distinct`,
+    whose binary encoding is engine-specific).
+
+    Flajolet et al.'s estimator over the ``m = 2^b`` md5 registers of
+    :func:`_hll_registers`: register ``j`` keeps ``M_j = max(rho)``.
+    Estimate ``alpha_m·m²/Z`` with ``Z = Σ 2^-M_j``
+    (absent registers contribute 2⁰ = 1), and the linear-counting
+    small-range correction ``m·ln(m/V)`` when ``E ≤ 2.5m`` and ``V > 0``
+    registers are empty.
+
+    Determinism across engines is engineered, not hoped for: every
+    ``2^-M_j`` is a dyadic rational ≥ 2^-(w+1) and the register count is
+    ≤ m, so Z is an exact multiple of 2^-(w+1) below 2^53·2^-(w+1) —
+    EVERY partial-aggregation order produces the identical double, and
+    the one division/log afterwards is single-rooted IEEE.
+
+    Scale: groupBy(group, idx) partial-aggregates max(rho) map-side, so
+    the shuffle carries ≤ m rows per group per partition regardless of
+    input rows — the classic mergeable-sketch shape.
+    """
+    idx, rho, m, alpha = _hll_registers(key, b)
     regs = (
         events.select(F.col(group), idx.alias("idx"), rho.alias("rho"))
         .groupBy(group, "idx")
@@ -394,23 +404,12 @@ def hll_sliding_users(
     reshuffles ``hours × m`` register rows per hour, independent of
     event volume.
 
-    Same md5 bit-split registers and dyadic-exact estimate as
+    Same :func:`_hll_registers` split and dyadic-exact estimate as
     :func:`hll_estimate_manual`; the merge is a bounded range join of the
     hour grid onto the sketch relation (|hours|·m·``hours`` rows —
     sketch-sized at any scale).
     """
-    m = 1 << b
-    w = 52 - b
-    alpha = HLL_ALPHA[m]
-    h = F.md5(F.col(key).cast("string").cast("binary"))
-    x = F.conv(F.substring(h, 1, 13), 16, 10).cast("long")
-    idx = F.shiftright(x, w)
-    rest = x.bitwiseAND(F.lit((1 << w) - 1))
-    rho = (
-        F.when(rest == 0, F.lit(w + 1))
-        .otherwise(F.lit(w + 1) - F.length(F.bin(rest)))
-        .cast("int")
-    )
+    idx, rho, m, alpha = _hll_registers(key, b)
     hour_num = F.floor(
         F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(3_600_000_000)
     ).alias("hour_num")
@@ -725,20 +724,7 @@ def hll_set_ops(
     exact side is one distinct-flag aggregate. The final assembly
     crossJoins four single-row frames (broadcast, constant size).
     """
-    if b not in (4, 5, 6):
-        raise ValueError("b must be 4..6 so alpha_m is tabulated")
-    m = 1 << b
-    w = 52 - b
-    alpha = HLL_ALPHA[m]
-    h = F.md5(F.col(key).cast("string").cast("binary"))
-    x = F.conv(F.substring(h, 1, 13), 16, 10).cast("long")
-    idx = F.shiftright(x, w)
-    rest = x.bitwiseAND(F.lit((1 << w) - 1))
-    rho = (
-        F.when(rest == 0, F.lit(w + 1))
-        .otherwise(F.lit(w + 1) - F.length(F.bin(rest)))
-        .cast("int")
-    )
+    idx, rho, m, alpha = _hll_registers(key, b)
     both = events.where(F.col("event_type").isin(type_a, type_b))
     regs = (
         both.select("event_type", idx.alias("idx"), rho.alias("rho"))

@@ -38,6 +38,7 @@ __all__ = [
     "tfidf_topk",
     "pii_redact",
     "unigram_surprisal",
+    "bigram_pairs",
     "bigram_lm",
     "perplexity_buckets",
     "char_entropy",
@@ -493,31 +494,41 @@ def unigram_surprisal(documents: DataFrame) -> DataFrame:
     )
 
 
-def bigram_lm(documents: DataFrame) -> DataFrame:
-    """Corpus bigram language model: count every adjacent token pair and
-    its conditional probability P(w2|w1) — the n-gram statistics layer
-    under perplexity filters, boilerplate detectors, and surprisal
-    scoring (the bigram upgrade of :func:`unigram_surprisal`).
+def bigram_pairs(t: Column) -> Column:
+    """The adjacent token pairs of the token array ``t``, as
+    ``array<struct<w1, w2>>`` in document order; arrays shorter than
+    two tokens give an empty array.
 
     Pair construction stays JVM-side, and in O(tokens) per document:
-    the token array is materialized ONCE in its own projection (an
-    ``element_at(tokens_expr, i)`` formulation re-evaluates the
-    split+filter expression per index — measured O(tokens²) per doc,
-    7-9 s at sf0.1; this shape runs ~1 s), then ``arrays_zip`` of the
-    two off-by-one ``slice``s yields the adjacent pairs, and one explode
-    feeds a map-side-combined count. P(w2|w1) is the count over a
-    ``w1``-partitioned window sum — key count is vocabulary sized, so
-    the window parallelizes across the cluster.
+    ``t`` should be a column the caller materialized ONCE in its own
+    projection (an ``element_at(tokens_expr, i)`` formulation
+    re-evaluates the split+filter expression per index — measured
+    O(tokens²) per doc, 7-9 s at sf0.1 for :func:`bigram_lm`; this
+    shape runs ~1 s), then ``arrays_zip`` of the two off-by-one
+    ``slice``s yields the pairs for one explode.
     """
-    toked = documents.select(tokens_col().alias("toks"))
-    t = F.col("toks")
-    pairs = F.when(
+    return F.when(
         F.size(t) >= 2,
         F.arrays_zip(
             F.slice(t, 1, F.size(t) - 1).alias("w1"),
             F.slice(t, 2, F.size(t) - 1).alias("w2"),
         ),
     ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+
+
+def bigram_lm(documents: DataFrame) -> DataFrame:
+    """Corpus bigram language model: count every adjacent token pair and
+    its conditional probability P(w2|w1) — the n-gram statistics layer
+    under perplexity filters, boilerplate detectors, and surprisal
+    scoring (the bigram upgrade of :func:`unigram_surprisal`).
+
+    Pairs come from :func:`bigram_pairs`, and one explode feeds a
+    map-side-combined count. P(w2|w1) is the count over a
+    ``w1``-partitioned window sum — key count is vocabulary sized, so
+    the window parallelizes across the cluster.
+    """
+    toked = documents.select(tokens_col().alias("toks"))
+    pairs = bigram_pairs(F.col("toks"))
     counts = (
         toked.select(F.explode(pairs).alias("p"))
         .select("p.w1", "p.w2")
@@ -557,11 +568,7 @@ def perplexity_buckets(documents: DataFrame, buckets: int = 3) -> DataFrame:
     toked = documents.select("doc_id", tokens_col().alias("toks")).where(
         F.size("toks") >= 2
     )
-    t = F.col("toks")
-    pairs = F.arrays_zip(
-        F.slice(t, 1, F.size(t) - 1).alias("w1"),
-        F.slice(t, 2, F.size(t) - 1).alias("w2"),
-    )
+    pairs = bigram_pairs(F.col("toks"))
     bg = toked.select("doc_id", F.explode(pairs).alias("p")).select(
         "doc_id", "p.w1", "p.w2"
     )
@@ -644,14 +651,7 @@ def collocations_pmi(
     total order; the global sort ranks vocabulary-sized data.
     """
     toked = documents.select(tokens_col().alias("toks"))
-    t = F.col("toks")
-    pairs = F.when(
-        F.size(t) >= 2,
-        F.arrays_zip(
-            F.slice(t, 1, F.size(t) - 1).alias("w1"),
-            F.slice(t, 2, F.size(t) - 1).alias("w2"),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+    pairs = bigram_pairs(F.col("toks"))
     bg = toked.select(F.explode(pairs).alias("p")).select("p.w1", "p.w2")
     counts = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     c1 = counts.withColumn("c1", F.sum("c12").over(Window.partitionBy("w1")))
@@ -939,8 +939,7 @@ def textrank_keywords(
     the iteration is deterministic under any partitioning and the
     oracle replays it by unrolling rounds.
 
-    Shapes: bigram edges come from the O(tokens) arrays_zip slice
-    (bigram_lm's measured fix, never element_at re-evaluation); the
+    Shapes: bigram edges come from :func:`bigram_pairs`; the
     graph is vocabulary-sized, orders smaller than the corpus, so the
     per-round join+groupBy shuffles stay tiny. Top-k is a row_number
     over the aggregated vocabulary frame with a total (rank DESC, word)
@@ -949,14 +948,7 @@ def textrank_keywords(
     from .graph import _pagerank_ranks
 
     toked = documents.select(tokens_col().alias("toks"))
-    t = F.col("toks")
-    zipped = F.when(
-        F.size(t) >= 2,
-        F.arrays_zip(
-            F.slice(t, 1, F.size(t) - 1).alias("w1"),
-            F.slice(t, 2, F.size(t) - 1).alias("w2"),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+    zipped = bigram_pairs(F.col("toks"))
     pairs = (
         toked.select(F.explode(zipped).alias("p"))
         .select("p.w1", "p.w2")
@@ -1184,11 +1176,7 @@ def bigram_heldout_xent(documents: DataFrame) -> DataFrame:
     toked = documents.select(
         "doc_id", tokens_col().alias("toks")
     ).where(F.size("toks") >= 2)
-    t = F.col("toks")
-    pairs = F.arrays_zip(
-        F.slice(t, 1, F.size(t) - 1).alias("w1"),
-        F.slice(t, 2, F.size(t) - 1).alias("w2"),
-    )
+    pairs = bigram_pairs(F.col("toks"))
     bg = toked.select("doc_id", F.explode(pairs).alias("p")).select(
         "doc_id", "p.w1", "p.w2"
     )
@@ -2157,8 +2145,8 @@ def trigram_lm(documents: DataFrame) -> DataFrame:
     of exact integers; the fixed-λ combination is a fixed-shape
     expression tree rounded to 6 — no transcendentals anywhere.
 
-    Scale shape: the O(tokens) zipped-slice construction from bigram_lm
-    (never element_at-per-index); three map-side-combined count
+    Scale shape: the O(tokens) zipped-slice construction of
+    :func:`bigram_pairs`, widened to three slices for the trigrams; three map-side-combined count
     aggregations, each vocabulary^k-bounded; context totals via
     key-partitioned windows over the count frames (vocabulary-sized
     keys parallelize); the lower-order count tables join un-hinted —
@@ -2176,13 +2164,6 @@ def trigram_lm(documents: DataFrame) -> DataFrame:
     ).otherwise(
         F.array().cast("array<struct<w1:string,w2:string,w3:string>>")
     )
-    big = F.when(
-        F.size(t) >= 2,
-        F.arrays_zip(
-            F.slice(t, 1, F.size(t) - 1).alias("w2"),
-            F.slice(t, 2, F.size(t) - 1).alias("w3"),
-        ),
-    ).otherwise(F.array().cast("array<struct<w2:string,w3:string>>"))
     c3 = (
         toked.select(F.explode(tri).alias("g"))
         .select("g.w1", "g.w2", "g.w3")
@@ -2200,8 +2181,8 @@ def trigram_lm(documents: DataFrame) -> DataFrame:
         .alias("ctx3"),
     )
     c2 = (
-        toked.select(F.explode(big).alias("g"))
-        .select("g.w2", "g.w3")
+        toked.select(F.explode(bigram_pairs(t)).alias("g"))
+        .select(F.col("g.w1").alias("w2"), F.col("g.w2").alias("w3"))
         .groupBy("w2", "w3")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt2"))
     )
@@ -2882,21 +2863,14 @@ def kneser_ney_bigram(documents: DataFrame) -> DataFrame:
     cross-engine after the 6dp round; no smoothing hyperparameter
     search, no transcendental.
 
-    Scale: pair construction is the bigram_lm shape (one array
-    projection, one explode, map-side-combined count); the three
+    Scale: pair construction is the :func:`bigram_pairs` shape (one
+    array projection, one explode, map-side-combined count); the three
     normalizers are two windows over the vocabulary²-bounded pair
     table (w1- and w2-partitioned — parallel, key-bounded) and one
     1-row broadcast total. Nothing is corpus-sized after the count.
     """
     toked = documents.select(tokens_col().alias("toks"))
-    t = F.col("toks")
-    pairs = F.when(
-        F.size(t) >= 2,
-        F.arrays_zip(
-            F.slice(t, 1, F.size(t) - 1).alias("w1"),
-            F.slice(t, 2, F.size(t) - 1).alias("w2"),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+    pairs = bigram_pairs(F.col("toks"))
     counts = (
         toked.select(F.explode(pairs).alias("p"))
         .select("p.w1", "p.w2")

@@ -4,7 +4,7 @@ The reference (sredman/hadoop-coded-wordcount) hand-wires one Hadoop ``Job``
 per run (reference WordCountDriver.java:44-63).  Here the session *is* the
 driver: every query is a declarative DataFrame plan handed to Catalyst.
 
-Scale posture (applies unchanged from local[32] to a 1000-executor cluster):
+Scale posture (applies unchanged from local[n] to a 1000-executor cluster):
 
 * **AQE on** — runtime coalescing of shuffle partitions, skew-join splitting,
   and dynamic broadcast-join conversion replace any hand-tuned partition
@@ -22,7 +22,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: ``SPARK_GRAFT_CPUS``, else the cores this process may run on (what
+#: ``nproc`` prints), so a plain ``get_spark()`` never oversubscribes.
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+)
 
 
 def get_spark(
@@ -33,10 +37,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    All settings are chosen so the same plan scales from local[32] to a
-    large cluster: AQE owns partition counts at runtime, Arrow owns the
-    Python boundary, and broadcast thresholds stay at Spark defaults so
-    dimension tables (region/nation/...) auto-broadcast.
+    The default master is ``local[DEFAULT_CPUS]`` and the default
+    shuffle partition count ``DEFAULT_CPUS``. All settings are chosen so
+    the same plan scales from one box to a large cluster: AQE owns
+    partition counts at runtime, Arrow owns the Python boundary, and
+    broadcast thresholds stay at Spark defaults so dimension tables
+    (region/nation/...) auto-broadcast.
     """
     master = master or f"local[{DEFAULT_CPUS}]"
     shuffle_partitions = shuffle_partitions or DEFAULT_CPUS

@@ -4,7 +4,10 @@ from __future__ import annotations
 
 from conftest import SF001
 
-from hadoop_coded_wordcount_spark.operators.relational import approx_distinct
+from hadoop_coded_wordcount_spark.operators.relational import (
+    _hourly_type_counts,
+    approx_distinct,
+)
 from hadoop_coded_wordcount_spark.sources.catalog import load_table
 
 # The per-name oracle sweep moved to tests/test_oracle_sweep.py, which
@@ -995,3 +998,28 @@ def test_markov_removal_effect_sole_converting_channel(spark):
     assert got["click"].removal_effect == 1.0
     assert got["view"].removal_effect == 0.0
     assert got["view"].p_conv_removed == 0.5
+
+
+def test_hourly_type_counts_zero_fills_each_types_own_span(spark):
+    """Each type's dense series runs from its own first to its own last
+    active hour, with empty hours as real zeros: A (hours 0 and 3, two
+    events in hour 3) spans four hours, B (hour 5 only) one."""
+    from datetime import datetime
+
+    ev = spark.createDataFrame(
+        [
+            ("A", datetime(2024, 1, 1, 0, 10)),
+            ("A", datetime(2024, 1, 1, 3, 5)),
+            ("A", datetime(2024, 1, 1, 3, 40)),
+            ("B", datetime(2024, 1, 1, 5, 20)),
+        ],
+        "event_type string, ts timestamp",
+    )
+    rows = _hourly_type_counts(ev).orderBy("event_type", "h").collect()
+    got = {}
+    for r in rows:
+        got.setdefault(r["event_type"], []).append((r["h"], r["x"]))
+    assert got == {"A": [(0, 1), (1, 0), (2, 0), (3, 2)], "B": [(0, 1)]}
+    assert [r["hour"] for r in rows if r["event_type"] == "B"] == [
+        datetime(2024, 1, 1, 5)
+    ]

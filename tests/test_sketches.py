@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from hadoop_coded_wordcount_spark.operators import sketches as sk
 from hadoop_coded_wordcount_spark.sources.catalog import load_table
@@ -169,6 +170,18 @@ def test_hll_manual_accuracy_and_partitioning_invariance(spark):
     one = sorted(map(tuple, sk.hll_estimate_manual(ev.coalesce(1)).collect()))
     many = sorted(map(tuple, sk.hll_estimate_manual(ev.repartition(13)).collect()))
     assert one == many == sorted(map(tuple, got))
+
+
+@pytest.mark.parametrize("b", [3, 7])
+@pytest.mark.parametrize(
+    "fn", [sk.hll_estimate_manual, sk.hll_sliding_users, sk.hll_set_ops]
+)
+def test_hll_rejects_untabulated_register_count(fn, b):
+    """All three md5-register HLLs share one ``b`` check: a register
+    count without a tabulated alpha_m is a contract error raised while
+    the columns are built, never a bare ``KeyError`` from the table."""
+    with pytest.raises(ValueError, match="b must be 4..6"):
+        fn(None, b=b)
 
 
 def test_cms_manual_overestimates_within_bound(spark):
