@@ -31,6 +31,7 @@ from pyspark.sql.window import Window
 
 __all__ = [
     "tokens_col",
+    "word_ngrams",
     "shingled",
     "dedup_exact",
     "dedup_fingerprint",
@@ -56,6 +57,29 @@ def tokens_col(text_col: str = "text") -> Column:
     return F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != "")
 
 
+def word_ngrams(n: int) -> Column:
+    """The word ``n``-grams of the ``toks`` column, in position order
+    with repeats kept: token windows joined by one space; empty when a
+    doc has fewer than ``n`` tokens.
+
+    The when() guard makes the expression TOTAL: Catalyst's
+    InferFiltersFromGenerate infers ``size(grams) > 0`` from any
+    downstream explode and may evaluate it BEFORE a caller's
+    ``size(toks) >= n`` filter (predicates reorder freely) — an
+    unguarded ``sequence(0, size - n)`` / ``element_at`` then faults on
+    short docs under strict semantics.
+    """
+    return F.when(
+        F.size("toks") >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size("toks") - n),
+            lambda i: F.concat_ws(
+                " ", *[F.element_at("toks", i + k + 1) for k in range(n)]
+            ),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
 def shingled(documents: DataFrame, n: int = 3) -> DataFrame:
     """doc_id, lang, grams: distinct word n-gram shingles per document.
 
@@ -74,23 +98,9 @@ def shingled(documents: DataFrame, n: int = 3) -> DataFrame:
     with_toks = src.select("doc_id", "lang", toks.alias("toks")).where(
         F.size("toks") >= n
     )
-    # The when() guard makes the expression TOTAL: Catalyst's
-    # InferFiltersFromGenerate infers `size(grams) > 0` from any
-    # downstream explode and may evaluate it BEFORE the size(toks) >= n
-    # filter (predicates reorder freely) — an unguarded element_at then
-    # faults on short docs under strict semantics.
-    grams = F.when(
-        F.size("toks") >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size("toks") - n),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at("toks", i + k + 1) for k in range(n)]
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return with_toks.select("doc_id", "lang", grams.alias("grams"))
+    return with_toks.select(
+        "doc_id", "lang", F.array_distinct(word_ngrams(n)).alias("grams")
+    )
 
 
 # ---------------------------------------------------------------------------

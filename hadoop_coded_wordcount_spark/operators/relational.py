@@ -2208,39 +2208,52 @@ def url_funcs(documents: DataFrame) -> DataFrame:
     )
 
 
-def sessionize_events(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Batch sessionization: split each user's event stream into sessions
-    at >``gap_minutes`` inactivity gaps — the batch twin of the streaming
-    session window (streaming/windows.py), and the standard first step of
-    any clickstream/behavior pipeline.
+def _sessions(events: DataFrame, gap_minutes: int, *cols: str) -> DataFrame:
+    """(user_id, ts, event_id, *cols, session_seq): each user's events
+    numbered into sessions at >``gap_minutes`` inactivity gaps.
 
     Gap detection is the lag-then-cumsum idiom: a row opens a new session
-    iff it is the user's first event or follows its predecessor by more
-    than the gap; the running sum of that flag numbers the sessions.
-    Both windows AND the final per-session aggregation cluster on
-    ``user_id`` (session_seq is a refinement of the user partition), so
-    Catalyst plans ONE exchange for the whole query — lag, cumsum, and
-    the groupBy all reuse the same hash(user_id) partitioning. At 100 TB
-    that single user-keyed shuffle is the irreducible cost; everything
-    else is per-partition.
+    iff it is the user's first event or follows its predecessor, in
+    (ts, event_id) order, by more than the gap; the running sum of that
+    flag numbers the sessions from 1. Every window here clusters on
+    ``user_id``, and so does any later window or grouping keyed on
+    (user_id, session_seq) — session_seq refines the user partition — so
+    Catalyst plans ONE user-keyed exchange for the whole derivation. At
+    100 TB that single shuffle is the irreducible cost; everything else
+    is per-partition.
 
-    Gap arithmetic is integer epoch-seconds end to end, so the oracle
-    comparison is exact (no timestamp-diff FP).
+    Gap arithmetic is integer epoch seconds end to end, so oracle
+    comparisons are exact (no timestamp-diff FP). ts is TIMESTAMP_NTZ
+    (load_table's nanos conversion) and NTZ has no direct long cast: it
+    hops through timestamp (value-preserving under the UTC-pinned
+    session), then to epoch seconds (floor).
     """
-    gap_s = gap_minutes * 60
-    # ts is TIMESTAMP_NTZ (load_table's nanos conversion); NTZ has no
-    # direct long cast — hop through timestamp (session tz pinned UTC
-    # makes it value-preserving), then to epoch seconds (floor).
     sec = F.col("ts").cast("timestamp").cast("long")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag(sec).over(w)
-    opens = (prev.isNull() | (sec - prev > F.lit(gap_s))).cast("int")
-    numbered = events.select(
-        "user_id", "event_id", "ts", "value", opens.alias("opens")
-    ).withColumn(
-        "session_seq",
-        F.sum("opens").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+    opens = (prev.isNull() | (sec - prev > F.lit(gap_minutes * 60))).cast("int")
+    return events.select(
+        "user_id", "ts", "event_id", *cols, opens.alias("opens")
+    ).select(
+        "user_id",
+        "ts",
+        "event_id",
+        *cols,
+        F.sum("opens")
+        .over(w.rowsBetween(Window.unboundedPreceding, 0))
+        .alias("session_seq"),
     )
+
+
+def sessionize_events(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+    """Batch sessionization: split each user's event stream into sessions
+    at >``gap_minutes`` inactivity gaps (:func:`_sessions`) and summarize
+    each one — the batch twin of the streaming session window
+    (streaming/windows.py), and the standard first step of any
+    clickstream/behavior pipeline. The per-session aggregation reuses
+    the sessionization's user-keyed exchange.
+    """
+    numbered = _sessions(events, gap_minutes, "value")
     return numbered.groupBy("user_id", "session_seq").agg(
         F.min("ts").alias("session_start"),
         F.max("ts").alias("session_end"),
@@ -2907,7 +2920,7 @@ def funnel_sequence(events: DataFrame, within: str = "1 hour") -> DataFrame:
 def markov_transitions(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """First-order Markov model of user behavior: P(next event type |
     current event type), transitions counted only WITHIN a session
-    (30-minute inactivity gap) — the navigation-pattern summary behind
+    (:func:`_sessions`) — the navigation-pattern summary behind
     "what do users do after an error?".
 
     Sessionization and the next-event lookup are both windows over the
@@ -2918,19 +2931,8 @@ def markov_transitions(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     count ratios — a single division, but sums of counts reach the
     window in engine order).
     """
-    gap_s = gap_minutes * 60
-    sec = F.col("ts").cast("timestamp").cast("long")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag(sec).over(w)
-    opens = (prev.isNull() | (sec - prev > F.lit(gap_s))).cast("int")
-    flagged = events.select(
-        "user_id", "ts", "event_id", "event_type", opens.alias("opens")
-    )
-    sid = F.sum("opens").over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    seq = flagged.withColumn("sid", sid)
-    ws = Window.partitionBy("user_id", "sid").orderBy("ts", "event_id")
+    seq = _sessions(events, gap_minutes, "event_type")
+    ws = Window.partitionBy("user_id", "session_seq").orderBy("ts", "event_id")
     pairs = seq.select(
         F.col("event_type").alias("cur"),
         F.lead("event_type").over(ws).alias("nxt"),
@@ -5111,26 +5113,12 @@ def session_bounce_rate(
     inactivity gaps > ``gap_minutes``; a session with a single event is
     a bounce. The engagement-quality readout next to raw event counts.
 
-    Sessionization is the lag-then-cumsum shape (one per-user window
-    exchange shared by every step); all statistics are exact integer
-    counts with one final 6dp division each.
+    Sessions come from :func:`_sessions`; all statistics are exact
+    integer counts with one final 6dp division each.
     """
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_s = gap_minutes * 60
-    # integer epoch-seconds gap arithmetic, the sessionize_events idiom
-    # (NTZ -> timestamp -> long under the UTC-pinned session)
-    sec = F.col("ts").cast("timestamp").cast("long")
-    prev = F.lag(sec).over(w)
-    new_sess = (prev.isNull() | (sec - prev > F.lit(gap_s))).cast("int")
-    run = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    sess = events.select(
-        "user_id", "ts", "event_id", new_sess.alias("ns")
-    ).select("user_id", "event_id", F.sum("ns").over(run).alias("sess_id"))
-    per_sess = sess.groupBy("user_id", "sess_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_events")
-    )
+    per_sess = _sessions(events, gap_minutes).groupBy(
+        "user_id", "session_seq"
+    ).agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
     return per_sess.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sessions"),
         F.sum(F.when(F.col("n_events") == 1, 1).otherwise(0))
@@ -5516,27 +5504,17 @@ def top_session_paths(
     onboarding analysis (the path-level companion to
     :func:`markov_transitions`' edge-level view).
 
-    Sessionization is the shared lag-then-cumsum shape; the path build
-    is rank ≤ depth inside the (user, session) partition + an ordered
-    string_agg — every window clusters on user_id, one exchange.
-    Top-N on (count desc, path) is a total order.
+    Sessions come from :func:`_sessions`; the path build is rank ≤
+    depth inside the (user, session) partition + an ordered string_agg —
+    every window clusters on user_id, one exchange. Top-N on
+    (count desc, path) is a total order.
     """
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_s = gap_minutes * 60
-    sec = F.col("ts").cast("timestamp").cast("long")
-    prev = F.lag(sec).over(w)
-    opens = (prev.isNull() | (sec - prev > F.lit(gap_s))).cast("int")
-    numbered = events.select(
-        "user_id", "event_id", "ts", "event_type", opens.alias("opens")
-    ).withColumn(
-        "sess",
-        F.sum("opens").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    ws = Window.partitionBy("user_id", "sess").orderBy("ts", "event_id")
+    numbered = _sessions(events, gap_minutes, "event_type")
+    ws = Window.partitionBy("user_id", "session_seq").orderBy("ts", "event_id")
     heads = numbered.withColumn("rn", F.row_number().over(ws)).where(
         F.col("rn") <= depth
     )
-    paths = heads.groupBy("user_id", "sess").agg(
+    paths = heads.groupBy("user_id", "session_seq").agg(
         F.concat_ws(
             ">", F.array_sort(F.collect_list(F.struct("rn", "event_type")))
             .getField("event_type")
@@ -6771,8 +6749,8 @@ def funnel_significance(events: DataFrame) -> DataFrame:
     counts need before anyone ships a conclusion: is cohort A's
     view→click→purchase conversion actually different, step by step?
 
-    Funnels are per SESSION (30-min inactivity gap, the sessionize_events
-    boundary), not per user lifetime — on a dense stream every user
+    Funnels are per SESSION (30-min inactivity gap, :func:`_sessions`),
+    not per user lifetime — on a dense stream every user
     eventually does everything, which collapses every rate to 1 and the
     z to 0/0; sessions keep the conversion question real. Step flags
     collapse to one row per session (windows + one shuffle); each
@@ -6782,17 +6760,9 @@ def funnel_significance(events: DataFrame) -> DataFrame:
     (zero reached, pooled p ∈ {0,1}) yield NULL z via try_divide
     rather than a crash.
     """
-    sec = F.col("ts").cast("timestamp").cast("long")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag(sec).over(w)
-    opens = (prev.isNull() | (sec - prev > F.lit(1800))).cast("int")
-    sid = F.sum(opens).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    sessed = events.select("user_id", "ts", "event_id", "event_type").select(
-        "user_id", "event_type", sid.alias("sid")
-    )
-    flags = sessed.groupBy("user_id", "sid").agg(
+    flags = _sessions(events, 30, "event_type").groupBy(
+        "user_id", "session_seq"
+    ).agg(
         F.max(F.when(F.col("event_type") == "view", 1).otherwise(0)).alias(
             "s_view"
         ),
@@ -8001,22 +7971,12 @@ def session_depth_hist(events: DataFrame, cap: int = 10) -> DataFrame:
     number (a product with many 2-event sessions and a product with
     deep sessions can share a bounce rate).
 
-    Sessions come from the standard 30-minute-gap windows; depths are
+    Sessions come from :func:`_sessions` at a 30-minute gap; depths are
     integer counts, the cap bucket keeps output bounded at any scale,
     and shares divide exact integers once. One user-ordered window
     pass + two aggregates.
     """
-    sec = F.col("ts").cast("timestamp").cast("long")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag(sec).over(w)
-    opens = (prev.isNull() | (sec - prev > F.lit(1800))).cast("int")
-    sid = F.sum(opens).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    sessed = events.select("user_id", "ts", "event_id").select(
-        "user_id", sid.alias("sid")
-    )
-    depths = sessed.groupBy("user_id", "sid").agg(
+    depths = _sessions(events, 30).groupBy("user_id", "session_seq").agg(
         F.count(F.lit(1)).cast("bigint").alias("depth")
     )
     bucketed = depths.select(
@@ -9103,33 +9063,19 @@ def session_type_lift(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     where the basket is a behavioral session rather than an order
     (market_basket_pairs' clickstream twin).
 
-    Sessions split on >``gap_minutes`` inactivity via the lag-then-
-    cumsum idiom (integer epoch-second arithmetic, exact); pair/type
-    probabilities are exact integer counts over sessions with single
-    IEEE divides at the end.
+    Sessions split on >``gap_minutes`` inactivity (:func:`_sessions`);
+    pair/type probabilities are exact integer counts over sessions with
+    single IEEE divides at the end.
 
     Scale: sessionization is one user-keyed exchange; distinct types
     per session bound the pair fan-out by |types|² per session; the
     pair aggregate is map-side combined and type-bounded.
     """
-    gap_s = gap_minutes * 60
-    sec = F.col("ts").cast("timestamp").cast("long")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    new_sess = F.when(
-        F.lag(sec).over(w).isNull() | (sec - F.lag(sec).over(w) > gap_s), 1
-    ).otherwise(0)
-    sess = events.select(
-        "user_id",
-        "event_type",
-        F.sum(new_sess)
-        .over(
-            Window.partitionBy("user_id")
-            .orderBy("ts", "event_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        .alias("session_seq"),
+    st = (
+        _sessions(events, gap_minutes, "event_type")
+        .select("user_id", "session_seq", "event_type")
+        .distinct()
     )
-    st = sess.select("user_id", "session_seq", "event_type").distinct()
     tot = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
@@ -9819,19 +9765,8 @@ def markov_removal_attribution(
     control-plane collect; the distributed rounds were measured pure
     job-launch latency at any corpus size).
     """
-    gap_s = gap_minutes * 60
-    sec = F.col("ts").cast("timestamp").cast("long")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    opens = (
-        F.lag(sec).over(w).isNull() | (sec - F.lag(sec).over(w) > gap_s)
-    ).cast("int")
-    seq = events.select(
-        "user_id", "ts", "event_id", "event_type", opens.alias("opens")
-    ).withColumn(
-        "sid",
-        F.sum("opens").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
+    seq = _sessions(events, gap_minutes, "event_type").withColumnRenamed(
+        "session_seq", "sid"
     )
     ws = Window.partitionBy("user_id", "sid").orderBy("ts", "event_id")
     wsall = Window.partitionBy("user_id", "sid")

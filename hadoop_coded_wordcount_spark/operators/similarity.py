@@ -135,6 +135,145 @@ def cosine(a: Column, b: Column) -> Column:
     return dot / (na * nb)
 
 
+def _with_norm(frame: DataFrame, *cols: str) -> DataFrame:
+    """(vec_id, *cols, emb, nrm): ``embedding`` cast to double, with its
+    norm hoisted to one per-row fold so no pair kernel refolds it."""
+    norm = F.sqrt(_fold_sum(F.transform("emb", lambda x: x * x)))
+    return frame.select(
+        "vec_id", *cols, _as_double("embedding").alias("emb")
+    ).withColumn("nrm", norm)
+
+
+def _normed(embeddings: DataFrame) -> DataFrame:
+    """(vec_id, emb, nrm) of the corpus, behind :func:`ensure_parallelism`
+    — a single-file scan would otherwise fuse every per-row fold, and
+    the pair kernels above them, into one task."""
+    from ..sources.catalog import ensure_parallelism
+
+    return _with_norm(
+        ensure_parallelism(
+            embeddings.select("vec_id", "embedding"), key="vec_id"
+        )
+    )
+
+
+def _unit_vectors(normed: DataFrame, *cols: str) -> DataFrame:
+    """(vec_id, *cols, ne): each vector of a :func:`_with_norm` frame
+    divided by its norm, so any later pairwise dot IS the cosine. A zero
+    vector gives NaN components (``similarity_helpers.as_double_unit``
+    drops zero vectors instead)."""
+    return normed.select(
+        "vec_id",
+        *cols,
+        F.transform("emb", lambda x: x / F.col("nrm")).alias("ne"),
+    )
+
+
+def _blocked_unit_vectors(
+    embeddings: DataFrame, block_on: str | None
+) -> DataFrame:
+    """(vec_id, blk, ne): unit vectors keyed by the ``block_on`` column
+    (one block of 0 when None) — the normalize-first frame of the blocked
+    near-dup pairs and of DBSCAN's probe and pair generators."""
+    blk = F.col(block_on) if block_on else F.lit(0)
+    return _unit_vectors(
+        _with_norm(
+            embeddings.select("vec_id", blk.alias("blk"), "embedding"), "blk"
+        ),
+        "blk",
+    )
+
+
+def _queries(
+    vecs: DataFrame, query_mod: int, qids: DataFrame | None
+) -> DataFrame:
+    """(query_id, q_emb, q_nrm): the id-mod query set of a
+    :func:`_normed` frame, cut to the ``qids`` vec_id budget
+    (:func:`audit_qids`) when one is given."""
+    queries = vecs.where(F.col("vec_id") % query_mod == 0)
+    if qids is not None:
+        queries = queries.join(F.broadcast(qids), "vec_id")
+    return queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("emb").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+    )
+
+
+def _ivf_cells(
+    vecs: DataFrame, centroid_mod: int, max_cells: int | None
+) -> DataFrame:
+    """(cell_id, c_emb, c_nrm): IVF centroids as a deterministic
+    id-sample of a :func:`_normed` frame (stand-in for k-means — the
+    *plumbing* is what scales, the trainer is pluggable), capped at the
+    fixed ``max_cells`` budget (``ANN_MAX_CELLS``, the nlist knob) so
+    the corpus×cells assignment stays linear in the corpus."""
+    cells = vecs.where(F.col("vec_id") % centroid_mod == 0)
+    if max_cells is not None:
+        cells = cells.join(
+            F.broadcast(audit_qids(vecs, centroid_mod, max_cells)), "vec_id"
+        )
+    return cells.select(
+        F.col("vec_id").alias("cell_id"),
+        F.col("emb").alias("c_emb"),
+        F.col("nrm").alias("c_nrm"),
+    )
+
+
+def _ivf_assign(vecs: DataFrame, cells: DataFrame, dim: int) -> DataFrame:
+    """(vec_id, cell_id): every vector joins the broadcast cells once and
+    keeps its argmax-cosine cell (``max(struct(cos, cell))`` — a single
+    partial-aggregable pass, no window). Per-pair scoring is the hot
+    path (corpus × cells): unrolled codegen dot over hoisted per-row
+    norms, value-identical to :func:`cosine`."""
+    ccos = dot_unrolled("c_emb", "emb", dim) / (
+        F.col("c_nrm") * F.col("nrm")
+    )
+    return (
+        vecs.join(F.broadcast(cells))
+        .groupBy("vec_id")
+        .agg(F.max(F.struct(ccos.alias("cos"), F.col("cell_id"))).alias("b"))
+        .select("vec_id", F.col("b.cell_id").alias("cell_id"))
+    )
+
+
+def _ivf_probes(
+    queries: DataFrame, cells: DataFrame, nprobe: int, dim: int
+) -> DataFrame:
+    """(query_id, q_emb, q_nrm, cell_id): each :func:`_queries` row with
+    its ``nprobe`` highest-cosine cells (ties to the lower cell id)."""
+    qcos = dot_unrolled("c_emb", "q_emb", dim) / (
+        F.col("c_nrm") * F.col("q_nrm")
+    )
+    wq = Window.partitionBy("query_id").orderBy(
+        F.desc("qcell_cos"), F.asc("cell_id")
+    )
+    return (
+        queries.join(F.broadcast(cells))
+        .select("query_id", "q_emb", "q_nrm", "cell_id", qcos.alias("qcell_cos"))
+        .withColumn("prank", F.row_number().over(wq))
+        .where(F.col("prank") <= nprobe)
+        .select("query_id", "q_emb", "q_nrm", "cell_id")
+    )
+
+
+def _nearest_cell(vecs: DataFrame, cells: DataFrame, dim: int) -> DataFrame:
+    """(vec_id, cell_id, ne): each :func:`_unit_vectors` row with its
+    max-dot cell among the unit centroids ``cells`` (cell_id, c_emb) —
+    on unit vectors the dot IS the cosine (broadcast join +
+    ``max(struct(...))`` argmax, no window)."""
+    dot = dot_unrolled("ne", "c_emb", dim)
+    return (
+        vecs.join(F.broadcast(cells))
+        .groupBy("vec_id")
+        .agg(
+            F.max(F.struct(dot.alias("cos"), F.col("cell_id"))).alias("b"),
+            F.first("ne").alias("ne"),
+        )
+        .select("vec_id", F.col("b.cell_id").alias("cell_id"), "ne")
+    )
+
+
 def cosine_topk(
     embeddings: DataFrame,
     query_mod: int = 100,
@@ -156,25 +295,12 @@ def cosine_topk(
     formula, so the exact-SQL oracle still matches bit-for-bit) at a
     third of the folds and none of the interpreter overhead.
     """
-    from ..sources.catalog import ensure_parallelism
-
-    norm = F.sqrt(_fold_sum(F.transform("emb", lambda x: x * x)))
-    vecs = (
-        ensure_parallelism(
-            embeddings.select("vec_id", "embedding"), key="vec_id"
-        )
-        .select("vec_id", _as_double("embedding").alias("emb"))
-        .withColumn("nrm", norm)
-    )
-    queries = vecs.where(F.col("vec_id") % query_mod == 0)
-    if max_queries is not None:
-        queries = queries.join(
-            F.broadcast(audit_qids(vecs, query_mod, max_queries)), "vec_id"
-        )
-    queries = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
+    vecs = _normed(embeddings)
+    queries = _queries(
+        vecs,
+        query_mod,
+        None if max_queries is None
+        else audit_qids(vecs, query_mod, max_queries),
     )
     cos = dot_unrolled("q_emb", "emb", dim) / (
         F.col("q_nrm") * F.col("nrm")
@@ -204,13 +330,12 @@ def cosine_ivf_topk(
 ) -> DataFrame:
     """Approximate top-k via IVF (inverted-file) cell pruning.
 
-    1. centroids: deterministic id-sample of the corpus (stand-in for
-       k-means — the *plumbing* is what scales, the trainer is pluggable);
-    2. assign: every vector joins the broadcast centroids once and keeps
-       its argmax-cosine cell (``max(struct(cos, cell))`` — a single
-       partial-aggregable pass, no window);
+    1. centroids: deterministic id-sample of the corpus
+       (:func:`_ivf_cells`) unless ``centroids`` is given;
+    2. assign: every vector keeps its argmax-cosine cell
+       (:func:`_ivf_assign`);
     3. probe: each query ranks the same centroids and keeps ``nprobe``
-       cells;
+       cells (:func:`_ivf_probes`);
     4. search: candidates come from an equi-join on cell id — each query
        scores ~nprobe/|cells| of the corpus instead of all of it.
 
@@ -218,67 +343,20 @@ def cosine_ivf_topk(
     workload) recall tracks cell quality. Unit tests plant clusters and
     assert the planted neighbors are recovered.
     """
-    from ..sources.catalog import ensure_parallelism
-
-    norm = F.sqrt(_fold_sum(F.transform("emb", lambda x: x * x)))
-    vecs = (
-        ensure_parallelism(
-            embeddings.select("vec_id", "embedding"), key="vec_id"
-        )
-        .select("vec_id", _as_double("embedding").alias("emb"))
-        .withColumn("nrm", norm)
-    )
-    if centroids is None:  # default: deterministic id-sample, capped at
-        # the fixed ANN_MAX_CELLS budget so the corpus×cells assignment
-        # stays linear in the corpus (the nlist knob)
-        centroids = vecs.where(F.col("vec_id") % centroid_mod == 0)
-        if max_cells is not None:
-            centroids = centroids.join(
-                F.broadcast(audit_qids(vecs, centroid_mod, max_cells)),
-                "vec_id",
-            )
-        centroids = centroids.select(
-            F.col("vec_id").alias("cell_id"),
-            F.col("emb").alias("c_emb"),
-            F.col("nrm").alias("c_nrm"),
-        )
+    vecs = _normed(embeddings)
+    if centroids is None:
+        centroids = _ivf_cells(vecs, centroid_mod, max_cells)
     elif "c_nrm" not in centroids.columns:
         c_norm = F.sqrt(_fold_sum(F.transform("c_emb", lambda x: x * x)))
         centroids = centroids.withColumn("c_nrm", c_norm)
-
-    # per-pair scoring is the hot path (corpus × centroids); unrolled
-    # codegen dot + hoisted per-row norms, value-identical to cosine()
-    ccos = dot_unrolled("c_emb", "emb", dim) / (
-        F.col("c_nrm") * F.col("nrm")
+    assigned = _ivf_assign(vecs, centroids, dim)
+    queries = _queries(
+        vecs,
+        query_mod,
+        None if max_queries is None
+        else audit_qids(vecs, query_mod, max_queries),
     )
-    assigned = (
-        vecs.join(F.broadcast(centroids))
-        .groupBy("vec_id")
-        .agg(F.max(F.struct(ccos.alias("cos"), F.col("cell_id"))).alias("best"))
-        .select("vec_id", F.col("best.cell_id").alias("cell_id"))
-    )
-
-    queries = vecs.where(F.col("vec_id") % query_mod == 0)
-    if max_queries is not None:
-        queries = queries.join(
-            F.broadcast(audit_qids(vecs, query_mod, max_queries)), "vec_id"
-        )
-    queries = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    qcos = dot_unrolled("c_emb", "q_emb", dim) / (
-        F.col("c_nrm") * F.col("q_nrm")
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("qcell_cos"), F.asc("cell_id"))
-    probes = (
-        queries.join(F.broadcast(centroids))
-        .select("query_id", "q_emb", "q_nrm", "cell_id", qcos.alias("qcell_cos"))
-        .withColumn("prank", F.row_number().over(wq))
-        .where(F.col("prank") <= nprobe)
-        .select("query_id", "q_emb", "q_nrm", "cell_id")
-    )
+    probes = _ivf_probes(queries, centroids, nprobe, dim)
 
     cand = (
         probes.join(assigned, "cell_id")
@@ -433,21 +511,7 @@ def embedding_lsh_pairs(
         [rng.choice((-1.0, 1.0)) for _ in range(dim)] for _ in range(bits)
     ]
     r = bits // bands
-
-    from ..sources.catalog import ensure_parallelism
-
-    norm = F.sqrt(_fold_sum(F.transform("emb", lambda x: x * x)))
-    vecs = (
-        ensure_parallelism(
-            embeddings.select("vec_id", "embedding"), key="vec_id"
-        )
-        .select("vec_id", _as_double("embedding").alias("emb"))
-        .withColumn("nrm", norm)
-        .select(
-            "vec_id",
-            F.transform("emb", lambda x: x / F.col("nrm")).alias("ne"),
-        )
-    )
+    vecs = _unit_vectors(_normed(embeddings))
 
     # Sketch in the simhash64 shape: posexplode components, then ``bits``
     # conditional-sum aggregates — everything whole-stage-codegen'd with
@@ -619,18 +683,7 @@ def embedding_neardup_pairs(
     rather than block size squared. Cell state (boxes) is
     cells-per-block rows — never corpus-sized, never collected.
     """
-    import math
-
-    norm = F.sqrt(_fold_sum(F.transform("emb", lambda x: x * x)))
-    vecs = embeddings.select(
-        "vec_id",
-        F.col(block_on).alias("blk") if block_on else F.lit(0).alias("blk"),
-        _as_double("embedding").alias("emb"),
-    ).withColumn("nrm", norm).select(
-        "vec_id",
-        "blk",
-        F.transform("emb", lambda x: x / F.col("nrm")).alias("ne"),
-    )
+    vecs = _blocked_unit_vectors(embeddings, block_on)
     # bounded control-plane collect: one row per block key
     big_blks = [
         r.blk
@@ -821,18 +874,7 @@ def kmeans_centroids(
     trained-vs-untrained comparisons isolate exactly what Lloyd's rounds
     add. Returns (cell_id, c_emb) with unit-norm centroids.
     """
-    from ..sources.catalog import ensure_parallelism
-
-    norm = F.sqrt(_fold_sum(F.transform("emb", lambda x: x * x)))
-    vecs = (
-        ensure_parallelism(embeddings.select("vec_id", "embedding"), key="vec_id")
-        .select("vec_id", _as_double("embedding").alias("emb"))
-        .withColumn("nrm", norm)
-        .select(
-            "vec_id", F.transform("emb", lambda x: x / F.col("nrm")).alias("ne")
-        )
-        .localCheckpoint(eager=True)
-    )
+    vecs = _unit_vectors(_normed(embeddings)).localCheckpoint(eager=True)
 
     cents = (
         vecs.orderBy("vec_id")
@@ -846,19 +888,9 @@ def kmeans_centroids(
         .localCheckpoint(eager=True)
     )
 
-    # hot path: corpus × centroids per round — unrolled codegen dot
-    # (vectors are pre-normalized, so the dot IS the cosine)
-    dot = dot_unrolled("ne", "c_emb", dim)
     for _ in range(iters):
-        assigned = (
-            vecs.join(F.broadcast(cents))
-            .groupBy("vec_id")
-            .agg(
-                F.max(F.struct(dot.alias("cos"), F.col("cell_id"))).alias("b"),
-                F.first("ne").alias("ne"),
-            )
-            .select(F.col("b.cell_id").alias("cell_id"), "ne")
-        )
+        # hot path: corpus × centroids per round (unrolled codegen dot)
+        assigned = _nearest_cell(vecs, cents, dim)
         by_dim = (
             assigned.select("cell_id", F.posexplode("ne").alias("d", "v"))
             .groupBy("cell_id", "d")
@@ -928,8 +960,6 @@ def semdedup(
     fixed rounds). Output: one row per vector with its cell, keep flag,
     and the similarity that evicted it (NULL when kept).
     """
-    from ..sources.catalog import ensure_parallelism
-
     if k is None:
         # SemDeDup's cluster count SCALES with the corpus (the paper
         # runs ~110k cells on LAION): k ~ n/100 caps expected cell size
@@ -939,24 +969,9 @@ def semdedup(
         # (and the sf0.01 fixtures) exactly as before.
         k = max(24, int(embeddings.count()) // 100)
     cents = kmeans_centroids(embeddings, k=k, iters=iters, dim=dim)
-    norm = F.sqrt(_fold_sum(F.transform("emb", lambda x: x * x)))
-    vecs = (
-        ensure_parallelism(embeddings.select("vec_id", "embedding"), key="vec_id")
-        .select("vec_id", _as_double("embedding").alias("emb"))
-        .withColumn("nrm", norm)
-        .select("vec_id", F.transform("emb", lambda x: x / F.col("nrm")).alias("ne"))
-    )
-    cdot = dot_unrolled("ne", "c_emb", dim)
-    assigned = (
-        vecs.join(F.broadcast(cents))
-        .groupBy("vec_id")
-        .agg(
-            F.max(F.struct(cdot.alias("cos"), F.col("cell_id"))).alias("b"),
-            F.first("ne").alias("ne"),
-        )
-        .select("vec_id", F.col("b.cell_id").alias("cell_id"), "ne")
-        .persist()
-    )
+    assigned = _nearest_cell(
+        _unit_vectors(_normed(embeddings)), cents, dim
+    ).persist()
     pdot = dot_unrolled("a.ne", "b.ne", dim)
     evict = (
         assigned.alias("a")
@@ -1487,8 +1502,9 @@ def ivf_pq_topk(
     vector stores actually deploy: IVF cell pruning bounds WHICH
     candidates each query touches (~nprobe/|cells| of the corpus), and
     PQ asymmetric distance bounds WHAT is read per candidate (m codes,
-    never the raw vector). Candidate generation reuses the IVF
-    assignment/probe stages (:func:`cosine_ivf_topk`); scoring uses the
+    never the raw vector). Candidate generation reuses the IVF stages of
+    :func:`cosine_ivf_topk` (:func:`_ivf_cells`, :func:`_ivf_assign`,
+    :func:`_ivf_probes`); scoring uses the
     TRAINED per-subspace PQ codebook (:func:`_pq_train_codebook`,
     integer micro-unit Lloyd's — VERDICT r5 item 2) with the same
     exact-BIGINT ADC sum as :func:`pq_topk`, so the composition stays
@@ -1512,68 +1528,21 @@ def ivf_pq_topk(
     which is the honest production trade; the ann_recall_metrics
     pattern measures it.
     """
-    from ..sources.catalog import ensure_parallelism
-
     sub = dim // m
-    vecs = ensure_parallelism(
-        embeddings.select("vec_id", "embedding"), key="vec_id"
-    ).select("vec_id", _as_double("embedding").alias("emb"))
 
     # --- IVF stage: cell assignment + query probes (cosine geometry) ---
-    norm = F.sqrt(_fold_sum(F.transform("emb", lambda x: x * x)))
-    nvecs = vecs.withColumn("nrm", norm)
-    cents = nvecs.where(F.col("vec_id") % centroid_mod == 0)
-    if max_cells is not None:  # fixed nlist budget — see ANN_MAX_CELLS
-        cents = cents.join(
-            F.broadcast(audit_qids(nvecs, centroid_mod, max_cells)),
-            "vec_id",
-        )
-    cents = cents.select(
-        F.col("vec_id").alias("cell_id"),
-        F.col("emb").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    ccos = dot_unrolled("c_emb", "emb", dim) / (
-        F.col("c_nrm") * F.col("nrm")
-    )
+    nvecs = _normed(embeddings)
+    cents = _ivf_cells(nvecs, centroid_mod, max_cells)
     # checkpoint: the assignment feeds THREE consumers (residual anchors,
     # residual subvectors, candidate compose) — without it each one
     # re-scans the corpus and re-runs the corpus×cells argmax. The frame
     # is 2 ints per vector, far cheaper to materialize than to recompute.
-    assigned = (
-        nvecs.join(F.broadcast(cents))
-        .groupBy("vec_id")
-        .agg(F.max(F.struct(ccos.alias("cos"), F.col("cell_id"))).alias("b"))
-        .select("vec_id", F.col("b.cell_id").alias("cell_id"))
-        .localCheckpoint(eager=True)
-    )
-    if qids is None:
-        qids = (
-            audit_qids(nvecs, query_mod, max_queries)
-            if max_queries is not None
-            else None
-        )
-    queries = nvecs.where(F.col("vec_id") % query_mod == 0)
-    if qids is not None:
-        queries = queries.join(F.broadcast(qids), "vec_id")
-    queries = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    qcos = dot_unrolled("c_emb", "q_emb", dim) / (
-        F.col("c_nrm") * F.col("q_nrm")
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("qcell_cos"), F.asc("cell_id")
-    )
-    probes = (
-        queries.join(F.broadcast(cents))
-        .select("query_id", "cell_id", qcos.alias("qcell_cos"))
-        .withColumn("prank", F.row_number().over(wq))
-        .where(F.col("prank") <= nprobe)
-        .select("query_id", "cell_id")
-    )
+    assigned = _ivf_assign(nvecs, cents, dim).localCheckpoint(eager=True)
+    if qids is None and max_queries is not None:
+        qids = audit_qids(nvecs, query_mod, max_queries)
+    probes = _ivf_probes(
+        _queries(nvecs, query_mod, qids), cents, nprobe, dim
+    ).select("query_id", "cell_id")
 
     # --- PQ stage: trained codebook, integer encode + ADC tables ---
     own_svecs = svecs is None
@@ -2295,7 +2264,7 @@ def dbscan_density_probe(
     in BIGINT arithmetic so Spark and the DuckDB oracle can never
     disagree on a float boundary.
     """
-    nv = _dbscan_vecs(embeddings, block_on, dim)
+    nv = _blocked_unit_vectors(embeddings, block_on)
     w = Window.partitionBy("blk").orderBy(
         F.md5(F.col("vec_id").cast("string").cast("binary")), "vec_id"
     )
@@ -2342,29 +2311,6 @@ def dbscan_density_probe(
             F.round(
                 F.when(F.col("ns") >= 2, est).otherwise(F.lit(0.0)), 6
             ).alias("est_avg_degree"),
-        )
-    )
-
-
-def _dbscan_vecs(
-    embeddings: DataFrame, block_on: str | None, dim: int
-) -> DataFrame:
-    """(vec_id, blk, unit vector) — the shared normalize-first frame of
-    the probe and both pair generators."""
-    norm = F.sqrt(_fold_sum(F.transform("emb", lambda x: x * x)))
-    return (
-        embeddings.select(
-            "vec_id",
-            F.col(block_on).alias("blk")
-            if block_on
-            else F.lit(0).alias("blk"),
-            _as_double("embedding").alias("emb"),
-        )
-        .withColumn("nrm", norm)
-        .select(
-            "vec_id",
-            "blk",
-            F.transform("emb", lambda x: x / F.col("nrm")).alias("ne"),
         )
     )
 
@@ -2443,7 +2389,7 @@ def dbscan_embeddings(
     """
     from . import dedup as dd
 
-    nv = _dbscan_vecs(embeddings, block_on, dim)
+    nv = _blocked_unit_vectors(embeddings, block_on)
     routed: list = []
     if route_degree is not None:
         # bounded control-plane collects: one row per block key

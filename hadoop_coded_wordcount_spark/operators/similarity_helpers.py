@@ -1,7 +1,9 @@
 """Packed-vector helpers shared across the similarity/ML-eval families —
 the unit-normalize-once + unrolled-codegen-kernel discipline documented in
 similarity.embedding_neardup_pairs, importable without pulling the whole
-similarity module into consumers."""
+similarity module into consumers. ``as_double_unit`` differs from
+similarity's own unit-vector frame (``similarity._unit_vectors``) on
+purpose: it drops zero vectors, where that frame keeps them as NaN."""
 
 from __future__ import annotations
 

@@ -2042,26 +2042,14 @@ def boilerplate_ngrams(
     DECIMAL — the usual cross-engine mean discipline.
     """
     from ..sources.catalog import ensure_parallelism
-    from .dedup import tokens_col
+    from .dedup import tokens_col, word_ngrams
 
     src = ensure_parallelism(
         documents.select("doc_id", "source", "text")
     ).select("doc_id", "source", tokens_col().alias("toks"))
-    # when() guard keeps the sequence expression total — predicates
-    # reorder freely and sequence(0, size-n) must never see size < n
-    # (the `shingled` InferFiltersFromGenerate hazard)
-    gram_arr = F.when(
-        F.size("toks") >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size("toks") - n),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at("toks", i + k + 1) for k in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     grams = (
         src.where(F.size("toks") >= n)
-        .select("doc_id", "source", F.explode(gram_arr).alias("gram"))
+        .select("doc_id", "source", F.explode(word_ngrams(n)).alias("gram"))
         .persist()
     )
     per_source = grams.select("source", "doc_id").distinct().groupBy(

@@ -82,7 +82,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.dedup import _MINHASH_P, minhash_params, tokens_col
+from ..operators.dedup import (
+    _MINHASH_P,
+    minhash_params,
+    tokens_col,
+    word_ngrams,
+)
 
 __all__ = [
     "ingest_features",
@@ -146,12 +151,11 @@ def ingest_features(
     bucket), one row per (doc, band). Works on a stream or a static
     frame — every expression is a per-row projection.
 
-    Value discipline: grams replicate ``operators/dedup.py:shingled``
-    (distinct word n-grams, docs with fewer than n tokens dropped, the
-    total-expression ``when`` guard against predicate reordering) minus
-    its ``ensure_parallelism`` repartition — ``df.rdd`` is illegal on a
-    stream, and a stream source arrives already split across tasks. The
-    signature is the md5 Carter–Wegman family of the ORACLED
+    Value discipline: grams are ``operators/dedup.py:word_ngrams``, made
+    distinct as in ``shingled`` (docs with fewer than n tokens dropped),
+    minus its ``ensure_parallelism`` repartition — ``df.rdd`` is illegal
+    on a stream, and a stream source arrives already split across tasks.
+    The signature is the md5 Carter–Wegman family of the ORACLED
     ``minhash_wide`` (bit-identity pinned in tests), and band buckets
     fold md5 of the band's minhashes — every stage DuckDB-replayable,
     so the batch twin (:func:`ingest_neardup_screen`) oracles exactly.
@@ -161,17 +165,7 @@ def ingest_features(
     with_toks = df.select("doc_id", toks.alias("toks")).where(
         F.size("toks") >= n
     )
-    grams = F.when(
-        F.size("toks") >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size("toks") - n),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at("toks", i + j + 1) for j in range(n)]
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = F.array_distinct(word_ngrams(n))
     hx = F.transform(
         "grams",
         lambda g: F.conv(F.substring(F.md5(g), 1, 14), 16, 10).cast("long")

@@ -404,3 +404,27 @@ def test_lsh_tuning_curve_nested_configs_monotone(docs):
         assert r.n_tp <= r.n_truth and r.n_tp <= r.n_candidates
         assert r.recall is None or r.recall <= 1.0
         assert r.precision is None or r.precision <= 1.0
+
+
+def test_word_ngrams_is_total_and_positional(spark):
+    """word_ngrams is total on its own (no size filter applied: a doc
+    shorter than n gives []) and positional: grams in token order with
+    repeats kept — boilerplate_ngrams counts positions, and shingled /
+    ingest_features take array_distinct of it themselves."""
+    toks = spark.createDataFrame(
+        [(0, []), (1, ["a", "b"]), (2, ["a", "b", "a", "b"])],
+        "id int, toks array<string>",
+    )
+    got = {
+        r.id: (r.g2, r.g3)
+        for r in toks.select(
+            "id",
+            dd.word_ngrams(2).alias("g2"),
+            dd.word_ngrams(3).alias("g3"),
+        ).collect()
+    }
+    assert got == {
+        0: ([], []),
+        1: (["a b"], []),
+        2: (["a b", "b a", "a b"], ["a b a", "b a b"]),
+    }

@@ -484,3 +484,43 @@ def test_dbscan_routed_branch_plan_hygiene(spark):
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_vector_kernels_stay_under_huge_method_limit(spark):
+    """Each generated method of the 64-dim unrolled vector kernels stays
+    under spark.sql.codegen.hugeMethodLimit: past it Spark silently
+    drops whole-stage codegen for the subtree and evaluates the
+    kernel interpreted, with unchanged results. (semdedup_keep is not
+    covered: its kernel sits under a persisted InMemoryTableScan, which
+    codegenStringSeq does not enter.)"""
+    limit = int(spark.conf.get("spark.sql.codegen.hugeMethodLimit"))
+    debug = getattr(spark._jvm.org.apache.spark.sql.execution.debug, "package")
+    for q in (
+        "similarity_topk",
+        "similarity_ivf_topk",
+        "ivf_pq_topk",
+        "embedding_neardup_pairs",
+    ):
+        qe = QUERIES[q](spark, SF001)._jdf.queryExecution()
+        qe.toRdd().count()  # final AQE plan, with its codegen stages
+        seq = debug.codegenStringSeq(qe.executedPlan())
+        sizes = [
+            seq.apply(i)._3().maxMethodCodeSize() for i in range(seq.size())
+        ]
+        assert sizes, q
+        assert max(sizes) < limit, (q, max(sizes), limit)
+
+
+def test_sessionization_is_one_user_exchange(spark):
+    """Sessionization (relational._sessions) and everything keyed on
+    (user_id, session_seq) after it ride ONE hash(user_id) exchange."""
+    import re
+
+    for q in ("sessionize_events", "session_bounce_rate"):
+        df = QUERIES[q](spark, SF001)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+        exchanges = re.findall(r"Exchange (\S+)", final)
+        assert len(exchanges) == 1, (q, exchanges)
+        assert exchanges[0].startswith("hashpartitioning(user_id"), (q, exchanges)
