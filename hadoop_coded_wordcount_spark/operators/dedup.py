@@ -665,32 +665,23 @@ def connected_components_star(
 
     Both steps preserve the big>small invariant and the component
     partition; at fixpoint L is exactly {(node, component_min)} for every
-    non-root node. Convergence is detected by an (edge-count, hash-sum)
-    signature — two driver-side scalars per round, no data collect — and
-    non-convergence within ``max_iter`` raises rather than returning a
-    partially-contracted (wrong) labeling.
+    non-root node. Each alternation is one :func:`~.graph._fixpoint`
+    round, so the checkpoints, the (row count, hash sum) convergence
+    signature and the raise on non-convergence within ``max_iter``
+    (never a partially-contracted, wrong labeling) are that helper's.
 
     Scale: every round is two self-contained (groupBy min + join)
     shuffles over the CURRENT edge list, which only shrinks; rounds are
     logarithmic in component size, so a 100-long chain that costs
-    label-propagation 100 rounds closes in ~5. ``localCheckpoint`` per
-    round bounds plan growth (use ``checkpoint()`` on a real cluster).
+    label-propagation 100 rounds closes in ~5.
 
     Input: (doc_a, doc_b) pairs, any orientation, self-loops ignored.
     Output: (doc_id, cluster_id) for every node in an edge,
     cluster_id = min doc_id of the component.
     """
-    L = (
-        edges.select(
-            F.greatest("doc_a", "doc_b").alias("a"),
-            F.least("doc_a", "doc_b").alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sig = None
-    for _ in range(max_iter):
+    from .graph import _fixpoint
+
+    def alternation(L: DataFrame) -> DataFrame:
         # -- large-star: full symmetric neighborhood ---------------------
         sym = L.select("a", "b").union(
             L.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -710,10 +701,7 @@ def connected_components_star(
         sm_min = big.groupBy(F.col("a").alias("u")).agg(
             F.min("b").alias("m")
         )
-        # ONE lazy checkpoint per alternation (not one per star): the
-        # convergence-signature job below materializes it, so each round
-        # costs a single job and the plan still resets to O(1) depth.
-        L = (
+        return (
             big.join(sm_min, big["a"] == sm_min["u"])
             .select(
                 F.col("b").alias("a"), F.col("m").alias("b")
@@ -721,26 +709,17 @@ def connected_components_star(
             .union(sm_min.select(F.col("u").alias("a"), F.col("m").alias("b")))
             .where(F.col("a") != F.col("b"))
             .distinct()
-            .localCheckpoint(eager=False)
         )
-        new_sig = L.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal(38,0) accumulator: a sum of int64 hashes overflows
-            # long under ANSI; decimal is exact and never overflows here.
-            F.coalesce(
-                F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-        ).collect()[0]
-        new_sig = (new_sig["n"], new_sig["h"])
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "alternation rounds"
+
+    start = (
+        edges.select(
+            F.greatest("doc_a", "doc_b").alias("a"),
+            F.least("doc_a", "doc_b").alias("b"),
         )
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+    )
+    L, _ = _fixpoint(start, alternation, max_iter, "connected_components_star")
     roots = L.select(F.col("b").alias("doc_id")).distinct()
     return (
         L.select(F.col("a").alias("doc_id"), F.col("b").alias("cluster_id"))

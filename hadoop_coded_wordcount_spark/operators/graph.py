@@ -472,41 +472,43 @@ def triangle_count(edges: DataFrame, eager: bool = True) -> DataFrame:
     return finish_cached(out, oriented)
 
 
-def _peel(
-    edges: DataFrame, step, max_rounds: int, name: str
+def _fixpoint(
+    state: DataFrame, step, max_rounds: int, name: str
 ) -> tuple[DataFrame, int]:
-    """Peel an edge list (src, dst) to its fixpoint: apply ``step`` (the
-    current edges → the edges that survive one peel round) until the
-    edge count stops changing. Returns (fixpoint edges, edge count).
+    """Apply ``step`` (the current state → the next) until the state stops
+    changing. Returns (fixpoint frame, its row count).
 
-    Checkpoint discipline: the input is checkpointed eagerly once; each
-    round's result is a LAZY checkpoint fused with the convergence
-    ``count()`` (optimization r13) — the full count materializes the
-    checkpoint in the same job the eager flag used to spend separately,
-    one barrier per round instead of two (a ``limit(1)`` probe would pin
-    one partition and leave lineage uncut). Convergence costs one scalar
-    count per round. A peel is confluent (the fixpoint is
-    order-independent), so the result is deterministic under any
-    execution; rounds are worst-case O(peel depth) — a chain peels one
-    layer per round — so hitting ``max_rounds`` RAISES rather than
-    returning a non-fixpoint.
+    Checkpoint discipline: the start is checkpointed eagerly once; each
+    round's result is a LAZY checkpoint pinned by ONE full aggregate, the
+    round's signature ``(count, Σ xxhash64(*cols))`` collected to the
+    driver — the aggregate materializes the checkpoint in the same job,
+    one barrier per round (a ``limit(1)`` probe would pin one partition
+    and leave lineage uncut). The hash sum accumulates in decimal(38,0):
+    a sum of int64 hashes overflows long under ANSI, decimal is exact.
+
+    The loop stops on the first round whose signature equals the previous
+    round's: a step that changes rows without changing their count still
+    runs on. There is no start probe, so it runs at least two rounds.
+    A fixpoint the step does not reach within ``max_rounds`` RAISES
+    rather than returning a non-fixpoint state.
     """
-    cur = edges.select("src", "dst").localCheckpoint(eager=True)
-    prev_edges = cur.count()
-    converged = prev_edges == 0
+    cur, sig = state.localCheckpoint(eager=True), None
     for _ in range(max_rounds):
-        if converged:
-            break
-        nxt = step(cur).localCheckpoint(eager=False)
-        n = nxt.count()
-        converged = n == prev_edges
-        cur, prev_edges = nxt, n
-    if not converged:
-        raise RuntimeError(
-            f"{name}: not converged after {max_rounds} rounds "
-            f"({prev_edges} edges remain)"
-        )
-    return cur, prev_edges
+        cur = step(cur).localCheckpoint(eager=False)
+        new_sig = cur.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(
+                F.sum(F.xxhash64(*cur.columns).cast("decimal(38,0)")),
+                F.lit(0).cast("decimal(38,0)"),
+            ).alias("h"),
+        ).collect()[0]
+        if new_sig == sig:
+            return cur, new_sig["n"]
+        sig = new_sig
+    raise RuntimeError(
+        f"{name}: not converged after {max_rounds} rounds "
+        f"({sig['n'] if sig else cur.count()} rows remain)"
+    )
 
 
 def _common_neighbors(sym: DataFrame) -> DataFrame:
@@ -529,11 +531,13 @@ def k_core(edges: DataFrame, k: int = 2, max_rounds: int = 40) -> DataFrame:
     standard subgraph-density primitive (spam rings, community nuclei,
     robustness).
 
-    Scale shape: each :func:`_peel` round is one degree aggregation
+    Scale shape: each :func:`_fixpoint` round is one degree aggregation
     (map-side combined) plus two semi-joins of the edge list against
     the alive-node set; AQE picks broadcast vs shuffle for the alive
-    side as it shrinks. Checkpoints, convergence and the ``max_rounds``
-    raise are the helper's.
+    side as it shrinks. A peel is confluent (the fixpoint is
+    order-independent) and takes O(peel depth) rounds — a chain peels
+    one layer per round from each end. Checkpoints, convergence and the
+    ``max_rounds`` raise are :func:`_fixpoint`'s.
     """
 
     def degrees(cur: DataFrame, name: str) -> DataFrame:
@@ -550,7 +554,7 @@ def k_core(edges: DataFrame, k: int = 2, max_rounds: int = 40) -> DataFrame:
             alive.select(F.col("v").alias("src")), "src", "left_semi"
         ).join(alive.select(F.col("v").alias("dst")), "dst", "left_semi")
 
-    cur, _ = _peel(edges, step, max_rounds, "k_core")
+    cur, _ = _fixpoint(edges.select("src", "dst"), step, max_rounds, "k_core")
     return degrees(cur, "core_degree")
 
 
@@ -792,40 +796,24 @@ def hits_ranking(
     hubs = edges.select("c").distinct().select(
         "c", F.lit(PR_SCALE).alias("hub")
     )
+
+    def half_round(scores: DataFrame, on: str, score: str, by: str, out: str):
+        # sum one side's scores onto the other side ``by``, max-normalized
+        raw = edges.join(scores, on).groupBy(by).agg(F.sum(score).alias("x"))
+        mx = raw.agg(F.max("x").alias("mx"))
+        return (
+            raw.join(F.broadcast(mx))
+            .select(
+                by,
+                F.expr(f"x div greatest(mx div {PR_SCALE}, 1)").alias(out),
+            )
+            .localCheckpoint(eager=False)
+        )
+
     auths = None
     for _ in range(n_rounds):
-        raw_auth = (
-            edges.join(hubs, "c")
-            .groupBy("s")
-            .agg(F.sum("hub").alias("a"))
-        )
-        amax = raw_auth.agg(F.max("a").alias("amax"))
-        auths = (
-            raw_auth.join(F.broadcast(amax))
-            .select(
-                "s",
-                F.expr(f"a div greatest(amax div {PR_SCALE}, 1)").alias(
-                    "auth"
-                ),
-            )
-            .localCheckpoint(eager=False)
-        )
-        raw_hub = (
-            edges.join(auths, "s")
-            .groupBy("c")
-            .agg(F.sum("auth").alias("h"))
-        )
-        hmax = raw_hub.agg(F.max("h").alias("hmax"))
-        hubs = (
-            raw_hub.join(F.broadcast(hmax))
-            .select(
-                "c",
-                F.expr(f"h div greatest(hmax div {PR_SCALE}, 1)").alias(
-                    "hub"
-                ),
-            )
-            .localCheckpoint(eager=False)
-        )
+        auths = half_round(hubs, "c", "hub", "s", "auth")
+        hubs = half_round(auths, "s", "auth", "c", "hub")
     return (
         auths.select(F.col("s").alias("s_suppkey"), F.col("auth").alias("auth_scaled"))
         .orderBy(F.desc("auth_scaled"), "s_suppkey")
@@ -1068,11 +1056,11 @@ def k_truss(edges: DataFrame, k: int = 3, max_rounds: int = 8) -> DataFrame:
     don't). Returns the surviving edges with their in-truss support;
     at k ≤ 2 every edge survives, triangle-free ones with support 0.
 
-    Each :func:`_peel` round recomputes support with ONE wedge join on
-    the symmetrized edge list (:func:`_common_neighbors`, bounded by the
-    kNN graph's degree cap) and filters; one more support pass over the
-    fixpoint edge set gives the output. Checkpoints, convergence and
-    the ``max_rounds`` raise are the helper's.
+    Each :func:`_fixpoint` round recomputes support with ONE wedge join
+    on the symmetrized edge list (:func:`_common_neighbors`, bounded by
+    the kNN graph's degree cap) and filters; one more support pass over
+    the fixpoint edge set gives the output. Checkpoints, convergence and
+    the ``max_rounds`` raise are :func:`_fixpoint`'s.
     """
 
     def support(cur: DataFrame) -> DataFrame:
@@ -1087,8 +1075,8 @@ def k_truss(edges: DataFrame, k: int = 3, max_rounds: int = 8) -> DataFrame:
             "left",
         ).select("src", "dst", F.coalesce("cn", F.lit(0)).alias("support"))
 
-    cur, n_edges = _peel(
-        edges,
+    cur, n_edges = _fixpoint(
+        edges.select("src", "dst"),
         lambda cur: support(cur)
         .where(F.col("support") >= k - 2)
         .select("src", "dst"),
@@ -1286,16 +1274,19 @@ def spectral_bisection(edges: DataFrame, rounds: int = 6) -> DataFrame:
     pca_power_iteration's, on the graph instead of the covariance:
     v lives in integer micro-units, each iterate
     w_i = (c−deg_i)·v_i + Σ_{j∼i} v_j is an exact BIGINT product-sum
-    over EDGES, the mean and the pivot normalization are one rounded
-    division each (Spark/DuckDB ROUND halves away from zero on the
-    same doubles), and sign is pinned by the pivot component — so the
-    DuckDB oracle replays every round bit for bit.
+    over EDGES, the mean is one rounded division (Spark/DuckDB ROUND
+    halves away from zero on the same doubles), and the normalization
+    is :func:`~.similarity._pivot_scaled`, whose pivot also pins the
+    sign — so the DuckDB oracle replays every round bit for bit.
 
     Scale: per round ONE edge-keyed join/agg (the pagerank shuffle
-    shape) plus two 1-row broadcast scalars; `localCheckpoint` caps
-    plan depth at one round (the pagerank/pca cadence). Edge volume is
-    k·|V| on the kNN graph — linear in nodes at any corpus size.
+    shape) plus two 1-row broadcast scalars; the helper's lazy
+    `localCheckpoint` caps plan depth at one round (the pagerank/pca
+    cadence). Edge volume is k·|V| on the kNN graph — linear in nodes
+    at any corpus size.
     """
+    from .similarity import _pivot_scaled
+
     e = edges.localCheckpoint(eager=True)
     sym = e.select(
         F.col("src").alias("node"), F.col("dst").alias("nbr")
@@ -1340,27 +1331,11 @@ def spectral_bisection(edges: DataFrame, rounds: int = 6) -> DataFrame:
             .cast("long")
             .alias("m")
         )
-        wc = w.crossJoin(F.broadcast(m)).select(
-            "node", (F.col("w") - F.col("m")).alias("w")
-        )
-        pivot = (
-            wc.orderBy(F.abs(F.col("w")).desc(), F.asc("node"))
-            .limit(1)
-            .select(F.col("w").alias("wp"))
-        )
-        v = (
-            wc.crossJoin(F.broadcast(pivot))
-            .select(
-                "node",
-                F.round(
-                    F.col("w").cast("double")
-                    / F.col("wp").cast("double")
-                    * F.lit(1000000.0)
-                )
-                .cast("long")
-                .alias("v"),
-            )
-            .localCheckpoint(eager=False)
+        v = _pivot_scaled(
+            w.crossJoin(F.broadcast(m)).select(
+                "node", (F.col("w") - F.col("m")).alias("w")
+            ),
+            "node",
         )
     return v.select(
         F.col("node").alias("suppkey"),

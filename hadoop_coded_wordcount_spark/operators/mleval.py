@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from .relational import half_up, ols_fit
 from .similarity_helpers import as_double_unit, dot_unrolled, sqdist_unrolled
 
 __all__ = [
@@ -356,22 +357,6 @@ def subsample_ci(orders: DataFrame, n_replicates: int = 64) -> DataFrame:
     )
 
 
-def _fit_cols(n, sx, sy, sxy, sxx):
-    """Closed-form OLS (slope, intercept), each rounded once to 6 dp —
-    the shared fit shape of the CV / conformal family (same moments
-    discipline as regression_by_group)."""
-    nd = n.cast("double")
-    slope = F.round(
-        (nd * sxy.cast("double") - sx.cast("double") * sy.cast("double"))
-        / (nd * sxx.cast("double") - sx.cast("double") * sx.cast("double")),
-        6,
-    )
-    intercept = F.round(
-        (sy.cast("double") - slope * sx.cast("double")) / nd, 6
-    )
-    return slope, intercept
-
-
 def cv_fold_metrics(lineitem: DataFrame, k: int = 5) -> DataFrame:
     """k-fold cross-validated error of the price~quantity OLS fit — the
     evaluation loop every in-engine model above (target encoding, NB,
@@ -421,7 +406,7 @@ def cv_fold_metrics(lineitem: DataFrame, k: int = 5) -> DataFrame:
         F.sum("sxx").alias("tsxx"),
     )
     train = per_fold.crossJoin(F.broadcast(tot))
-    slope, intercept = _fit_cols(
+    slope, intercept = ols_fit(
         F.col("tn") - F.col("n"),
         F.col("tsx") - F.col("sx"),
         F.col("tsy") - F.col("sy"),
@@ -518,7 +503,7 @@ def conformal_interval(lineitem: DataFrame, q_pct: float = 0.9) -> DataFrame:
         F.sum("xy").alias("sxy"),
         F.sum("xx").alias("sxx"),
     )
-    slope, intercept = _fit_cols(
+    slope, intercept = ols_fit(
         F.col("n"), F.col("sx"), F.col("sy"), F.col("sxy"), F.col("sxx")
     )
     models = m.select(
@@ -1522,10 +1507,6 @@ def cox_ph_binary(
     """
     import math
 
-    def _cround(x: float) -> int:
-        f = math.floor(x)
-        return int(f) + (1 if x - f >= 0.5 else 0)
-
     spark = customer.sparkSession
     per_cust = orders.groupBy("o_custkey").agg(
         F.min(F.to_date("o_orderdate")).alias("first_d"),
@@ -1613,15 +1594,15 @@ def cox_ph_binary(
         sinfo_u = 0
         for r in grid:
             p = (r.n1 * eb) / (r.n1 * eb + r.n0)
-            sdp_u += _cround(r.d * p * 1e6)
-            sinfo_u += _cround((r.d * p) * (1.0 - p) * 1e6)
+            sdp_u += half_up(r.d * p * 1e6)
+            sinfo_u += half_up((r.d * p) * (1.0 - p) * 1e6)
         if sinfo_u == 0:
             break
-        b_u = _cround(
+        b_u = half_up(
             (b_u / 1e6 + (s1_tot - sdp_u / 1e6) / (sinfo_u / 1e6)) * 1e6
         )
     beta = b_u / 1e6
-    hr_u = _cround(math.exp(beta) * 1e6)
+    hr_u = half_up(math.exp(beta) * 1e6)
     return spark.createDataFrame(
         [(beta, hr_u / 1e6, d_tot, s1_tot, tot1, tot0)],
         "beta double, hazard_ratio double, n_events bigint, "
@@ -1875,18 +1856,12 @@ def huber_irls(lineitem: DataFrame, rounds: int = 3) -> DataFrame:
         F.sum(F.col("x") * F.col("y")).alias("sxy"),
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
     )
-    n = F.col("n")
-    sxd, syd = F.col("sx").cast("double"), F.col("sy").cast("double")
-    sxyd, sxxd = F.col("sxy").cast("double"), F.col("sxx").cast("double")
-    slope0 = (n * sxyd - sxd * syd) / (n * sxxd - sxd * sxd)
     # each round's params are a 1-row frame feeding the NEXT round's
     # weights; localCheckpoint truncates the chained lineage so round i
     # re-reads one cached scan, not i re-derivations (the
     # pca_power_iteration cadence)
-    p = agg0.select(
-        F.round(slope0, 6).alias("b"),
-        F.round((syd - F.round(slope0, 6) * sxd) / n, 6).alias("a"),
-    ).localCheckpoint(eager=True)
+    b0, a0 = ols_fit(*[F.col(c) for c in ("n", "sx", "sy", "sxy", "sxx")])
+    p = agg0.select(b0.alias("b"), a0.alias("a")).localCheckpoint(eager=True)
     xd, yd = F.col("x").cast("double"), F.col("y").cast("double")
     absr = F.abs(yd - (F.col("a") + F.col("b") * xd))
     sc = (
@@ -1942,17 +1917,12 @@ def huber_irls(lineitem: DataFrame, rounds: int = 3) -> DataFrame:
                 F.min("delta").alias("delta"),
             )
         )
-        swd = F.col("sw").cast("double")
-        swxd, swyd = F.col("swx").cast("double"), F.col("swy").cast(
-            "double"
+        bi, ai = ols_fit(
+            *[F.col(c) for c in ("sw", "swx", "swy", "swxy", "swxx")]
         )
-        swxyd, swxxd = F.col("swxy").cast("double"), F.col("swxx").cast(
-            "double"
-        )
-        bi = (swd * swxyd - swxd * swyd) / (swd * swxxd - swxd * swxd)
         fitted = ws.select(
-            F.round(bi, 6).alias("b"),
-            F.round((swyd - F.round(bi, 6) * swxd) / swd, 6).alias("a"),
+            bi.alias("b"),
+            ai.alias("a"),
             "n_down",
             "s0",
             "delta",

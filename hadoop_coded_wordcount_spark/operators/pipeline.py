@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from .relational import half_up
 from .textstats import bigram_pairs, quality_col, tokens_col
 
 __all__ = [
@@ -1032,16 +1033,10 @@ def coverage_greedy_selection(
     fully covered drop out of the gain aggregate by construction, so a
     saturated corpus ends the loop early on both engines.
 
-    coverage_pct rounds via the markov ``_cround`` micro-unit
-    discipline (== Spark/DuckDB ROUND half-up on these values).
+    coverage_pct rounds via the micro-unit :func:`~.relational.half_up`
+    (== Spark/DuckDB ROUND on these non-negative values).
     """
-    import math
-
     from .dedup import shingled
-
-    def _cround(x: float) -> int:
-        f = math.floor(x)
-        return int(f) + (1 if x - f >= 0.5 else 0)
 
     spark = documents.sparkSession
     sh = shingled(documents, n=n).select("doc_id", "grams").persist()
@@ -1091,7 +1086,7 @@ def coverage_greedy_selection(
                 w.doc_id,
                 w.gain,
                 len(covered),
-                _cround(len(covered) * 1000000.0 / total) / 1e6,
+                half_up(len(covered) * 1000000.0 / total) / 1e6,
             )
         )
     sh.unpersist()
@@ -1137,10 +1132,6 @@ def doremi_weights(
     from ..sources.catalog import ensure_parallelism
     from .dedup import tokens_col
 
-    def _cround(x: float) -> int:
-        f = math.floor(x)
-        return int(f) + (1 if x - f >= 0.5 else 0)
-
     spark = documents.sparkSession
     ex = (
         ensure_parallelism(documents.select("source", "text"))
@@ -1185,16 +1176,16 @@ def doremi_weights(
     )
     ex.unpersist()
     k = len(srcs)
-    l_u = {r.source: _cround(r.ell * 1e6) for r in srcs}
+    l_u = {r.source: half_up(r.ell * 1e6) for r in srcs}
     n_tok = {r.source: r.n_tokens for r in srcs}
-    w_u = {s: _cround(1e6 / k) for s in l_u}
+    w_u = {s: half_up(1e6 / k) for s in l_u}
     for _ in range(iters):
         m_u = sum((w_u[s] * l_u[s] + 500000) // 1000000 for s in w_u)
         e = {s: math.exp(eta * ((l_u[s] - m_u) / 1e6)) for s in w_u}
-        u_u = {s: _cround((w_u[s] / 1e6) * e[s] * 1e6) for s in w_u}
+        u_u = {s: half_up((w_u[s] / 1e6) * e[s] * 1e6) for s in w_u}
         z_u = sum(u_u.values())
         w_u = {
-            s: _cround(
+            s: half_up(
                 (
                     (1.0 - smoothing) * ((u_u[s] / 1e6) / (z_u / 1e6))
                     + smoothing / k

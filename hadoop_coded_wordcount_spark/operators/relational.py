@@ -26,6 +26,8 @@ legally differ in the last ulp.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
@@ -2553,6 +2555,29 @@ def mad_stats(lineitem: DataFrame) -> DataFrame:
     )
 
 
+def ols_slope(
+    n: Column, sx: Column, sy: Column, sxy: Column, sxx: Column
+) -> Column:
+    """Closed-form least-squares slope from moment sums, unrounded:
+    (n·Σxy − Σx·Σy) / (n·Σx² − (Σx)²), every input cast to double — one
+    fixed IEEE expression over exact (decimal or integer) sums, so any
+    engine evaluating the same parenthesization agrees bit for bit."""
+    n, sx, sy, sxy, sxx = (c.cast("double") for c in (n, sx, sy, sxy, sxx))
+    return (n * sxy - sx * sy) / (n * sxx - sx * sx)
+
+
+def ols_fit(
+    n: Column, sx: Column, sy: Column, sxy: Column, sxx: Column
+) -> tuple[Column, Column]:
+    """(slope, intercept) of the closed-form fit, each rounded to 6 dp;
+    the intercept (Σy − slope·Σx) / n uses the ROUNDED slope."""
+    slope = F.round(ols_slope(n, sx, sy, sxy, sxx), 6)
+    intercept = F.round(
+        (sy.cast("double") - slope * sx.cast("double")) / n.cast("double"), 6
+    )
+    return slope, intercept
+
+
 def regression_by_group(lineitem: DataFrame) -> DataFrame:
     """Per-group simple linear regression (price ~ quantity) from exact
     decimal moments — "aggregate-only ML": slope and intercept need only
@@ -2572,15 +2597,17 @@ def regression_by_group(lineitem: DataFrame) -> DataFrame:
         F.sum(x * y).alias("sxy"),
         F.sum(x * x).alias("sxx"),
     )
-    n = F.col("n").cast("double")
-    sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
-    sxy, sxx = F.col("sxy").cast("double"), F.col("sxx").cast("double")
-    slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
+    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
+    slope = ols_slope(n, sx, sy, F.col("sxy"), F.col("sxx"))
     return agg.select(
         "l_returnflag",
         "n",
         F.round(slope, 6).alias("slope"),
-        F.round((sy - slope * sx) / n, 6).alias("intercept"),
+        F.round(
+            (sy.cast("double") - slope * sx.cast("double"))
+            / n.cast("double"),
+            6,
+        ).alias("intercept"),
     )
 
 
@@ -5751,8 +5778,6 @@ def sprt_conversion(events: DataFrame) -> DataFrame:
     and at scale the two-phase range-partition running-sum route
     documented on ``watermark_lateness`` applies unchanged.
     """
-    import math
-
     a_inc = round(math.log(0.08 / 0.05), 6)
     b_inc = round(math.log(0.92 / 0.95), 6)
     bound = round(math.log(19.0), 6)
@@ -6196,14 +6221,7 @@ def theil_sen_monthly(orders: DataFrame) -> DataFrame:
     ols = m.select(
         "n",
         F.round(
-            (
-                F.col("n").cast("double") * F.col("sxy").cast("double")
-                - F.col("sx").cast("double") * F.col("sy").cast("double")
-            )
-            / (
-                F.col("n").cast("double") * F.col("sxx").cast("double")
-                - F.col("sx").cast("double") * F.col("sx").cast("double")
-            ),
+            ols_slope(*[F.col(c) for c in ("n", "sx", "sy", "sxy", "sxx")]),
             6,
         ).alias("ols_slope"),
     )
@@ -6977,14 +6995,7 @@ def retention_decay_fit(orders: DataFrame) -> DataFrame:
         F.sum((xd * F.col("lnr")).cast("decimal(38,12)")).alias("sxy"),
         F.sum((xd * xd).cast("decimal(38,12)")).alias("sxx"),
     )
-    nd = F.col("n").cast("double")
-    slope = (
-        nd * F.col("sxy").cast("double")
-        - F.col("sx").cast("double") * F.col("sy").cast("double")
-    ) / (
-        nd * F.col("sxx").cast("double")
-        - F.col("sx").cast("double") * F.col("sx").cast("double")
-    )
+    slope = ols_slope(*[F.col(c) for c in ("n", "sx", "sy", "sxy", "sxx")])
     return m.select(
         F.col("n").alias("n_points"),
         F.round(slope, 6).alias("decay_rate"),
@@ -6993,7 +7004,7 @@ def retention_decay_fit(orders: DataFrame) -> DataFrame:
                 F.col("sy").cast("double")
                 - slope * F.col("sx").cast("double")
             )
-            / nd,
+            / F.col("n").cast("double"),
             6,
         ).alias("intercept"),
         F.round(F.lit(0.693147) / -slope, 6).alias("half_life_months"),
@@ -7547,22 +7558,8 @@ def regression_discontinuity(
             ).cast("decimal(38,12)")
         ).alias("sxx"),
     )
-    nd = F.col("n").cast("double")
-    slope = F.round(
-        (
-            nd * F.col("sxy").cast("double")
-            - F.col("sx").cast("double") * F.col("sy").cast("double")
-        )
-        / (
-            nd * F.col("sxx").cast("double")
-            - F.col("sx").cast("double") * F.col("sx").cast("double")
-        ),
-        6,
-    )
-    intercept = F.round(
-        (F.col("sy").cast("double") - slope * F.col("sx").cast("double"))
-        / nd,
-        6,
+    slope, intercept = ols_fit(
+        *[F.col(c) for c in ("n", "sx", "sy", "sxy", "sxx")]
     )
     sides = m.select(
         "right_side", "n", slope.alias("slope"), intercept.alias("intercept")
@@ -9741,6 +9738,16 @@ def mann_kendall_trend(orders: DataFrame) -> DataFrame:
     )
 
 
+def half_up(x: float) -> int:
+    """Round a driver-side double to the nearest int, ties toward +∞
+    (floor, plus one when the fraction is ≥ 0.5). For x ≥ 0 this equals
+    Spark's and DuckDB's ``ROUND`` (ties away from zero), so a driver-side
+    fixed point replays in the oracle's SQL; for a negative tie the two
+    differ (−2.5 → −2 here, −3 in SQL)."""
+    f = math.floor(x)
+    return int(f) + (1 if x - f >= 0.5 else 0)
+
+
 def markov_removal_attribution(
     events: DataFrame, gap_minutes: int = 30, iters: int = 12
 ) -> DataFrame:
@@ -9829,14 +9836,8 @@ def markov_removal_attribution(
     # latency, ~16.7 s at sf0.1 for a few-hundred-row state). The
     # arithmetic is bit-identical to the replay: exact-int message sums
     # (< 2^53, so the float conversion is exact), ONE IEEE division per
-    # (variant, state) per round, ties-away rounding back to micro-unit
-    # BIGINT (C-round semantics == Spark/DuckDB ROUND on these values).
-    import math
-
-    def _cround(x: float) -> int:
-        f = math.floor(x)
-        return int(f) + (1 if x - f >= 0.5 else 0)
-
+    # (variant, state) per round, :func:`half_up` back to micro-unit
+    # BIGINT (== Spark/DuckDB ROUND on these non-negative values).
     rows = counts.collect()
     chans = sorted(
         c
@@ -9859,7 +9860,7 @@ def markov_removal_attribution(
         v = {s: 0 for s in outc}
         for _ in range(iters):
             v = {
-                s: _cround(
+                s: half_up(
                     (
                         sum(c * v.get(d, 0) for d, c in ted.get(s, ()))
                         + cm.get(s, 0) * 1000000
@@ -10374,8 +10375,6 @@ def pacf_hourly(events: DataFrame, max_lag: int = 6) -> DataFrame:
     double division of exact micro differences, so the unrolled DuckDB
     replay matches bit for bit.
     """
-    import math
-
     def away_pico(p: int) -> int:
         return (abs(p) + 500000) // 1000000 * (1 if p >= 0 else -1)
 
@@ -10475,8 +10474,6 @@ def gumbel_extremes(events: DataFrame) -> DataFrame:
     Scale: (type, day, hour) partial agg → (type, day) max → type-row
     moments. Grid-bounded everywhere.
     """
-    import math
-
     hourly = events.groupBy(
         "event_type",
         F.to_date("ts").alias("day"),
@@ -10714,8 +10711,6 @@ def periodogram_trig_table() -> list:
     Spark plan (F.lit) and the DuckDB oracle (repr()), so neither engine
     ever calls its own trig library on the hot path and the two
     expression trees see bit-identical constants."""
-    import math
-
     rows = []
     for p in PERIODOGRAM_PERIODS:
         for r in range(p):
@@ -11304,13 +11299,8 @@ def hurst_hourly(events: DataFrame) -> DataFrame:
         F.sum("lxy").alias("sxy"),
         F.sum("lxx").alias("sxx"),
     ).where(F.col("k") >= 3)
-    kd = F.col("k").cast("double")
-    sxd = F.col("sx").cast("double")
-    syd = F.col("sy").cast("double")
-    sxyd = F.col("sxy").cast("double")
-    sxxd = F.col("sxx").cast("double")
     slope = F.round(
-        (kd * sxyd - sxd * syd) / (kd * sxxd - sxd * sxd), 6
+        ols_slope(*[F.col(c) for c in ("k", "sx", "sy", "sxy", "sxx")]), 6
     )
     return reg.select(
         "event_type",

@@ -772,31 +772,27 @@ def _neardup_cells(
         .select("blk", "cell_id", F.col("p").alias("cp"))
     )
     pd2 = sqdist_unrolled("p", "cp", proj_dim, None)
-    for _ in range(cell_iters):
-        asg = (
+
+    def assign(cents: DataFrame, keep: str) -> DataFrame:
+        # each vector's nearest projected cell (min-struct tie-break on
+        # cell_id), carrying one of its own columns along
+        return (
             pvecs.join(F.broadcast(cents), "blk")
             .groupBy("vec_id", "blk")
             .agg(
                 F.min(F.struct(pd2.alias("d"), F.col("cell_id"))).alias("b"),
-                F.first("p").alias("p"),
+                F.first(keep).alias(keep),
             )
-            .select("blk", F.col("b.cell_id").alias("cell_id"), "p")
+            .select("vec_id", "blk", F.col("b.cell_id").alias("cell_id"), keep)
         )
-        cents = asg.groupBy("blk", "cell_id").agg(
+
+    for _ in range(cell_iters):
+        cents = assign(cents, "p").groupBy("blk", "cell_id").agg(
             F.array(*[F.avg(F.col("p")[i]) for i in range(proj_dim)]).alias(
                 "cp"
             )
         )
-    assigned = (
-        pvecs.join(F.broadcast(cents), "blk")
-        .groupBy("vec_id", "blk")
-        .agg(
-            F.min(F.struct(pd2.alias("d"), F.col("cell_id"))).alias("b"),
-            F.first("ne").alias("ne"),
-        )
-        .select("vec_id", "blk", F.col("b.cell_id").alias("cell_id"), "ne")
-        .localCheckpoint(eager=True)
-    )
+    assigned = assign(cents, "ne").localCheckpoint(eager=True)
 
     # ONE aggregate pass: per-cell coordinate bounding box
     boxes = assigned.groupBy("blk", "cell_id").agg(
@@ -1213,6 +1209,51 @@ def _pq_train_sample(svecs: DataFrame, train_sample: int) -> DataFrame:
     ).localCheckpoint(eager=True)
 
 
+def _nearest_code(
+    svecs: DataFrame, cb: DataFrame, sub: int, *keep: str
+) -> DataFrame:
+    """Each (vec_id, j) subvector's nearest codeword: argmin of the EXACT
+    BIGINT L2² against the broadcast codebook ``cb`` (j, code_id, cv),
+    min-struct tie-break on code_id. Returns (vec_id, j, code_id, *keep)."""
+    d = sqdist_unrolled("sv", "cv", sub, None)
+    return (
+        svecs.join(F.broadcast(cb), "j")
+        .groupBy("vec_id", "j")
+        .agg(
+            F.min(F.struct(d.alias("d"), F.col("code_id"))).alias("b"),
+            *[F.first(c).alias(c) for c in keep],
+        )
+        .select("vec_id", "j", F.col("b.code_id").alias("code_id"), *keep)
+    )
+
+
+def _micro_means(
+    frame: DataFrame, keys: list[str], sub: int, out: str
+) -> DataFrame:
+    """Per-``keys`` mean of the micro-unit subvectors ``sv``, as the
+    array ``out`` of BIGINTs. Each component is one correctly-rounded
+    IEEE division — CAST(SUM(micros) AS DOUBLE) / COUNT(*) (sums < 2^53,
+    so the double is exact) — rounded half-away back to micros:
+    identical inputs give identical doubles and identical rounding in
+    Spark and DuckDB, so an oracle replays every mean bit for bit."""
+    return (
+        frame.groupBy(*keys)
+        .agg(
+            *[
+                F.round(
+                    F.sum(F.col("sv")[i]).cast("double") / F.count(F.lit(1))
+                )
+                .cast("long")
+                .alias(f"m{i}")
+                for i in range(sub)
+            ]
+        )
+        .select(
+            *keys, F.array(*[F.col(f"m{i}") for i in range(sub)]).alias(out)
+        )
+    )
+
+
 def _pq_train_codebook(
     svecs: DataFrame,
     code_mod: int,
@@ -1227,14 +1268,11 @@ def _pq_train_codebook(
     recovers the untrained baseline and trained-vs-untrained recall
     comparisons isolate exactly what the Lloyd rounds add.
 
-    Replay discipline: assignment is argmin of the EXACT BIGINT L2²
-    (min-struct tie-break on code_id); each centroid update is one
-    correctly-rounded IEEE division per component — CAST(SUM(micros) AS
-    DOUBLE) / COUNT(*) (sums < 2^53, so the double is exact) rounded
-    half-away back to micros. Identical inputs → identical doubles →
-    identical rounding in Spark and DuckDB; the oracle unrolls the same
-    fixed number of rounds. Cells that lose all members drop out (inner
-    groupBy) on both engines.
+    Replay discipline: assignment is :func:`_nearest_code`, the argmin
+    of the EXACT BIGINT L2²; each centroid update is
+    :func:`_micro_means` of the members, which the oracle replays bit
+    for bit; the oracle unrolls the same fixed number of rounds. Cells
+    that lose all members drop out (inner groupBy) on both engines.
 
     Scale: each round is one corpus-long-format pass against a broadcast
     codebook (m·k rows); centroid state is m·k·sub integers — never
@@ -1270,40 +1308,13 @@ def _pq_train_codebook(
     train = svecs
     if train_sample is not None and train_iters > 0:
         train = _pq_train_sample(svecs, train_sample)
-    d = sqdist_unrolled("sv", "cv", sub, None)
     for _ in range(train_iters):
-        asg = (
-            train.join(F.broadcast(cb), "j")
-            .groupBy("vec_id", "j")
-            .agg(
-                F.min(F.struct(d.alias("d"), F.col("code_id"))).alias("b"),
-                F.first("sv").alias("sv"),
-            )
-            .select("j", F.col("b.code_id").alias("code_id"), "sv")
-        )
         # LAZY checkpoint (optimization r13): the next Lloyd round's
         # broadcast-build job — or the caller's encode pass after the
         # last round — materializes it; one fewer barrier per round.
-        cb = (
-            asg.groupBy("j", "code_id")
-            .agg(
-                *[
-                    F.round(
-                        F.sum(F.col("sv")[i]).cast("double")
-                        / F.count(F.lit(1))
-                    )
-                    .cast("long")
-                    .alias(f"m{i}")
-                    for i in range(sub)
-                ]
-            )
-            .select(
-                "j",
-                "code_id",
-                F.array(*[F.col(f"m{i}") for i in range(sub)]).alias("cv"),
-            )
-            .localCheckpoint(eager=False)
-        )
+        cb = _micro_means(
+            _nearest_code(train, cb, sub, "sv"), ["j", "code_id"], sub, "cv"
+        ).localCheckpoint(eager=False)
     return cb
 
 
@@ -1363,13 +1374,7 @@ def pq_topk(
         max_codes=max_codes,
         train_sample=train_sample,
     )
-    d = sqdist_unrolled("sv", "cv", sub, None)
-    enc = (
-        svecs.join(F.broadcast(cb), "j")
-        .groupBy("vec_id", "j")
-        .agg(F.min(F.struct(d.alias("d"), F.col("code_id"))).alias("b"))
-        .select("vec_id", "j", F.col("b.code_id").alias("code_id"))
-    )
+    enc = _nearest_code(svecs, cb, sub)
     qsv = svecs.where(F.col("vec_id") % query_mod == 0).select(
         F.col("vec_id").alias("query_id"), "j", F.col("sv").alias("qv")
     )
@@ -1555,9 +1560,9 @@ def ivf_pq_topk(
         svecs = _pq_subvecs(embeddings, m, dim, checkpoint=not residual)
     if residual:
         # residual ANCHOR per cell = the MEAN of the members' micro
-        # subvectors (half-away rounded to BIGINT — the Lloyd-update
-        # idiom, replayed exactly by the oracle), NOT the id-sampled
-        # centroid vector: an id-sample is a random corpus point, and
+        # subvectors (:func:`_micro_means`, as in the Lloyd update), NOT
+        # the id-sampled centroid vector: an id-sample is a random
+        # corpus point, and
         # ``x − random-point`` has ~2× the variance of ``x − mean``,
         # which measurably DESTROYS the residual advantage
         # materialize subvector+cell ONCE: the anchor aggregate, the
@@ -1575,28 +1580,9 @@ def ivf_pq_topk(
     qsv = qsv.select(
         F.col("vec_id").alias("query_id"), "j", F.col("sv").alias("qv")
     )
-    d = sqdist_unrolled("sv", "cv", sub, None)
     qd = sqdist_unrolled("qv", "cv", sub, None)
     if residual:
-        csv = (
-            sa.groupBy("cell_id", "j")
-            .agg(
-                *[
-                    F.round(
-                        F.sum(F.col("sv")[i]).cast("double")
-                        / F.count(F.lit(1))
-                    )
-                    .cast("long")
-                    .alias(f"a{i}")
-                    for i in range(sub)
-                ]
-            )
-            .select(
-                "cell_id",
-                "j",
-                F.array(*[F.col(f"a{i}") for i in range(sub)]).alias("csv"),
-            )
-        )
+        csv = _micro_means(sa, ["cell_id", "j"], sub, "csv")
         rsub = F.array(
             *[F.col("sv")[i] - F.col("csv")[i] for i in range(sub)]
         )
@@ -1616,12 +1602,7 @@ def ivf_pq_topk(
             max_codes=max_codes,
             train_sample=train_sample,
         )
-        enc = (
-            rsvecs.join(F.broadcast(cb), "j")
-            .groupBy("vec_id", "j")
-            .agg(F.min(F.struct(d.alias("d"), F.col("code_id"))).alias("b"))
-            .select("vec_id", "j", F.col("b.code_id").alias("code_id"))
-        )
+        enc = _nearest_code(rsvecs, cb, sub)
         # one ADC table per (query, probed cell): the query's residual
         # against THAT cell's centroid — nprobe·m·codes rows per query,
         # still broadcast-tiny
@@ -1655,12 +1636,7 @@ def ivf_pq_topk(
             max_codes=max_codes,
             train_sample=train_sample,
         )
-        enc = (
-            svecs.join(F.broadcast(cb), "j")
-            .groupBy("vec_id", "j")
-            .agg(F.min(F.struct(d.alias("d"), F.col("code_id"))).alias("b"))
-            .select("vec_id", "j", F.col("b.code_id").alias("code_id"))
-        )
+        enc = _nearest_code(svecs, cb, sub)
         dtab = qsv.join(F.broadcast(cb), "j").select(
             "query_id", "j", "code_id", qd.alias("d")
         )
@@ -1967,6 +1943,37 @@ def embedding_drift(embeddings: DataFrame, dim: int = 64) -> DataFrame:
     )
 
 
+def _pivot_scaled(w: DataFrame, key: str) -> DataFrame:
+    """One power-iteration normalization: divide every component of the
+    BIGINT iterate ``w`` (key, w) by its PIVOT — the largest |w|, ties to
+    the smaller ``key`` (a total order) — and rescale to integer
+    micro-units, so the result (key, v) is again integers in
+    [−10⁶, 10⁶] with the pivot's loading pinned to +10⁶ (no sign
+    ambiguity). One correctly-rounded IEEE division per component on
+    exact doubles (w < 2⁵³), rounded half away from zero as Spark's and
+    DuckDB's ROUND both do — an oracle replays it bit for bit. Lazily
+    checkpointed: the next round's job materializes it."""
+    pivot = (
+        w.orderBy(F.abs(F.col("w")).desc(), F.asc(key))
+        .limit(1)
+        .select(F.col("w").alias("wp"))
+    )
+    return (
+        w.crossJoin(F.broadcast(pivot))
+        .select(
+            key,
+            F.round(
+                F.col("w").cast("double")
+                / F.col("wp").cast("double")
+                * F.lit(1000000.0)
+            )
+            .cast("long")
+            .alias("v"),
+        )
+        .localCheckpoint(eager=False)
+    )
+
+
 def pca_power_iteration(
     embeddings: DataFrame, dims: int = 16, n_iter: int = 3
 ) -> DataFrame:
@@ -1979,13 +1986,11 @@ def pca_power_iteration(
     State discipline: the 6-dp covariance (the externally-verified
     ``embedding_covariance`` output) lifts to integer micro-units; each
     iterate w = Σµ·v is an exact BIGINT matrix-vector product, and
-    normalization divides by the PIVOT component (max |w|, ties to the
-    smaller dim — argmax-by-struct, a total order) so the new iterate
-    is again integers in [−10⁶, 10⁶]: w < 2⁵³ keeps every
-    double conversion exact, the one division per component is
-    correctly-rounded IEEE on identical inputs, and the oracle replays
-    rounds bit-for-bit. Sign is pinned by the pivot (its loading is
-    +1.0), eliminating the eigenvector's sign ambiguity.
+    normalization is :func:`_pivot_scaled` (divide by the largest-|w|
+    component, ties to the smaller dim), so the new iterate is again
+    micro-unit integers and the oracle replays rounds bit-for-bit. Sign
+    is pinned by the pivot (its loading is +1.0), eliminating the
+    eigenvector's sign ambiguity.
 
     Scale: the corpus-proportional work is the ONE covariance scan;
     iterations run on the d×d matrix (d² = 256 rows here) — driver-free
@@ -2013,43 +2018,23 @@ def pca_power_iteration(
         F.col("id").cast("int").alias("j"),
         F.lit(1000000).cast("long").alias("v"),
     )
-    w = None
-    for _ in range(n_iter):
-        w = (
+
+    def matvec(v: DataFrame) -> DataFrame:
+        return (
             sym.join(F.broadcast(v), "j")
-            .groupBy("i")
+            .groupBy(F.col("i").alias("j"))
             .agg(F.sum(F.col("c") * F.col("v")).alias("w"))
         )
-        pivot = (
-            w.orderBy(F.abs(F.col("w")).desc(), F.asc("i"))
-            .limit(1)
-            .select(F.col("w").alias("wp"))
-        )
-        v = (
-            w.crossJoin(F.broadcast(pivot))
-            .select(
-                F.col("i").alias("j"),
-                F.round(
-                    F.col("w").cast("double")
-                    / F.col("wp").cast("double")
-                    * F.lit(1000000.0)
-                )
-                .cast("long")
-                .alias("v"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    w4 = (
-        sym.join(F.broadcast(v), "j")
-        .groupBy("i")
-        .agg(F.sum(F.col("c") * F.col("v")).alias("w"))
-    )
-    pivot4 = (
-        w4.orderBy(F.abs(F.col("w")).desc(), F.asc("i"))
+
+    for _ in range(n_iter):
+        v = _pivot_scaled(matvec(v), "j")
+    pivot = (
+        matvec(v)
+        .orderBy(F.abs(F.col("w")).desc(), F.asc("j"))
         .limit(1)
         .select(F.col("w").alias("wp"))
     )
-    lam = pivot4.select(
+    lam = pivot.select(
         F.round(F.col("wp").cast("double") / F.lit(1.0e12), 6).alias(
             "eigenvalue_est"
         )

@@ -166,6 +166,25 @@ def test_k_core_raises_past_max_rounds(spark):
     assert gr.k_core(chain, k=2, max_rounds=12).count() == 0
 
 
+def test_fixpoint_stops_on_content_not_count(spark):
+    """The one-row state x=0 stepping to least(x+1, 3) keeps its row count
+    every round while its content changes: a count-only probe (round 2
+    equals round 1 in rows) would stop at [2]. The content signature runs
+    on to the true fixpoint [3], confirmed by a 4th round, and raises
+    when the cap is hit first."""
+    import pytest
+
+    start = spark.createDataFrame([(0,)], "x bigint")
+
+    def step(cur):
+        return cur.select(F.least(F.col("x") + 1, F.lit(3)).alias("x"))
+
+    with pytest.raises(RuntimeError, match="not converged"):
+        gr._fixpoint(start, step, 3, "probe")
+    cur, rows = gr._fixpoint(start, step, 4, "probe")
+    assert [r.x for r in cur.collect()] == [3] and rows == 1
+
+
 def test_cooccurrence_graph_threshold_and_invariance(spark):
     from conftest import SF001
 
