@@ -9739,13 +9739,14 @@ def mann_kendall_trend(orders: DataFrame) -> DataFrame:
 
 
 def half_up(x: float) -> int:
-    """Round a driver-side double to the nearest int, ties toward +∞
-    (floor, plus one when the fraction is ≥ 0.5). For x ≥ 0 this equals
-    Spark's and DuckDB's ``ROUND`` (ties away from zero), so a driver-side
-    fixed point replays in the oracle's SQL; for a negative tie the two
-    differ (−2.5 → −2 here, −3 in SQL)."""
-    f = math.floor(x)
-    return int(f) + (1 if x - f >= 0.5 else 0)
+    """Round a driver-side double to the nearest int, ties away from zero
+    (round ``|x|`` by its exact fraction, then restore the sign): Spark's
+    and DuckDB's ``ROUND``, so a driver-side fixed point replays in the
+    oracle's SQL for either sign (−2.5 → −3, 2.5 → 3)."""
+    a = abs(x)
+    f = math.floor(a)
+    n = f + (1 if a - f >= 0.5 else 0)
+    return n if x >= 0 else -n
 
 
 def markov_removal_attribution(

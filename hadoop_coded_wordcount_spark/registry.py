@@ -6,6 +6,13 @@ This is the engine's public query surface, consumed by ``__spark_entry__.py``
 gets an entry here; oracle-less entries (non-SQL-expressible ops) are listed
 in ``QUERIES`` only and carry unit tests instead.
 
+An entry is an operator registered by name: ``register(name, oracle)(op)``.
+:func:`register` binds ``op``'s parameters from their names — ``spark`` is
+the session, a catalog table name (``orders``, ``documents``, ...) is that
+table's scan, anything else keeps its default. An entry that composes
+operators or passes non-default arguments is a small function whose
+parameters are named the same way.
+
 Column-name discipline: the driver's compare sorts columns by name before
 hashing, so every computed column is aliased identically in the Spark plan
 and the oracle SQL.
@@ -13,12 +20,14 @@ and the oracle SQL.
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .sources.catalog import load_table
+from .sources.catalog import TABLES, load_table
 from .functions import pandas_surface as pu
 from .operators import dedup as dd
 from .operators import mleval as ml
@@ -40,13 +49,43 @@ ORACLES: dict[str, str] = {}
 
 
 def register(name: str, oracle: str | None = None):
-    """Decorator: add a (spark, sf_dir) -> DataFrame callable to the registry."""
+    """Decorator: register operator ``op`` as query ``name``.
 
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
+    ``QUERIES[name]`` becomes a ``(spark, sf_dir) -> DataFrame`` query that
+    calls ``op`` by keyword, in ``op``'s parameter order: a parameter named
+    ``spark`` gets the session, one named after a catalog table
+    (``sources.catalog.TABLES``) gets ``load_table(spark, sf_dir, <name>)``,
+    and every other parameter keeps its default. A required parameter that
+    fits neither rule raises ``TypeError`` here, at import. ``op`` is
+    returned unchanged; ``inspect.unwrap`` on the query gives it back.
+    """
+
+    def deco(op):
+        bound = []
+        for p in inspect.signature(op).parameters.values():
+            if p.name == "spark" or p.name in TABLES:
+                bound.append(p.name)
+            elif p.default is p.empty:
+                raise TypeError(
+                    f"{name}: cannot bind required parameter {p.name!r} of "
+                    f"{op.__qualname__}: name it spark or a catalog table, "
+                    "or give it a default"
+                )
+
+        def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+            # load_table is read from the module globals on every call, so
+            # a wrapper installed over registry.load_table sees each load.
+            return op(
+                **{
+                    p: spark if p == "spark" else load_table(spark, sf_dir, p)
+                    for p in bound
+                }
+            )
+
+        QUERIES[name] = functools.update_wrapper(query, op)
         if oracle is not None:
             ORACLES[name] = oracle
-        return fn
+        return op
 
     return deco
 
@@ -60,7 +99,7 @@ _TOKENS_SQL = (
 )
 
 
-@register(
+register(
     "wordcount",
     f"""
     SELECT word, COUNT(*) AS cnt
@@ -68,12 +107,10 @@ _TOKENS_SQL = (
     WHERE word <> ''
     GROUP BY word
     """,
-)
-def q_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return wc.wordcount(load_table(spark, sf_dir, "documents"))
+)(wc.wordcount)
 
 
-@register(
+register(
     "wordcount_by_source",
     """
     SELECT source, word, COUNT(*) AS cnt
@@ -84,12 +121,10 @@ def q_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE word <> ''
     GROUP BY source, word
     """,
-)
-def q_wordcount_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return wc.wordcount_by_source(load_table(spark, sf_dir, "documents"))
+)(wc.wordcount_by_source)
 
 
-@register(
+register(
     "wordcount_provenance",
     """
     WITH counts AS (
@@ -108,12 +143,10 @@ def q_wordcount_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT counts.source AS source, home_node, word, cnt
     FROM counts LEFT JOIN catalog USING (source)
     """,
-)
-def q_wordcount_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return wc.wordcount_provenance(load_table(spark, sf_dir, "documents"))
+)(wc.wordcount_provenance)
 
 
-@register(
+register(
     "topk_words",
     f"""
     SELECT word, COUNT(*) AS cnt
@@ -123,9 +156,7 @@ def q_wordcount_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY cnt DESC, word ASC
     LIMIT 100
     """,
-)
-def q_topk_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return wc.topk_words(load_table(spark, sf_dir, "documents"), k=100)
+)(wc.topk_words)
 
 
 # ---------------------------------------------------------------------------
@@ -135,18 +166,16 @@ def q_topk_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
+register(
     "filter_project",
     """
     SELECT p_partkey, p_name, p_brand, p_size
     FROM part WHERE p_size > 30 AND p_type = 'ECONOMY'
     """,
-)
-def q_filter_project(spark, sf_dir):
-    return rel.filter_project(load_table(spark, sf_dir, "part"))
+)(rel.filter_project)
 
 
-@register(
+register(
     "join_broadcast",
     """
     SELECT r_name, COUNT(*) AS num_customers,
@@ -156,16 +185,10 @@ def q_filter_project(spark, sf_dir):
     JOIN region ON n_regionkey = r_regionkey
     GROUP BY r_name
     """,
-)
-def q_join_broadcast(spark, sf_dir):
-    return rel.join_broadcast(
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "region"),
-        load_table(spark, sf_dir, "customer"),
-    )
+)(rel.join_broadcast)
 
 
-@register(
+register(
     "join_sortmerge",
     """
     SELECT o_orderpriority, COUNT(*) AS num_items,
@@ -173,40 +196,28 @@ def q_join_broadcast(spark, sf_dir):
     FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     GROUP BY o_orderpriority
     """,
-)
-def q_join_sortmerge(spark, sf_dir):
-    return rel.join_sortmerge(
-        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
-    )
+)(rel.join_sortmerge)
 
 
-@register(
+register(
     "join_semi",
     """
     SELECT c_custkey, c_name, c_mktsegment FROM customer
     WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
     """,
-)
-def q_join_semi(spark, sf_dir):
-    return rel.join_semi(
-        load_table(spark, sf_dir, "customer"), load_table(spark, sf_dir, "orders")
-    )
+)(rel.join_semi)
 
 
-@register(
+register(
     "join_anti",
     """
     SELECT c_custkey, c_name, c_acctbal FROM customer
     WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
     """,
-)
-def q_join_anti(spark, sf_dir):
-    return rel.join_anti(
-        load_table(spark, sf_dir, "customer"), load_table(spark, sf_dir, "orders")
-    )
+)(rel.join_anti)
 
 
-@register(
+register(
     "join_range",
     """
     SELECT o_orderstatus, COUNT(*) AS num_shipped_90d,
@@ -216,26 +227,18 @@ def q_join_anti(spark, sf_dir):
       AND l_shipdate <= o_orderdate + INTERVAL 90 DAY
     GROUP BY o_orderstatus
     """,
-)
-def q_join_range(spark, sf_dir):
-    return rel.join_range(
-        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
-    )
+)(rel.join_range)
 
 
-@register(
+register(
     "join_cross_theta",
     """
     SELECT n_name, r_name FROM nation, region WHERE n_regionkey <> r_regionkey
     """,
-)
-def q_join_cross_theta(spark, sf_dir):
-    return rel.join_cross_theta(
-        load_table(spark, sf_dir, "nation"), load_table(spark, sf_dir, "region")
-    )
+)(rel.join_cross_theta)
 
 
-@register(
+register(
     "join_asof",
     """
     WITH clicks AS (
@@ -249,16 +252,14 @@ def q_join_cross_theta(spark, sf_dir):
              AS gap_sec
     FROM clicks c ASOF JOIN views v ON c.user_id = v.user_id AND c.ts >= v.ts
     """,
-)
-def q_join_asof(spark, sf_dir):
-    return rel.join_asof(load_table(spark, sf_dir, "events"))
+)(rel.join_asof)
 
 
 # Nearest-neighbor asof (before OR after, nearer side wins, exact-gap
 # ties prefer backward): oracle runs DuckDB's ASOF twice — backward
 # inclusive, forward strict — over max-id-deduped views and picks the
 # nearer, mirroring the engine's two-direction single-shuffle window.
-@register(
+register(
     "join_asof_nearest",
     """
     WITH views AS (
@@ -293,12 +294,10 @@ def q_join_asof(spark, sf_dir):
     FROM b JOIN f USING (click_id)
     WHERE b_id IS NOT NULL OR f_id IS NOT NULL
     """,
-)
-def q_join_asof_nearest(spark, sf_dir):
-    return rel.join_asof_nearest(load_table(spark, sf_dir, "events"))
+)(rel.join_asof_nearest)
 
 
-@register(
+register(
     "join_left_outer",
     """
     SELECT c_count, COUNT(*) AS custdist FROM (
@@ -308,14 +307,10 @@ def q_join_asof_nearest(spark, sf_dir):
       GROUP BY c_custkey
     ) GROUP BY c_count
     """,
-)
-def q_join_left_outer(spark, sf_dir):
-    return rel.join_left_outer(
-        load_table(spark, sf_dir, "customer"), load_table(spark, sf_dir, "orders")
-    )
+)(rel.join_left_outer)
 
 
-@register(
+register(
     "join_full_outer",
     """
     SELECT COALESCE(c_nationkey, s_nationkey) AS nationkey,
@@ -328,14 +323,10 @@ def q_join_left_outer(spark, sf_dir):
           FROM supplier WHERE s_acctbal < 0 GROUP BY s_nationkey) s
     ON c_nationkey = s_nationkey
     """,
-)
-def q_join_full_outer(spark, sf_dir):
-    return rel.join_full_outer(
-        load_table(spark, sf_dir, "customer"), load_table(spark, sf_dir, "supplier")
-    )
+)(rel.join_full_outer)
 
 
-@register(
+register(
     "q1_pricing_summary",
     """
     SELECT l_returnflag, l_linestatus,
@@ -355,12 +346,10 @@ def q_join_full_outer(spark, sf_dir):
     WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     """,
-)
-def q_q1(spark, sf_dir):
-    return rel.q1_pricing_summary(load_table(spark, sf_dir, "lineitem"))
+)(rel.q1_pricing_summary)
 
 
-@register(
+register(
     "q5_region_revenue",
     """
     SELECT n_name,
@@ -374,19 +363,10 @@ def q_q1(spark, sf_dir):
       AND r_name = 'ASIA'
     GROUP BY n_name
     """,
-)
-def q_q5_region_revenue(spark, sf_dir):
-    return rel.q5_region_revenue(
-        load_table(spark, sf_dir, "region"),
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
+)(rel.q5_region_revenue)
 
 
-@register(
+register(
     "q3_shipping_priority",
     """
     SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS order_date,
@@ -402,16 +382,10 @@ def q_q5_region_revenue(spark, sf_dir):
     ORDER BY revenue DESC, o_orderkey ASC
     LIMIT 10
     """,
-)
-def q_q3_shipping_priority(spark, sf_dir):
-    return rel.q3_shipping_priority(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
+)(rel.q3_shipping_priority)
 
 
-@register(
+register(
     "q7_nation_volume",
     """
     SELECT supp_nation, cust_nation, COUNT(*) AS n_items,
@@ -432,18 +406,10 @@ def q_q3_shipping_priority(spark, sf_dir):
     )
     GROUP BY supp_nation, cust_nation
     """,
-)
-def q_q7_nation_volume(spark, sf_dir):
-    return rel.q7_nation_volume(
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
+)(rel.q7_nation_volume)
 
 
-@register(
+register(
     "q18_large_volume",
     """
     SELECT o_orderkey, o_custkey,
@@ -452,14 +418,10 @@ def q_q7_nation_volume(spark, sf_dir):
     GROUP BY o_orderkey, o_custkey
     HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) > 180.0
     """,
-)
-def q_q18_large_volume(spark, sf_dir):
-    return rel.q18_large_volume(
-        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
-    )
+)(rel.q18_large_volume)
 
 
-@register(
+register(
     "q4_order_priority",
     """
     SELECT o_orderpriority, COUNT(*) AS order_count
@@ -469,14 +431,10 @@ def q_q18_large_volume(spark, sf_dir):
                     AND l_shipdate > o_orderdate + INTERVAL 90 DAY)
     GROUP BY o_orderpriority
     """,
-)
-def q_q4_order_priority(spark, sf_dir):
-    return rel.q4_order_priority(
-        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
-    )
+)(rel.q4_order_priority)
 
 
-@register(
+register(
     "q10_returned_items",
     """
     SELECT c_custkey, c_name, n_name, revenue FROM (
@@ -494,17 +452,10 @@ def q_q4_order_priority(spark, sf_dir):
     JOIN nation ON c_nationkey = n_nationkey
     ORDER BY revenue DESC, c_custkey ASC LIMIT 20
     """,
-)
-def q_q10_returned_items(spark, sf_dir):
-    return rel.q10_returned_items(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "nation"),
-    )
+)(rel.q10_returned_items)
 
 
-@register(
+register(
     "q6_forecast_revenue",
     """
     SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -515,12 +466,10 @@ def q_q10_returned_items(spark, sf_dir):
                          AND TIMESTAMP '1996-12-31 23:59:59'
       AND l_discount >= 0.04 AND l_discount <= 0.06 AND l_quantity < 24
     """,
-)
-def q_q6_forecast_revenue(spark, sf_dir):
-    return rel.q6_forecast_revenue(load_table(spark, sf_dir, "lineitem"))
+)(rel.q6_forecast_revenue)
 
 
-@register(
+register(
     "q14_promo_revenue",
     """
     SELECT round(
@@ -536,14 +485,10 @@ def q_q6_forecast_revenue(spark, sf_dir):
     WHERE l_shipdate >= TIMESTAMP '1996-09-01 00:00:00'
       AND l_shipdate <  TIMESTAMP '1996-10-01 00:00:00'
     """,
-)
-def q_q14_promo_revenue(spark, sf_dir):
-    return rel.q14_promo_revenue(
-        load_table(spark, sf_dir, "lineitem"), load_table(spark, sf_dir, "part")
-    )
+)(rel.q14_promo_revenue)
 
 
-@register(
+register(
     "q19_disjunctive_brackets",
     """
     SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -558,14 +503,10 @@ def q_q14_promo_revenue(spark, sf_dir):
        OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
            AND l_quantity BETWEEN 20 AND 30)
     """,
-)
-def q_q19_disjunctive_brackets(spark, sf_dir):
-    return rel.q19_disjunctive_brackets(
-        load_table(spark, sf_dir, "lineitem"), load_table(spark, sf_dir, "part")
-    )
+)(rel.q19_disjunctive_brackets)
 
 
-@register(
+register(
     "q22_dormant_accounts",
     """
     SELECT c_nationkey, COUNT(*) AS numcust,
@@ -577,14 +518,10 @@ def q_q19_disjunctive_brackets(spark, sf_dir):
                       AND o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
     GROUP BY c_nationkey
     """,
-)
-def q_q22_dormant_accounts(spark, sf_dir):
-    return rel.q22_dormant_accounts(
-        load_table(spark, sf_dir, "customer"), load_table(spark, sf_dir, "orders")
-    )
+)(rel.q22_dormant_accounts)
 
 
-@register(
+register(
     "generator_funcs",
     """
     WITH m AS (SELECT n_nationkey, n_nationkey % 4 AS m FROM nation),
@@ -594,12 +531,10 @@ def q_q22_dormant_accounts(spark, sf_dir):
     UNION ALL
     SELECT n_nationkey, NULL, NULL FROM m WHERE m = 0
     """,
-)
-def q_generator_funcs(spark, sf_dir):
-    return rel.generator_funcs(load_table(spark, sf_dir, "nation"))
+)(rel.generator_funcs)
 
 
-@register(
+register(
     "variant_funcs",
     """
     SELECT event_id,
@@ -610,12 +545,10 @@ def q_generator_funcs(spark, sf_dir):
            json_extract_string(props, '$.missing') AS missing_path
     FROM events
     """,
-)
-def q_variant_funcs(spark, sf_dir):
-    return rel.variant_funcs(load_table(spark, sf_dir, "events"))
+)(rel.variant_funcs)
 
 
-@register(
+register(
     "q8_market_share",
     """
     SELECT o_year,
@@ -643,20 +576,10 @@ def q_variant_funcs(spark, sf_dir):
       GROUP BY o_year
     )
     """,
-)
-def q_q8_market_share(spark, sf_dir):
-    return rel.q8_market_share(
-        load_table(spark, sf_dir, "part"),
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "region"),
-    )
+)(rel.q8_market_share)
 
 
-@register(
+register(
     "q15_top_supplier",
     """
     WITH revenue AS (
@@ -673,15 +596,10 @@ def q_q8_market_share(spark, sf_dir):
     FROM revenue JOIN supplier ON l_suppkey = s_suppkey
     WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
     """,
-)
-def q_q15_top_supplier(spark, sf_dir):
-    return rel.q15_top_supplier(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "supplier"),
-    )
+)(rel.q15_top_supplier)
 
 
-@register(
+register(
     "q17_small_quantity_revenue",
     """
     WITH per_part AS (
@@ -697,15 +615,10 @@ def q_q15_top_supplier(spark, sf_dir):
     JOIN per_part USING (l_partkey)
     WHERE l_quantity < 0.2 * avg_qty
     """,
-)
-def q_q17_small_quantity_revenue(spark, sf_dir):
-    return rel.q17_small_quantity_revenue(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "part"),
-    )
+)(rel.q17_small_quantity_revenue)
 
 
-@register(
+register(
     "q21_waiting_suppliers",
     """
     WITH late AS (
@@ -726,16 +639,10 @@ def q_q17_small_quantity_revenue(spark, sf_dir):
     ORDER BY numwait DESC, s_name
     LIMIT 20
     """,
-)
-def q_q21_waiting_suppliers(spark, sf_dir):
-    return rel.q21_waiting_suppliers(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "supplier"),
-    )
+)(rel.q21_waiting_suppliers)
 
 
-@register(
+register(
     "q13_customer_distribution",
     """
     SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist
@@ -748,20 +655,14 @@ def q_q21_waiting_suppliers(spark, sf_dir):
     GROUP BY c_count
     ORDER BY custdist DESC, c_count DESC
     """,
-)
-def q_q13_customer_distribution(spark, sf_dir):
-    return rel.q13_customer_distribution(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-    )
+)(rel.q13_customer_distribution)
 
 
-@register("approx_percentile_agg")  # sketch != DuckDB's sketch → rows-only
-def q_approx_percentile_agg(spark, sf_dir):
-    return rel.approx_percentile_agg(load_table(spark, sf_dir, "lineitem"))
+# sketch != DuckDB's sketch → rows-only
+register("approx_percentile_agg")(rel.approx_percentile_agg)
 
 
-@register(
+register(
     "argmin_supplier",
     """
     SELECT s_nationkey, s_suppkey AS cheapest_suppkey,
@@ -771,12 +672,10 @@ def q_approx_percentile_agg(spark, sf_dir):
           FROM supplier)
     WHERE rn = 1
     """,
-)
-def q_argmin_supplier(spark, sf_dir):
-    return rel.argmin_supplier(load_table(spark, sf_dir, "supplier"))
+)(rel.argmin_supplier)
 
 
-@register(
+register(
     "struct_json_funcs",
     """
     SELECT n_nationkey, n_name AS nation, r_name AS region_name,
@@ -787,14 +686,10 @@ def q_argmin_supplier(spark, sf_dir):
            CAST(r_regionkey AS INTEGER) AS parsed_region_id
     FROM nation JOIN region ON n_regionkey = r_regionkey
     """,
-)
-def q_struct_json_funcs(spark, sf_dir):
-    return rel.struct_json_funcs(
-        load_table(spark, sf_dir, "nation"), load_table(spark, sf_dir, "region")
-    )
+)(rel.struct_json_funcs)
 
 
-@register(
+register(
     "scd2_intervals",
     """
     SELECT o_custkey, o_orderkey, o_totalprice,
@@ -804,12 +699,10 @@ def q_struct_json_funcs(spark, sf_dir):
     FROM orders
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
     """,
-)
-def q_scd2_intervals(spark, sf_dir):
-    return rel.scd2_intervals(load_table(spark, sf_dir, "orders"))
+)(rel.scd2_intervals)
 
 
-@register(
+register(
     "histogram_prices",
     """
     SELECT bucket, bucket * 25000.0 AS lo, (bucket + 1) * 25000.0 AS hi,
@@ -818,9 +711,7 @@ def q_scd2_intervals(spark, sf_dir):
           FROM orders)
     GROUP BY bucket
     """,
-)
-def q_histogram_prices(spark, sf_dir):
-    return rel.histogram_prices(load_table(spark, sf_dir, "orders"))
+)(rel.histogram_prices)
 
 
 @register(
@@ -841,14 +732,11 @@ def q_histogram_prices(spark, sf_dir):
     )
     """,
 )
-def q_upsert_snapshot(spark, sf_dir):
-    base = load_table(spark, sf_dir, "orders")
-    return rel.upsert_snapshot(
-        base, rel.repriced_updates(base), "o_orderkey"
-    )
+def q_upsert_snapshot(orders):
+    return rel.upsert_snapshot(orders, rel.repriced_updates(orders), "o_orderkey")
 
 
-@register(
+register(
     "skewed_join_rollup",
     """
     SELECT n_name, COUNT(*) AS n_items,
@@ -860,15 +748,10 @@ def q_upsert_snapshot(spark, sf_dir):
     ) f JOIN nation ON f.k = nation.n_nationkey
     GROUP BY n_name
     """,
-)
-def q_skewed_join_rollup(spark, sf_dir):
-    return rel.skewed_join_rollup(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "nation"),
-    )
+)(rel.skewed_join_rollup)
 
 
-@register(
+register(
     "stats_moments",
     """
     SELECT l_returnflag, n,
@@ -891,12 +774,10 @@ def q_skewed_join_rollup(spark, sf_dir):
       FROM lineitem GROUP BY l_returnflag
     )
     """,
-)
-def q_stats_moments(spark, sf_dir):
-    return rel.stats_moments(load_table(spark, sf_dir, "lineitem"))
+)(rel.stats_moments)
 
 
-@register(
+register(
     "pivot_status",
     """
     SELECT o_orderpriority,
@@ -905,12 +786,10 @@ def q_stats_moments(spark, sf_dir):
            COUNT(*) FILTER (WHERE o_orderstatus = 'P') AS "P"
     FROM orders GROUP BY o_orderpriority
     """,
-)
-def q_pivot_status(spark, sf_dir):
-    return rel.pivot_status(load_table(spark, sf_dir, "orders"))
+)(rel.pivot_status)
 
 
-@register(
+register(
     "unpivot_metrics",
     """
     SELECT metric, COUNT(*) AS cnt,
@@ -921,24 +800,20 @@ def q_pivot_status(spark, sf_dir):
       UNION ALL SELECT 'l_discount', l_discount FROM lineitem
     ) GROUP BY metric
     """,
-)
-def q_unpivot_metrics(spark, sf_dir):
-    return rel.unpivot_metrics(load_table(spark, sf_dir, "lineitem"))
+)(rel.unpivot_metrics)
 
 
-@register(
+register(
     "sql_api_priority_counts",
     """
     SELECT o_orderpriority, o_orderstatus, COUNT(*) AS cnt,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
     FROM orders GROUP BY o_orderpriority, o_orderstatus
     """,
-)
-def q_sql_api_priority_counts(spark, sf_dir):
-    return rel.sql_api_priority_counts(spark, load_table(spark, sf_dir, "orders"))
+)(rel.sql_api_priority_counts)
 
 
-@register(
+register(
     "percentile_agg",
     """
     SELECT l_returnflag,
@@ -947,12 +822,10 @@ def q_sql_api_priority_counts(spark, sf_dir):
            round(quantile_cont(l_extendedprice, 0.75), 6) AS p75_price
     FROM lineitem GROUP BY l_returnflag
     """,
-)
-def q_percentile_agg(spark, sf_dir):
-    return rel.percentile_agg(load_table(spark, sf_dir, "lineitem"))
+)(rel.percentile_agg)
 
 
-@register(
+register(
     "string_agg_sorted",
     """
     SELECT r_name, string_agg(n_name, ',' ORDER BY n_name) AS nations,
@@ -960,14 +833,10 @@ def q_percentile_agg(spark, sf_dir):
     FROM nation JOIN region ON n_regionkey = r_regionkey
     GROUP BY r_name
     """,
-)
-def q_string_agg_sorted(spark, sf_dir):
-    return rel.string_agg_sorted(
-        load_table(spark, sf_dir, "nation"), load_table(spark, sf_dir, "region")
-    )
+)(rel.string_agg_sorted)
 
 
-@register(
+register(
     "case_null_battery",
     """
     SELECT c_custkey,
@@ -980,12 +849,10 @@ def q_string_agg_sorted(spark, sf_dir):
            greatest(c_acctbal, 0.0) AS bal_floor
     FROM customer
     """,
-)
-def q_case_null_battery(spark, sf_dir):
-    return rel.case_null_battery(load_table(spark, sf_dir, "customer"))
+)(rel.case_null_battery)
 
 
-@register(
+register(
     "correlated_above_nation_avg",
     """
     SELECT c_custkey, c_name, c_nationkey, c_acctbal
@@ -995,12 +862,10 @@ def q_case_null_battery(spark, sf_dir):
       FROM customer c2 WHERE c2.c_nationkey = c.c_nationkey
     )
     """,
-)
-def q_correlated_above_nation_avg(spark, sf_dir):
-    return rel.correlated_above_nation_avg(load_table(spark, sf_dir, "customer"))
+)(rel.correlated_above_nation_avg)
 
 
-@register(
+register(
     "agg_multi",
     """
     SELECT l_returnflag, COUNT(*) AS cnt,
@@ -1010,12 +875,10 @@ def q_correlated_above_nation_avg(spark, sf_dir):
            COUNT(DISTINCT l_partkey) AS distinct_parts
     FROM lineitem GROUP BY l_returnflag
     """,
-)
-def q_agg_multi(spark, sf_dir):
-    return rel.agg_multi(load_table(spark, sf_dir, "lineitem"))
+)(rel.agg_multi)
 
 
-@register(
+register(
     "distinct_count",
     """
     SELECT l_linestatus,
@@ -1023,41 +886,34 @@ def q_agg_multi(spark, sf_dir):
            COUNT(DISTINCT l_partkey) AS distinct_parts
     FROM lineitem GROUP BY l_linestatus
     """,
-)
-def q_distinct_count(spark, sf_dir):
-    return rel.distinct_count(load_table(spark, sf_dir, "lineitem"))
+)(rel.distinct_count)
 
 
-@register("approx_distinct")  # HLL sketch != DuckDB's sketch → rows-only check
-def q_approx_distinct(spark, sf_dir):
-    return rel.approx_distinct(load_table(spark, sf_dir, "lineitem"))
+# HLL sketch != DuckDB's sketch → rows-only check
+register("approx_distinct")(rel.approx_distinct)
 
 
-@register(
+register(
     "rollup_agg",
     """
     SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt,
            CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
     FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
-)
-def q_rollup_agg(spark, sf_dir):
-    return rel.rollup_agg(load_table(spark, sf_dir, "lineitem"))
+)(rel.rollup_agg)
 
 
-@register(
+register(
     "cube_agg",
     """
     SELECT o_orderstatus, o_orderpriority, COUNT(*) AS cnt,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
     FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
     """,
-)
-def q_cube_agg(spark, sf_dir):
-    return rel.cube_agg(load_table(spark, sf_dir, "orders"))
+)(rel.cube_agg)
 
 
-@register(
+register(
     "grouping_sets",
     """
     SELECT o_orderstatus, o_orderpriority, COUNT(*) AS cnt,
@@ -1065,12 +921,10 @@ def q_cube_agg(spark, sf_dir):
     FROM orders
     GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
     """,
-)
-def q_grouping_sets(spark, sf_dir):
-    return rel.grouping_sets(spark, load_table(spark, sf_dir, "orders"))
+)(rel.grouping_sets)
 
 
-@register(
+register(
     "window_rank",
     """
     SELECT * FROM (
@@ -1082,12 +936,10 @@ def q_grouping_sets(spark, sf_dir):
       WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC)
     ) WHERE rn <= 3
     """,
-)
-def q_window_rank(spark, sf_dir):
-    return rel.window_rank(load_table(spark, sf_dir, "orders"))
+)(rel.window_rank)
 
 
-@register(
+register(
     "window_running",
     """
     SELECT o_custkey, o_orderkey,
@@ -1097,12 +949,10 @@ def q_window_rank(spark, sf_dir):
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
     """,
-)
-def q_window_running(spark, sf_dir):
-    return rel.window_running(load_table(spark, sf_dir, "orders"))
+)(rel.window_running)
 
 
-@register(
+register(
     "window_lag_lead",
     """
     SELECT user_id, event_id, value,
@@ -1113,12 +963,10 @@ def q_window_running(spark, sf_dir):
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     """,
-)
-def q_window_lag_lead(spark, sf_dir):
-    return rel.window_lag_lead(load_table(spark, sf_dir, "events"))
+)(rel.window_lag_lead)
 
 
-@register(
+register(
     "window_range_frame",
     """
     SELECT o_custkey, o_orderkey,
@@ -1130,12 +978,10 @@ def q_window_lag_lead(spark, sf_dir):
                  ORDER BY CAST(FLOOR(EPOCH(o_orderdate)) AS BIGINT)
                  RANGE BETWEEN 2592000 PRECEDING AND CURRENT ROW)
     """,
-)
-def q_window_range_frame(spark, sf_dir):
-    return rel.window_range_frame(load_table(spark, sf_dir, "orders"))
+)(rel.window_range_frame)
 
 
-@register(
+register(
     "window_distribution",
     """
     SELECT o_orderkey, o_orderstatus,
@@ -1150,70 +996,58 @@ def q_window_range_frame(spark, sf_dir):
            wf AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey
                   ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
     """,
-)
-def q_window_distribution(spark, sf_dir):
-    return rel.window_distribution(load_table(spark, sf_dir, "orders"))
+)(rel.window_distribution)
 
 
-@register(
+register(
     "topk_orders",
     """
     SELECT o_orderkey, o_custkey, o_totalprice FROM orders
     ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10
     """,
-)
-def q_topk_orders(spark, sf_dir):
-    return rel.topk_orders(load_table(spark, sf_dir, "orders"))
+)(rel.topk_orders)
 
 
-@register(
+register(
     "global_sort",
     """
     SELECT c_custkey, c_name, c_acctbal FROM customer
     ORDER BY c_acctbal DESC, c_custkey ASC
     """,
-)
-def q_global_sort(spark, sf_dir):
-    return rel.global_sort(load_table(spark, sf_dir, "customer"))
+)(rel.global_sort)
 
 
-@register(
+register(
     "set_union",
     """
     SELECT c_custkey FROM customer WHERE c_acctbal > 9000
     UNION
     SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
     """,
-)
-def q_set_union(spark, sf_dir):
-    return rel.set_union(load_table(spark, sf_dir, "customer"))
+)(rel.set_union)
 
 
-@register(
+register(
     "set_intersect",
     """
     SELECT c_custkey FROM customer WHERE c_acctbal > 9000
     INTERSECT
     SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
     """,
-)
-def q_set_intersect(spark, sf_dir):
-    return rel.set_intersect(load_table(spark, sf_dir, "customer"))
+)(rel.set_intersect)
 
 
-@register(
+register(
     "set_except",
     """
     SELECT c_custkey FROM customer WHERE c_acctbal > 9000
     EXCEPT ALL
     SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
     """,
-)
-def q_set_except(spark, sf_dir):
-    return rel.set_except(load_table(spark, sf_dir, "customer"))
+)(rel.set_except)
 
 
-@register(
+register(
     "string_funcs",
     """
     SELECT p_partkey,
@@ -1226,12 +1060,10 @@ def q_set_except(spark, sf_dir):
            translate(p_name, 'aeiou', 'AEIOU') AS name_vowels_up
     FROM part
     """,
-)
-def q_string_funcs(spark, sf_dir):
-    return rel.string_funcs(load_table(spark, sf_dir, "part"))
+)(rel.string_funcs)
 
 
-@register(
+register(
     "fuzzy_string_funcs",
     """
     SELECT p_partkey, p_name, prev_name,
@@ -1243,12 +1075,10 @@ def q_string_funcs(spark, sf_dir):
       FROM part
     ) WHERE prev_name IS NOT NULL
     """,
-)
-def q_fuzzy_string_funcs(spark, sf_dir):
-    return rel.fuzzy_string_funcs(load_table(spark, sf_dir, "part"))
+)(rel.fuzzy_string_funcs)
 
 
-@register(
+register(
     "regexp_funcs",
     """
     SELECT p_partkey,
@@ -1259,12 +1089,10 @@ def q_fuzzy_string_funcs(spark, sf_dir):
            CAST(len(regexp_extract_all(p_name, '\\ba\\w*')) AS INTEGER) AS a_words
     FROM part
     """,
-)
-def q_regexp_funcs(spark, sf_dir):
-    return rel.regexp_funcs(load_table(spark, sf_dir, "part"))
+)(rel.regexp_funcs)
 
 
-@register(
+register(
     "conditional_funcs",
     """
     SELECT c_custkey,
@@ -1278,12 +1106,10 @@ def q_regexp_funcs(spark, sf_dir):
            c_nationkey << 2 AS nat_shl2
     FROM customer
     """,
-)
-def q_conditional_funcs(spark, sf_dir):
-    return rel.conditional_funcs(load_table(spark, sf_dir, "customer"))
+)(rel.conditional_funcs)
 
 
-@register(
+register(
     "date_funcs",
     """
     SELECT o_orderkey,
@@ -1296,12 +1122,10 @@ def q_conditional_funcs(spark, sf_dir):
              AS days_to_y2k
     FROM orders
     """,
-)
-def q_date_funcs(spark, sf_dir):
-    return rel.date_funcs(load_table(spark, sf_dir, "orders"))
+)(rel.date_funcs)
 
 
-@register(
+register(
     "math_funcs",
     """
     SELECT l_orderkey, l_linenumber,
@@ -1316,12 +1140,10 @@ def q_date_funcs(spark, sf_dir):
            xor(l_partkey, l_suppkey) AS xor_keys
     FROM lineitem
     """,
-)
-def q_math_funcs(spark, sf_dir):
-    return rel.math_funcs(load_table(spark, sf_dir, "lineitem"))
+)(rel.math_funcs)
 
 
-@register(
+register(
     "array_funcs",
     """
     SELECT vec_id,
@@ -1336,12 +1158,10 @@ def q_math_funcs(spark, sf_dir):
            CAST(list_aggregate(embedding, 'min') AS DOUBLE) AS elem_min
     FROM embeddings
     """,
-)
-def q_array_funcs(spark, sf_dir):
-    return rel.array_funcs(load_table(spark, sf_dir, "embeddings"))
+)(rel.array_funcs)
 
 
-@register(
+register(
     "provenance_scan",
     # the oracle sees pre-registered views, not paths; with the one-file-
     # per-table testdata layout the basename is the constant below, which
@@ -1349,12 +1169,10 @@ def q_array_funcs(spark, sf_dir):
     """
     SELECT doc_id, 'documents.parquet' AS src_file FROM documents
     """,
-)
-def q_provenance_scan(spark, sf_dir):
-    return rel.provenance_scan(load_table(spark, sf_dir, "documents"))
+)(rel.provenance_scan)
 
 
-@register(
+register(
     "funnel_view_click",
     """
     SELECT COUNT(*) AS users,
@@ -1368,12 +1186,10 @@ def q_provenance_scan(spark, sf_dir):
       FROM events GROUP BY user_id
     )
     """,
-)
-def q_funnel_view_click(spark, sf_dir):
-    return rel.funnel_view_click(load_table(spark, sf_dir, "events"))
+)(rel.funnel_view_click)
 
 
-@register(
+register(
     "cohort_retention",
     """
     SELECT strftime(cohort_day, '%Y-%m-%d') AS cohort_day,
@@ -1387,12 +1203,10 @@ def q_funnel_view_click(spark, sf_dir):
       FROM events GROUP BY user_id
     ) GROUP BY cohort_day
     """,
-)
-def q_cohort_retention(spark, sf_dir):
-    return rel.cohort_retention(load_table(spark, sf_dir, "events"))
+)(rel.cohort_retention)
 
 
-@register(
+register(
     "map_funcs",
     """
     SELECT event_id,
@@ -1407,12 +1221,10 @@ def q_cohort_retention(spark, sf_dir):
       FROM events
     )
     """,
-)
-def q_map_funcs(spark, sf_dir):
-    return rel.map_funcs(load_table(spark, sf_dir, "events"))
+)(rel.map_funcs)
 
 
-@register(
+register(
     "json_funcs",
     """
     SELECT event_id,
@@ -1421,9 +1233,7 @@ def q_map_funcs(spark, sf_dir):
            CAST(json_extract_string(props, '$.k') AS BIGINT) % 10 AS k_mod10
     FROM events
     """,
-)
-def q_json_funcs(spark, sf_dir):
-    return rel.json_funcs(load_table(spark, sf_dir, "events"))
+)(rel.json_funcs)
 
 
 # ---------------------------------------------------------------------------
@@ -1445,7 +1255,7 @@ _DUCK_SHINGLES = """
 """
 
 
-@register(
+register(
     "dedup_exact",
     """
     SELECT doc_id, lang, source, n_chars FROM (
@@ -1454,12 +1264,10 @@ _DUCK_SHINGLES = """
       FROM documents
     ) WHERE rn = 1
     """,
-)
-def q_dedup_exact(spark, sf_dir):
-    return dd.dedup_exact(load_table(spark, sf_dir, "documents"))
+)(dd.dedup_exact)
 
 
-@register(
+register(
     "dedup_fingerprint",
     """
     SELECT sha256(regexp_replace(lower(trim(text)), '[\\s\\x0b]+', ' ', 'g')) AS fingerprint,
@@ -1467,12 +1275,10 @@ def q_dedup_exact(spark, sf_dir):
     FROM documents
     GROUP BY fingerprint
     """,
-)
-def q_dedup_fingerprint(spark, sf_dir):
-    return dd.dedup_fingerprint(load_table(spark, sf_dir, "documents"))
+)(dd.dedup_fingerprint)
 
 
-@register(
+register(
     "ngram_jaccard_pairs",
     f"""
     WITH g AS ({_DUCK_SHINGLES})
@@ -1484,9 +1290,7 @@ def q_dedup_fingerprint(spark, sf_dir):
       FROM g a JOIN g b ON a.lang = b.lang AND a.doc_id < b.doc_id
     ) WHERE jaccard >= 0.5
     """,
-)
-def q_ngram_jaccard_pairs(spark, sf_dir):
-    return dd.ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"))
+)(dd.ngram_jaccard_pairs)
 
 
 # Same Carter–Wegman family h_i(x) = (a_i*x + b_i) mod p over the md5-derived
@@ -1502,7 +1306,7 @@ _MINHASH_UNPIVOT = "\n    UNION ALL\n    ".join(
 )
 
 
-@register(
+register(
     "minhash_signatures",
     f"""
     WITH g AS ({_DUCK_SHINGLES}),
@@ -1518,12 +1322,10 @@ _MINHASH_UNPIVOT = "\n    UNION ALL\n    ".join(
     )
     {_MINHASH_UNPIVOT}
     """,
-)
-def q_minhash_signatures(spark, sf_dir):
-    return dd.minhash_signatures(load_table(spark, sf_dir, "documents"))
+)(dd.minhash_signatures)
 
 
-@register(
+register(
     "minhash_lsh_pairs",
     # The oracle is the *exact* unblocked Jaccard pair set: LSH candidates
     # are verified with exact Jaccard before output, and at this dataset's
@@ -1539,9 +1341,7 @@ def q_minhash_signatures(spark, sf_dir):
       FROM g a JOIN g b ON a.doc_id < b.doc_id
     ) WHERE jaccard >= 0.5
     """,
-)
-def q_minhash_lsh_pairs(spark, sf_dir):
-    return dd.minhash_lsh_pairs(load_table(spark, sf_dir, "documents"))
+)(dd.minhash_lsh_pairs)
 
 
 def _lsh_tuning_oracle(
@@ -1626,9 +1426,7 @@ def _lsh_tuning_oracle(
     return "".join(parts)
 
 
-@register("lsh_tuning_curve", _lsh_tuning_oracle())
-def q_lsh_tuning_curve(spark, sf_dir):
-    return dd.lsh_tuning_curve(load_table(spark, sf_dir, "documents"))
+register("lsh_tuning_curve", _lsh_tuning_oracle())(dd.lsh_tuning_curve)
 
 
 # Oracle for both near-dup cluster queries: transitive closure by
@@ -1667,10 +1465,8 @@ _DEDUP_CLUSTERS_ORACLE = f"""
 # CORRECTNESS_r04.json records "dedup_clusters_star" as an externally
 # checked query, and tests/test_gate_rotation.py requires every such
 # name to stay registered.
-@register("dedup_clusters_star", _DEDUP_CLUSTERS_ORACLE)
-@register("dedup_clusters", _DEDUP_CLUSTERS_ORACLE)
-def q_dedup_clusters(spark, sf_dir):
-    return dd.dedup_clusters(load_table(spark, sf_dir, "documents"))
+register("dedup_clusters", _DEDUP_CLUSTERS_ORACLE)(dd.dedup_clusters)
+register("dedup_clusters_star", _DEDUP_CLUSTERS_ORACLE)(dd.dedup_clusters)
 
 
 # End-to-end near-dup resolution: LSH pairs → star CC → keep the single
@@ -1678,7 +1474,7 @@ def q_dedup_clusters(spark, sf_dir):
 # recursive-CTE closure (== the LSH pair set at this data's similarity
 # margins, argued at minhash_lsh_pairs) with the quality formula, ranking
 # on the rounded score so the keep flag is float-noise-proof.
-@register(
+register(
     "dedup_keep_best",
     f"""
     WITH RECURSIVE
@@ -1731,12 +1527,10 @@ def q_dedup_clusters(spark, sf_dir):
              AS cluster_size
     FROM lab
     """,
-)
-def q_dedup_keep_best(spark, sf_dir):
-    return dd.keep_best_per_cluster(load_table(spark, sf_dir, "documents"))
+)(dd.keep_best_per_cluster)
 
 
-@register(
+register(
     "containment_pairs",
     # Oracle over string grams (the Spark side hashes shingles to
     # xxhash64 — set sizes, and hence containment, are preserved up to
@@ -1757,9 +1551,7 @@ def q_dedup_keep_best(spark, sf_dir):
     SELECT db, da, ROUND(CAST(ni AS DOUBLE) / nb, 6)
     FROM p WHERE CAST(ni AS DOUBLE) / nb >= 0.8
     """,
-)
-def q_containment_pairs(spark, sf_dir):
-    return dd.containment_pairs(load_table(spark, sf_dir, "documents"))
+)(dd.containment_pairs)
 
 
 # Bit votes come from the two 32-bit halves of md5(tok) (hi = hex 1-8 →
@@ -1800,12 +1592,10 @@ _DUCK_SIMHASH = f"""
 """
 
 
-@register("simhash64", _DUCK_SIMHASH)
-def q_simhash64(spark, sf_dir):
-    return dd.simhash64(load_table(spark, sf_dir, "documents"))
+register("simhash64", _DUCK_SIMHASH)(dd.simhash64)
 
 
-@register(
+register(
     "simhash_pairs",
     # Oracle verifies the full pipeline — fingerprints AND the Hamming
     # filter — by brute force (all-pairs is fine at oracle SF); the Spark
@@ -1818,9 +1608,7 @@ def q_simhash64(spark, sf_dir):
       FROM s a JOIN s b ON a.doc_id < b.doc_id
     ) WHERE hamming <= 3
     """,
-)
-def q_simhash_pairs(spark, sf_dir):
-    return dd.simhash_pairs(load_table(spark, sf_dir, "documents"))
+)(dd.simhash_pairs)
 
 
 # ---------------------------------------------------------------------------
@@ -1843,7 +1631,7 @@ _DUCK_COS = """
 """
 
 
-@register(
+register(
     "similarity_topk",
     f"""
     WITH v AS ({_DUCK_VECS}),
@@ -1859,12 +1647,10 @@ _DUCK_COS = """
       FROM scored
     ) WHERE rank <= 10
     """,
-)
-def q_similarity_topk(spark, sf_dir):
-    return sim.cosine_topk(load_table(spark, sf_dir, "embeddings"))
+)(sim.cosine_topk)
 
 
-@register(
+register(
     "similarity_topk_pandas",
     # Same oracle as similarity_topk PLUS the operator's max_queries cap
     # (lowest 1024 vec_ids) so engine and oracle agree at every scale —
@@ -1889,9 +1675,7 @@ def q_similarity_topk(spark, sf_dir):
       FROM scored
     ) WHERE rank <= 10
     """,
-)
-def q_similarity_topk_pandas(spark, sf_dir):
-    return sim.cosine_topk_pandas(load_table(spark, sf_dir, "embeddings"))
+)(sim.cosine_topk_pandas)
 
 
 # "Approximate" means recall@k < 1 vs BRUTE FORCE — but the IVF pipeline
@@ -1899,7 +1683,7 @@ def q_similarity_topk_pandas(spark, sf_dir):
 # assignment with cell_id-desc tie-break, nprobe probe ranking, exact
 # rescoring), so the oracle replays it stage for stage and the output is
 # value-exact. Promoted from rows-only in r5.
-@register(
+register(
     "similarity_ivf_topk",
     f"""
     WITH v0 AS ({_DUCK_VECS}),
@@ -1943,16 +1727,13 @@ def q_similarity_topk_pandas(spark, sf_dir):
       FROM scored
     ) WHERE rank <= 10
     """,
-)
-def q_similarity_ivf_topk(spark, sf_dir):
-    return sim.cosine_ivf_topk(load_table(spark, sf_dir, "embeddings"))
+)(sim.cosine_ivf_topk)
 
 
 @register("similarity_ivf_kmeans_topk")  # trained ANN, approximate → rows-only
-def q_similarity_ivf_kmeans_topk(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = sim.kmeans_centroids(emb, k=24, iters=3)
-    return sim.cosine_ivf_topk(emb, centroids=cents)
+def q_similarity_ivf_kmeans_topk(embeddings):
+    cents = sim.kmeans_centroids(embeddings, k=24, iters=3)
+    return sim.cosine_ivf_topk(embeddings, centroids=cents)
 
 
 def _lsh_oracle_sql(bits: int = 32, bands: int = 4, dim: int = 64) -> str:
@@ -2020,9 +1801,7 @@ def _lsh_oracle_sql(bits: int = 32, bands: int = 4, dim: int = 64) -> str:
     """
 
 
-@register("embedding_lsh_pairs", _lsh_oracle_sql())
-def q_embedding_lsh_pairs(spark, sf_dir):
-    return sim.embedding_lsh_pairs(load_table(spark, sf_dir, "embeddings"))
+register("embedding_lsh_pairs", _lsh_oracle_sql())(sim.embedding_lsh_pairs)
 
 
 def _rp_oracle_sql() -> str:
@@ -2042,15 +1821,13 @@ def _rp_oracle_sql() -> str:
     return f"WITH v AS ({_DUCK_VECS})\n    SELECT vec_id,\n           {sel}\n    FROM v"
 
 
-@register("embedding_rp", _rp_oracle_sql())
-def q_embedding_rp(spark, sf_dir):
-    return sim.random_projection(load_table(spark, sf_dir, "embeddings"))
+register("embedding_rp", _rp_oracle_sql())(sim.random_projection)
 
 
 # Population covariance of the first 16 embedding dims; the oracle takes
 # the self-join road (fine at oracle SF) while the engine expands pair
 # products in-expression to keep the corpus to ONE narrow pass.
-@register(
+register(
     "embedding_covariance",
     f"""
     WITH v AS ({_DUCK_VECS}),
@@ -2067,12 +1844,10 @@ def q_embedding_rp(spark, sf_dir):
              + 0.0 AS cov
     FROM pr GROUP BY i, j
     """,
-)
-def q_embedding_covariance(spark, sf_dir):
-    return sim.embedding_covariance(load_table(spark, sf_dir, "embeddings"))
+)(sim.embedding_covariance)
 
 
-@register(
+register(
     "embedding_neardup_pairs",
     f"""
     WITH v AS ({_DUCK_VECS}),
@@ -2094,9 +1869,7 @@ def q_embedding_covariance(spark, sf_dir):
       FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
     ) WHERE cos >= 0.3
     """,
-)
-def q_embedding_neardup_pairs(spark, sf_dir):
-    return sim.embedding_neardup_pairs(load_table(spark, sf_dir, "embeddings"))
+)(sim.embedding_neardup_pairs)
 
 
 # ---------------------------------------------------------------------------
@@ -2112,7 +1885,7 @@ _DUCK_TOKS = (
 )
 
 
-@register(
+register(
     "text_stats",
     f"""
     SELECT doc_id,
@@ -2127,9 +1900,7 @@ _DUCK_TOKS = (
                  / length(text), 6) AS punct_ratio
     FROM ({_DUCK_TOKS}) WHERE len(toks) > 0
     """,
-)
-def q_text_stats(spark, sf_dir):
-    return ts.text_stats(load_table(spark, sf_dir, "documents"))
+)(ts.text_stats)
 
 
 def _lang_score_sql() -> str:
@@ -2143,7 +1914,7 @@ def _lang_score_sql() -> str:
     return " UNION ALL ".join(unions)
 
 
-@register(
+register(
     "lang_id",
     f"""
     WITH words AS (
@@ -2158,12 +1929,10 @@ def _lang_score_sql() -> str:
       FROM scores
     ) WHERE rn = 1
     """,
-)
-def q_lang_id(spark, sf_dir):
-    return ts.lang_id(load_table(spark, sf_dir, "documents"))
+)(ts.lang_id)
 
 
-@register(
+register(
     "quality_score",
     f"""
     SELECT doc_id,
@@ -2176,12 +1945,10 @@ def q_lang_id(spark, sf_dir):
                         / CAST(length(text) AS DOUBLE)), 6) AS quality
     FROM ({_DUCK_TOKS}) WHERE len(toks) > 0
     """,
-)
-def q_quality_score(spark, sf_dir):
-    return ts.quality_score(load_table(spark, sf_dir, "documents"))
+)(ts.quality_score)
 
 
-@register(
+register(
     "token_count",
     f"""
     SELECT doc_id,
@@ -2193,12 +1960,10 @@ def q_quality_score(spark, sf_dir):
                 AS INTEGER) AS n_distinct_bpe
     FROM documents
     """,
-)
-def q_token_count(spark, sf_dir):
-    return ts.token_count(load_table(spark, sf_dir, "documents"))
+)(ts.token_count)
 
 
-@register(
+register(
     "winnowing_fingerprint",
     """
     SELECT doc_id,
@@ -2208,12 +1973,10 @@ def q_token_count(spark, sf_dir):
            CAST(length(text) - 7 AS INTEGER) AS n_grams
     FROM documents WHERE length(text) >= 8
     """,
-)
-def q_winnowing_fingerprint(spark, sf_dir):
-    return ts.winnowing_fingerprint(load_table(spark, sf_dir, "documents"))
+)(ts.winnowing_fingerprint)
 
 
-@register(
+register(
     "multimodal_integrity",
     """
     SELECT 'text/plain;src=' || source AS media_type,
@@ -2222,9 +1985,7 @@ def q_winnowing_fingerprint(spark, sf_dir):
            COUNT(DISTINCT sha256(text)) AS distinct_payloads
     FROM documents GROUP BY media_type
     """,
-)
-def q_multimodal_integrity(spark, sf_dir):
-    return mm.media_integrity(load_table(spark, sf_dir, "documents"))
+)(mm.media_integrity)
 
 
 _DUCK_CHUNKS = """
@@ -2244,25 +2005,20 @@ _DUCK_CHUNKS = """
 # Python worker pool (the UDTF twin below is kept as the API-surface demo;
 # its r4 driver bench paid a 32.5 s Arrow-UDTF cold start for identical
 # output).
-@register("chunk_documents", _DUCK_CHUNKS)
-def q_chunk_documents(spark, sf_dir):
-    return pl.chunk_documents_sql(load_table(spark, sf_dir, "documents"))
+register("chunk_documents", _DUCK_CHUNKS)(pl.chunk_documents_sql)
 
 
-@register("udtf_chunk_documents", _DUCK_CHUNKS)
-def q_udtf_chunk_documents(spark, sf_dir):
-    return pu.chunk_documents(load_table(spark, sf_dir, "documents"))
+register("udtf_chunk_documents", _DUCK_CHUNKS)(pu.chunk_documents)
 
 
-@register("token_frequency_sketch")  # engine-specific binary → rows-only
-def q_token_frequency_sketch(spark, sf_dir):
-    return ts.token_frequency_sketch(load_table(spark, sf_dir, "documents"))
+# engine-specific binary → rows-only
+register("token_frequency_sketch")(ts.token_frequency_sketch)
 
 
 # Open-implementation CMS twin of token_frequency_sketch: md5 row hashes
 # make the counter matrix and the min-of-d point estimates fully
 # replayable — the oracle rebuilds the identical sketch and probes it.
-@register(
+register(
     "cms_manual_counts",
     """
     WITH toks AS (
@@ -2291,16 +2047,14 @@ def q_token_frequency_sketch(spark, sf_dir):
     FROM cand JOIN counters USING (depth, bucket)
     GROUP BY tok, exact_cnt
     """,
-)
-def q_cms_manual_counts(spark, sf_dir):
-    return sk.cms_estimate_counts(load_table(spark, sf_dir, "documents"))
+)(sk.cms_estimate_counts)
 
 
 # ---------------------------------------------------------------------------
 # Pipeline composition — deterministic splits + end-to-end curation
 # ---------------------------------------------------------------------------
 
-@register(
+register(
     "deterministic_split",
     f"""
     SELECT CASE WHEN substr(sha256(CAST(doc_id AS VARCHAR)), 1, 2) < '{pl.SPLIT_HEX}'
@@ -2308,12 +2062,10 @@ def q_cms_manual_counts(spark, sf_dir):
            lang, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS total_chars
     FROM documents GROUP BY split, lang
     """,
-)
-def q_deterministic_split(spark, sf_dir):
-    return pl.deterministic_split(load_table(spark, sf_dir, "documents"))
+)(pl.deterministic_split)
 
 
-@register(
+register(
     "corpus_curation",
     f"""
     WITH scored AS (
@@ -2340,9 +2092,7 @@ def q_deterministic_split(spark, sf_dir):
            CAST(SUM(CAST(quality AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS avg_quality
     FROM deduped GROUP BY lang
     """,
-)
-def q_corpus_curation(spark, sf_dir):
-    return pl.corpus_curation(load_table(spark, sf_dir, "documents"))
+)(pl.corpus_curation)
 
 
 def _sample_keep_sql() -> str:
@@ -2360,15 +2110,13 @@ def _sample_keep_sql() -> str:
     return " OR ".join(parts)
 
 
-@register(
+register(
     "stratified_sample",
     f"SELECT doc_id, lang, source FROM documents WHERE {_sample_keep_sql()}",
-)
-def q_stratified_sample(spark, sf_dir):
-    return pl.stratified_sample(load_table(spark, sf_dir, "documents"))
+)(pl.stratified_sample)
 
 
-@register(
+register(
     "contamination_check",
     f"""
     WITH g AS ({_DUCK_SHINGLES}),
@@ -2386,12 +2134,10 @@ def q_stratified_sample(spark, sf_dir):
            COUNT(*) AS n_gram_hits
     FROM v JOIN tg USING (gram)
     """,
-)
-def q_contamination_check(spark, sf_dir):
-    return pl.contamination_check(load_table(spark, sf_dir, "documents"))
+)(pl.contamination_check)
 
 
-@register(
+register(
     "snapshot_cdc",
     """
     WITH old AS (
@@ -2414,12 +2160,10 @@ def q_contamination_check(spark, sf_dir):
     FROM old FULL OUTER JOIN new USING (o_orderkey)
     WHERE old_price IS NULL OR new_price IS NULL OR old_price <> new_price
     """,
-)
-def q_snapshot_cdc(spark, sf_dir):
-    return rel.snapshot_cdc(load_table(spark, sf_dir, "orders"))
+)(rel.snapshot_cdc)
 
 
-@register(
+register(
     "events_time_rollup",
     """
     SELECT year(ts) AS yr, month(ts) AS mo, day(ts) AS dy, hour(ts) AS hr,
@@ -2428,9 +2172,7 @@ def q_snapshot_cdc(spark, sf_dir):
     FROM events
     GROUP BY ROLLUP (year(ts), month(ts), day(ts), hour(ts))
     """,
-)
-def q_events_time_rollup(spark, sf_dir):
-    return rel.events_time_rollup(load_table(spark, sf_dir, "events"))
+)(rel.events_time_rollup)
 
 
 @register(
@@ -2449,13 +2191,11 @@ def q_events_time_rollup(spark, sf_dir):
     LIMIT 100
     """,
 )
-def q_weighted_sample_orders(spark, sf_dir):
-    return pl.weighted_sample(
-        load_table(spark, sf_dir, "orders"), "o_orderkey", "o_totalprice", k=100
-    )
+def q_weighted_sample_orders(orders):
+    return pl.weighted_sample(orders, "o_orderkey", "o_totalprice", k=100)
 
 
-@register(
+register(
     "pack_sequences",
     # Same per-shard prefix-sum in SQL: every offset is value-checked.
     """
@@ -2479,11 +2219,7 @@ def q_weighted_sample_orders(spark, sf_dir):
            (c - n_tokens) % 256 AS seq_offset
     FROM p
     """,
-)
-def q_pack_sequences(spark, sf_dir):
-    return pl.pack_sequences(
-        load_table(spark, sf_dir, "documents"), capacity=256, shards=8
-    )
+)(pl.pack_sequences)
 
 
 # KMV bottom-k on the 52-bit md5 basis: u is an exact dyadic double in
@@ -2515,10 +2251,10 @@ def q_pack_sequences(spark, sf_dir):
     ORDER BY o_orderpriority
     """,
 )
-def q_kmv_distinct_custkeys(spark, sf_dir):
-    return sk.kmv_distinct(
-        load_table(spark, sf_dir, "orders"), "o_orderpriority", "o_custkey"
-    ).orderBy("o_orderpriority")
+def q_kmv_distinct_custkeys(orders):
+    return sk.kmv_distinct(orders, "o_orderpriority", "o_custkey").orderBy(
+        "o_orderpriority"
+    )
 
 
 _DUCK_PII_INJECT = """
@@ -2537,7 +2273,7 @@ _DUCK_PII_INJECT = """
 """
 
 
-@register(
+register(
     "pii_redact",
     f"""
     WITH inj AS ({_DUCK_PII_INJECT})
@@ -2552,12 +2288,10 @@ _DUCK_PII_INJECT = """
              '{ts.PII_IPV4}', '[IP]', 'g') AS redacted
     FROM inj
     """,
-)
-def q_pii_redact(spark, sf_dir):
-    return ts.pii_redact(load_table(spark, sf_dir, "documents"))
+)(ts.pii_redact)
 
 
-@register(
+register(
     "passage_dedup",
     """
     WITH toks AS (
@@ -2584,12 +2318,10 @@ def q_pii_redact(spark, sf_dir):
     FROM pas JOIN cnt USING (h)
     GROUP BY doc_id
     """,
-)
-def q_passage_dedup(spark, sf_dir):
-    return dd.passage_dedup(load_table(spark, sf_dir, "documents"))
+)(dd.passage_dedup)
 
 
-@register(
+register(
     "duplicate_spans",
     # Same stride-1 window hashing + gaps-and-islands merge in SQL:
     # every maximal duplicated span's offset and length value-checks.
@@ -2626,12 +2358,10 @@ def q_passage_dedup(spark, sf_dir):
            CAST(MAX(pos) - MIN(pos) + 8 AS INT) AS span_tokens
     FROM isl GROUP BY doc_id, island
     """,
-)
-def q_duplicate_spans(spark, sf_dir):
-    return dd.duplicate_spans(load_table(spark, sf_dir, "documents"))
+)(dd.duplicate_spans)
 
 
-@register(
+register(
     "gopher_repetition",
     """
     WITH toks AS (
@@ -2663,12 +2393,10 @@ def q_duplicate_spans(spark, sf_dir):
            round(CAST(g.top_gram AS DOUBLE) / g.n_bigrams, 6) AS top_bigram_frac
     FROM tokagg t JOIN gramagg g USING (doc_id)
     """,
-)
-def q_gopher_repetition(spark, sf_dir):
-    return ts.gopher_repetition(load_table(spark, sf_dir, "documents"))
+)(ts.gopher_repetition)
 
 
-@register(
+register(
     "inverted_index",
     """
     SELECT term, df, postings_head FROM (
@@ -2681,12 +2409,10 @@ def q_gopher_repetition(spark, sf_dir):
       GROUP BY tok
     ) WHERE df >= 5
     """,
-)
-def q_inverted_index(spark, sf_dir):
-    return ts.inverted_index(load_table(spark, sf_dir, "documents"))
+)(ts.inverted_index)
 
 
-@register(
+register(
     "tfidf_topk",
     """
     WITH tf AS (
@@ -2709,9 +2435,7 @@ def q_inverted_index(spark, sf_dir):
       FROM tf JOIN dfreq USING (term) CROSS JOIN n
     ) WHERE rank <= 3
     """,
-)
-def q_tfidf_topk(spark, sf_dir):
-    return ts.tfidf_topk(load_table(spark, sf_dir, "documents"))
+)(ts.tfidf_topk)
 
 
 # ---------------------------------------------------------------------------
@@ -2721,18 +2445,16 @@ def q_tfidf_topk(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@register(
+register(
     "udf_normalize_text",
     """
     SELECT doc_id, regexp_replace(lower(trim(text)), '[\\s\\x0b]+', ' ', 'g') AS normalized
     FROM documents
     """,
-)
-def q_udf_normalize_text(spark, sf_dir):
-    return pu.normalize_text(load_table(spark, sf_dir, "documents"))
+)(pu.normalize_text)
 
 
-@register(
+register(
     "udf_wordcount_combiner",
     """
     SELECT source, word, COUNT(*) AS cnt
@@ -2743,12 +2465,10 @@ def q_udf_normalize_text(spark, sf_dir):
     WHERE word <> ''
     GROUP BY source, word
     """,
-)
-def q_udf_wordcount_combiner(spark, sf_dir):
-    return pu.wordcount_combiner_pandas(load_table(spark, sf_dir, "documents"))
+)(pu.wordcount_combiner_pandas)
 
 
-@register(
+register(
     "udf_grouped_k_stats",
     """
     SELECT event_type, CAST(SUM(k) AS BIGINT) AS k_sum, COUNT(*) AS n,
@@ -2758,16 +2478,12 @@ def q_udf_wordcount_combiner(spark, sf_dir):
           FROM events)
     GROUP BY event_type
     """,
-)
-def q_udf_grouped_k_stats(spark, sf_dir):
-    return pu.grouped_k_stats(load_table(spark, sf_dir, "events"))
+)(pu.grouped_k_stats)
 
 
 @register("multimodal_features")  # bytes math has no SQL twin → rows-only
-def q_multimodal_features(spark, sf_dir):
-    return mm.media_features(
-        mm.to_multimodal(load_table(spark, sf_dir, "documents"))
-    )
+def q_multimodal_features(documents):
+    return mm.media_features(mm.to_multimodal(documents))
 
 
 # ---------------------------------------------------------------------------
@@ -2779,7 +2495,7 @@ def q_multimodal_features(spark, sf_dir):
 _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
 
-@register(
+register(
     "events_tumbling",
     f"""
     SELECT strftime(time_bucket(INTERVAL '1 hour', ts), '{_TS_FMT_DUCK}') AS window_start,
@@ -2790,12 +2506,10 @@ _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
     FROM events
     GROUP BY time_bucket(INTERVAL '1 hour', ts), event_type
     """,
-)
-def q_events_tumbling(spark, sf_dir):
-    return sw.tumbling_counts(load_table(spark, sf_dir, "events"))
+)(sw.tumbling_counts)
 
 
-@register(
+register(
     "events_sliding",
     f"""
     WITH expanded AS (
@@ -2808,12 +2522,10 @@ def q_events_tumbling(spark, sf_dir):
            COUNT(*) AS cnt
     FROM expanded GROUP BY s
     """,
-)
-def q_events_sliding(spark, sf_dir):
-    return sw.sliding_counts(load_table(spark, sf_dir, "events"))
+)(sw.sliding_counts)
 
 
-@register(
+register(
     "events_session",
     f"""
     WITH seq AS (
@@ -2834,12 +2546,10 @@ def q_events_sliding(spark, sf_dir):
            COUNT(*) AS n_events
     FROM sess GROUP BY user_id, sid
     """,
-)
-def q_events_session(spark, sf_dir):
-    return sw.session_counts(load_table(spark, sf_dir, "events"))
+)(sw.session_counts)
 
 
-@register(
+register(
     "events_distinct_users",
     f"""
     SELECT strftime(time_bucket(INTERVAL '1 hour', ts), '{_TS_FMT_DUCK}')
@@ -2848,26 +2558,20 @@ def q_events_session(spark, sf_dir):
     FROM events
     GROUP BY time_bucket(INTERVAL '1 hour', ts)
     """,
-)
-def q_events_distinct_users(spark, sf_dir):
-    return sw.tumbling_distinct_users(load_table(spark, sf_dir, "events"))
+)(sw.tumbling_distinct_users)
 
 
-@register(
+register(
     "debounce_events",
     f"""
     SELECT DISTINCT user_id, event_type,
            strftime(date_trunc('minute', ts), '{_TS_FMT_DUCK}') AS minute
     FROM events
     """,
-)
-def q_debounce_events(spark, sf_dir):
-    # batch twin of the dropDuplicatesWithinWatermark streaming dedup
-    # (equivalence on finite input pinned in tests/test_streaming.py)
-    return sw.debounced_events(load_table(spark, sf_dir, "events"))
+)(sw.debounced_events)
 
 
-@register(
+register(
     "click_attribution",
     """
     WITH v AS (
@@ -2885,14 +2589,10 @@ def q_debounce_events(spark, sf_dir):
      AND v_ts <= c_ts
      AND v_ts >= c_ts - INTERVAL '10 minutes'
     """,
-)
-def q_click_attribution(spark, sf_dir):
-    # batch twin of the watermarked stream-stream interval join
-    # (row-identity on finite input pinned in tests/test_streaming.py)
-    return sw.click_view_attribution(load_table(spark, sf_dir, "events"))
+)(sw.click_view_attribution)
 
 
-@register(
+register(
     "unigram_surprisal",
     """
     WITH ex AS (
@@ -2916,12 +2616,10 @@ def q_click_attribution(spark, sf_dir):
     FROM ex JOIN v USING (word) CROSS JOIN t
     GROUP BY doc_id
     """,
-)
-def q_unigram_surprisal(spark, sf_dir):
-    return ts.unigram_surprisal(load_table(spark, sf_dir, "documents"))
+)(ts.unigram_surprisal)
 
 
-@register(
+register(
     "bigram_lm",
     """
     WITH t AS (
@@ -2939,16 +2637,14 @@ def q_unigram_surprisal(spark, sf_dir):
            ROUND(cnt / SUM(cnt) OVER (PARTITION BY w1), 6) AS cond_p
     FROM c
     """,
-)
-def q_bigram_lm(spark, sf_dir):
-    return ts.bigram_lm(load_table(spark, sf_dir, "documents"))
+)(ts.bigram_lm)
 
 
 # CCNet-style LM-quality tiers: per-doc mean NLL under the corpus bigram
 # LM (add-one smoothing over corpus vocab), rounded BEFORE the ntile so
 # bucket boundaries can't flip on last-ulp noise. The oracle replays the
 # LM, the smoothing, and the bucketing end to end.
-@register(
+register(
     "perplexity_buckets",
     """
     WITH toked AS (
@@ -2985,12 +2681,10 @@ def q_bigram_lm(spark, sf_dir):
              AS ppl_bucket
     FROM scores
     """,
-)
-def q_perplexity_buckets(spark, sf_dir):
-    return ts.perplexity_buckets(load_table(spark, sf_dir, "documents"))
+)(ts.perplexity_buckets)
 
 
-@register(
+register(
     "collocations_pmi",
     """
     WITH toked AS (
@@ -3018,12 +2712,10 @@ def q_perplexity_buckets(spark, sf_dir):
     ORDER BY pmi DESC, w1, w2
     LIMIT 50
     """,
-)
-def q_collocations_pmi(spark, sf_dir):
-    return ts.collocations_pmi(load_table(spark, sf_dir, "documents"))
+)(ts.collocations_pmi)
 
 
-@register(
+register(
     "char_entropy",
     """
     WITH chars AS (
@@ -3043,24 +2735,20 @@ def q_collocations_pmi(spark, sf_dir):
              AS entropy_bits
     FROM pd GROUP BY doc_id
     """,
-)
-def q_char_entropy(spark, sf_dir):
-    return ts.char_entropy(load_table(spark, sf_dir, "documents"))
+)(ts.char_entropy)
 
 
-@register(
+register(
     "global_row_number",
     """
     SELECT o_orderkey, o_custkey, o_totalprice,
            ROW_NUMBER() OVER (ORDER BY o_orderkey) AS rn
     FROM orders
     """,
-)
-def q_global_row_number(spark, sf_dir):
-    return rel.global_row_number(load_table(spark, sf_dir, "orders"))
+)(rel.global_row_number)
 
 
-@register(
+register(
     "table_profile",
     """
     WITH a AS (
@@ -3092,12 +2780,10 @@ def q_global_row_number(spark, sf_dir):
     UNION ALL
     SELECT 'l_tax', n_rows, t_nulls, t_min, t_max, t_ndv FROM a
     """,
-)
-def q_table_profile(spark, sf_dir):
-    return rel.table_profile(load_table(spark, sf_dir, "lineitem"))
+)(rel.table_profile)
 
 
-@register(
+register(
     "equidepth_histogram",
     """
     WITH b AS (
@@ -3130,12 +2816,10 @@ def q_table_profile(spark, sf_dir):
     )
     GROUP BY bin
     """,
-)
-def q_equidepth_histogram(spark, sf_dir):
-    return rel.equidepth_histogram(load_table(spark, sf_dir, "orders"))
+)(rel.equidepth_histogram)
 
 
-@register(
+register(
     "iqr_outliers",
     """
     WITH b AS (
@@ -3156,12 +2840,10 @@ def q_equidepth_histogram(spark, sf_dir):
     FROM lineitem l JOIN b USING (l_returnflag)
     GROUP BY l.l_returnflag
     """,
-)
-def q_iqr_outliers(spark, sf_dir):
-    return rel.iqr_outliers(load_table(spark, sf_dir, "lineitem"))
+)(rel.iqr_outliers)
 
 
-@register(
+register(
     "chi_square_independence",
     """
     WITH obs AS (
@@ -3185,12 +2867,10 @@ def q_iqr_outliers(spark, sf_dir):
            CAST(MAX(n) AS BIGINT) AS n
     FROM cells
     """,
-)
-def q_chi_square_independence(spark, sf_dir):
-    return rel.chi_square_independence(load_table(spark, sf_dir, "orders"))
+)(rel.chi_square_independence)
 
 
-@register(
+register(
     "skew_report",
     """
     WITH freq AS (
@@ -3210,12 +2890,10 @@ def q_chi_square_independence(spark, sf_dir):
            ROUND(MIN(p99_freq) / MIN(p50_freq), 6) AS p99_p50_ratio
     FROM freq, q
     """,
-)
-def q_skew_report(spark, sf_dir):
-    return rel.skew_report(load_table(spark, sf_dir, "lineitem"))
+)(rel.skew_report)
 
 
-@register(
+register(
     "mad_stats",
     """
     WITH med AS (
@@ -3233,12 +2911,10 @@ def q_skew_report(spark, sf_dir):
            ROUND(quantile_cont(dev, 0.5), 6) AS mad_price
     FROM dev GROUP BY l_returnflag
     """,
-)
-def q_mad_stats(spark, sf_dir):
-    return rel.mad_stats(load_table(spark, sf_dir, "lineitem"))
+)(rel.mad_stats)
 
 
-@register(
+register(
     "regression_by_group",
     """
     WITH a AS (
@@ -3264,12 +2940,10 @@ def q_mad_stats(spark, sf_dir):
                     * CAST(sx AS DOUBLE)) / n, 6) AS intercept
     FROM a
     """,
-)
-def q_regression_by_group(spark, sf_dir):
-    return rel.regression_by_group(load_table(spark, sf_dir, "lineitem"))
+)(rel.regression_by_group)
 
 
-@register(
+register(
     "ohlc_hourly",
     """
     WITH r AS (
@@ -3288,12 +2962,10 @@ def q_regression_by_group(spark, sf_dir):
            COUNT(*) AS n_events
     FROM r GROUP BY bar_hour
     """,
-)
-def q_ohlc_hourly(spark, sf_dir):
-    return rel.ohlc_hourly(load_table(spark, sf_dir, "events"))
+)(rel.ohlc_hourly)
 
 
-@register(
+register(
     "time_weighted_avg",
     """
     WITH seg AS (
@@ -3312,15 +2984,13 @@ def q_ohlc_hourly(spark, sf_dir):
            ROUND(CAST(sv AS DOUBLE) / CAST(st AS DOUBLE), 6) AS twa_value
     FROM agg WHERE st > 0
     """,
-)
-def q_time_weighted_avg(spark, sf_dir):
-    return rel.time_weighted_avg(load_table(spark, sf_dir, "events"))
+)(rel.time_weighted_avg)
 
 
 # EWMA engineered for cross-engine bit-exactness: alpha = 1/2 makes the
 # recurrence's multiply exact, and both engines fold the window-collected
 # array head-seeded left-to-right (see relational.ewma_values).
-@register(
+register(
     "ewma_values",
     """
     SELECT user_id, event_id, value,
@@ -3332,15 +3002,13 @@ def q_time_weighted_avg(spark, sf_dir):
       FROM events
     )
     """,
-)
-def q_ewma_values(spark, sf_dir):
-    return rel.ewma_values(load_table(spark, sf_dir, "events"))
+)(rel.ewma_values)
 
 
 # Exact trailing-21 median per user: bounded frame array, sorted middle
 # element(s) — deterministic under any input order; the even-frame mean
 # is one add + one exact halving.
-@register(
+register(
     "rolling_median",
     """
     SELECT user_id, event_id, value,
@@ -3355,14 +3023,12 @@ def q_ewma_values(spark, sf_dir):
       FROM events
     )
     """,
-)
-def q_rolling_median(spark, sf_dir):
-    return rel.rolling_median(load_table(spark, sf_dir, "events"))
+)(rel.rolling_median)
 
 
 # 2-D skyline via sort, not the O(n^2) dominance self-join the oracle
 # runs — the engine's answer ranks only the price-distinct relation.
-@register(
+register(
     "pareto_front",
     """
     SELECT o.o_orderkey, o.o_totalprice, o.o_orderdate FROM orders o
@@ -3374,12 +3040,10 @@ def q_rolling_median(spark, sf_dir):
              OR q.o_orderdate > o.o_orderdate)
     )
     """,
-)
-def q_pareto_front(spark, sf_dir):
-    return rel.pareto_front(load_table(spark, sf_dir, "orders"))
+)(rel.pareto_front)
 
 
-@register(
+register(
     "concurrency_profile",
     f"""
     WITH d0 AS (
@@ -3407,15 +3071,13 @@ def q_pareto_front(spark, sf_dir):
            CAST(MAX(live) AS INTEGER) AS peak_concurrency
     FROM s GROUP BY date_trunc('hour', t)
     """,
-)
-def q_concurrency_profile(spark, sf_dir):
-    return rel.concurrency_profile(load_table(spark, sf_dir, "events"))
+)(rel.concurrency_profile)
 
 
 # Ordered 3-step funnel with per-step deadlines — each step anchors on
 # min(ts) inside the previous step's window, so no event-by-event join
 # ever forms; the oracle replays the same three anchored aggregations.
-@register(
+register(
     "funnel_sequence",
     """
     WITH v AS (
@@ -3440,15 +3102,13 @@ def q_concurrency_profile(spark, sf_dir):
            (SELECT COUNT(*) FROM c) AS n_clicked,
            (SELECT COUNT(*) FROM p) AS n_purchased
     """,
-)
-def q_funnel_sequence(spark, sf_dir):
-    return rel.funnel_sequence(load_table(spark, sf_dir, "events"))
+)(rel.funnel_sequence)
 
 
 # First-order Markov transition matrix over within-session event pairs —
 # the lag-then-cumsum sessionization and the lead() lookup replay
 # exactly; probabilities are integer-count ratios rounded to 6.
-@register(
+register(
     "markov_transitions",
     """
     WITH o AS (
@@ -3481,15 +3141,13 @@ def q_funnel_sequence(spark, sf_dir):
            ROUND(c / SUM(c) OVER (PARTITION BY cur), 6) AS p
     FROM c
     """,
-)
-def q_markov_transitions(spark, sf_dir):
-    return rel.markov_transitions(load_table(spark, sf_dir, "events"))
+)(rel.markov_transitions)
 
 
 # Keyset pagination must agree row-for-row with OFFSET/LIMIT over the
 # identical total order — the oracle runs the offset scan the seek
 # method exists to avoid.
-@register(
+register(
     "keyset_page",
     """
     SELECT o_orderkey, o_orderdate, o_totalprice
@@ -3497,12 +3155,10 @@ def q_markov_transitions(spark, sf_dir):
     ORDER BY o_orderdate DESC, o_orderkey ASC
     LIMIT 20 OFFSET 40
     """,
-)
-def q_keyset_page(spark, sf_dir):
-    return rel.keyset_page(load_table(spark, sf_dir, "orders"))
+)(rel.keyset_page)
 
 
-@register(
+register(
     "abandoned_views",
     """
     WITH v AS (
@@ -3527,12 +3183,10 @@ def q_keyset_page(spark, sf_dir):
                  / CAST(COUNT(*) AS DOUBLE), 6) AS abandonment_rate
     FROM pv GROUP BY user_id
     """,
-)
-def q_abandoned_views(spark, sf_dir):
-    return rel.abandoned_views(load_table(spark, sf_dir, "events"))
+)(rel.abandoned_views)
 
 
-@register(
+register(
     "dwell_time_stats",
     """
     WITH g AS (
@@ -3547,12 +3201,10 @@ def q_abandoned_views(spark, sf_dir):
            ROUND(quantile_cont(gap_s, 0.9), 6) AS p90_gap_s
     FROM g WHERE gap_s IS NOT NULL GROUP BY event_type
     """,
-)
-def q_dwell_time_stats(spark, sf_dir):
-    return rel.dwell_time_stats(load_table(spark, sf_dir, "events"))
+)(rel.dwell_time_stats)
 
 
-@register(
+register(
     "cohort_matrix",
     """
     WITH uw AS (
@@ -3574,9 +3226,7 @@ def q_dwell_time_stats(spark, sf_dir):
            ROUND(n_active / CAST(cohort_size AS DOUBLE), 6) AS retention
     FROM g JOIN sz USING (cohort_wk)
     """,
-)
-def q_cohort_matrix(spark, sf_dir):
-    return rel.cohort_matrix(load_table(spark, sf_dir, "events"))
+)(rel.cohort_matrix)
 
 
 # Theta-sketch intersection: join-cardinality estimate from two KMV
@@ -3623,16 +3273,11 @@ def q_cohort_matrix(spark, sf_dir):
     SELECT retained, est_overlap, exact_overlap FROM est, ex
     """,
 )
-def q_sketch_join_cardinality(spark, sf_dir):
-    return sk.theta_intersection_estimate(
-        load_table(spark, sf_dir, "orders"),
-        "o_custkey",
-        load_table(spark, sf_dir, "customer"),
-        "c_custkey",
-    )
+def q_sketch_join_cardinality(orders, customer):
+    return sk.theta_intersection_estimate(orders, "o_custkey", customer, "c_custkey")
 
 
-@register(
+register(
     "stratified_fixed_k",
     """
     SELECT doc_id, lang, rk FROM (
@@ -3644,12 +3289,10 @@ def q_sketch_join_cardinality(spark, sf_dir):
       FROM documents
     ) WHERE rk <= 20
     """,
-)
-def q_stratified_fixed_k(spark, sf_dir):
-    return pl.stratified_fixed_k(load_table(spark, sf_dir, "documents"))
+)(pl.stratified_fixed_k)
 
 
-@register(
+register(
     "gap_fill_locf",
     """
     WITH b AS (
@@ -3675,12 +3318,10 @@ def q_stratified_fixed_k(spark, sf_dir):
            h.v IS NOT NULL AS observed
     FROM grid g LEFT JOIN hourly h USING (user_id, hr)
     """,
-)
-def q_gap_fill_locf(spark, sf_dir):
-    return rel.gap_fill_locf(load_table(spark, sf_dir, "events"))
+)(rel.gap_fill_locf)
 
 
-@register(
+register(
     "try_funcs",
     """
     SELECT l_orderkey, l_linenumber,
@@ -3695,12 +3336,10 @@ def q_gap_fill_locf(spark, sf_dir):
                 ELSE 9223372036854775807 END AS add_overflow
     FROM lineitem
     """,
-)
-def q_try_funcs(spark, sf_dir):
-    return rel.try_funcs(load_table(spark, sf_dir, "lineitem"))
+)(rel.try_funcs)
 
 
-@register(
+register(
     "incremental_agg_update",
     """
     SELECT o_orderpriority,
@@ -3712,12 +3351,10 @@ def q_try_funcs(spark, sf_dir):
              AS avg_price
     FROM orders GROUP BY o_orderpriority
     """,
-)
-def q_incremental_agg_update(spark, sf_dir):
-    return rel.incremental_agg_update(load_table(spark, sf_dir, "orders"))
+)(rel.incremental_agg_update)
 
 
-@register(
+register(
     "mixture_weights",
     """
     WITH per_src AS (
@@ -3738,9 +3375,7 @@ def q_incremental_agg_update(spark, sf_dir):
            ROUND(LEAST(1.0, w / wsum * 1000000 / n_tokens), 6) AS sampling_rate
     FROM wtd
     """,
-)
-def q_mixture_weights(spark, sf_dir):
-    return pl.mixture_weights(load_table(spark, sf_dir, "documents"))
+)(pl.mixture_weights)
 
 
 # ---------------------------------------------------------------------------
@@ -3752,7 +3387,7 @@ def q_mixture_weights(spark, sf_dir):
 # Oracle pins percentile_disc/mode BY CONSTRUCTION (explicit cume_dist /
 # count-then-tiebreak windows) rather than trusting DuckDB's tie rules to
 # coincide with Spark's.
-@register(
+register(
     "ordered_set_aggs",
     """
     WITH ranked AS (
@@ -3788,12 +3423,10 @@ def q_mixture_weights(spark, sf_dir):
     JOIN pc   USING (o_orderstatus)
     WHERE pc.rn = 1
     """,
-)
-def q_ordered_set_aggs(spark, sf_dir):
-    return rel.ordered_set_aggs(load_table(spark, sf_dir, "orders"))
+)(rel.ordered_set_aggs)
 
 
-@register(
+register(
     "winsorized_stats",
     """
     WITH b AS (
@@ -3824,12 +3457,10 @@ def q_ordered_set_aggs(spark, sf_dir):
                       / (n - 1)), 6) AS wins_std
     FROM m
     """,
-)
-def q_winsorized_stats(spark, sf_dir):
-    return rel.winsorized_stats(load_table(spark, sf_dir, "lineitem"))
+)(rel.winsorized_stats)
 
 
-@register(
+register(
     "hierarchy_rollup",
     """
     WITH RECURSIVE walk(k, step) AS (
@@ -3841,15 +3472,13 @@ def q_winsorized_stats(spark, sf_dir):
            MIN(k) AS min_key, MAX(k) AS max_key
     FROM walk GROUP BY step
     """,
-)
-def q_hierarchy_rollup(spark, sf_dir):
-    return rel.hierarchy_rollup(spark, load_table(spark, sf_dir, "customer"))
+)(rel.hierarchy_rollup)
 
 
 # The oracle rebuilds each parse_url component with plain string ops —
 # sound because source/lang are alphanumeric (the one encoded char
 # sequence, ' x/', is written out explicitly).
-@register(
+register(
     "url_funcs",
     """
     SELECT doc_id,
@@ -3861,38 +3490,30 @@ def q_hierarchy_rollup(spark, sf_dir):
            source || ' x/' || lang AS dec
     FROM documents
     """,
-)
-def q_url_funcs(spark, sf_dir):
-    return rel.url_funcs(load_table(spark, sf_dir, "documents"))
+)(rel.url_funcs)
 
 
-@register(
+register(
     "bitmap_distinct_users",
     """
     SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_distinct
     FROM events GROUP BY event_type
     """,
-)
-def q_bitmap_distinct_users(spark, sf_dir):
-    return sk.bitmap_distinct(load_table(spark, sf_dir, "events"))
+)(sk.bitmap_distinct)
 
 
-@register(
+register(
     "bitmap_distinct_global",
     """
     SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_distinct_global
     FROM events
     """,
-)
-def q_bitmap_distinct_global(spark, sf_dir):
-    return sk.bitmap_distinct_global(load_table(spark, sf_dir, "events"))
+)(sk.bitmap_distinct_global)
 
 
 # DataSketches HLL estimate — no DuckDB sketch twin → rows-only;
 # accuracy and union-mergeability pinned in tests/test_sketches.py.
-@register("hll_sketch_users")
-def q_hll_sketch_users(spark, sf_dir):
-    return sk.hll_sketch_distinct(load_table(spark, sf_dir, "events"))
+register("hll_sketch_users")(sk.hll_sketch_distinct)
 
 
 _HLL_M = 64
@@ -3905,7 +3526,7 @@ _HLL_ALPHA_M2 = 0.709 * _HLL_M * _HLL_M
 # replayed by the oracle: the b/w bit split, length(bin(x)) bit-length rho,
 # the dyadic-exact register sum (order-independent by construction, see
 # sketches.hll_estimate_manual), and the linear-counting correction branch.
-@register(
+register(
     "hll_manual_users",
     f"""
     WITH h AS (
@@ -3936,16 +3557,14 @@ _HLL_ALPHA_M2 = 0.709 * _HLL_M * _HLL_M
       FROM agg
     )
     """,
-)
-def q_hll_manual_users(spark, sf_dir):
-    return sk.hll_estimate_manual(load_table(spark, sf_dir, "events"))
+)(sk.hll_estimate_manual)
 
 
 # Sliding distinct-users via HLL register max-merge: per-hour registers
 # built once, each trailing 3h window merges 3 bounded register sets —
 # union semantics with no event rescan. Oracle replays registers, the
 # range-join merge, and the corrected estimate.
-@register(
+register(
     "hll_sliding_users",
     f"""
     WITH h AS (
@@ -3982,24 +3601,20 @@ def q_hll_manual_users(spark, sf_dir):
       FROM agg
     )
     """,
-)
-def q_hll_sliding_users(spark, sf_dir):
-    return sk.hll_sliding_users(load_table(spark, sf_dir, "events"))
+)(sk.hll_sliding_users)
 
 
 # k-means assignment has no DuckDB twin → rows-only; planted-duplicate
 # recall, keep-count accounting, and layout-determinism pinned in
 # tests/test_similarity.py.
-@register("semdedup_keep")
-def q_semdedup_keep(spark, sf_dir):
-    return sim.semdedup(load_table(spark, sf_dir, "embeddings"))
+register("semdedup_keep")(sim.semdedup)
 
 
 # Gap arithmetic is integer epoch-seconds (epoch_us // 1e6 == Spark's
 # timestamp->long cast, floor semantics) so the compare is exact; the
 # window SUM is HUGEINT in DuckDB -> CAST. sum_value is a few-element
 # double sum, ROUND(4) absorbs the order-dependence.
-@register(
+register(
     "sessionize_events",
     """
     WITH o AS (
@@ -4026,15 +3641,13 @@ def q_semdedup_keep(spark, sf_dir):
            ROUND(SUM(value), 4) AS sum_value
     FROM s GROUP BY user_id, session_seq
     """,
-)
-def q_sessionize_events(spark, sf_dir):
-    return rel.sessionize_events(load_table(spark, sf_dir, "events"))
+)(rel.sessionize_events)
 
 
 # The rolling stats are computed from integer window sums (Σx, Σx² as
 # BIGINT) so the only float arithmetic is the identical closed-form
 # mean/std/z expression on both sides; is_anomaly tests the ROUNDED z.
-@register(
+register(
     "rolling_anomaly",
     """
     WITH hourly AS (
@@ -4062,9 +3675,7 @@ def q_sessionize_events(spark, sf_dir):
                         / (n_ref - 1)), 6)) > 3.0 AS is_anomaly
     FROM w WHERE n_ref >= 12
     """,
-)
-def q_rolling_anomaly(spark, sf_dir):
-    return rel.rolling_anomaly(load_table(spark, sf_dir, "events"))
+)(rel.rolling_anomaly)
 
 
 def _pagerank_round(prev: str, out: str) -> str:
@@ -4088,7 +3699,7 @@ def _pagerank_round(prev: str, out: str) -> str:
 # rank mass (graph.py) makes the recurrence exact, so DuckDB replays it
 # by unrolling the 3 rounds.  SUM → HUGEINT → CAST, // is floor (all
 # values non-negative, so it matches Spark's truncating div).
-@register(
+register(
     "pagerank_trade",
     f"""
     WITH e0 AS (
@@ -4115,18 +3726,7 @@ def _pagerank_round(prev: str, out: str) -> str:
            rank AS rank_scaled
     FROM r3
     """,
-)
-def q_pagerank_trade(spark, sf_dir):
-    # Measured 4.8 s at sf0.1/local[32] (bench_detail.json r4). Cluster
-    # note: the operator uses eager localCheckpoint per round, which pins
-    # iteration state to executor memory — on a real multi-executor
-    # cluster set a checkpoint dir and switch to reliable checkpoint()
-    # (operators/graph.py docstring) so a lost executor doesn't kill the
-    # lineage-free iteration state.
-    return gr.pagerank(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
+)(gr.pagerank)
 
 
 _DUCK_TRADE_EDGES = """
@@ -4142,7 +3742,7 @@ _DUCK_TRADE_EDGES = """
 """
 
 
-@register(
+register(
     "bfs_trade",
     # Depth-bounded recursive CTE; UNION (not ALL) dedups (node, dist)
     # pairs per level, MIN(dist) recovers the BFS level-synchronous
@@ -4165,17 +3765,10 @@ _DUCK_TRADE_EDGES = """
     FROM reach
     GROUP BY node
     """,
-)
-def q_bfs_trade(spark, sf_dir):
-    return gr.bfs_depths(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-        seed_custkey=1,
-        max_hops=4,
-    )
+)(gr.bfs_depths)
 
 
-@register(
+register(
     "degree_distribution",
     f"""
     WITH
@@ -4189,12 +3782,7 @@ def q_bfs_trade(spark, sf_dir):
            COUNT(*) AS n_nodes
     FROM deg GROUP BY 1, 2
     """,
-)
-def q_degree_distribution(spark, sf_dir):
-    return gr.degree_distribution(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
+)(gr.degree_distribution)
 
 
 # Degree-oriented exact triangle count over the degree-bounded supplier
@@ -4262,10 +3850,8 @@ def q_degree_distribution(spark, sf_dir):
     FROM t
     """,
 )
-def q_triangle_count_suppliers(spark, sf_dir):
-    return gr.triangle_count(
-        gr.supplier_knn_graph(load_table(spark, sf_dir, "lineitem"))
-    )
+def q_triangle_count_suppliers(lineitem):
+    return gr.triangle_count(gr.supplier_knn_graph(lineitem))
 
 
 # ---------------------------------------------------------------------------
@@ -4275,7 +3861,7 @@ def q_triangle_count_suppliers(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@register(
+register(
     "q2_min_cost_supplier",
     """
     WITH regional_supp AS (
@@ -4307,18 +3893,10 @@ def q_triangle_count_suppliers(spark, sf_dir):
     ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
     LIMIT 100
     """,
-)
-def q_q2_min_cost_supplier(spark, sf_dir):
-    return rel.q2_min_cost_supplier(
-        load_table(spark, sf_dir, "part"),
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "region"),
-    )
+)(rel.q2_min_cost_supplier)
 
 
-@register(
+register(
     "q9_product_type_profit",
     """
     SELECT n_name AS nation, year(o_orderdate) AS o_year,
@@ -4335,18 +3913,10 @@ def q_q2_min_cost_supplier(spark, sf_dir):
     JOIN orders ON l_orderkey = o_orderkey
     GROUP BY n_name, year(o_orderdate)
     """,
-)
-def q_q9_product_type_profit(spark, sf_dir):
-    return rel.q9_product_type_profit(
-        load_table(spark, sf_dir, "part"),
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "nation"),
-    )
+)(rel.q9_product_type_profit)
 
 
-@register(
+register(
     "q11_important_stock",
     """
     WITH base AS (
@@ -4364,16 +3934,10 @@ def q_q9_product_type_profit(spark, sf_dir):
           > (SELECT CAST(SUM(part_value) AS DOUBLE) * 0.001 FROM base)
     ORDER BY part_value DESC, p_partkey
     """,
-)
-def q_q11_important_stock(spark, sf_dir):
-    return rel.q11_important_stock(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "nation"),
-    )
+)(rel.q11_important_stock)
 
 
-@register(
+register(
     "q12_latency_priority",
     """
     SELECT CASE WHEN date_diff('day', CAST(o_orderdate AS DATE),
@@ -4389,15 +3953,10 @@ def q_q11_important_stock(spark, sf_dir):
     GROUP BY ship_class
     ORDER BY ship_class
     """,
-)
-def q_q12_latency_priority(spark, sf_dir):
-    return rel.q12_latency_priority(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "orders"),
-    )
+)(rel.q12_latency_priority)
 
 
-@register(
+register(
     "q16_supplier_count",
     """
     SELECT p_brand, p_type, p_size,
@@ -4411,16 +3970,10 @@ def q_q12_latency_priority(spark, sf_dir):
     GROUP BY p_brand, p_type, p_size
     ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
     """,
-)
-def q_q16_supplier_count(spark, sf_dir):
-    return rel.q16_supplier_count(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "part"),
-        load_table(spark, sf_dir, "supplier"),
-    )
+)(rel.q16_supplier_count)
 
 
-@register(
+register(
     "q20_excess_shippers",
     """
     WITH filtered AS (
@@ -4450,14 +4003,7 @@ def q_q16_supplier_count(spark, sf_dir):
     WHERE s_suppkey IN (SELECT l_suppkey FROM excess)
     ORDER BY s_name
     """,
-)
-def q_q20_excess_shippers(spark, sf_dir):
-    return rel.q20_excess_shippers(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "part"),
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "nation"),
-    )
+)(rel.q20_excess_shippers)
 
 
 # ---------------------------------------------------------------------------
@@ -4466,7 +4012,7 @@ def q_q20_excess_shippers(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@register(
+register(
     "ab_test_conversion",
     """
     WITH per_user AS (
@@ -4501,12 +4047,10 @@ def q_q20_excess_shippers(spark, sf_dir):
            ELSE 0.0 END AS z_score
     FROM agg
     """,
-)
-def q_ab_test_conversion(spark, sf_dir):
-    return rel.ab_test_conversion(load_table(spark, sf_dir, "events"))
+)(rel.ab_test_conversion)
 
 
-@register(
+register(
     "fk_integrity",
     """
     SELECT
@@ -4528,18 +4072,10 @@ def q_ab_test_conversion(spark, sf_dir):
         (SELECT o_orderkey FROM orders GROUP BY o_orderkey
          HAVING COUNT(*) > 1)) AS dup_orderkeys
     """,
-)
-def q_fk_integrity(spark, sf_dir):
-    return rel.fk_integrity(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "part"),
-        load_table(spark, sf_dir, "supplier"),
-    )
+)(rel.fk_integrity)
 
 
-@register(
+register(
     "seasonal_hourly",
     """
     WITH hourly AS (
@@ -4560,12 +4096,10 @@ def q_fk_integrity(spark, sf_dir):
                           AS DOUBLE), 6) AS residual
     FROM hourly
     """,
-)
-def q_seasonal_hourly(spark, sf_dir):
-    return rel.seasonal_hourly(load_table(spark, sf_dir, "events"))
+)(rel.seasonal_hourly)
 
 
-@register(
+register(
     "rfm_segments",
     """
     WITH m AS (
@@ -4610,12 +4144,10 @@ def q_seasonal_hourly(spark, sf_dir):
     )
     GROUP BY 1, 2, 3
     """,
-)
-def q_rfm_segments(spark, sf_dir):
-    return rel.rfm_segments(load_table(spark, sf_dir, "orders"))
+)(rel.rfm_segments)
 
 
-@register(
+register(
     "weighted_median_price",
     """
     WITH j AS (
@@ -4637,15 +4169,10 @@ def q_rfm_segments(spark, sf_dir):
     FROM c WHERE 2 * cumw >= total
     GROUP BY p_brand
     """,
-)
-def q_weighted_median_price(spark, sf_dir):
-    return rel.weighted_median_price(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "part"),
-    )
+)(rel.weighted_median_price)
 
 
-@register(
+register(
     "revenue_mom",
     """
     WITH monthly AS (
@@ -4660,12 +4187,10 @@ def q_weighted_median_price(spark, sf_dir):
              AS mom_pct
     FROM monthly
     """,
-)
-def q_revenue_mom(spark, sf_dir):
-    return rel.revenue_mom(load_table(spark, sf_dir, "orders"))
+)(rel.revenue_mom)
 
 
-@register(
+register(
     "market_basket_pairs",
     """
     WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -4682,15 +4207,10 @@ def q_revenue_mom(spark, sf_dir):
     ORDER BY support DESC, part_a, part_b
     LIMIT 50
     """,
-)
-def q_market_basket_pairs(spark, sf_dir):
-    return rel.market_basket_pairs(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "part"),
-    )
+)(rel.market_basket_pairs)
 
 
-@register(
+register(
     "association_rules",
     """
     WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -4727,12 +4247,10 @@ def q_market_basket_pairs(spark, sf_dir):
     ORDER BY lift DESC, antecedent, consequent
     LIMIT 30
     """,
-)
-def q_association_rules(spark, sf_dir):
-    return rel.association_rules(load_table(spark, sf_dir, "lineitem"))
+)(rel.association_rules)
 
 
-@register(
+register(
     "interpurchase_intervals",
     """
     WITH gaps AS (
@@ -4752,12 +4270,7 @@ def q_association_rules(spark, sf_dir):
     WHERE gap_days IS NOT NULL
     GROUP BY c_mktsegment
     """,
-)
-def q_interpurchase_intervals(spark, sf_dir):
-    return rel.interpurchase_intervals(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "customer"),
-    )
+)(rel.interpurchase_intervals)
 
 
 # k-core: the oracle unrolls the peel as repeated CTE rounds (recursive
@@ -4809,7 +4322,7 @@ def _kcore_oracle(k: int, rounds: int) -> str:
     return "".join(parts)
 
 
-@register(
+register(
     "sequence_match_users",
     """
     WITH per_user AS (
@@ -4823,12 +4336,10 @@ def _kcore_oracle(k: int, rounds: int) -> str:
     SELECT matched, CAST(COUNT(*) AS BIGINT) AS n_users
     FROM per_user GROUP BY matched
     """,
-)
-def q_sequence_match_users(spark, sf_dir):
-    return rel.sequence_match_users(load_table(spark, sf_dir, "events"))
+)(rel.sequence_match_users)
 
 
-@register(
+register(
     "psi_drift",
     """
     WITH ref AS (
@@ -4892,12 +4403,10 @@ def q_sequence_match_users(spark, sf_dir):
              AS psi_term
     FROM j
     """,
-)
-def q_psi_drift(spark, sf_dir):
-    return rel.psi_drift(load_table(spark, sf_dir, "orders"))
+)(rel.psi_drift)
 
 
-@register(
+register(
     "multi_touch_attribution",
     """
     WITH purchases AS (
@@ -4926,12 +4435,10 @@ def q_psi_drift(spark, sf_dir):
            CAST(SUM(share) AS DOUBLE) AS attributed_revenue
     FROM shares GROUP BY click_date
     """,
-)
-def q_multi_touch_attribution(spark, sf_dir):
-    return rel.multi_touch_attribution(load_table(spark, sf_dir, "events"))
+)(rel.multi_touch_attribution)
 
 
-@register(
+register(
     "benford_digits",
     """
     WITH c AS (
@@ -4956,9 +4463,7 @@ def q_multi_touch_attribution(spark, sf_dir):
                       OVER () AS DOUBLE), 6) AS chi_square
     FROM t
     """,
-)
-def q_benford_digits(spark, sf_dir):
-    return rel.benford_digits(load_table(spark, sf_dir, "orders"))
+)(rel.benford_digits)
 
 
 @register(
@@ -4986,11 +4491,9 @@ def q_benford_digits(spark, sf_dir):
     LIMIT 25
     """,
 )
-def q_link_prediction_jaccard(spark, sf_dir):
+def q_link_prediction_jaccard(lineitem):
     return gr.link_prediction_jaccard(
-        gr.supplier_cooccurrence_graph(
-            load_table(spark, sf_dir, "lineitem"), min_shared=30
-        )
+        gr.supplier_cooccurrence_graph(lineitem, min_shared=30)
     )
 
 
@@ -5063,7 +4566,7 @@ def _bpe_oracle(n_merges: int, final: str | None = None) -> str:
     return "".join(parts)
 
 
-@register(
+register(
     "readability_scores",
     r"""
     WITH counted AS (
@@ -5086,12 +4589,10 @@ def _bpe_oracle(n_merges: int, final: str | None = None) -> str:
                  - 15.59, 6) AS fk_grade
     FROM counted WHERE n_words > 0
     """,
-)
-def q_readability_scores(spark, sf_dir):
-    return ts.readability_scores(load_table(spark, sf_dir, "documents"))
+)(ts.readability_scores)
 
 
-@register(
+register(
     "bigram_heldout_xent",
     r"""
     WITH toked AS (
@@ -5150,12 +4651,10 @@ def q_readability_scores(spark, sf_dir):
              AS ppl
     FROM agg
     """,
-)
-def q_bigram_heldout_xent(spark, sf_dir):
-    return ts.bigram_heldout_xent(load_table(spark, sf_dir, "documents"))
+)(ts.bigram_heldout_xent)
 
 
-@register(
+register(
     "vocab_growth_curve",
     r"""
     WITH b AS (
@@ -5190,12 +4689,10 @@ def q_bigram_heldout_xent(spark, sf_dir):
                  / LN(CAST(cum_tokens AS DOUBLE)), 6) AS heaps_exponent
     FROM merged
     """,
-)
-def q_vocab_growth_curve(spark, sf_dir):
-    return ts.vocab_growth_curve(load_table(spark, sf_dir, "documents"))
+)(ts.vocab_growth_curve)
 
 
-@register(
+register(
     "watermark_lateness",
     """
     WITH late AS (
@@ -5220,12 +4717,10 @@ def q_vocab_growth_curve(spark, sf_dir):
            CAST(MAX(late_sec) AS BIGINT) AS max_late_sec
     FROM grid GROUP BY delay_sec
     """,
-)
-def q_watermark_lateness(spark, sf_dir):
-    return rel.watermark_lateness(load_table(spark, sf_dir, "events"))
+)(rel.watermark_lateness)
 
 
-@register(
+register(
     "seasonal_decompose",
     """
     WITH g AS (
@@ -5259,12 +4754,10 @@ def q_watermark_lateness(spark, sf_dir):
     FROM det d LEFT JOIN seasonal s
       ON d.event_type = s.event_type AND d.hod = s.hod
     """,
-)
-def q_seasonal_decompose(spark, sf_dir):
-    return rel.seasonal_decompose(load_table(spark, sf_dir, "events"))
+)(rel.seasonal_decompose)
 
 
-@register(
+register(
     "clamped_running_balance",
     """
     WITH keyed AS (
@@ -5301,12 +4794,10 @@ def q_seasonal_decompose(spark, sf_dir):
                 AS BIGINT) AS n_stockout_drains
     FROM balanced GROUP BY l_suppkey
     """,
-)
-def q_clamped_running_balance(spark, sf_dir):
-    return rel.clamped_running_balance(load_table(spark, sf_dir, "lineitem"))
+)(rel.clamped_running_balance)
 
 
-@register(
+register(
     "zipf_fit",
     r"""
     WITH counts AS (
@@ -5361,12 +4852,10 @@ def q_clamped_running_balance(spark, sf_dir):
              AS r2
     FROM m
     """,
-)
-def q_zipf_fit(spark, sf_dir):
-    return ts.zipf_fit(load_table(spark, sf_dir, "documents"))
+)(ts.zipf_fit)
 
 
-@register(
+register(
     "position_attribution",
     """
     WITH purchases AS (
@@ -5407,12 +4896,10 @@ def q_zipf_fit(spark, sf_dir):
            CAST(SUM(share) AS DOUBLE) AS attributed_revenue
     FROM shared GROUP BY 1, 2
     """,
-)
-def q_position_attribution(spark, sf_dir):
-    return rel.position_attribution(load_table(spark, sf_dir, "events"))
+)(rel.position_attribution)
 
 
-@register(
+register(
     "overdispersion_index",
     """
     WITH g AS (
@@ -5447,9 +4934,7 @@ def q_position_attribution(spark, sf_dir):
              AS is_overdispersed
     FROM m
     """,
-)
-def q_overdispersion_index(spark, sf_dir):
-    return rel.overdispersion_index(load_table(spark, sf_dir, "events"))
+)(rel.overdispersion_index)
 
 
 _SEASONAL_DET_SQL = """
@@ -5486,7 +4971,7 @@ _SEASONAL_DET_SQL = """
     )"""
 
 
-@register(
+register(
     "residual_anomaly",
     f"""
     WITH {_SEASONAL_DET_SQL},
@@ -5513,9 +4998,7 @@ _SEASONAL_DET_SQL = """
     ORDER BY ABS(z) DESC, event_type, hour_ts
     LIMIT 10
     """,
-)
-def q_residual_anomaly(spark, sf_dir):
-    return rel.residual_anomaly(load_table(spark, sf_dir, "events"))
+)(rel.residual_anomaly)
 
 
 def _embedding_drift_oracle(dim: int = 64) -> str:
@@ -5560,12 +5043,10 @@ def _embedding_drift_oracle(dim: int = 64) -> str:
     """
 
 
-@register("embedding_drift", _embedding_drift_oracle())
-def q_embedding_drift(spark, sf_dir):
-    return sim.embedding_drift(load_table(spark, sf_dir, "embeddings"))
+register("embedding_drift", _embedding_drift_oracle())(sim.embedding_drift)
 
 
-@register(
+register(
     "top_session_paths",
     """
     WITH marked AS (
@@ -5606,12 +5087,10 @@ def q_embedding_drift(spark, sf_dir):
     ORDER BY n_sessions DESC, path
     LIMIT 20
     """,
-)
-def q_top_session_paths(spark, sf_dir):
-    return rel.top_session_paths(load_table(spark, sf_dir, "events"))
+)(rel.top_session_paths)
 
 
-@register(
+register(
     "langid_confusion",
     f"""
     WITH words AS (
@@ -5639,9 +5118,7 @@ def q_top_session_paths(spark, sf_dir):
            lang = pred_lang AS is_correct
     FROM cells
     """.format(lang_scores=_lang_score_sql()),
-)
-def q_langid_confusion(spark, sf_dir):
-    return ts.langid_confusion(load_table(spark, sf_dir, "documents"))
+)(ts.langid_confusion)
 
 
 _FERTILITY_FINAL = r"""
@@ -5671,19 +5148,15 @@ _FERTILITY_FINAL = r"""
 # Fertility replays the same 10 merge rounds; the per-word token count
 # is read off the final vocab state (word == the symbols concatenated,
 # so no extra column rides through the rounds).
-@register(
+register(
     "tokenizer_fertility", _bpe_oracle(n_merges=10, final=_FERTILITY_FINAL)
-)
-def q_tokenizer_fertility(spark, sf_dir):
-    return ts.tokenizer_fertility(load_table(spark, sf_dir, "documents"))
+)(ts.tokenizer_fertility)
 
 
-@register("bpe_train_merges", _bpe_oracle(n_merges=10))
-def q_bpe_train_merges(spark, sf_dir):
-    return ts.bpe_train(load_table(spark, sf_dir, "documents"), n_merges=10)
+register("bpe_train_merges", _bpe_oracle(n_merges=10))(ts.bpe_train)
 
 
-@register(
+register(
     "bpe_encode_tokens",
     _bpe_oracle(
         n_merges=10,
@@ -5693,14 +5166,10 @@ def q_bpe_train_merges(spark, sf_dir):
     ) GROUP BY token ORDER BY n DESC, token LIMIT 50
     """,
     ),
-)
-def q_bpe_encode_tokens(spark, sf_dir):
-    return ts.bpe_encode_tokens(
-        load_table(spark, sf_dir, "documents"), n_merges=10
-    )
+)(ts.bpe_encode_tokens)
 
 
-@register(
+register(
     "cusum_changepoint",
     """
     WITH daily AS (
@@ -5725,12 +5194,10 @@ def q_bpe_encode_tokens(spark, sf_dir):
            abs(s_raw) = MAX(abs(s_raw)) OVER () AS is_changepoint
     FROM c
     """,
-)
-def q_cusum_changepoint(spark, sf_dir):
-    return rel.cusum_changepoint(load_table(spark, sf_dir, "events"))
+)(rel.cusum_changepoint)
 
 
-@register(
+register(
     "rolling_correlation",
     """
     WITH daily AS (
@@ -5761,9 +5228,7 @@ def q_cusum_changepoint(spark, sf_dir):
                  END, 6) AS rolling_corr
     FROM r
     """,
-)
-def q_rolling_correlation(spark, sf_dir):
-    return rel.rolling_correlation(load_table(spark, sf_dir, "events"))
+)(rel.rolling_correlation)
 
 
 _GRAMS_CTE = r"""
@@ -5779,7 +5244,7 @@ _GRAMS_CTE = r"""
     )"""
 
 
-@register(
+register(
     "dedup_incremental",
     _GRAMS_CTE
     + r""",
@@ -5811,12 +5276,10 @@ _GRAMS_CTE = r"""
       FROM c
     ) WHERE rn = 1
     """,
-)
-def q_dedup_incremental(spark, sf_dir):
-    return dd.dedup_incremental(load_table(spark, sf_dir, "documents"))
+)(dd.dedup_incremental)
 
 
-@register(
+register(
     "tfidf_cosine_pairs",
     r"""
     WITH tf AS (
@@ -5853,12 +5316,10 @@ def q_dedup_incremental(spark, sf_dir):
                 / sqrt(CAST(na.n2 AS DOUBLE) * CAST(nb.n2 AS DOUBLE)), 6)
           >= 0.3
     """,
-)
-def q_tfidf_cosine_pairs(spark, sf_dir):
-    return ts.tfidf_cosine_pairs(load_table(spark, sf_dir, "documents"))
+)(ts.tfidf_cosine_pairs)
 
 
-@register(
+register(
     "fuzzy_blocking_pairs",
     """
     WITH n AS (SELECT DISTINCT p_name FROM part)
@@ -5870,12 +5331,10 @@ def q_tfidf_cosine_pairs(spark, sf_dir):
      AND abs(length(a.p_name) - length(b.p_name)) <= 3
     WHERE levenshtein(a.p_name, b.p_name) <= 3
     """,
-)
-def q_fuzzy_blocking_pairs(spark, sf_dir):
-    return rel.fuzzy_blocking_pairs(load_table(spark, sf_dir, "part"))
+)(rel.fuzzy_blocking_pairs)
 
 
-@register(
+register(
     "clv_cohort",
     """
     WITH po AS (
@@ -5905,12 +5364,10 @@ def q_fuzzy_blocking_pairs(spark, sf_dir):
     WINDOW w AS (PARTITION BY cohort_mo ORDER BY age_months
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
     """,
-)
-def q_clv_cohort(spark, sf_dir):
-    return rel.clv_cohort(load_table(spark, sf_dir, "orders"))
+)(rel.clv_cohort)
 
 
-@register(
+register(
     "personalized_pagerank",
     """
     WITH e0 AS (
@@ -5965,26 +5422,15 @@ def q_clv_cohort(spark, sf_dir):
            rank AS rank_scaled
     FROM r3
     """,
-)
-def q_personalized_pagerank(spark, sf_dir):
-    return gr.personalized_pagerank(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-        seed_custkey=1,
-    )
+)(gr.personalized_pagerank)
 
 
 @register("k_core_suppliers", _kcore_oracle(k=5, rounds=40))
-def q_k_core_suppliers(spark, sf_dir):
-    return gr.k_core(
-        gr.supplier_cooccurrence_graph(
-            load_table(spark, sf_dir, "lineitem"), min_shared=30
-        ),
-        k=5,
-    )
+def q_k_core_suppliers(lineitem):
+    return gr.k_core(gr.supplier_cooccurrence_graph(lineitem, min_shared=30), k=5)
 
 
-@register(
+register(
     "source_overlap",
     """
     WITH st AS (
@@ -6012,12 +5458,10 @@ def q_k_core_suppliers(spark, sf_dir):
     JOIN sizes na ON src_a = na.source
     JOIN sizes nb ON src_b = nb.source
     """,
-)
-def q_source_overlap(spark, sf_dir):
-    return ts.source_overlap(load_table(spark, sf_dir, "documents"))
+)(ts.source_overlap)
 
 
-@register(
+register(
     "degree_assortativity",
     f"""
     WITH {_DUCK_TRADE_EDGES.strip()},
@@ -6048,12 +5492,7 @@ def q_source_overlap(spark, sf_dir):
              AS assortativity
     FROM mom
     """,
-)
-def q_degree_assortativity(spark, sf_dir):
-    return gr.degree_assortativity(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
+)(gr.degree_assortativity)
 
 
 def _pq_isqd(a: str, b: str, sub: int = 8) -> str:
@@ -6309,17 +5748,15 @@ def _ivf_pq_oracle(m: int = 8, sub: int = 8, code_mod: int = 31,
     return "WITH " + ",\n    ".join(ctes) + _PQ_RANKED.format(k=k)
 
 
-@register(
+register(
     "ivf_pq_topk",
     _ivf_pq_oracle(
         max_cells=sim.ANN_MAX_CELLS, max_codes=sim.ANN_MAX_CODES
     ),
-)
-def q_ivf_pq_topk(spark, sf_dir):
-    return sim.ivf_pq_topk(load_table(spark, sf_dir, "embeddings"))
+)(sim.ivf_pq_topk)
 
 
-@register(
+register(
     "revenue_bridge",
     """
     WITH seg AS (
@@ -6348,12 +5785,10 @@ def q_ivf_pq_topk(spark, sf_dir):
            END AS share_of_delta
     FROM d JOIN t ON d.mo = t.mo
     """,
-)
-def q_revenue_bridge(spark, sf_dir):
-    return rel.revenue_bridge(load_table(spark, sf_dir, "orders"))
+)(rel.revenue_bridge)
 
 
-@register(
+register(
     "source_diversity",
     """
     WITH per AS (
@@ -6384,12 +5819,10 @@ def q_revenue_bridge(spark, sf_dir):
            effective_sources
     FROM tot JOIN terms USING (lang)
     """,
-)
-def q_source_diversity(spark, sf_dir):
-    return ts.source_diversity(load_table(spark, sf_dir, "documents"))
+)(ts.source_diversity)
 
 
-@register(
+register(
     "gini_lorenz",
     """
     WITH rev AS (
@@ -6430,12 +5863,10 @@ def q_source_diversity(spark, sf_dir):
                  - CAST(n + 1 AS DOUBLE) / CAST(n AS DOUBLE), 6) AS gini
     FROM cum, tot
     """,
-)
-def q_gini_lorenz(spark, sf_dir):
-    return rel.gini_lorenz(load_table(spark, sf_dir, "orders"))
+)(rel.gini_lorenz)
 
 
-@register(
+register(
     "topn_with_other",
     """
     WITH rev AS (
@@ -6461,13 +5892,7 @@ def q_gini_lorenz(spark, sf_dir):
            CAST(COUNT(*) AS BIGINT) AS n_suppliers
     FROM rk GROUP BY 1, 2, 3
     """,
-)
-def q_topn_with_other(spark, sf_dir):
-    return rel.topn_with_other(
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
+)(rel.topn_with_other)
 
 
 def _register_ann_recall_metrics() -> None:
@@ -6483,7 +5908,7 @@ def _register_ann_recall_metrics() -> None:
         + "))"
     )
 
-    @register(
+    register(
         "ann_recall_metrics",
         f"""
     WITH approx AS (
@@ -6506,9 +5931,7 @@ def _register_ann_recall_metrics() -> None:
                           CAST(0 AS DOUBLE)), 6) AS mrr
     FROM pq
     """,
-    )
-    def q_ann_recall_metrics(spark, sf_dir):
-        return sim.ann_recall_metrics(load_table(spark, sf_dir, "embeddings"))
+    )(sim.ann_recall_metrics)
 
 
 _register_ann_recall_metrics()
@@ -6525,7 +5948,7 @@ def _register_ann_ndcg() -> None:
         + "))"
     )
 
-    @register(
+    register(
         "ann_ndcg",
         f"""
     WITH approx AS (
@@ -6554,9 +5977,7 @@ def _register_ann_ndcg() -> None:
            ROUND(CAST(dcg_d AS DOUBLE) / CAST(idcg_d AS DOUBLE), 6) AS ndcg
     FROM dcg d JOIN idcg USING (query_id)
     """,
-    )
-    def q_ann_ndcg(spark, sf_dir):
-        return sim.ann_ndcg(load_table(spark, sf_dir, "embeddings"))
+    )(sim.ann_ndcg)
 
 
 _register_ann_ndcg()
@@ -6636,12 +6057,10 @@ def _mmr_oracle(k_cand: int = 20, k_out: int = 5) -> str:
     return "".join(parts)
 
 
-@register("mmr_topk", _mmr_oracle())
-def q_mmr_topk(spark, sf_dir):
-    return sim.mmr_topk(load_table(spark, sf_dir, "embeddings"))
+register("mmr_topk", _mmr_oracle())(sim.mmr_topk)
 
 
-@register(
+register(
     "bloom_prefilter",
     """
     WITH members AS (
@@ -6689,15 +6108,10 @@ def q_mmr_topk(spark, sf_dir):
                             CAST(1 AS DOUBLE)), 6) AS fp_rate
     FROM j, nb GROUP BY n_set_bits
     """,
-)
-def q_bloom_prefilter(spark, sf_dir):
-    return sk.bloom_prefilter(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "customer"),
-    )
+)(sk.bloom_prefilter)
 
 
-@register(
+register(
     "cuped_adjustment",
     # Decimal moment sums (exact, order-free) feed double scalar
     # arithmetic with the same expression shapes as the operator.
@@ -6762,12 +6176,10 @@ def q_bloom_prefilter(spark, sf_dir):
                  6) AS var_reduction
     FROM mv, mp
     """,
-)
-def q_cuped_adjustment(spark, sf_dir):
-    return rel.cuped_adjustment(load_table(spark, sf_dir, "events"))
+)(rel.cuped_adjustment)
 
 
-@register(
+register(
     "time_decay_scores",
     # POWER(0.5, age) is dyadic-exact in double, cast to DECIMAL(38,30)
     # exactly for ages <= 30 — so the sum is associative and no fold
@@ -6783,12 +6195,10 @@ def q_cuped_adjustment(spark, sf_dir):
     FROM events, we
     GROUP BY user_id, event_type
     """,
-)
-def q_time_decay_scores(spark, sf_dir):
-    return rel.time_decay_scores(load_table(spark, sf_dir, "events"))
+)(rel.time_decay_scores)
 
 
-@register(
+register(
     "interval_coverage",
     """
     WITH iv AS (
@@ -6828,12 +6238,7 @@ def q_time_decay_scores(spark, sf_dir):
            CAST(MAX(len_days) AS BIGINT) AS max_island_days
     FROM islands GROUP BY l_suppkey
     """,
-)
-def q_interval_coverage(spark, sf_dir):
-    return rel.interval_coverage(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
+)(rel.interval_coverage)
 
 
 def _pq_oracle(m: int = 8, sub: int = 8, code_mod: int = 31,
@@ -6897,12 +6302,10 @@ def _pq_oracle(m: int = 8, sub: int = 8, code_mod: int = 31,
     )
 
 
-@register("pq_topk", _pq_oracle(max_codes=sim.ANN_MAX_CODES))
-def q_pq_topk(spark, sf_dir):
-    return sim.pq_topk(load_table(spark, sf_dir, "embeddings"))
+register("pq_topk", _pq_oracle(max_codes=sim.ANN_MAX_CODES))(sim.pq_topk)
 
 
-@register(
+register(
     "holt_forecast",
     # Recursive CTE replays the α=β=1/2 Holt recurrence step for step
     # (every op a dyadic-exact add/halve — no rounding either side).
@@ -6936,12 +6339,10 @@ def q_pq_topk(spark, sf_dir):
     FROM g LEFT JOIN hs h
       ON g.event_type = h.event_type AND g.rn = h.rn
     """,
-)
-def q_holt_forecast(spark, sf_dir):
-    return rel.holt_forecast(load_table(spark, sf_dir, "events"))
+)(rel.holt_forecast)
 
 
-@register(
+register(
     "textrank_keywords",
     f"""
     WITH t AS (
@@ -6975,12 +6376,10 @@ def q_holt_forecast(spark, sf_dir):
     ORDER BY rank DESC, node
     LIMIT 20
     """,
-)
-def q_textrank_keywords(spark, sf_dir):
-    return ts.textrank_keywords(load_table(spark, sf_dir, "documents"))
+)(ts.textrank_keywords)
 
 
-@register(
+register(
     "kaplan_meier_churn",
     # Replays the life-table grid and the per-step-rounded survival fold
     # (list_reduce with a prepended 1.0 == F.aggregate's 1.0 init) —
@@ -7037,9 +6436,7 @@ def q_textrank_keywords(spark, sf_dir):
            unnest(ss) AS survival
     FROM survs
     """,
-)
-def q_kaplan_meier_churn(spark, sf_dir):
-    return rel.kaplan_meier_churn(load_table(spark, sf_dir, "orders"))
+)(rel.kaplan_meier_churn)
 
 
 def _sssp_oracle(seed_custkey: int, rounds: int) -> str:
@@ -7086,17 +6483,10 @@ def _sssp_oracle(seed_custkey: int, rounds: int) -> str:
     return "".join(parts)
 
 
-@register("sssp_weighted", _sssp_oracle(seed_custkey=1, rounds=4))
-def q_sssp_weighted(spark, sf_dir):
-    return gr.sssp_weighted(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-        seed_custkey=1,
-        n_rounds=4,
-    )
+register("sssp_weighted", _sssp_oracle(seed_custkey=1, rounds=4))(gr.sssp_weighted)
 
 
-@register(
+register(
     "entity_resolution",
     # Oracle: same blocking-join pair predicate as fuzzy_blocking_pairs,
     # closed transitively by recursive CTE (algorithm-independent
@@ -7137,12 +6527,10 @@ def q_sssp_weighted(spark, sf_dir):
     JOIN canon c USING (entity_id)
     JOIN sizes s USING (entity_id)
     """,
-)
-def q_entity_resolution(spark, sf_dir):
-    return rel.entity_resolution(load_table(spark, sf_dir, "part"))
+)(rel.entity_resolution)
 
 
-@register(
+register(
     "hybrid_rrf_topk",
     f"""
     WITH v AS ({_DUCK_VECS}),
@@ -7224,12 +6612,7 @@ def q_entity_resolution(spark, sf_dir):
       FROM fused
     ) WHERE rrf_rank <= 10
     """,
-)
-def q_hybrid_rrf_topk(spark, sf_dir):
-    return sim.hybrid_rrf_topk(
-        load_table(spark, sf_dir, "documents"),
-        load_table(spark, sf_dir, "embeddings"),
-    )
+)(sim.hybrid_rrf_topk)
 
 
 # ---------------------------------------------------------------------------
@@ -7254,7 +6637,7 @@ _MLEVAL_LABELS_SQL = """
     )"""
 
 
-@register(
+register(
     "auc_roc",
     f"""
     WITH {_MLEVAL_LABELS_SQL},
@@ -7284,12 +6667,10 @@ _MLEVAL_LABELS_SQL = """
              AS auc
     FROM scored
     """,
-)
-def q_auc_roc(spark, sf_dir):
-    return ml.auc_roc(load_table(spark, sf_dir, "events"))
+)(ml.auc_roc)
 
 
-@register(
+register(
     "calibration_bins",
     f"""
     WITH {_MLEVAL_LABELS_SQL},
@@ -7310,12 +6691,10 @@ def q_auc_roc(spark, sf_dir):
                  / COUNT(*), 6) AS brier
     FROM scored GROUP BY 1
     """,
-)
-def q_calibration_bins(spark, sf_dir):
-    return ml.calibration_bins(load_table(spark, sf_dir, "events"))
+)(ml.calibration_bins)
 
 
-@register(
+register(
     "mutual_information",
     """
     WITH cells AS (
@@ -7355,12 +6734,10 @@ def q_calibration_bins(spark, sf_dir):
                  / CAST(LEAST(SUM(hx_t), SUM(hy_t)) AS DOUBLE), 6) AS nmi
     FROM terms
     """,
-)
-def q_mutual_information(spark, sf_dir):
-    return ml.mutual_information(load_table(spark, sf_dir, "events"))
+)(ml.mutual_information)
 
 
-@register(
+register(
     "subsample_ci",
     """
     WITH fan AS (
@@ -7395,12 +6772,10 @@ def q_mutual_information(spark, sf_dir):
     SELECT n_orders, point_mean, n_replicates, ci_lo, ci_hi
     FROM point CROSS JOIN band
     """,
-)
-def q_subsample_ci(spark, sf_dir):
-    return ml.subsample_ci(load_table(spark, sf_dir, "orders"))
+)(ml.subsample_ci)
 
 
-@register(
+register(
     "target_encoding",
     """
     WITH j AS (
@@ -7422,15 +6797,10 @@ def q_subsample_ci(spark, sf_dir):
            ROUND(CAST(s AS DOUBLE) / n_rows, 6) AS fold_mean
     FROM grid
     """,
-)
-def q_target_encoding(spark, sf_dir):
-    return pl.target_encoding(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "customer"),
-    )
+)(pl.target_encoding)
 
 
-@register(
+register(
     "scd2_compressed",
     """
     WITH flagged AS (
@@ -7462,16 +6832,14 @@ def q_target_encoding(spark, sf_dir):
                     '%Y-%m-%d') AS valid_to
     FROM intervals
     """,
-)
-def q_scd2_compressed(spark, sf_dir):
-    return rel.scd2_compressed(load_table(spark, sf_dir, "orders"))
+)(rel.scd2_compressed)
 
 
 # The oracle for the MERGE demo is the DIRECT newer snapshot: the Spark
 # plan reconstructs it by applying the CDC delta to the older snapshot
 # (insert/update/delete), so value equality here proves the merge
 # semantics end-to-end, not just the arithmetic.
-@register(
+register(
     "merge_apply_changes",
     """
     WITH c AS (SELECT MAX(CAST(o_orderdate AS DATE)) AS c2 FROM orders)
@@ -7483,9 +6851,7 @@ def q_scd2_compressed(spark, sf_dir):
       AND CAST(o_orderdate AS DATE) <= c2
     GROUP BY o_custkey
     """,
-)
-def q_merge_apply_changes(spark, sf_dir):
-    return rel.merge_apply_changes(load_table(spark, sf_dir, "orders"))
+)(rel.merge_apply_changes)
 
 
 def _hits_half_round(prev: str, raw: str, out: str, src: str, dst: str, score: str) -> str:
@@ -7509,7 +6875,7 @@ def _hits_half_round(prev: str, raw: str, out: str, src: str, dst: str, score: s
 # recurrence (graph.py) makes it exactly replayable, so the oracle
 # unrolls the 2 rounds (4 half-rounds; the trailing hub half-round is
 # dead in the Spark plan and omitted here).
-@register(
+register(
     "hits_ranking",
     f"""
     WITH e AS (
@@ -7522,15 +6888,10 @@ def _hits_half_round(prev: str, raw: str, out: str, src: str, dst: str, score: s
     SELECT s AS s_suppkey, CAST(score AS BIGINT) AS auth_scaled
     FROM a2 ORDER BY score DESC, s LIMIT 20
     """,
-)
-def q_hits_ranking(spark, sf_dir):
-    return gr.hits_ranking(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
+)(gr.hits_ranking)
 
 
-@register(
+register(
     "modularity_nations",
     """
     WITH p AS (
@@ -7573,16 +6934,10 @@ def q_hits_ranking(spark, sf_dir):
            CAST(SUM(qd) OVER () AS DOUBLE) AS modularity
     FROM per JOIN nation ON nk = n_nationkey
     """,
-)
-def q_modularity_nations(spark, sf_dir):
-    return gr.modularity_by_nation(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "nation"),
-    )
+)(gr.modularity_by_nation)
 
 
-@register(
+register(
     "lateral_topn",
     """
     SELECT n_name, c.c_name, c.c_acctbal
@@ -7593,15 +6948,10 @@ def q_modularity_nations(spark, sf_dir):
       ORDER BY c_acctbal DESC, c_name LIMIT 2
     ) AS c
     """,
-)
-def q_lateral_topn(spark, sf_dir):
-    return rel.lateral_topn_per_nation(
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "customer"),
-    )
+)(rel.lateral_topn_per_nation)
 
 
-@register(
+register(
     "running_distinct_types",
     """
     WITH flagged AS (
@@ -7619,12 +6969,10 @@ def q_lateral_topn(spark, sf_dir):
              AS BIGINT) AS distinct_types_so_far
     FROM flagged
     """,
-)
-def q_running_distinct_types(spark, sf_dir):
-    return rel.running_distinct_types(load_table(spark, sf_dir, "events"))
+)(rel.running_distinct_types)
 
 
-@register(
+register(
     "session_bounce_rate",
     """
     WITH marked AS (
@@ -7661,9 +7009,7 @@ def q_running_distinct_types(spark, sf_dir):
              AS mean_events_per_session
     FROM per_sess GROUP BY user_id
     """,
-)
-def q_session_bounce_rate(spark, sf_dir):
-    return rel.session_bounce_rate(load_table(spark, sf_dir, "events"))
+)(rel.session_bounce_rate)
 
 
 # Shared oracle prefix: the degree-bounded supplier kNN co-occurrence
@@ -7738,10 +7084,8 @@ _DUCK_KNN_EDGES = """
     FROM deg LEFT JOIN pn ON pn.v = deg.v
     """,
 )
-def q_clustering_coefficient(spark, sf_dir):
-    return gr.local_clustering_coefficient(
-        gr.supplier_knn_graph(load_table(spark, sf_dir, "lineitem"))
-    )
+def q_clustering_coefficient(lineitem):
+    return gr.local_clustering_coefficient(gr.supplier_knn_graph(lineitem))
 
 
 @register(
@@ -7773,13 +7117,11 @@ def q_clustering_coefficient(spark, sf_dir):
     FROM na ORDER BY aa_score DESC, u, v LIMIT 25
     """,
 )
-def q_adamic_adar(spark, sf_dir):
-    return gr.adamic_adar(
-        gr.supplier_knn_graph(load_table(spark, sf_dir, "lineitem"))
-    )
+def q_adamic_adar(lineitem):
+    return gr.adamic_adar(gr.supplier_knn_graph(lineitem))
 
 
-@register(
+register(
     "rolling_7d_actives",
     """
     WITH du AS MATERIALIZED (
@@ -7796,12 +7138,10 @@ def q_adamic_adar(spark, sf_dir):
            CAST(COUNT(DISTINCT j.day) AS BIGINT) AS days_in_window
     FROM j GROUP BY end_day
     """,
-)
-def q_rolling_7d_actives(spark, sf_dir):
-    return rel.rolling_7d_actives(load_table(spark, sf_dir, "events"))
+)(rel.rolling_7d_actives)
 
 
-@register(
+register(
     "p_chart_errors",
     """
     WITH daily AS (
@@ -7836,12 +7176,10 @@ def q_rolling_7d_actives(spark, sf_dir):
            (p_day > ucl OR p_day < lcl) AS out_of_control
     FROM lim
     """,
-)
-def q_p_chart_errors(spark, sf_dir):
-    return rel.p_chart_errors(load_table(spark, sf_dir, "events"))
+)(rel.p_chart_errors)
 
 
-@register(
+register(
     "joint_histogram",
     """
     WITH cells AS (
@@ -7861,12 +7199,10 @@ def q_p_chart_errors(spark, sf_dir):
              AS expected_share
     FROM cells
     """,
-)
-def q_joint_histogram(spark, sf_dir):
-    return rel.joint_histogram(load_table(spark, sf_dir, "lineitem"))
+)(rel.joint_histogram)
 
 
-@register(
+register(
     "anova_hour_of_day",
     """
     WITH cells AS (
@@ -7915,12 +7251,10 @@ def q_joint_histogram(spark, sf_dir):
                     / CAST(n - k AS DOUBLE)), 6) AS f_stat
     FROM tot
     """,
-)
-def q_anova_hour_of_day(spark, sf_dir):
-    return rel.anova_hour_of_day(load_table(spark, sf_dir, "events"))
+)(rel.anova_hour_of_day)
 
 
-@register(
+register(
     "open_order_age",
     """
     WITH mx AS (SELECT MAX(o_orderdate) AS d_max FROM orders),
@@ -7947,12 +7281,10 @@ def q_anova_hour_of_day(spark, sf_dir):
            p50_age_d, p90_age_d
     FROM stats s JOIN q USING (o_orderstatus)
     """,
-)
-def q_open_order_age(spark, sf_dir):
-    return rel.open_order_age(load_table(spark, sf_dir, "orders"))
+)(rel.open_order_age)
 
 
-@register(
+register(
     "ab_srm_check",
     """
     WITH users AS (SELECT DISTINCT user_id FROM events),
@@ -7986,12 +7318,10 @@ def q_open_order_age(spark, sf_dir):
            chi >= CAST(10.828 AS DECIMAL(18,6)) AS srm_flag
     FROM c
     """,
-)
-def q_ab_srm_check(spark, sf_dir):
-    return rel.ab_srm_check(load_table(spark, sf_dir, "events"))
+)(rel.ab_srm_check)
 
 
-@register(
+register(
     "quantile_shift",
     """
     WITH base AS (
@@ -8015,12 +7345,10 @@ def q_ab_srm_check(spark, sf_dir):
     FROM (SELECT * FROM q WHERE period = 'pre') pre,
          (SELECT * FROM q WHERE period = 'post') post
     """,
-)
-def q_quantile_shift(spark, sf_dir):
-    return rel.quantile_shift(load_table(spark, sf_dir, "orders"))
+)(rel.quantile_shift)
 
 
-@register(
+register(
     "session_depth_hist",
     """
     WITH marked AS (
@@ -8058,12 +7386,10 @@ def q_quantile_shift(spark, sf_dir):
                  6) AS share
     FROM counts
     """,
-)
-def q_session_depth_hist(spark, sf_dir):
-    return rel.session_depth_hist(load_table(spark, sf_dir, "events"))
+)(rel.session_depth_hist)
 
 
-@register(
+register(
     "growth_accounting",
     """
     WITH base AS MATERIALIZED (
@@ -8104,12 +7430,10 @@ def q_session_depth_hist(spark, sf_dir):
              AS quick_ratio
     FROM active a LEFT JOIN churn ON churn.m = a.m
     """,
-)
-def q_growth_accounting(spark, sf_dir):
-    return rel.growth_accounting(load_table(spark, sf_dir, "orders"))
+)(rel.growth_accounting)
 
 
-@register(
+register(
     "dau_mau_stickiness",
     """
     WITH days AS MATERIALIZED (
@@ -8135,12 +7459,10 @@ def q_growth_accounting(spark, sf_dir):
                  / CAST(mau AS DOUBLE), 6) AS stickiness
     FROM pm JOIN mau USING (mo)
     """,
-)
-def q_dau_mau_stickiness(spark, sf_dir):
-    return rel.dau_mau_stickiness(load_table(spark, sf_dir, "events"))
+)(rel.dau_mau_stickiness)
 
 
-@register(
+register(
     "rank_movers",
     """
     WITH rev AS (
@@ -8187,15 +7509,10 @@ def q_dau_mau_stickiness(spark, sf_dir):
     FROM j JOIN part ON p_partkey = j.l_partkey
     ORDER BY ABS(rk_prev - rk_now) DESC, j.l_partkey LIMIT 15
     """,
-)
-def q_rank_movers(spark, sf_dir):
-    return rel.rank_movers(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "part"),
-    )
+)(rel.rank_movers)
 
 
-@register(
+register(
     "spearman_corr",
     """
     WITH hx AS (
@@ -8254,12 +7571,10 @@ def q_rank_movers(spark, sf_dir):
              AS spearman_rho
     FROM m
     """,
-)
-def q_spearman_corr(spark, sf_dir):
-    return rel.spearman_correlation(load_table(spark, sf_dir, "lineitem"))
+)(rel.spearman_correlation)
 
 
-@register(
+register(
     "regression_discontinuity",
     """
     WITH base AS (
@@ -8304,12 +7619,10 @@ def q_spearman_corr(spark, sf_dir):
     FROM sides l, sides r
     WHERE NOT l.right_side AND r.right_side
     """,
-)
-def q_regression_discontinuity(spark, sf_dir):
-    return rel.regression_discontinuity(load_table(spark, sf_dir, "orders"))
+)(rel.regression_discontinuity)
 
 
-@register(
+register(
     "cramers_v",
     """
     WITH obs AS (
@@ -8348,12 +7661,10 @@ def q_regression_discontinuity(spark, sf_dir):
              AS cramers_v
     FROM agg
     """,
-)
-def q_cramers_v(spark, sf_dir):
-    return rel.cramers_v(load_table(spark, sf_dir, "orders"))
+)(rel.cramers_v)
 
 
-@register(
+register(
     "price_elasticity",
     """
     WITH per_part AS (
@@ -8397,12 +7708,7 @@ def q_cramers_v(spark, sf_dir):
                           0), 6) AS r2
     FROM m
     """,
-)
-def q_price_elasticity(spark, sf_dir):
-    return rel.price_elasticity(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "part"),
-    )
+)(rel.price_elasticity)
 
 
 _DUCK_POWERS = ",\n             ".join(
@@ -8411,7 +7717,7 @@ _DUCK_POWERS = ",\n             ".join(
 )
 
 
-@register(
+register(
     "npv_clv",
     f"""
     WITH powers(age, factor) AS (
@@ -8448,12 +7754,7 @@ _DUCK_POWERS = ",\n             ".join(
     FROM per_cust JOIN customer ON c_custkey = o_custkey
     GROUP BY 1
     """,
-)
-def q_npv_clv(spark, sf_dir):
-    return rel.npv_clv(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "customer"),
-    )
+)(rel.npv_clv)
 
 
 def _truss_round(i: int, k: int) -> str:
@@ -8487,13 +7788,11 @@ def _truss_round(i: int, k: int) -> str:
     FROM e8 e JOIN tcn7 c ON c.u = e.src AND c.v = e.dst
     """,
 )
-def q_k_truss(spark, sf_dir):
-    return gr.k_truss(
-        gr.supplier_knn_graph(load_table(spark, sf_dir, "lineitem"))
-    )
+def q_k_truss(lineitem):
+    return gr.k_truss(gr.supplier_knn_graph(lineitem))
 
 
-@register(
+register(
     "time_to_convert",
     """
     WITH sec AS MATERIALIZED (
@@ -8536,12 +7835,10 @@ def q_k_truss(spark, sf_dir):
            ROUND(p99, 6) AS p99_s
     FROM counts, q
     """,
-)
-def q_time_to_convert(spark, sf_dir):
-    return rel.time_to_convert(load_table(spark, sf_dir, "events"))
+)(rel.time_to_convert)
 
 
-@register(
+register(
     "burstiness",
     """
     WITH gaps AS (
@@ -8576,9 +7873,7 @@ def q_time_to_convert(spark, sf_dir):
            ROUND((sig - mu) / NULLIF(sig + mu, 0), 6) AS burstiness
     FROM d
     """,
-)
-def q_burstiness(spark, sf_dir):
-    return rel.user_burstiness(load_table(spark, sf_dir, "events"))
+)(rel.user_burstiness)
 
 
 _XCORR_NUMS = ",\n             ".join(
@@ -8602,7 +7897,7 @@ _XCORR_ROWS = "\n    UNION ALL\n".join(
 )
 
 
-@register(
+register(
     "xcorr_types",
     f"""
     WITH hourly AS (
@@ -8646,12 +7941,10 @@ _XCORR_ROWS = "\n    UNION ALL\n".join(
     )
 {_XCORR_ROWS}
     """,
-)
-def q_xcorr_types(spark, sf_dir):
-    return rel.cross_correlation_types(load_table(spark, sf_dir, "events"))
+)(rel.cross_correlation_types)
 
 
-@register(
+register(
     "market_concentration",
     """
     WITH rev AS (
@@ -8683,16 +7976,10 @@ def q_xcorr_types(spark, sf_dir):
              AS effective_competitors
     FROM share2 GROUP BY 1
     """,
-)
-def q_market_concentration(spark, sf_dir):
-    return rel.market_concentration_hhi(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "nation"),
-    )
+)(rel.market_concentration_hhi)
 
 
-@register(
+register(
     "retention_decay",
     """
     WITH base AS MATERIALIZED (
@@ -8747,12 +8034,10 @@ def q_market_concentration(spark, sf_dir):
            ROUND(0.693147 / -sraw, 6) AS half_life_months
     FROM fit
     """,
-)
-def q_retention_decay(spark, sf_dir):
-    return rel.retention_decay_fit(load_table(spark, sf_dir, "orders"))
+)(rel.retention_decay_fit)
 
 
-@register(
+register(
     "funnel_significance",
     """
     WITH marked AS (
@@ -8830,12 +8115,10 @@ def q_retention_decay(spark, sf_dir):
              AS z
     FROM both_steps
     """,
-)
-def q_funnel_significance(spark, sf_dir):
-    return rel.funnel_significance(load_table(spark, sf_dir, "events"))
+)(rel.funnel_significance)
 
 
-@register(
+register(
     "mde_power",
     """
     WITH per AS (
@@ -8877,12 +8160,10 @@ def q_funnel_significance(spark, sf_dir):
                  6) AS mde_rel
     FROM g
     """,
-)
-def q_mde_power(spark, sf_dir):
-    return rel.mde_power_analysis(load_table(spark, sf_dir, "events"))
+)(rel.mde_power_analysis)
 
 
-@register(
+register(
     "ipw_ate",
     """
     WITH joined AS (
@@ -8926,15 +8207,10 @@ def q_mde_power(spark, sf_dir):
            CAST(SUM(CAST(weighted_term AS DECIMAL(18,6))) AS DOUBLE)
     FROM strata
     """,
-)
-def q_ipw_ate(spark, sf_dir):
-    return rel.ipw_ate(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "customer"),
-    )
+)(rel.ipw_ate)
 
 
-@register(
+register(
     "markov_eval",
     """
     WITH pairs AS (
@@ -8975,12 +8251,10 @@ def q_ipw_ate(spark, sf_dir):
                       AS DOUBLE) / COUNT(*), 6) AS accuracy
     FROM scored GROUP BY 1, 2
     """,
-)
-def q_markov_eval(spark, sf_dir):
-    return rel.markov_next_event_eval(load_table(spark, sf_dir, "events"))
+)(rel.markov_next_event_eval)
 
 
-@register(
+register(
     "diff_in_diff",
     """
     WITH cells AS (
@@ -9018,12 +8292,10 @@ def q_markov_eval(spark, sf_dir):
                       / CAST(n_ctrl_pre AS DOUBLE)), 6) AS did
     FROM wide
     """,
-)
-def q_diff_in_diff(spark, sf_dir):
-    return rel.diff_in_diff(load_table(spark, sf_dir, "orders"))
+)(rel.diff_in_diff)
 
 
-@register(
+register(
     "item_item_cosine",
     """
     WITH po AS MATERIALIZED (
@@ -9049,12 +8321,10 @@ def q_diff_in_diff(spark, sf_dir):
     ORDER BY cosine DESC, part_a, part_b
     LIMIT 25
     """,
-)
-def q_item_item_cosine(spark, sf_dir):
-    return rel.item_item_cosine(load_table(spark, sf_dir, "lineitem"))
+)(rel.item_item_cosine)
 
 
-@register(
+register(
     "jarque_bera",
     """
     WITH pre AS (
@@ -9103,9 +8373,7 @@ def q_item_item_cosine(spark, sf_dir):
                          - 3.0) / 4.0), 6) AS jb_stat
     FROM m
     """,
-)
-def q_jarque_bera(spark, sf_dir):
-    return rel.jarque_bera(load_table(spark, sf_dir, "lineitem"))
+)(rel.jarque_bera)
 
 
 def _pca_round(prev_v: str, k: int) -> str:
@@ -9126,7 +8394,7 @@ def _pca_round(prev_v: str, k: int) -> str:
     )"""
 
 
-@register(
+register(
     "pca_power_iteration",
     f"""
     WITH v AS ({_DUCK_VECS}),
@@ -9171,12 +8439,10 @@ def _pca_round(prev_v: str, k: int) -> str:
            lam.eigenvalue_est
     FROM v3, lam
     """,
-)
-def q_pca_power_iteration(spark, sf_dir):
-    return sim.pca_power_iteration(load_table(spark, sf_dir, "embeddings"))
+)(sim.pca_power_iteration)
 
 
-@register(
+register(
     "cv_fold_metrics",
     """
     WITH base AS MATERIALIZED (
@@ -9235,12 +8501,10 @@ def q_pca_power_iteration(spark, sf_dir):
            ROUND(SQRT(CAST(SUM(r2) AS DOUBLE) / COUNT(*)), 6) AS rmse
     FROM scored GROUP BY fold, n_train, slope, intercept
     """,
-)
-def q_cv_fold_metrics(spark, sf_dir):
-    return ml.cv_fold_metrics(load_table(spark, sf_dir, "lineitem"))
+)(ml.cv_fold_metrics)
 
 
-@register(
+register(
     "conformal_interval",
     """
     WITH base AS MATERIALIZED (
@@ -9305,9 +8569,7 @@ def q_cv_fold_metrics(spark, sf_dir):
              AS coverage
     FROM test
     """,
-)
-def q_conformal_interval(spark, sf_dir):
-    return ml.conformal_interval(load_table(spark, sf_dir, "lineitem"))
+)(ml.conformal_interval)
 
 
 def _entropy_term(c: str, n: str) -> str:
@@ -9320,7 +8582,7 @@ def _entropy_term(c: str, n: str) -> str:
     )
 
 
-@register(
+register(
     "theil_sen_trend",
     """
     WITH monthly AS (
@@ -9364,12 +8626,10 @@ def _entropy_term(c: str, n: str) -> str:
              AS ols_slope
     FROM m, np, med
     """,
-)
-def q_theil_sen_trend(spark, sf_dir):
-    return rel.theil_sen_monthly(load_table(spark, sf_dir, "orders"))
+)(rel.theil_sen_monthly)
 
 
-@register(
+register(
     "stump_split",
     f"""
     WITH hist AS (
@@ -9419,12 +8679,10 @@ def q_theil_sen_trend(spark, sf_dir):
     ORDER BY ig_d DESC, v
     LIMIT 1
     """,
-)
-def q_stump_split(spark, sf_dir):
-    return rel.stump_split_priority(load_table(spark, sf_dir, "orders"))
+)(rel.stump_split_priority)
 
 
-@register(
+register(
     "permutation_test",
     """
     WITH base AS MATERIALIZED (
@@ -9481,9 +8739,7 @@ def q_stump_split(spark, sf_dir):
                  / CAST(e.n_reps_done + 1 AS DOUBLE), 6) AS p_value
     FROM obs o, extreme e
     """,
-)
-def q_permutation_test(spark, sf_dir):
-    return rel.permutation_test_price(load_table(spark, sf_dir, "orders"))
+)(rel.permutation_test_price)
 
 
 # Recursive-CTE replay of the α=β=γ=1/2 Holt-Winters recurrence with
@@ -9538,7 +8794,7 @@ _DUCK_HW_PREFIX = """
     )"""
 
 
-@register(
+register(
     "holt_winters",
     _DUCK_HW_PREFIX
     + """
@@ -9549,12 +8805,10 @@ _DUCK_HW_PREFIX = """
     FROM series s LEFT JOIN rec r
       ON r.event_type = s.event_type AND r.rn = s.rn
     """,
-)
-def q_holt_winters(spark, sf_dir):
-    return rel.holt_winters_daily(load_table(spark, sf_dir, "events"))
+)(rel.holt_winters_daily)
 
 
-@register(
+register(
     "forecast_eval_mase",
     _DUCK_HW_PREFIX
     + """,
@@ -9589,12 +8843,10 @@ def q_holt_winters(spark, sf_dir):
              AS mase
     FROM agg
     """,
-)
-def q_forecast_eval_mase(spark, sf_dir):
-    return rel.forecast_eval_mase(load_table(spark, sf_dir, "events"))
+)(rel.forecast_eval_mase)
 
 
-@register(
+register(
     "hit_rate_at_k",
     """
     WITH po AS MATERIALIZED (
@@ -9643,12 +8895,10 @@ def q_forecast_eval_mase(spark, sf_dir):
                  / CAST((SELECT COUNT(*) FROM held) AS DOUBLE), 6)
              AS hit_rate
     """,
-)
-def q_hit_rate_at_k(spark, sf_dir):
-    return rel.hit_rate_at_k(load_table(spark, sf_dir, "lineitem"))
+)(rel.hit_rate_at_k)
 
 
-@register(
+register(
     "gap_fill_interp",
     """
     WITH hourly AS (
@@ -9707,12 +8957,10 @@ def q_hit_rate_at_k(spark, sf_dir):
                 ELSE 'edge' END AS fill_kind
     FROM micro
     """,
-)
-def q_gap_fill_interp(spark, sf_dir):
-    return rel.gap_fill_interp(load_table(spark, sf_dir, "events"))
+)(rel.gap_fill_interp)
 
 
-@register(
+register(
     "quantile_normalize",
     """
     WITH binned AS (
@@ -9742,12 +8990,10 @@ def q_gap_fill_interp(spark, sf_dir):
                  - CAST(src_mean_d AS DOUBLE), 6) AS shift
     FROM src_mean
     """,
-)
-def q_quantile_normalize(spark, sf_dir):
-    return pl.quantile_normalize_sources(load_table(spark, sf_dir, "documents"))
+)(pl.quantile_normalize_sources)
 
 
-@register(
+register(
     "dq_rule_battery",
     """
     WITH o AS (
@@ -9790,15 +9036,10 @@ def q_quantile_normalize(spark, sf_dir):
              ('lineitem.orderkey_fk', li_n, orphans)
     ) AS r(rule, n_checked, n_violations)
     """,
-)
-def q_dq_rule_battery(spark, sf_dir):
-    return pl.dq_rule_battery(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
+)(pl.dq_rule_battery)
 
 
-@register(
+register(
     "feature_hashing",
     r"""
     WITH vocab AS (
@@ -9829,12 +9070,10 @@ def q_dq_rule_battery(spark, sf_dir):
       FROM b GROUP BY 1
     ) a JOIN top USING (bucket)
     """,
-)
-def q_feature_hashing(spark, sf_dir):
-    return ts.feature_hashing(load_table(spark, sf_dir, "documents"))
+)(ts.feature_hashing)
 
 
-@register(
+register(
     "bm25_topk",
     r"""
     WITH tf AS MATERIALIZED (
@@ -9871,12 +9110,10 @@ def q_feature_hashing(spark, sf_dir):
     FROM per GROUP BY doc_id
     ORDER BY bm25 DESC, doc_id LIMIT 20
     """,
-)
-def q_bm25_topk(spark, sf_dir):
-    return ts.bm25_topk(load_table(spark, sf_dir, "documents"))
+)(ts.bm25_topk)
 
 
-@register(
+register(
     "naive_bayes_langid",
     r"""
     WITH train AS MATERIALIZED (
@@ -9936,12 +9173,10 @@ def q_bm25_topk(spark, sf_dir):
            CAST(COUNT(*) AS BIGINT) AS n_docs
     FROM pred GROUP BY 1, 2
     """,
-)
-def q_naive_bayes_langid(spark, sf_dir):
-    return ts.naive_bayes_langid(load_table(spark, sf_dir, "documents"))
+)(ts.naive_bayes_langid)
 
 
-@register(
+register(
     "ks_test",
     """
     WITH freq AS (
@@ -9976,12 +9211,10 @@ def q_naive_bayes_langid(spark, sf_dir):
                            / CAST(n1 + n2 AS DOUBLE)), 6) AS p_approx
     FROM d
     """,
-)
-def q_ks_test(spark, sf_dir):
-    return rel.ks_test(load_table(spark, sf_dir, "orders"))
+)(rel.ks_test)
 
 
-@register(
+register(
     "mann_whitney",
     """
     WITH freq AS (
@@ -10017,12 +9250,10 @@ def q_ks_test(spark, sf_dir):
              AS z
     FROM m
     """,
-)
-def q_mann_whitney(spark, sf_dir):
-    return rel.mann_whitney_u(load_table(spark, sf_dir, "orders"))
+)(rel.mann_whitney_u)
 
 
-@register(
+register(
     "acf_hourly",
     """
     WITH hourly AS (
@@ -10069,12 +9300,10 @@ def q_mann_whitney(spark, sf_dir):
                                 WHEN 4 THEN n4 WHEN 5 THEN n5 WHEN 6 THEN n6
                                 WHEN 7 THEN n7 ELSE n8 END AS num) AS pick
     """,
-)
-def q_acf_hourly(spark, sf_dir):
-    return rel.acf_hourly_counts(load_table(spark, sf_dir, "events"))
+)(rel.acf_hourly_counts)
 
 
-@register(
+register(
     "sprt_conversion",
     """
     WITH flags AS (
@@ -10114,9 +9343,7 @@ def q_acf_hourly(spark, sf_dir):
     FROM first_cross f
     LEFT JOIN walk2 w ON w.event_id = f.decision_event, last_row l
     """,
-)
-def q_sprt_conversion(spark, sf_dir):
-    return rel.sprt_conversion(load_table(spark, sf_dir, "events"))
+)(rel.sprt_conversion)
 
 
 # ---------------------------------------------------------------------------
@@ -10129,7 +9356,7 @@ def q_sprt_conversion(spark, sf_dir):
 
 
 
-@register(
+register(
     "kl_js_sources",
     r"""
     WITH ex AS (
@@ -10185,12 +9412,10 @@ def q_sprt_conversion(spark, sf_dir):
                  6) AS js_div
     FROM agg
     """,
-)
-def q_kl_js_sources(spark, sf_dir):
-    return ts.kl_js_divergence(load_table(spark, sf_dir, "documents"))
+)(ts.kl_js_divergence)
 
 
-@register(
+register(
     "wilson_ci_types",
     """
     WITH purchasers AS (
@@ -10242,12 +9467,10 @@ def q_kl_js_sources(spark, sf_dir):
                       / CAST(n_users AS DOUBLE)), 6) AS wilson_high
     FROM agg
     """,
-)
-def q_wilson_ci_types(spark, sf_dir):
-    return rel.wilson_ci_types(load_table(spark, sf_dir, "events"))
+)(rel.wilson_ci_types)
 
 
-@register(
+register(
     "lift_gain_deciles",
     """
     WITH labeled AS (
@@ -10279,15 +9502,10 @@ def q_wilson_ci_types(spark, sf_dir):
                     / CAST(SUM(n) OVER () AS DOUBLE)), 6) AS lift
     FROM agg ORDER BY decile
     """,
-)
-def q_lift_gain_deciles(spark, sf_dir):
-    return rel.lift_gain_deciles(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-    )
+)(rel.lift_gain_deciles)
 
 
-@register(
+register(
     "order_lines_hist",
     """
     WITH per_order AS (
@@ -10312,12 +9530,10 @@ def q_lift_gain_deciles(spark, sf_dir):
              AS cum_order_share
     FROM hist ORDER BY n_lines
     """,
-)
-def q_order_lines_hist(spark, sf_dir):
-    return rel.order_lines_hist(load_table(spark, sf_dir, "lineitem"))
+)(rel.order_lines_hist)
 
 
-@register(
+register(
     "user_type_entropy",
     """
     WITH ut AS (
@@ -10339,14 +9555,12 @@ def q_order_lines_hist(spark, sf_dir):
              AS entropy_nats
     FROM per_user
     """,
-)
-def q_user_type_entropy(spark, sf_dir):
-    return rel.user_type_entropy(load_table(spark, sf_dir, "events"))
+)(rel.user_type_entropy)
 
 
 
 
-@register(
+register(
     "ngram_novelty",
     f"""
     WITH g AS ({_DUCK_SHINGLES}),
@@ -10366,12 +9580,10 @@ def q_user_type_entropy(spark, sf_dir):
     FROM inc i LEFT JOIN ref r USING (gram)
     GROUP BY 1
     """,
-)
-def q_ngram_novelty(spark, sf_dir):
-    return ts.ngram_novelty(load_table(spark, sf_dir, "documents"))
+)(ts.ngram_novelty)
 
 
-@register(
+register(
     "ttr_by_lang",
     r"""
     WITH ex AS (
@@ -10396,12 +9608,10 @@ def q_ngram_novelty(spark, sf_dir):
              AS tokens_per_doc
     FROM d JOIN t USING (lang)
     """,
-)
-def q_ttr_by_lang(spark, sf_dir):
-    return ts.ttr_by_lang(load_table(spark, sf_dir, "documents"))
+)(ts.ttr_by_lang)
 
 
-@register(
+register(
     "token_coverage_topk",
     r"""
     WITH vocab AS (
@@ -10438,12 +9648,10 @@ def q_ttr_by_lang(spark, sf_dir):
              AS cov_top1000
     FROM agg
     """,
-)
-def q_token_coverage_topk(spark, sf_dir):
-    return ts.token_coverage_topk(load_table(spark, sf_dir, "documents"))
+)(ts.token_coverage_topk)
 
 
-@register(
+register(
     "dup_rate_by_source",
     """
     SELECT source,
@@ -10454,12 +9662,10 @@ def q_token_coverage_topk(spark, sf_dir):
                    / CAST(COUNT(*) AS DOUBLE), 6) AS dup_rate
     FROM documents GROUP BY 1
     """,
-)
-def q_dup_rate_by_source(spark, sf_dir):
-    return ts.dup_rate_by_source(load_table(spark, sf_dir, "documents"))
+)(ts.dup_rate_by_source)
 
 
-@register(
+register(
     "weekday_seasonality",
     """
     WITH agg AS (
@@ -10479,12 +9685,10 @@ def q_dup_rate_by_source(spark, sf_dir):
                  * CAST(7.0 AS DOUBLE), 6) AS traffic_index
     FROM agg ORDER BY dow
     """,
-)
-def q_weekday_seasonality(spark, sf_dir):
-    return rel.weekday_seasonality(load_table(spark, sf_dir, "orders"))
+)(rel.weekday_seasonality)
 
 
-@register(
+register(
     "abc_classification",
     """
     WITH per_part AS (
@@ -10516,12 +9720,10 @@ def q_weekday_seasonality(spark, sf_dir):
              AS revenue_share
     FROM classed GROUP BY 1 ORDER BY 1
     """,
-)
-def q_abc_classification(spark, sf_dir):
-    return rel.abc_classification(load_table(spark, sf_dir, "lineitem"))
+)(rel.abc_classification)
 
 
-@register(
+register(
     "single_source_risk",
     """
     WITH per_ps AS (
@@ -10554,12 +9756,10 @@ def q_abc_classification(spark, sf_dir):
              p_partkey
     LIMIT 20
     """,
-)
-def q_single_source_risk(spark, sf_dir):
-    return rel.single_source_risk(load_table(spark, sf_dir, "lineitem"))
+)(rel.single_source_risk)
 
 
-@register(
+register(
     "k_anonymity",
     """
     WITH qi AS (
@@ -10579,12 +9779,10 @@ def q_single_source_risk(spark, sf_dir):
                  / CAST(SUM(k) AS DOUBLE), 6) AS at_risk_share
     FROM qi
     """,
-)
-def q_k_anonymity(spark, sf_dir):
-    return rel.k_anonymity(load_table(spark, sf_dir, "customer"))
+)(rel.k_anonymity)
 
 
-@register(
+register(
     "ship_delay_percentiles",
     """
     WITH gaps AS (
@@ -10599,15 +9797,10 @@ def q_k_anonymity(spark, sf_dir):
            ROUND(quantile_cont(delay_days, 0.99), 6) AS p99_days
     FROM gaps GROUP BY 1
     """,
-)
-def q_ship_delay_percentiles(spark, sf_dir):
-    return rel.ship_delay_percentiles(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
+)(rel.ship_delay_percentiles)
 
 
-@register(
+register(
     "repeat_purchase",
     """
     WITH seq AS (
@@ -10642,15 +9835,10 @@ def q_ship_delay_percentiles(spark, sf_dir):
                  / CAST(rev AS DOUBLE), 6) AS repeat_revenue_share
     FROM agg
     """,
-)
-def q_repeat_purchase(spark, sf_dir):
-    return rel.repeat_purchase(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "customer"),
-    )
+)(rel.repeat_purchase)
 
 
-@register(
+register(
     "mg_heavy_hitters",
     r"""
     WITH toks AS MATERIALIZED (
@@ -10664,14 +9852,10 @@ def q_repeat_purchase(spark, sf_dir):
     GROUP BY word, n_total
     HAVING CAST(COUNT(*) AS BIGINT) * 50 > n_total
     """,
-)
-def q_mg_heavy_hitters(spark, sf_dir):
-    return sk.misra_gries_heavy_hitters(
-        load_table(spark, sf_dir, "documents")
-    )
+)(sk.misra_gries_heavy_hitters)
 
 
-@register(
+register(
     "token_budget_waterfill",
     r"""
     WITH avail AS (
@@ -10713,14 +9897,10 @@ def q_mg_heavy_hitters(spark, sf_dir):
                  / CAST(avail_tokens AS DOUBLE), 6) AS epochs
     FROM fill
     """,
-)
-def q_token_budget_waterfill(spark, sf_dir):
-    return pl.token_budget_waterfill(
-        load_table(spark, sf_dir, "documents")
-    )
+)(pl.token_budget_waterfill)
 
 
-@register(
+register(
     "decile_migration",
     """
     WITH spend AS (
@@ -10744,12 +9924,10 @@ def q_token_budget_waterfill(spark, sf_dir):
       ON a.o_custkey = b.o_custkey AND a.yr = 1997 AND b.yr = 1998
     GROUP BY 1, 2
     """,
-)
-def q_decile_migration(spark, sf_dir):
-    return rel.decile_migration(load_table(spark, sf_dir, "orders"))
+)(rel.decile_migration)
 
 
-@register(
+register(
     "embedding_quantization",
     """
     WITH base AS MATERIALIZED (
@@ -10788,14 +9966,10 @@ def q_decile_migration(spark, sf_dir):
            ROUND(sxd / SQRT(sxx * sdd), 6) AS cos_sim
     FROM agg
     """,
-)
-def q_embedding_quantization(spark, sf_dir):
-    return sim.embedding_quantization(
-        load_table(spark, sf_dir, "embeddings")
-    )
+)(sim.embedding_quantization)
 
 
-@register(
+register(
     "ucb_allocation",
     """
     WITH per_arm AS (
@@ -10812,12 +9986,10 @@ def q_embedding_quantization(spark, sf_dir):
                         / CAST(n_pulls AS DOUBLE)), 6) AS ucb_score
     FROM per_arm
     """,
-)
-def q_ucb_allocation(spark, sf_dir):
-    return rel.ucb_allocation(load_table(spark, sf_dir, "events"))
+)(rel.ucb_allocation)
 
 
-@register(
+register(
     "hapax_rate",
     r"""
     WITH freq AS (
@@ -10837,12 +10009,10 @@ def q_ucb_allocation(spark, sf_dir):
                  / CAST(COUNT(*) AS DOUBLE), 6) AS hapax_share
     FROM freq GROUP BY 1
     """,
-)
-def q_hapax_rate(spark, sf_dir):
-    return ts.hapax_rate(load_table(spark, sf_dir, "documents"))
+)(ts.hapax_rate)
 
 
-@register(
+register(
     "class_separability",
     """
     WITH base AS MATERIALIZED (
@@ -10879,12 +10049,10 @@ def q_hapax_rate(spark, sf_dir):
            ROUND(dist2 / within, 6) AS fisher_ratio
     FROM pairs
     """,
-)
-def q_class_separability(spark, sf_dir):
-    return ml.class_separability(load_table(spark, sf_dir, "embeddings"))
+)(ml.class_separability)
 
 
-@register(
+register(
     "int8_recall",
     """
     WITH v AS MATERIALIZED (
@@ -10944,9 +10112,7 @@ def q_class_separability(spark, sf_dir):
            ROUND(CAST(MIN(hit) AS DOUBLE) / 10.0, 6) AS min_recall_at_k
     FROM hits
     """,
-)
-def q_int8_recall(spark, sf_dir):
-    return sim.int8_recall(load_table(spark, sf_dir, "embeddings"))
+)(sim.int8_recall)
 
 
 
@@ -10993,7 +10159,7 @@ def _hll_est_cte(name, src_sql):
     """
 
 
-@register(
+register(
     "hll_set_ops",
     f"""
     WITH {_HLL_REGS_2TYPE},
@@ -11025,12 +10191,10 @@ def _hll_est_cte(name, src_sql):
              AS rel_err_intersect
     FROM exact, ea, eb, eu
     """,
-)
-def q_hll_set_ops(spark, sf_dir):
-    return sk.hll_set_ops(load_table(spark, sf_dir, "events"))
+)(sk.hll_set_ops)
 
 
-@register(
+register(
     "return_rate_by_brand",
     """
     SELECT p_brand,
@@ -11052,15 +10216,10 @@ def q_hll_set_ops(spark, sf_dir):
     FROM lineitem JOIN part ON l_partkey = p_partkey
     GROUP BY 1
     """,
-)
-def q_return_rate_by_brand(spark, sf_dir):
-    return rel.return_rate_by_brand(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "part"),
-    )
+)(rel.return_rate_by_brand)
 
 
-@register(
+register(
     "segment_spend_outliers",
     """
     WITH per_cust AS (
@@ -11086,15 +10245,10 @@ def q_return_rate_by_brand(spark, sf_dir):
     FROM per_cust p JOIN q USING (c_mktsegment)
     GROUP BY 1
     """,
-)
-def q_segment_spend_outliers(spark, sf_dir):
-    return rel.segment_spend_outliers(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "customer"),
-    )
+)(rel.segment_spend_outliers)
 
 
-@register(
+register(
     "discount_curve",
     """
     WITH agg AS (
@@ -11114,12 +10268,10 @@ def q_segment_spend_outliers(spark, sf_dir):
                  6) AS revenue_share
     FROM agg ORDER BY discount_pct
     """,
-)
-def q_discount_curve(spark, sf_dir):
-    return rel.discount_curve(load_table(spark, sf_dir, "lineitem"))
+)(rel.discount_curve)
 
 
-@register(
+register(
     "sla_trend",
     """
     SELECT year(o_orderdate) AS yr, month(o_orderdate) AS mo,
@@ -11135,15 +10287,10 @@ def q_discount_curve(spark, sf_dir):
     FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     GROUP BY 1, 2
     """,
-)
-def q_sla_trend(spark, sf_dir):
-    return rel.sla_trend(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
+)(rel.sla_trend)
 
 
-@register(
+register(
     "duplicate_orders",
     """
     SELECT o_custkey,
@@ -11157,12 +10304,10 @@ def q_sla_trend(spark, sf_dir):
     GROUP BY o_custkey, o_orderdate
     HAVING COUNT(*) > 1
     """,
-)
-def q_duplicate_orders(spark, sf_dir):
-    return rel.duplicate_orders(load_table(spark, sf_dir, "orders"))
+)(rel.duplicate_orders)
 
 
-@register(
+register(
     "session_type_lift",
     """
     WITH sec AS (
@@ -11216,12 +10361,10 @@ def q_duplicate_orders(spark, sf_dir):
     JOIN singles sb ON sb.event_type = type_b
     CROSS JOIN n
     """,
-)
-def q_session_type_lift(spark, sf_dir):
-    return rel.session_type_lift(load_table(spark, sf_dir, "events"))
+)(rel.session_type_lift)
 
 
-@register(
+register(
     "token_drift_movers",
     r"""
     WITH ex AS (
@@ -11255,12 +10398,10 @@ def q_session_type_lift(spark, sf_dir):
     ORDER BY ABS(sn - sr) DESC, word
     LIMIT 20
     """,
-)
-def q_token_drift_movers(spark, sf_dir):
-    return ts.token_drift_movers(load_table(spark, sf_dir, "documents"))
+)(ts.token_drift_movers)
 
 
-@register(
+register(
     "triplet_margin",
     """
     WITH v AS MATERIALIZED (
@@ -11320,12 +10461,10 @@ def q_token_drift_movers(spark, sf_dir):
              AS mean_margin
     FROM staged GROUP BY 1
     """,
-)
-def q_triplet_margin(spark, sf_dir):
-    return ml.triplet_margin(load_table(spark, sf_dir, "embeddings"))
+)(ml.triplet_margin)
 
 
-@register(
+register(
     "chisq_uniform_props",
     """
     WITH buckets AS (
@@ -11349,12 +10488,10 @@ def q_triplet_margin(spark, sf_dir):
            CAST(SUM(tq) AS DOUBLE) > 16.919 AS reject_uniform_5pct
     FROM staged
     """,
-)
-def q_chisq_uniform_props(spark, sf_dir):
-    return rel.chisq_uniform_props(load_table(spark, sf_dir, "events"))
+)(rel.chisq_uniform_props)
 
 
-@register(
+register(
     "shapley_attribution",
     """
     WITH ch AS (
@@ -11419,9 +10556,7 @@ def q_chisq_uniform_props(spark, sf_dir):
     SELECT channel, ROUND(CAST(SUM(term) AS DOUBLE), 6) AS shapley_credit
     FROM terms GROUP BY channel
     """,
-)
-def q_shapley_attribution(spark, sf_dir):
-    return rel.shapley_attribution(load_table(spark, sf_dir, "events"))
+)(rel.shapley_attribution)
 
 
 def _lgd_round(prev: str, k: int) -> str:
@@ -11449,7 +10584,7 @@ def _lgd_round(prev: str, k: int) -> str:
     )"""
 
 
-@register(
+register(
     "logistic_gd",
     f"""
     WITH lgd_feat AS (
@@ -11478,12 +10613,10 @@ def _lgd_round(prev: str, k: int) -> str:
            CAST(COUNT(*) AS BIGINT) AS n
     FROM fit GROUP BY w0, w1, w2
     """,
-)
-def q_logistic_gd(spark, sf_dir):
-    return ml.logistic_gd(load_table(spark, sf_dir, "orders"))
+)(ml.logistic_gd)
 
 
-@register(
+register(
     "ols_normal_equations",
     f"""
     WITH per_order AS (
@@ -11535,15 +10668,10 @@ def q_logistic_gd(spark, sf_dir):
            n
     FROM fit GROUP BY beta0, beta_lines, beta_qty, n
     """,
-)
-def q_ols_normal_equations(spark, sf_dir):
-    return ml.ols_normal_equations(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
+)(ml.ols_normal_equations)
 
 
-@register(
+register(
     "boilerplate_ngrams",
     r"""
     WITH tk AS (
@@ -11602,24 +10730,20 @@ def q_ols_normal_equations(spark, sf_dir):
            a.avg_boiler_share
     FROM agg a LEFT JOIN nb USING (source)
     """,
-)
-def q_boilerplate_ngrams(spark, sf_dir):
-    return ts.boilerplate_ngrams(load_table(spark, sf_dir, "documents"))
+)(ts.boilerplate_ngrams)
 
 
-@register(
+register(
     "minute_dedup_events",
     """
     SELECT DISTINCT user_id, event_type,
            strftime(date_trunc('minute', ts), '%Y-%m-%d %H:%M:%S') AS minute
     FROM events
     """,
-)
-def q_minute_dedup_events(spark, sf_dir):
-    return sw.minute_deduped_events(load_table(spark, sf_dir, "events"))
+)(sw.minute_deduped_events)
 
 
-@register(
+register(
     "silhouette_by_label",
     f"""
     WITH v AS ({_DUCK_VECS}),
@@ -11658,12 +10782,10 @@ def q_minute_dedup_events(spark, sf_dir):
              AS mean_silhouette
     FROM s GROUP BY label
     """,
-)
-def q_silhouette_by_label(spark, sf_dir):
-    return ml.silhouette_by_label(load_table(spark, sf_dir, "embeddings"))
+)(ml.silhouette_by_label)
 
 
-@register(
+register(
     "davies_bouldin",
     f"""
     WITH v AS ({_DUCK_VECS}),
@@ -11705,12 +10827,10 @@ def q_silhouette_by_label(spark, sf_dir):
            MAX(r) AS db_component
     FROM r GROUP BY li
     """,
-)
-def q_davies_bouldin(spark, sf_dir):
-    return ml.davies_bouldin(load_table(spark, sf_dir, "embeddings"))
+)(ml.davies_bouldin)
 
 
-@register(
+register(
     "trigram_lm",
     r"""
     WITH tk AS (
@@ -11758,9 +10878,7 @@ def q_davies_bouldin(spark, sf_dir):
              AS interp_p
     FROM c3x JOIN c2x USING (w2, w3) JOIN c1 USING (w3), nn
     """,
-)
-def q_trigram_lm(spark, sf_dir):
-    return ts.trigram_lm(load_table(spark, sf_dir, "documents"))
+)(ts.trigram_lm)
 
 
 def _gbs_round(k: int) -> str:
@@ -11811,7 +10929,7 @@ def _gbs_round(k: int) -> str:
     )"""
 
 
-@register(
+register(
     "gbm_stumps",
     f"""
     WITH per_line AS (
@@ -11839,15 +10957,10 @@ def _gbs_round(k: int) -> str:
     UNION ALL
     SELECT CAST(3 AS BIGINT), bf, bt, addl, addr, mse FROM b3, e3
     """,
-)
-def q_gbm_stumps(spark, sf_dir):
-    return ml.gbm_stumps(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
+)(ml.gbm_stumps)
 
 
-@register(
+register(
     "isotonic_calibration",
     f"""
     WITH {_MLEVAL_LABELS_SQL},
@@ -11890,12 +11003,10 @@ def q_gbm_stumps(spark, sf_dir):
            iso.iso_rate
     FROM pref p JOIN iso ON p.score = iso.si
     """,
-)
-def q_isotonic_calibration(spark, sf_dir):
-    return ml.isotonic_calibration(load_table(spark, sf_dir, "events"))
+)(ml.isotonic_calibration)
 
 
-@register(
+register(
     "eb_shrunk_return_rates",
     """
     WITH rated AS (
@@ -11931,15 +11042,10 @@ def q_isotonic_calibration(spark, sf_dir):
              AS shrunk_rate
     FROM rated, prior2
     """,
-)
-def q_eb_shrunk_return_rates(spark, sf_dir):
-    return rel.eb_shrunk_return_rates(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "part"),
-    )
+)(rel.eb_shrunk_return_rates)
 
 
-@register(
+register(
     "landmark_bfs",
     # Four depth-bounded recursive BFS replayed as ONE recursive CTE
     # seeded with (node, landmark) pairs; MIN(dist) per (node, lm)
@@ -11982,15 +11088,10 @@ def q_eb_shrunk_return_rates(spark, sf_dir):
                         ELSE 0.0 END, 6) AS harmonic
     FROM piv
     """,
-)
-def q_landmark_bfs(spark, sf_dir):
-    return gr.landmark_bfs(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
+)(gr.landmark_bfs)
 
 
-@register(
+register(
     "croston_intermittent",
     """
     WITH daily AS (
@@ -12024,15 +11125,10 @@ def q_landmark_bfs(spark, sf_dir):
            ROUND(z / p, 6) AS demand_rate
     FROM f
     """,
-)
-def q_croston_intermittent(spark, sf_dir):
-    return rel.croston_intermittent(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
+)(rel.croston_intermittent)
 
 
-@register(
+register(
     "matrix_profile_hourly",
     """
     WITH counted AS (
@@ -12093,9 +11189,7 @@ def q_croston_intermittent(spark, sf_dir):
            discord_i, discord_dist
     FROM motif m JOIN discord USING (event_type)
     """,
-)
-def q_matrix_profile_hourly(spark, sf_dir):
-    return rel.matrix_profile_hourly(load_table(spark, sf_dir, "events"))
+)(rel.matrix_profile_hourly)
 
 
 def _corr_oracle() -> str:
@@ -12136,12 +11230,10 @@ def _corr_oracle() -> str:
     )
 
 
-@register("correlation_matrix", _corr_oracle())
-def q_correlation_matrix(spark, sf_dir):
-    return rel.correlation_matrix(load_table(spark, sf_dir, "lineitem"))
+register("correlation_matrix", _corr_oracle())(rel.correlation_matrix)
 
 
-@register(
+register(
     "mann_kendall_trend",
     """
     WITH daily AS (
@@ -12175,9 +11267,7 @@ def q_correlation_matrix(spark, sf_dir):
     )
     SELECT n, s, var_s, z, ABS(z) > 1.96 AS trending_5pct FROM zed
     """,
-)
-def q_mann_kendall_trend(spark, sf_dir):
-    return rel.mann_kendall_trend(load_table(spark, sf_dir, "orders"))
+)(rel.mann_kendall_trend)
 
 
 def _mra_round(k: int) -> str:
@@ -12198,7 +11288,7 @@ def _mra_round(k: int) -> str:
     )"""
 
 
-@register(
+register(
     "markov_removal_attribution",
     """
     WITH o AS (
@@ -12286,9 +11376,7 @@ def _mra_round(k: int) -> str:
                  / NULLIF(CAST(f.vf AS DOUBLE), 0.0), 6) AS removal_effect
     FROM starts s, fullv f WHERE s.variant <> '__full__'
     """,
-)
-def q_markov_removal_attribution(spark, sf_dir):
-    return rel.markov_removal_attribution(load_table(spark, sf_dir, "events"))
+)(rel.markov_removal_attribution)
 
 
 def _dbscan_oracle_sql(
@@ -12499,12 +11587,10 @@ def _dbscan_oracle_sql(
     """
 
 
-@register("dbscan_embeddings", _dbscan_oracle_sql())
-def q_dbscan_embeddings(spark, sf_dir):
-    return sim.dbscan_embeddings(load_table(spark, sf_dir, "embeddings"))
+register("dbscan_embeddings", _dbscan_oracle_sql())(sim.dbscan_embeddings)
 
 
-@register(
+register(
     "dbscan_density_probe",
     f"""
     WITH v AS ({_DUCK_VECS}),
@@ -12553,9 +11639,7 @@ def q_dbscan_embeddings(spark, sf_dir):
     FROM blkn b JOIN sampn s USING (label)
     LEFT JOIN probe p USING (label)
     """,
-)
-def q_dbscan_density_probe(spark, sf_dir):
-    return sim.dbscan_density_probe(load_table(spark, sf_dir, "embeddings"))
+)(sim.dbscan_density_probe)
 
 
 
@@ -12577,7 +11661,7 @@ QUAL = ("round({w_len} * least(1.0, CAST(len(toks) AS DOUBLE) / 100.0)"
         " '[A-Za-z0-9\\s\\x0b]', '', 'g')) AS DOUBLE)"
         " / CAST(length(text) AS DOUBLE)), 6)")
 
-@register(
+register(
     "gopher_quality_flags",
     f"""
     WITH t AS ({_DUCK_TOKS}),
@@ -12624,12 +11708,10 @@ QUAL = ("round({w_len} * least(1.0, CAST(len(toks) AS DOUBLE) / 100.0)"
                  / CAST(COUNT(*) AS DOUBLE), 6) AS pass_rate
     FROM f GROUP BY source
     """.replace("{_GS}", _GOPHER_STOPS_SQL),
-)
-def q_gopher_quality_flags(spark, sf_dir):
-    return ts.gopher_quality_flags(load_table(spark, sf_dir, "documents"))
+)(ts.gopher_quality_flags)
 
 
-@register(
+register(
     "vocab_overlap_sources",
     """
     WITH v AS (
@@ -12653,12 +11735,10 @@ def q_gopher_quality_flags(spark, sf_dir):
     JOIN sz sa ON sa.source = inter.source_a
     JOIN sz sb ON sb.source = inter.source_b
     """,
-)
-def q_vocab_overlap_sources(spark, sf_dir):
-    return ts.vocab_overlap_sources(load_table(spark, sf_dir, "documents"))
+)(ts.vocab_overlap_sources)
 
 
-@register(
+register(
     "corpus_datasheet",
     f"""
     WITH t AS ({_DUCK_TOKS}),
@@ -12698,12 +11778,10 @@ def q_vocab_overlap_sources(spark, sf_dir):
     FROM base b JOIN dups d USING (source)
     GROUP BY b.source
     """,
-)
-def q_corpus_datasheet(spark, sf_dir):
-    return ts.corpus_datasheet(load_table(spark, sf_dir, "documents"))
+)(ts.corpus_datasheet)
 
 
-@register(
+register(
     "cohens_kappa",
     f"""
     WITH t AS ({_DUCK_TOKS}),
@@ -12744,12 +11822,10 @@ def q_corpus_datasheet(spark, sf_dir):
              AS kappa
     FROM cm
     """,
-)
-def q_cohens_kappa(spark, sf_dir):
-    return ml.cohens_kappa(load_table(spark, sf_dir, "documents"))
+)(ml.cohens_kappa)
 
 
-@register(
+register(
     "band_join_parts",
     """
     WITH p AS (
@@ -12764,9 +11840,7 @@ def q_cohens_kappa(spark, sf_dir):
      AND b.bk BETWEEN a.bk - 1 AND a.bk + 1
     WHERE ABS(a.price - b.price) <= 0.25
     """,
-)
-def q_band_join_parts(spark, sf_dir):
-    return rel.band_join_parts(load_table(spark, sf_dir, "part"))
+)(rel.band_join_parts)
 
 
 
@@ -12819,7 +11893,7 @@ def _l2_truth_ctes(m: int = 8, sub: int = 8, query_mod: int = 100,
     )"""
 
 
-@register(
+register(
     "ivf_pq_recall",
     f"""
     WITH {_l2_truth_ctes(max_queries=sim.AUDIT_MAX_QUERIES)},
@@ -12840,14 +11914,12 @@ def _l2_truth_ctes(m: int = 8, sub: int = 8, query_mod: int = 100,
       ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id
     GROUP BY a.query_id
     """,
-)
-def q_ivf_pq_recall(spark, sf_dir):
-    return sim.ivf_pq_recall(load_table(spark, sf_dir, "embeddings"))
+)(sim.ivf_pq_recall)
 
 
 
 
-@register(
+register(
     "negative_sampling",
     """
     WITH pool AS (
@@ -12886,16 +11958,10 @@ def q_ivf_pq_recall(spark, sf_dir):
       FROM cand
     ) WHERE neg_rank <= 3
     """,
-)
-def q_negative_sampling(spark, sf_dir):
-    return pl.negative_sampling(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "part"),
-    )
+)(pl.negative_sampling)
 
 
-@register(
+register(
     "preference_pairs",
     f"""
     WITH t AS ({_DUCK_TOKS}),
@@ -12930,9 +11996,7 @@ def q_negative_sampling(spark, sf_dir):
     FROM best b JOIN worst w ON b.source = w.source AND b.lang = w.lang
     WHERE chosen_q - rejected_q >= 0.05
     """,
-)
-def q_preference_pairs(spark, sf_dir):
-    return pl.preference_pairs(load_table(spark, sf_dir, "documents"))
+)(pl.preference_pairs)
 
 
 
@@ -13005,15 +12069,11 @@ def q_preference_pairs(spark, sf_dir):
     FROM l4 l JOIN sizes s ON l.label = s.label
     """,
 )
-def q_label_propagation_suppliers(spark, sf_dir):
-    return gr.label_propagation(
-        gr.supplier_knn_graph(load_table(spark, sf_dir, "lineitem"))
-    )
+def q_label_propagation_suppliers(lineitem):
+    return gr.label_propagation(gr.supplier_knn_graph(lineitem))
 
 
-
-
-@register(
+register(
     "dedup_token_impact",
     f"""
     WITH RECURSIVE
@@ -13099,9 +12159,7 @@ def q_label_propagation_suppliers(spark, sf_dir):
     FROM flagged f LEFT JOIN keepf k ON f.doc_id = k.doc_id
     GROUP BY f.source
     """,
-)
-def q_dedup_token_impact(spark, sf_dir):
-    return dd.dedup_token_impact(load_table(spark, sf_dir, "documents"))
+)(dd.dedup_token_impact)
 
 
 # DSIR importance-resampling selection (Xie et al. 2023): hashed-bigram
@@ -13109,7 +12167,7 @@ def q_dedup_token_impact(spark, sf_dir):
 # exact integer products per bucket rounded to 6dp, per-doc weights as
 # DECIMAL(28,6) sums, top-5 per source. The oracle replays the hashing,
 # the smoothed model, and the ranking end to end.
-@register(
+register(
     "dsir_selection",
     """
     WITH toked AS (
@@ -13164,9 +12222,7 @@ def q_dedup_token_impact(spark, sf_dir):
       FROM w
     ) WHERE sel_rank <= 5
     """,
-)
-def q_dsir_selection(spark, sf_dir):
-    return pl.dsir_selection(load_table(spark, sf_dir, "documents"))
+)(pl.dsir_selection)
 
 
 def _coverage_greedy_oracle(k: int = 8) -> str:
@@ -13214,9 +12270,9 @@ def _coverage_greedy_oracle(k: int = 8) -> str:
     )
 
 
-@register("coverage_greedy_selection", _coverage_greedy_oracle())
-def q_coverage_greedy_selection(spark, sf_dir):
-    return pl.coverage_greedy_selection(load_table(spark, sf_dir, "documents"))
+register("coverage_greedy_selection", _coverage_greedy_oracle())(
+    pl.coverage_greedy_selection
+)
 
 
 # Benjamini–Hochberg FDR battery: the A&S normal-tail constants are embedded
@@ -13225,7 +12281,7 @@ def q_coverage_greedy_selection(spark, sf_dir):
 _BH_B1, _BH_B2, _BH_B3, _BH_B4, _BH_B5 = (repr(x) for x in rel.AS_NORMAL_B)
 
 
-@register(
+register(
     "bh_fdr",
     f"""
     WITH cells AS (
@@ -13280,12 +12336,10 @@ _BH_B1, _BH_B2, _BH_B3, _BH_B4, _BH_B5 = (repr(x) for x in rel.AS_NORMAL_B)
              0) AS INTEGER) AS significant
     FROM ct
     """,
-)
-def q_bh_fdr(spark, sf_dir):
-    return rel.bh_fdr(load_table(spark, sf_dir, "events"))
+)(rel.bh_fdr)
 
 
-@register(
+register(
     "nelson_aalen",
     # Same life-table grid as kaplan_meier_churn; the cumulative hazard is
     # a window SUM over 6dp-rounded DECIMAL increments (exact, order-free).
@@ -13332,12 +12386,10 @@ def q_bh_fdr(spark, sf_dir):
              AS DOUBLE) AS cum_hazard_var
     FROM g2
     """,
-)
-def q_nelson_aalen(spark, sf_dir):
-    return rel.nelson_aalen_churn(load_table(spark, sf_dir, "orders"))
+)(rel.nelson_aalen_churn)
 
 
-@register(
+register(
     "yule_walker_ar2",
     # Exact HUGEINT lattice (== Spark's DECIMAL(38,0)): L_k = N³·c_k, so
     # every ratio cancels the scaling; doubles only in the final divisions.
@@ -13416,9 +12468,7 @@ def q_nelson_aalen(spark, sf_dir):
                           * (l2 / l0)), 6) AS sigma2
     FROM dd
     """,
-)
-def q_yule_walker_ar2(spark, sf_dir):
-    return rel.yule_walker_ar2(load_table(spark, sf_dir, "events"))
+)(rel.yule_walker_ar2)
 
 
 def _doremi_oracle(
@@ -13491,12 +12541,10 @@ def _doremi_oracle(
     )
 
 
-@register("doremi_weights", _doremi_oracle())
-def q_doremi_weights(spark, sf_dir):
-    return pl.doremi_weights(load_table(spark, sf_dir, "documents"))
+register("doremi_weights", _doremi_oracle())(pl.doremi_weights)
 
 
-@register(
+register(
     "psm_caliper_match",
     """
     WITH spend AS (
@@ -13552,12 +12600,7 @@ def q_doremi_weights(spark, sf_dir):
              AS att_spend
     FROM m GROUP BY c_nationkey
     """,
-)
-def q_psm_caliper_match(spark, sf_dir):
-    return ml.psm_caliper_match(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-    )
+)(ml.psm_caliper_match)
 
 
 def _cox_ph_oracle(iters: int = 6) -> str:
@@ -13637,7 +12680,7 @@ def _cox_ph_oracle(iters: int = 6) -> str:
     )
 
 
-@register(
+register(
     "kruskal_wallis",
     """
     WITH vals AS (
@@ -13691,9 +12734,7 @@ def _cox_ph_oracle(iters: int = 6) -> str:
              AS h_adjusted
     FROM agg CROSS JOIN ties
     """,
-)
-def q_kruskal_wallis(spark, sf_dir):
-    return rel.kruskal_wallis(load_table(spark, sf_dir, "events"))
+)(rel.kruskal_wallis)
 
 
 def _pacf_oracle(max_lag: int = 6) -> str:
@@ -13781,7 +12822,7 @@ _GUMBEL_T30 = -__import__("math").log(
 )
 
 
-@register(
+register(
     "gumbel_extremes",
     f"""
     WITH hourly AS (
@@ -13820,12 +12861,10 @@ _GUMBEL_T30 = -__import__("math").log(
                  + {_GUMBEL_T30!r} * beta, 6) AS return_level_30d
     FROM mm
     """,
-)
-def q_gumbel_extremes(spark, sf_dir):
-    return rel.gumbel_extremes(load_table(spark, sf_dir, "events"))
+)(rel.gumbel_extremes)
 
 
-@register(
+register(
     "newsvendor_quantile",
     """
     WITH weekly AS (
@@ -13845,13 +12884,7 @@ def q_gumbel_extremes(spark, sf_dir):
            ROUND(quantile_cont(demand, 0.75), 6) AS stock_level_q75
     FROM weekly GROUP BY p_brand
     """,
-)
-def q_newsvendor_quantile(spark, sf_dir):
-    return rel.newsvendor_quantile(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "part"),
-    )
+)(rel.newsvendor_quantile)
 
 
 def _matryoshka_oracle(
@@ -13936,15 +12969,13 @@ def _matryoshka_oracle(
     )
 
 
-@register(
+register(
     "matryoshka_recall",
     _matryoshka_oracle(max_queries=sim.AUDIT_MAX_QUERIES),
-)
-def q_matryoshka_recall(spark, sf_dir):
-    return sim.matryoshka_recall(load_table(spark, sf_dir, "embeddings"))
+)(sim.matryoshka_recall)
 
 
-@register(
+register(
     "negbin_fit",
     """
     WITH counted AS (
@@ -13991,14 +13022,10 @@ def q_matryoshka_recall(spark, sf_dir):
              AS zero_frac
     FROM mm
     """,
-)
-def q_negbin_fit(spark, sf_dir):
-    return rel.negbin_fit(load_table(spark, sf_dir, "events"))
+)(rel.negbin_fit)
 
 
-@register("pacf_hourly", _pacf_oracle())
-def q_pacf_hourly(spark, sf_dir):
-    return rel.pacf_hourly(load_table(spark, sf_dir, "events"))
+register("pacf_hourly", _pacf_oracle())(rel.pacf_hourly)
 
 
 def _spectral_bisection_oracle(rounds: int = 6) -> str:
@@ -14059,13 +13086,11 @@ def _spectral_bisection_oracle(rounds: int = 6) -> str:
 
 
 @register("spectral_bisection_suppliers", _spectral_bisection_oracle())
-def q_spectral_bisection_suppliers(spark, sf_dir):
-    return gr.spectral_bisection(
-        gr.supplier_knn_graph(load_table(spark, sf_dir, "lineitem"))
-    )
+def q_spectral_bisection_suppliers(lineitem):
+    return gr.spectral_bisection(gr.supplier_knn_graph(lineitem))
 
 
-@register(
+register(
     "hot_key_audit",
     """
     WITH p AS (
@@ -14097,15 +13122,10 @@ def q_spectral_bisection_suppliers(spark, sf_dir):
            ROUND(quantile_cont(c, 0.999), 6) AS p999_cnt
     FROM p GROUP BY key_col
     """,
-)
-def q_hot_key_audit(spark, sf_dir):
-    return rel.hot_key_audit(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "orders"),
-    )
+)(rel.hot_key_audit)
 
 
-@register(
+register(
     "source_loo_value",
     """
     WITH ex AS (
@@ -14145,12 +13165,10 @@ def q_hot_key_audit(spark, sf_dir):
                  / CAST(tokens AS DOUBLE), 6) AS unique_token_share
     FROM base LEFT JOIN uniq USING (source)
     """,
-)
-def q_source_loo_value(spark, sf_dir):
-    return ts.source_loo_value(load_table(spark, sf_dir, "documents"))
+)(ts.source_loo_value)
 
 
-@register(
+register(
     "ccnet_pipeline",
     """
     WITH toked AS (
@@ -14209,12 +13227,10 @@ def q_source_loo_value(spark, sf_dir):
     FROM base JOIN bucketed USING (doc_id)
     GROUP BY 1, 2
     """,
-)
-def q_ccnet_pipeline(spark, sf_dir):
-    return ts.ccnet_pipeline(load_table(spark, sf_dir, "documents"))
+)(ts.ccnet_pipeline)
 
 
-@register(
+register(
     "l_diversity",
     """
     WITH cell AS (
@@ -14244,12 +13260,10 @@ def q_ccnet_pipeline(spark, sf_dir):
              AS classes_l_lt_3
     FROM cls
     """,
-)
-def q_l_diversity(spark, sf_dir):
-    return rel.l_diversity(load_table(spark, sf_dir, "customer"))
+)(rel.l_diversity)
 
 
-@register(
+register(
     "keyness_terms",
     """
     WITH ex AS MATERIALIZED (
@@ -14294,12 +13308,10 @@ def q_l_diversity(spark, sf_dir):
           FROM sc)
     WHERE rnk <= 5
     """,
-)
-def q_keyness_terms(spark, sf_dir):
-    return ts.keyness_terms(load_table(spark, sf_dir, "documents"))
+)(ts.keyness_terms)
 
 
-@register(
+register(
     "ecod_outliers",
     """
     WITH per AS (
@@ -14325,12 +13337,10 @@ def q_keyness_terms(spark, sf_dir):
     FROM cd
     ORDER BY ecod_score DESC, o_custkey LIMIT 20
     """,
-)
-def q_ecod_outliers(spark, sf_dir):
-    return ml.ecod_outliers(load_table(spark, sf_dir, "orders"))
+)(ml.ecod_outliers)
 
 
-@register(
+register(
     "bm25_prf_topk",
     r"""
     WITH tf AS MATERIALIZED (
@@ -14396,12 +13406,10 @@ def q_ecod_outliers(spark, sf_dir):
     FROM perf GROUP BY doc_id
     ORDER BY SUM(ts) DESC, doc_id LIMIT 20
     """,
-)
-def q_bm25_prf_topk(spark, sf_dir):
-    return ts.bm25_prf_topk(load_table(spark, sf_dir, "documents"))
+)(ts.bm25_prf_topk)
 
 
-@register(
+register(
     "qte_deciles",
     """
     WITH spend AS (
@@ -14436,12 +13444,7 @@ def q_bm25_prf_topk(spark, sf_dir):
            ROUND(qt - qc, 6) AS qte
     FROM t JOIN c USING (i)
     """,
-)
-def q_qte_deciles(spark, sf_dir):
-    return ml.qte_deciles(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-    )
+)(ml.qte_deciles)
 
 
 def _als_rank1_oracle(lam: float = 0.1, rounds: int = 3) -> str:
@@ -14488,24 +13491,13 @@ def _als_rank1_oracle(lam: float = 0.1, rounds: int = 3) -> str:
     )
 
 
-@register("als_rank1", _als_rank1_oracle())
-def q_als_rank1(spark, sf_dir):
-    return ml.als_rank1(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "part"),
-    )
+register("als_rank1", _als_rank1_oracle())(ml.als_rank1)
 
 
-@register("cox_ph_binary", _cox_ph_oracle())
-def q_cox_ph_binary(spark, sf_dir):
-    return ml.cox_ph_binary(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-    )
+register("cox_ph_binary", _cox_ph_oracle())(ml.cox_ph_binary)
 
 
-@register(
+register(
     "logrank_segments",
     # Replays the grouped life table on the dense (t x group) grid, the
     # 6dp-rounded DECIMAL(18,6) e/v sums, and the shared A&S tail
@@ -14605,15 +13597,10 @@ def q_cox_ph_binary(spark, sf_dir):
                 + t * ({_BH_B4} + t * {_BH_B5}))))))), 6) AS p_value
     FROM tt
     """,
-)
-def q_logrank_segments(spark, sf_dir):
-    return rel.logrank_segments(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-    )
+)(rel.logrank_segments)
 
 
-@register(
+register(
     "qlm_dirichlet_topk",
     r"""
     WITH tf AS MATERIALIZED (
@@ -14653,9 +13640,7 @@ def q_logrank_segments(spark, sf_dir):
     SELECT doc_id, n_matched, CAST(score_dec AS DOUBLE) AS qlm
     FROM per ORDER BY score_dec DESC, doc_id LIMIT 20
     """,
-)
-def q_qlm_dirichlet_topk(spark, sf_dir):
-    return ts.qlm_dirichlet_topk(load_table(spark, sf_dir, "documents"))
+)(ts.qlm_dirichlet_topk)
 
 
 _TRIG_ROWS = ",\n           ".join(
@@ -14664,7 +13649,7 @@ _TRIG_ROWS = ",\n           ".join(
 )
 
 
-@register(
+register(
     "periodogram_hourly",
     # Replays the dense hourly grid, the shared literal trig table (same
     # repr() floats the Spark plan embeds via F.lit), the 6dp-rounded
@@ -14734,9 +13719,7 @@ _TRIG_ROWS = ",\n           ".join(
                 ORDER BY power DESC, period) AS INTEGER) AS power_rank
     FROM powered
     """,
-)
-def q_periodogram_hourly(spark, sf_dir):
-    return rel.periodogram_hourly(load_table(spark, sf_dir, "events"))
+)(rel.periodogram_hourly)
 
 
 def _huber_irls_oracle(rounds: int = 3) -> str:
@@ -14830,12 +13813,10 @@ def _huber_irls_oracle(rounds: int = 3) -> str:
     return "".join(parts) + "\n    UNION ALL".join(sel)
 
 
-@register("huber_irls", _huber_irls_oracle())
-def q_huber_irls(spark, sf_dir):
-    return ml.huber_irls(load_table(spark, sf_dir, "lineitem"))
+register("huber_irls", _huber_irls_oracle())(ml.huber_irls)
 
 
-@register(
+register(
     "pairwise_welch_bonferroni",
     # Replays the 6dp DECIMAL(28,6) moment sums, the Welch z on rounded
     # mean/var, the shared A&S tail, and the Bonferroni product.
@@ -14894,9 +13875,7 @@ def q_huber_irls(spark, sf_dir):
                 < 0.05 AS INTEGER) AS significant
     FROM pv
     """,
-)
-def q_pairwise_welch_bonferroni(spark, sf_dir):
-    return rel.pairwise_welch_bonferroni(load_table(spark, sf_dir, "events"))
+)(rel.pairwise_welch_bonferroni)
 
 
 def _register_ann_map_at_k() -> None:
@@ -14913,7 +13892,7 @@ def _register_ann_map_at_k() -> None:
         + "))"
     )
 
-    @register(
+    register(
         "ann_map_at_k",
         f"""
     WITH approx AS (
@@ -14941,15 +13920,13 @@ def _register_ann_map_at_k() -> None:
            ROUND(CAST(SUM(p) AS DOUBLE) / 10.0, 6) AS ap_at_k
     FROM prec GROUP BY query_id
     """,
-    )
-    def q_ann_map_at_k(spark, sf_dir):
-        return sim.ann_map_at_k(load_table(spark, sf_dir, "embeddings"))
+    )(sim.ann_map_at_k)
 
 
 _register_ann_map_at_k()
 
 
-@register(
+register(
     "encoding_anomaly",
     """
     WITH per AS (
@@ -14982,12 +13959,10 @@ _register_ann_map_at_k()
                  / CAST(SUM(n_chars) AS DOUBLE), 6) AS moji_per_10k
     FROM per GROUP BY source
     """,
-)
-def q_encoding_anomaly(spark, sf_dir):
-    return ts.encoding_anomaly(load_table(spark, sf_dir, "documents"))
+)(ts.encoding_anomaly)
 
 
-@register(
+register(
     "kneser_ney_bigram",
     """
     WITH t AS (
@@ -15021,12 +13996,10 @@ def q_encoding_anomaly(spark, sf_dir):
              AS cond_p_kn
     FROM w, tot
     """,
-)
-def q_kneser_ney_bigram(spark, sf_dir):
-    return ts.kneser_ney_bigram(load_table(spark, sf_dir, "documents"))
+)(ts.kneser_ney_bigram)
 
 
-@register(
+register(
     "burrows_delta",
     """
     WITH ex AS MATERIALIZED (
@@ -15087,12 +14060,10 @@ def q_kneser_ney_bigram(spark, sf_dir):
                 // (2 * n_words) AS DOUBLE) / 1000000.0 AS delta
     FROM g
     """,
-)
-def q_burrows_delta(spark, sf_dir):
-    return ts.burrows_delta(load_table(spark, sf_dir, "documents"))
+)(ts.burrows_delta)
 
 
-@register(
+register(
     "t_closeness",
     """
     WITH segg AS (
@@ -15137,12 +14108,10 @@ def q_burrows_delta(spark, sf_dir):
              AS frac_customers_exposed
     FROM per_cls
     """,
-)
-def q_t_closeness(spark, sf_dir):
-    return rel.t_closeness(load_table(spark, sf_dir, "customer"))
+)(rel.t_closeness)
 
 
-@register(
+register(
     "levene_bf",
     """
     WITH med AS (
@@ -15199,12 +14168,10 @@ def q_t_closeness(spark, sf_dir):
            CAST(n - k AS BIGINT) AS df2
     FROM btw
     """,
-)
-def q_levene_bf(spark, sf_dir):
-    return rel.levene_bf(load_table(spark, sf_dir, "events"))
+)(rel.levene_bf)
 
 
-@register(
+register(
     "synthetic_control",
     """
     WITH cells AS (
@@ -15273,12 +14240,7 @@ def q_levene_bf(spark, sf_dir):
       ON s.month = t.month AND s.month_idx = t.month_idx
      AND s.is_pre = t.is_pre
     """,
-)
-def q_synthetic_control(spark, sf_dir):
-    return ml.synthetic_control(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-    )
+)(ml.synthetic_control)
 
 
 def _fs_lik(prefix: str) -> str:
@@ -15353,12 +14315,10 @@ def _fellegi_sunter_oracle(rounds: int = 3) -> str:
     return head + body + tail
 
 
-@register("fellegi_sunter_em", _fellegi_sunter_oracle())
-def q_fellegi_sunter_em(spark, sf_dir):
-    return ml.fellegi_sunter_em(load_table(spark, sf_dir, "customer"))
+register("fellegi_sunter_em", _fellegi_sunter_oracle())(ml.fellegi_sunter_em)
 
 
-@register(
+register(
     "text_tiling_cohesion",
     """
     WITH t AS (
@@ -15425,12 +14385,10 @@ def q_fellegi_sunter_em(spark, sf_dir):
              AS mean_cohesion
     FROM per_doc p JOIN blocks b USING (doc_id)
     """,
-)
-def q_text_tiling_cohesion(spark, sf_dir):
-    return ts.text_tiling_cohesion(load_table(spark, sf_dir, "documents"))
+)(ts.text_tiling_cohesion)
 
 
-@register(
+register(
     "cmh_test",
     f"""
     WITH pc AS (
@@ -15510,15 +14468,10 @@ def q_text_tiling_cohesion(spark, sf_dir):
            or_mh
     FROM tt
     """,
-)
-def q_cmh_test(spark, sf_dir):
-    return rel.cmh_test(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-    )
+)(rel.cmh_test)
 
 
-@register(
+register(
     "wasserstein_source_lengths",
     """
     WITH lens AS (
@@ -15553,23 +14506,15 @@ def q_cmh_test(spark, sf_dir):
                 // (2 * n_q) AS DOUBLE) / 1000000.0 AS w1_tokens
     FROM g
     """,
-)
-def q_wasserstein_source_lengths(spark, sf_dir):
-    return ts.wasserstein_source_lengths(
-        load_table(spark, sf_dir, "documents")
-    )
+)(ts.wasserstein_source_lengths)
 
 
 # rows-only: DEFLATE has no SQL replay; fixture-tested instead
 # (tests/test_round7_additions.py plants repetitive vs prose docs).
-@register("compression_ratio_quality", None)
-def q_compression_ratio_quality(spark, sf_dir):
-    return pu.compression_ratio_quality(
-        load_table(spark, sf_dir, "documents")
-    )
+register("compression_ratio_quality", None)(pu.compression_ratio_quality)
 
 
-@register(
+register(
     "sax_hourly",
     f"""
     WITH counted AS (
@@ -15630,12 +14575,10 @@ def q_compression_ratio_quality(spark, sf_dir):
            string_agg(sym, '' ORDER BY seg) AS sax
     FROM lettered GROUP BY 1
     """,
-)
-def q_sax_hourly(spark, sf_dir):
-    return rel.sax_hourly(load_table(spark, sf_dir, "events"))
+)(rel.sax_hourly)
 
 
-@register(
+register(
     "hurst_hourly",
     """
     WITH counted AS (
@@ -15714,16 +14657,14 @@ def q_sax_hourly(spark, sf_dir):
            ROUND(1.0 + var_slope / 2.0, 6) AS hurst
     FROM sl
     """,
-)
-def q_hurst_hourly(spark, sf_dir):
-    return rel.hurst_hourly(load_table(spark, sf_dir, "events"))
+)(rel.hurst_hourly)
 
 
 def _register_ljung_box() -> None:
     """Embed the registered ACF replay (ann_recall_metrics pattern) and
     add the portmanteau sum + Wilson-Hilferty tail on top."""
 
-    @register(
+    register(
         "ljung_box",
         f"""
     WITH acf AS ({ORACLES["acf_hourly"]}),
@@ -15768,15 +14709,13 @@ def _register_ljung_box() -> None:
            CAST(p_value < 0.05 AS INT) AS reject_white_noise
     FROM pv
     """,
-    )
-    def q_ljung_box(spark, sf_dir):
-        return rel.ljung_box(load_table(spark, sf_dir, "events"))
+    )(rel.ljung_box)
 
 
 _register_ljung_box()
 
 
-@register(
+register(
     "two_pass_exact_median",
     # ground truth is the DIRECT full-sort order statistics — a
     # different algorithm than the two-pass histogram, same semantics
@@ -15801,12 +14740,10 @@ _register_ljung_box()
              AS median
     FROM sel, nn
     """,
-)
-def q_two_pass_exact_median(spark, sf_dir):
-    return rel.two_pass_exact_median(load_table(spark, sf_dir, "lineitem"))
+)(rel.two_pass_exact_median)
 
 
-@register(
+register(
     "image_ahash_neardup",
     # re-derives the deterministic pixels from md5 hex and replays
     # block/threshold/band/popcount — the Spark side additionally
@@ -15862,9 +14799,7 @@ def q_two_pass_exact_median(spark, sf_dir):
     GROUP BY 1, 2
     HAVING SUM(bit_count(xor(x.bv, y.bv))) <= 10
     """,
-)
-def q_image_ahash_neardup(spark, sf_dir):
-    return mm.image_ahash_neardup(load_table(spark, sf_dir, "documents"))
+)(mm.image_ahash_neardup)
 
 
 def _ahash_color_oracle(tag: str) -> str:
@@ -15953,20 +14888,16 @@ def _ahash_color_oracle(tag: str) -> str:
 
 
 @register("image_ahash_neardup_bmp", _ahash_color_oracle(":bmp:"))
-def q_image_ahash_neardup_bmp(spark, sf_dir):
-    return mm.image_ahash_neardup(
-        load_table(spark, sf_dir, "documents"), codec="bmp"
-    )
+def q_image_ahash_neardup_bmp(documents):
+    return mm.image_ahash_neardup(documents, codec="bmp")
 
 
 @register("image_ahash_neardup_ppm", _ahash_color_oracle(":ppm:"))
-def q_image_ahash_neardup_ppm(spark, sf_dir):
-    return mm.image_ahash_neardup(
-        load_table(spark, sf_dir, "documents"), codec="ppm"
-    )
+def q_image_ahash_neardup_ppm(documents):
+    return mm.image_ahash_neardup(documents, codec="ppm")
 
 
-@register(
+register(
     "audio_features",
     # the square wave is closed-form: the oracle re-derives every PCM
     # sample from (doc_id, n) and replays the aggregates; the Spark
@@ -15997,12 +14928,10 @@ def q_image_ahash_neardup_ppm(spark, sf_dir):
            CAST(MAX(abs(v)) AS BIGINT) AS peak
     FROM lagged GROUP BY 1
     """,
-)
-def q_audio_features(spark, sf_dir):
-    return mm.audio_features(load_table(spark, sf_dir, "documents"))
+)(mm.audio_features)
 
 
-@register(
+register(
     "events_windowed_topk",
     """
     WITH counts AS (
@@ -16018,15 +14947,13 @@ def q_audio_features(spark, sf_dir):
           FROM counts)
     WHERE rnk <= 3
     """,
-)
-def q_events_windowed_topk(spark, sf_dir):
-    return sw.windowed_topk(load_table(spark, sf_dir, "events"))
+)(sw.windowed_topk)
 
 
 def _register_km_rmst() -> None:
     """Embed the registered KM replay and integrate the step curve."""
 
-    @register(
+    register(
         "km_rmst",
         f"""
     WITH km AS ({ORACLES["kaplan_meier_churn"]})
@@ -16036,15 +14963,13 @@ def _register_km_rmst() -> None:
            MIN(survival) AS survival_at_horizon
     FROM km
     """,
-    )
-    def q_km_rmst(spark, sf_dir):
-        return rel.km_rmst(load_table(spark, sf_dir, "orders"))
+    )(rel.km_rmst)
 
 
 _register_km_rmst()
 
 
-@register(
+register(
     "max_drawdown",
     """
     WITH cum AS (
@@ -16075,16 +15000,14 @@ _register_km_rmst()
            CAST(peak AS DOUBLE) AS peak_at_trough
     FROM rk WHERE rn = 1
     """,
-)
-def q_max_drawdown(spark, sf_dir):
-    return rel.max_drawdown(load_table(spark, sf_dir, "events"))
+)(rel.max_drawdown)
 
 
 def _register_dedup_capture_recapture() -> None:
     """Embed both registered pair-set replays (ann_recall_metrics
     pattern) and apply the Chapman estimator on their counts."""
 
-    @register(
+    register(
         "dedup_capture_recapture",
         f"""
     WITH mh AS ({ORACLES["minhash_lsh_pairs"]}),
@@ -16112,17 +15035,13 @@ def _register_dedup_capture_recapture() -> None:
            END AS coverage_simhash
     FROM c
     """,
-    )
-    def q_dedup_capture_recapture(spark, sf_dir):
-        return dd.dedup_capture_recapture(
-            load_table(spark, sf_dir, "documents")
-        )
+    )(dd.dedup_capture_recapture)
 
 
 _register_dedup_capture_recapture()
 
 
-@register(
+register(
     "theil_decomposition",
     """
     WITH spend AS (
@@ -16178,12 +15097,7 @@ _register_dedup_capture_recapture()
            END AS between_share
     FROM parts, tt
     """,
-)
-def q_theil_decomposition(spark, sf_dir):
-    return rel.theil_decomposition(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-    )
+)(rel.theil_decomposition)
 
 
 def _bt_round(prev: str, k: int) -> str:
@@ -16228,7 +15142,7 @@ def _register_bradley_terry() -> None:
     rounds_sql = "".join(_bt_round(f"w{r - 1}" if r > 1 else "w0", r)
                          for r in range(1, 4))
 
-    @register(
+    register(
         "bradley_terry_sources",
         f"""
     WITH toked AS (
@@ -16269,11 +15183,7 @@ def _register_bradley_terry() -> None:
                 AS INTEGER) AS rank
     FROM bt_tot t JOIN w3 ON w3.sa = t.sa
     """,
-    )
-    def q_bradley_terry_sources(spark, sf_dir):
-        return ml.bradley_terry_sources(
-            load_table(spark, sf_dir, "documents")
-        )
+    )(ml.bradley_terry_sources)
 
 
 _register_bradley_terry()
@@ -16305,7 +15215,7 @@ def _register_ipf_raking(rounds: int = 3) -> None:
         k += 1
         passes.append(_ipf_pass(prev, k, "band", "n_band")); prev = f"p{k}"
 
-    @register(
+    register(
         "ipf_raking",
         f"""
     WITH cells AS (
@@ -16326,15 +15236,13 @@ def _register_ipf_raking(rounds: int = 3) -> None:
            ROUND(w / CAST(n AS DOUBLE), 6) AS raking_factor
     FROM {prev}
     """,
-    )
-    def q_ipf_raking(spark, sf_dir):
-        return ml.ipf_raking(load_table(spark, sf_dir, "customer"))
+    )(ml.ipf_raking)
 
 
 _register_ipf_raking()
 
 
-@register(
+register(
     "price_index_fisher",
     """
     WITH bounds AS (
@@ -16386,12 +15294,10 @@ _register_ipf_raking()
            ROUND(sqrt(laspeyres * paasche), 6) AS fisher
     FROM idx
     """,
-)
-def q_price_index_fisher(spark, sf_dir):
-    return rel.price_index_fisher(load_table(spark, sf_dir, "lineitem"))
+)(rel.price_index_fisher)
 
 
-@register(
+register(
     "bass_diffusion",
     f"""
     WITH first_m AS (
@@ -16464,12 +15370,10 @@ def q_price_index_fisher(spark, sf_dir):
            END AS peak_t
     FROM pq
     """,
-)
-def q_bass_diffusion(spark, sf_dir):
-    return ml.bass_diffusion(load_table(spark, sf_dir, "orders"))
+)(ml.bass_diffusion)
 
 
-@register(
+register(
     "seasonal_strength",
     """
     WITH counted AS (
@@ -16540,12 +15444,10 @@ def q_bass_diffusion(spark, sf_dir):
            END AS seasonal_strength
     FROM v
     """,
-)
-def q_seasonal_strength(spark, sf_dir):
-    return rel.seasonal_strength(load_table(spark, sf_dir, "events"))
+)(rel.seasonal_strength)
 
 
-@register(
+register(
     "seasonal_mann_kendall",
     f"""
     WITH monthly AS (
@@ -16603,12 +15505,10 @@ def q_seasonal_strength(spark, sf_dir):
            END AS p_value
     FROM tt
     """,
-)
-def q_seasonal_mann_kendall(spark, sf_dir):
-    return rel.seasonal_mann_kendall(load_table(spark, sf_dir, "orders"))
+)(rel.seasonal_mann_kendall)
 
 
-@register(
+register(
     "word_adaptation",
     """
     WITH tf AS (
@@ -16651,9 +15551,7 @@ def q_seasonal_mann_kendall(spark, sf_dir):
            END AS adaptation_ratio
     FROM calc
     """,
-)
-def q_word_adaptation(spark, sf_dir):
-    return ts.word_adaptation(load_table(spark, sf_dir, "documents"))
+)(ts.word_adaptation)
 
 
 # --- r11 unfreeze: the streaming ingest near-dup screen lands at the
@@ -16665,16 +15563,13 @@ def q_word_adaptation(spark, sf_dir):
 # semantics ride the oracled screen + the stream==batch pin).
 
 
-@register("ingest_neardup_screen", ing.ingest_neardup_screen_oracle_sql())
-def q_ingest_neardup_screen(spark, sf_dir):
-    return ing.ingest_neardup_screen(load_table(spark, sf_dir, "documents"))
+register("ingest_neardup_screen", ing.ingest_neardup_screen_oracle_sql())(
+    ing.ingest_neardup_screen
+)
 
 
-@register("ingest_neardup_live")  # live stateful stream → rows-only
-def q_ingest_neardup_live(spark, sf_dir):
-    return ing.ingest_neardup_live(
-        spark, load_table(spark, sf_dir, "documents")
-    )
+# live stateful stream → rows-only
+register("ingest_neardup_live")(ing.ingest_neardup_live)
 
 
 @register(
@@ -16707,9 +15602,9 @@ def q_ingest_neardup_live(spark, sf_dir):
     FROM ranked GROUP BY 1
     """,
 )
-def q_quantile_mass_sample(spark, sf_dir):
+def q_quantile_mass_sample(orders):
     return sk.mass_sample_quantiles(
-        load_table(spark, sf_dir, "orders"),
+        orders,
         "o_orderpriority",
         "o_totalprice",
         "o_orderkey",
@@ -16759,8 +15654,8 @@ def q_quantile_mass_sample(spark, sf_dir):
     FROM ranked GROUP BY 1
     """,
 )
-def q_quantile_mass_merge(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem").selectExpr(
+def q_quantile_mass_merge(lineitem):
+    li = lineitem.selectExpr(
         "l_returnflag",
         "l_extendedprice",
         "l_orderkey * 8 + l_linenumber AS lk",
@@ -16852,30 +15747,18 @@ def _ams_join_oracle(m: int = 64) -> str:
 
 
 @register("ams_f2_custkeys", _ams_f2_oracle())
-def q_ams_f2_custkeys(spark, sf_dir):
-    return sk.ams_f2(load_table(spark, sf_dir, "orders"), "o_custkey")
+def q_ams_f2_custkeys(orders):
+    return sk.ams_f2(orders, "o_custkey")
 
 
 @register("ams_join_size_orders_customer", _ams_join_oracle())
-def q_ams_join_size_orders_customer(spark, sf_dir):
-    return sk.ams_join_size(
-        load_table(spark, sf_dir, "orders"),
-        "o_custkey",
-        load_table(spark, sf_dir, "customer"),
-        "c_custkey",
-    )
+def q_ams_join_size_orders_customer(orders, customer):
+    return sk.ams_join_size(orders, "o_custkey", customer, "c_custkey")
 
 
 # The legacy hand-rotated _VERIFY_FIRST head (238 names) is gone: it went
 # stale twice (rounds 5 and 7) and the order is now derived entirely from
 # the driver's CORRECTNESS_r*.json files by _gate_checked_rounds() below.
-#
-# _RECHECK_FIRST: deliberate re-checks that should LEAD the next gate
-# window even though the gate has already seen them — use it only for a
-# query that failed (or was fixed after) a prior external window, and
-# CLEAR the entry as soon as the re-check lands green (otherwise it
-# permanently occupies window slots).
-_RECHECK_FIRST: list = []
 
 
 def _gate_checked_rounds() -> dict:
@@ -16916,12 +15799,9 @@ def _derived_order(names, checked: dict) -> list:
     name->latest-checked-round mapping — exposed separately so tests can
     SIMULATE future rounds (feed ``checked`` as if round N's gate file
     already existed and assert round N+1's window rotates onward)."""
-    recheck = {n: i for i, n in enumerate(_RECHECK_FIRST)}
 
     def key(item):
         idx, n = item
-        if n in recheck:
-            return (-(10**6), recheck[n], 0)
         # primary: least-recently-gate-checked first (never-checked = -1);
         # tiebreak: registration order (stable).
         return (checked.get(n, -1), idx)

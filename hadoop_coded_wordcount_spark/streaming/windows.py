@@ -200,7 +200,7 @@ def watermarked_distinct_users(
     )
 
 
-def debounced_events(df: DataFrame, lateness: str = "30 minutes") -> DataFrame:
+def debounced_events(events: DataFrame, lateness: str = "30 minutes") -> DataFrame:
     """Keyed event dedup ("debounce"): one row per (user, event_type,
     minute) — the at-least-once-delivery cleanup every event pipeline
     runs before aggregation.
@@ -215,23 +215,23 @@ def debounced_events(df: DataFrame, lateness: str = "30 minutes") -> DataFrame:
     nondeterminism out of the output).
     """
     keys = ["user_id", "event_type", "minute"]
-    if df.isStreaming:
+    if events.isStreaming:
         return (
-            _as_event_time(df)
+            _as_event_time(events)
             .withWatermark("ts", lateness)
             .withColumn("minute", F.date_trunc("minute", F.col("ts")))
             .dropDuplicatesWithinWatermark(keys)
             .select("user_id", "event_type", _win_str("minute").alias("minute"))
         )
     return (
-        df.withColumn("minute", F.date_trunc("minute", F.col("ts")))
+        events.withColumn("minute", F.date_trunc("minute", F.col("ts")))
         .select("user_id", "event_type", _win_str("minute").alias("minute"))
         .distinct()
     )
 
 
 def click_view_attribution(
-    df: DataFrame, window: str = "10 minutes", lateness: str = "30 minutes"
+    events: DataFrame, window: str = "10 minutes", lateness: str = "30 minutes"
 ) -> DataFrame:
     """Stream-stream interval join: every click pairs with the same
     user's views from the preceding ``window`` — the attribution
@@ -249,7 +249,7 @@ def click_view_attribution(
     row-for-row equality with the streaming run on finite input is
     pinned in tests). The gap is exact integer microseconds — no float.
     """
-    src = _as_event_time(df)
+    src = _as_event_time(events)
     views = src.where(F.col("event_type") == "view").select(
         F.col("user_id").alias("v_user"),
         F.col("event_id").alias("view_id"),
@@ -260,7 +260,7 @@ def click_view_attribution(
         F.col("event_id").alias("click_id"),
         F.col("ts").alias("c_ts"),
     )
-    if df.isStreaming:
+    if events.isStreaming:
         views = views.withWatermark("v_ts", lateness)
         clicks = clicks.withWatermark("c_ts", lateness)
     cond = (
@@ -277,7 +277,7 @@ def click_view_attribution(
 
 
 def minute_deduped_events(
-    df: DataFrame, lateness: str = "30 minutes"
+    events: DataFrame, lateness: str = "30 minutes"
 ) -> DataFrame:
     """Streaming deduplication with bounded state: collapse each user's
     repeated actions of one type within a calendar minute to a single
@@ -295,14 +295,14 @@ def minute_deduped_events(
     same key projection — on finite input the surviving key set is
     identical (pinned in tests/test_streaming.py).
     """
-    src = _as_event_time(df)
+    src = _as_event_time(events)
     keyed = src.select(
         "user_id",
         "event_type",
         F.date_format(F.date_trunc("minute", "ts"), _FMT).alias("minute"),
         "ts",
     )
-    if df.isStreaming:
+    if events.isStreaming:
         return (
             keyed.withWatermark("ts", lateness)
             .dropDuplicatesWithinWatermark(["user_id", "event_type", "minute"])

@@ -3,11 +3,11 @@
 A static walk over the package's source: every function body (with the
 functions and lambdas nested in it) is indexed by the simple names it
 calls (``f(...)`` and ``mod.f(...)`` both give ``f``). A registry query
-reaches a target when the target is among the names reachable from the
-query function through that index. The walk is name-based, so it
-over-approximates (package functions that share a name share their
-callees) and never misses a call made by name; it does not follow
-functions passed as values.
+reaches a target when its registered operator (``inspect.unwrap`` of the
+query) is the target or reaches it through that index. The walk is
+name-based, so it over-approximates (package functions that share a
+name share their callees) and never misses a call made by name; it does
+not follow functions passed as values.
 
 Prints one registry name per line, in registry order (``QUERIES``' own
 order, the queries defined inside ``_register_*`` helpers included).
@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import argparse
 import ast
+import inspect
 import os
 import sys
 from collections import defaultdict
@@ -29,20 +30,14 @@ PACKAGE = os.path.join(ROOT, "hadoop_coded_wordcount_spark")
 _Def = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
-def call_index(package: str = PACKAGE):
-    """(function simple name -> names called in any definition of it,
-    (path, first line) -> names called in that one definition). A def's
-    first line is its first decorator's, as in ``co_firstlineno``."""
+def call_index(package: str = PACKAGE) -> dict[str, set[str]]:
+    """Function simple name -> names called in any definition of it."""
     by_name: dict[str, set[str]] = defaultdict(set)
-    by_def: dict[tuple[str, int], set[str]] = defaultdict(set)
 
     def visit(node, owners):
         for child in ast.iter_child_nodes(node):
             if isinstance(child, _Def):
-                first = min(
-                    [child.lineno] + [d.lineno for d in child.decorator_list]
-                )
-                visit(child, owners + ((child.name, (path, first)),))
+                visit(child, owners + (child.name,))
                 continue
             if isinstance(child, ast.Call):
                 f = child.func
@@ -52,23 +47,21 @@ def call_index(package: str = PACKAGE):
                     else None
                 )
                 if name:
-                    for fn, key in owners:
+                    for fn in owners:
                         by_name[fn].add(name)
-                        by_def[key].add(name)
             visit(child, owners)
 
     for dirpath, _, files in os.walk(package):
         for f in sorted(files):
             if f.endswith(".py"):
-                path = os.path.join(dirpath, f)
-                with open(path) as fh:
+                with open(os.path.join(dirpath, f)) as fh:
                     visit(ast.parse(fh.read()), ())
-    return by_name, by_def
+    return by_name
 
 
 def reaching(targets: set[str]) -> list[str]:
     """Registry names, in registry order, whose query reaches a target."""
-    by_name, by_def = call_index()
+    by_name = call_index()
     callers: dict[str, set[str]] = defaultdict(set)
     for fn, callees in by_name.items():
         for c in callees:
@@ -84,11 +77,9 @@ def reaching(targets: set[str]) -> list[str]:
     sys.path.insert(0, ROOT)
     from hadoop_coded_wordcount_spark.registry import QUERIES
 
+    # a query is its registered operator (or composed def), unwrapped
     return [
-        name
-        for name, fn in QUERIES.items()
-        if by_def[(fn.__code__.co_filename, fn.__code__.co_firstlineno)]
-        & hit
+        name for name, fn in QUERIES.items() if inspect.unwrap(fn).__name__ in hit
     ]
 
 

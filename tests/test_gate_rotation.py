@@ -15,7 +15,6 @@ import os
 from hadoop_coded_wordcount_spark.registry import (
     ORACLES,
     QUERIES,
-    _RECHECK_FIRST,
     _gate_checked_rounds,
 )
 
@@ -36,7 +35,7 @@ def test_window_head_fills_with_never_checked_first():
     would start failing — on a correctly working rotation — once fewer
     than 50 never-checked queries remain)."""
     checked = _externally_checked()
-    head = [n for n in list(QUERIES)[:50] if n not in _RECHECK_FIRST]
+    head = list(QUERIES)[:50]
     first_checked = next(
         (i for i, n in enumerate(head) if n in checked), len(head)
     )
@@ -45,11 +44,6 @@ def test_window_head_fills_with_never_checked_first():
         "never-checked queries sorted after checked ones in the gate "
         "window: %s" % stale
     )
-
-
-def test_rechecks_lead_the_window():
-    head = list(QUERIES)[: len(_RECHECK_FIRST)]
-    assert head == [n for n in _RECHECK_FIRST if n in QUERIES]
 
 
 def test_gate_checked_rounds_reads_driver_files():
@@ -63,12 +57,11 @@ def test_gate_checked_rounds_reads_driver_files():
 
 def test_never_checked_names_all_precede_checked_names():
     """Ordering invariant: every never-checked query sorts before every
-    externally-checked one (modulo the deliberate recheck head), so the
-    backlog drains at the maximum 50/round rate."""
+    externally-checked one, so the backlog drains at the maximum
+    50/round rate."""
     checked = _externally_checked()
-    order = [n for n in QUERIES if n not in _RECHECK_FIRST]
     seen_checked = False
-    for n in order:
+    for n in QUERIES:
         if n in checked:
             seen_checked = True
         else:
@@ -98,15 +91,8 @@ def test_simulated_future_rounds_drain_the_backlog():
     while never:
         rnd += 1
         window = _derived_order(names, checked)[:50]
-        # a deliberate re-check of an ALREADY-checked name occupies window
-        # slots without being fresh — that is its job, not a rotation
-        # defect (ADVICE r9) — so count fresh names against the slots the
-        # recheck head leaves over
-        recheck_slots = sum(
-            1 for n in window if n in _RECHECK_FIRST and n in checked
-        )
         fresh = [n for n in window if n not in checked]
-        assert len(fresh) == min(50 - recheck_slots, len(never)), (
+        assert len(fresh) == min(50, len(never)), (
             rnd,
             len(fresh),
         )
@@ -116,40 +102,11 @@ def test_simulated_future_rounds_drain_the_backlog():
     # steady state: the next window re-checks the LEAST recently checked
     # (cohorts may be smaller than a window, so the window can span
     # several oldest rounds — but no name outside the window may be
-    # older than any name inside it; deliberate rechecks jump the queue
-    # by design and sit outside the LRU invariant)
-    window = [
-        n for n in _derived_order(names, checked)[:50]
-        if n not in _RECHECK_FIRST
-    ]
+    # older than any name inside it)
+    window = _derived_order(names, checked)[:50]
     in_max = max(checked[n] for n in window)
-    out_min = min(
-        checked[n]
-        for n in names
-        if n not in window and n not in _RECHECK_FIRST
-    )
+    out_min = min(checked[n] for n in names if n not in window)
     assert in_max <= out_min
-
-
-def test_simulation_survives_a_nonempty_recheck_head(monkeypatch):
-    """ADVICE r9: a future re-check entry for an already-checked name
-    must not spuriously fail the drain simulation — it occupies window
-    slots without being fresh, which is exactly what _RECHECK_FIRST is
-    for. Simulate one and assert it leads the window while the backlog
-    still drains at (50 - rechecks)/round."""
-    import hadoop_coded_wordcount_spark.registry as reg
-
-    checked = dict(_gate_checked_rounds_snapshot())
-    already = next((n for n in QUERIES if n in checked), None)
-    if already is None:
-        return  # no externally checked name yet — nothing to simulate
-    monkeypatch.setattr(reg, "_RECHECK_FIRST", [already])
-    names = list(QUERIES)
-    never = [n for n in names if n not in checked]
-    window = reg._derived_order(names, checked)[:50]
-    assert window[0] == already
-    fresh = [n for n in window if n not in checked]
-    assert len(fresh) == min(49, len(never))
 
 
 def _gate_checked_rounds_snapshot():
